@@ -810,37 +810,32 @@ def simhash_pairs(
         )
     banded = banded_fingerprints(df, id_col, text_col, bits, bands, band_cap)
     # A pair colliding on several bands appears once per band, so the
-    # output is semantically DISTINCT(id1, id2). Through round 13 that
-    # dedup was a pair-count-sized exchange + hash aggregate over the
-    # packed (id1 << 32 | id2) longs — the kernel's single dominant
-    # stage (0.61 s of the 1.5 s sf0.1 row; VERDICT r13 #1). Round 14
-    # removes it outright (guide §2.4): emit each pair from exactly ONE
-    # band — the LOWEST band where both docs survived the cap with
-    # equal slices — so no two band buckets ever produce the same pair
-    # and the join output is distinct by construction, needing zero
-    # further exchanges. Each banded row carries its doc's packed
-    # survivor-slice vector sv (per band, band_val+1 in a 16-bit lane;
-    # 0 = trimmed by the cap — the +1 keeps a real band_val of 0
-    # distinct from trimmed), built by one window over doc_id: a
-    # corpus×bands-sized exchange of 16-byte rows, orders of magnitude
-    # under the candidate-pair exchange it replaces whenever collisions
-    # are nontrivial, and linear in the corpus always. Two docs share
-    # band k iff their k-lanes are equal AND non-zero; the join row at
-    # `band` is kept iff no lower band is shared (sharing at `band`
-    # itself is guaranteed: both rows survived that bucket with the
-    # join's band_val). The cap interacts correctly by construction:
-    # sv encodes POST-cap survival, so a pair trimmed apart at its
-    # lowest agreeing raw band is emitted at its lowest SURVIVING
-    # shared band, exactly the set the DISTINCT produced (verified
-    # row-identical vs the oracle at sf0.001/0.01/0.1). 16-bit lanes
-    # hold bands <= 4 in one long (band 3's lane may set the sign bit;
-    # extraction uses shiftrightunsigned so signedness is irrelevant);
-    # wider band counts would need an array encoding — no declared
-    # profile uses one, so guard instead of generalizing.
+    # output is semantically DISTINCT(id1, id2). Instead of a pair-sized
+    # exchange + aggregate, each pair is emitted from exactly ONE band —
+    # the LOWEST band where both docs survived the cap with equal slices
+    # — so the join output is distinct by construction. Each banded row
+    # carries its doc's packed survivor-slice vector sv (per band,
+    # band_val+1 in a 16-bit lane; 0 = trimmed by the cap — the +1 keeps
+    # a real band_val of 0 distinct from trimmed), built by one window
+    # over doc_id: a corpus×bands-sized exchange of 16-byte rows. Two
+    # docs share band k iff their k-lanes are equal AND non-zero; the
+    # join row at `band` is kept iff no lower band is shared. sv encodes
+    # POST-cap survival, so a pair trimmed apart at its lowest agreeing
+    # raw band is emitted at its lowest SURVIVING shared band, exactly
+    # the set a DISTINCT would produce. One long holds at most 4 lanes
+    # (band 3's lane may set the sign bit; extraction uses
+    # shiftrightunsigned), and band_val+1 fits a 16-bit lane only while
+    # a band value is at most 15 bits wide; wider layouts would need an
+    # array encoding, which no declared profile uses, so guard instead.
     if bands > 4:
         raise ValueError(
             f"simhash_pairs supports at most 4 bands (16-bit survivor "
             f"lanes in one long); got bands={bands}"
+        )
+    if bits // bands > 15:
+        raise ValueError(
+            f"simhash_pairs needs band values of at most 15 bits (band_val+1 "
+            f"in a 16-bit survivor lane); got bits={bits}, bands={bands}"
         )
     # SQL expr: the Python F.shiftleft only takes a literal shift count
     sv_lane = F.expr("shiftleft(cast(band_val + 1 as bigint), band * 16)")

@@ -1,8 +1,9 @@
 """Multimodal (image/audio/video) column plumbing.
 
 Pattern: media is an opaque ``binary`` column plus a typed metadata
-struct; decode/feature steps are Arrow-batched pandas functions over
-mapInPandas so bytes stream through executors without driver collection.
+struct; every decode/feature step is a per-value ``rows`` body run by
+_map_media, one Arrow-batched mapInPandas, so bytes stream through
+executors without driver collection.
 ``decode_image`` is a REAL decoder, stdlib + numpy only, for the
 formats a pure implementation can carry: binary PPM P6; 24-bit BI_RGB
 BMP (bottom-up rows, 4-byte padding); PNG across its FULL static
@@ -72,6 +73,31 @@ def _spread_for_cpu(df: DataFrame) -> DataFrame:
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
+
+
+def _map_media(df: DataFrame, id_col: str, bytes_col: str, schema: str, rows) -> DataFrame:
+    """The one media-map kernel every operator below runs on: one record
+    in, zero or more out. ``rows(data)`` yields output tuples for one
+    input value of ``bytes_col``; each becomes the row
+    ``(media_id, *tuple)``, where ``schema`` is the DDL of the columns
+    after ``media_id long``. Arrow-batched mapInPandas after one
+    _spread_for_cpu: no shuffle at corpus scale, no driver collection.
+    Error policy belongs to ``rows``: whatever it raises fails the task."""
+    import pandas as pd
+
+    out_schema = T.StructType.fromDDL("media_id long, " + schema)
+    names = out_schema.names
+
+    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out = [
+                (int(mid), *r)
+                for mid, data in zip(pdf[id_col], pdf[bytes_col])
+                for r in rows(data)
+            ]
+            yield pd.DataFrame(out, columns=names)
+
+    return _spread_for_cpu(df).mapInPandas(fn, out_schema)
 
 
 def attach_media(df: DataFrame, bytes_col: str, media_type: str, fmt: str) -> DataFrame:
@@ -1760,6 +1786,28 @@ def encode_jpeg_ycbcr420_coeffs(y_blocks, cb_blocks, cr_blocks, qtable=None) -> 
     )
 
 
+def _jpeg_dc_gate(df, id_col, bytes_col, bw, bh, encode) -> DataFrame:
+    """Shared body of the 8-bit DC-only JPEG gates: each row's first
+    bw*bh bytes v become the DC coefficients v - 64 of a bw x bh block
+    grid written by ``encode``; the decoded pixels reduce to exact sums
+    (64*(v + 64) per block per channel under Q00 = 8)."""
+    import numpy as np
+
+    need = bw * bh
+
+    def rows(data):
+        vs = np.frombuffer(bytes(data)[:need], dtype=np.uint8)
+        coeffs = np.zeros((bh, bw, 8, 8), dtype=np.int64)
+        coeffs[:, :, 0, 0] = vs.reshape(bh, bw).astype(np.int64) - 64
+        dec = decode_image(encode(coeffs))
+        sums = dec.astype(np.int64).sum(axis=(0, 1))
+        yield int(dec.shape[1]), int(dec.shape[0]), int(sums.sum()), int(sums[0])
+
+    return _map_media(
+        df, id_col, bytes_col, "width int, height int, pix_sum long, gray_sum long", rows
+    )
+
+
 def jpeg_roundtrip_stats(
     df: DataFrame,
     id_col: str,
@@ -1774,46 +1822,8 @@ def jpeg_roundtrip_stats(
     so each decoded block is the constant (v - 64) + 128 = v + 64 —
     iDCT of a DC-only block is exact at float64 for |dc| <= 64), then
     decoded back by the REAL Huffman + iDCT path and reduced to exact
-    pixel sums: each block contributes 64*(v + 64) per channel.
-    Arrow-batched, one row in -> one row out, no shuffle."""
-    import numpy as np
-    import pandas as pd
-
-    need = bw * bh
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("pix_sum", T.LongType()),
-            T.StructField("gray_sum", T.LongType()),
-        ]
-    )
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, data in zip(pdf[id_col], pdf[bytes_col]):
-                vs = np.frombuffer(bytes(data)[:need], dtype=np.uint8)
-                coeffs = np.zeros((bh, bw, 8, 8), dtype=np.int64)
-                coeffs[:, :, 0, 0] = vs.reshape(bh, bw).astype(np.int64) - 64
-                dec = decode_image(encode_jpeg_gray_coeffs(coeffs))
-                sums = dec.astype(np.int64).sum(axis=(0, 1))
-                rows.append(
-                    (
-                        int(mid),
-                        int(dec.shape[1]),
-                        int(dec.shape[0]),
-                        int(sums.sum()),
-                        int(sums[0]),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "width", "height", "pix_sum", "gray_sum"],
-            )
-
-    return _spread_for_cpu(df).mapInPandas(fn, schema)
+    pixel sums: each block contributes 64*(v + 64) per channel."""
+    return _jpeg_dc_gate(df, id_col, bytes_col, bw, bh, encode_jpeg_gray_coeffs)
 
 
 def jpeg_progressive_roundtrip_stats(
@@ -1832,46 +1842,10 @@ def jpeg_progressive_roundtrip_stats(
     decoded through the full multi-scan coefficient-accumulation path.
     Because the two scans reconstruct the DC exactly, the decoded image
     equals the baseline form and the same analytic oracle applies:
-    64*(v + 64) per block per channel. Arrow-batched, one row in ->
-    one row out, no shuffle."""
-    import numpy as np
-    import pandas as pd
-
-    need = bw * bh
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("pix_sum", T.LongType()),
-            T.StructField("gray_sum", T.LongType()),
-        ]
+    64*(v + 64) per block per channel."""
+    return _jpeg_dc_gate(
+        df, id_col, bytes_col, bw, bh, encode_jpeg_gray_coeffs_progressive
     )
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, data in zip(pdf[id_col], pdf[bytes_col]):
-                vs = np.frombuffer(bytes(data)[:need], dtype=np.uint8)
-                coeffs = np.zeros((bh, bw, 8, 8), dtype=np.int64)
-                coeffs[:, :, 0, 0] = vs.reshape(bh, bw).astype(np.int64) - 64
-                dec = decode_image(encode_jpeg_gray_coeffs_progressive(coeffs))
-                sums = dec.astype(np.int64).sum(axis=(0, 1))
-                rows.append(
-                    (
-                        int(mid),
-                        int(dec.shape[1]),
-                        int(dec.shape[0]),
-                        int(sums.sum()),
-                        int(sums[0]),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "width", "height", "pix_sum", "gray_sum"],
-            )
-
-    return _spread_for_cpu(df).mapInPandas(fn, schema)
 
 
 def jpeg420_roundtrip_stats(
@@ -1898,54 +1872,26 @@ def jpeg420_roundtrip_stats(
     exact. ``pos_sum`` = sum of i*(r+g+b) over row-major 1-based pixel
     positions is the load-bearing output: a chroma block scattered to
     the wrong MCU, a swapped Y interleave order, or wrong upsample
-    geometry preserves pixel multisets (pix_sum) but not positions.
-    Arrow-batched, one row in -> one row out, no shuffle."""
+    geometry preserves pixel multisets (pix_sum) but not positions."""
     import numpy as np
-    import pandas as pd
 
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("pix_sum", T.LongType()),
-            T.StructField("pos_sum", T.LongType()),
-        ]
-    )
     pos = np.arange(1, 32 * 32 + 1, dtype=np.int64).reshape(32, 32)
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, data in zip(pdf[id_col], pdf[bytes_col]):
-                vs = np.frombuffer(bytes(data)[:24], dtype=np.uint8).astype(
-                    np.int64
-                )
-                yb = np.zeros((4, 4, 8, 8), dtype=np.int64)
-                yb[:, :, 0, 0] = vs[:16].reshape(4, 4) - 64
-                cbb = np.zeros((2, 2, 8, 8), dtype=np.int64)
-                cbb[:, :, 0, 0] = (vs[16:20].reshape(2, 2) % 9 - 4) * 5
-                crb = np.zeros((2, 2, 8, 8), dtype=np.int64)
-                crb[:, :, 0, 0] = (vs[20:24].reshape(2, 2) % 9 - 4) * 5
-                dec = decode_image(
-                    encode_jpeg_ycbcr420_coeffs(yb, cbb, crb)
-                ).astype(np.int64)
-                s = dec.sum(axis=2)
-                rows.append(
-                    (
-                        int(mid),
-                        int(dec.shape[1]),
-                        int(dec.shape[0]),
-                        int(s.sum()),
-                        int((s * pos).sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "width", "height", "pix_sum", "pos_sum"],
-            )
+    def rows(data):
+        vs = np.frombuffer(bytes(data)[:24], dtype=np.uint8).astype(np.int64)
+        yb = np.zeros((4, 4, 8, 8), dtype=np.int64)
+        yb[:, :, 0, 0] = vs[:16].reshape(4, 4) - 64
+        cbb = np.zeros((2, 2, 8, 8), dtype=np.int64)
+        cbb[:, :, 0, 0] = (vs[16:20].reshape(2, 2) % 9 - 4) * 5
+        crb = np.zeros((2, 2, 8, 8), dtype=np.int64)
+        crb[:, :, 0, 0] = (vs[20:24].reshape(2, 2) % 9 - 4) * 5
+        dec = decode_image(encode_jpeg_ycbcr420_coeffs(yb, cbb, crb)).astype(np.int64)
+        s = dec.sum(axis=2)
+        yield int(dec.shape[1]), int(dec.shape[0]), int(s.sum()), int((s * pos).sum())
 
-    return _spread_for_cpu(df).mapInPandas(fn, schema)
+    return _map_media(
+        df, id_col, bytes_col, "width int, height int, pix_sum long, pos_sum long", rows
+    )
 
 
 def jpeg12_roundtrip_stats(
@@ -1962,42 +1908,22 @@ def jpeg12_roundtrip_stats(
     constant v + 1984, so gray_sum = 64*(v + 1984) per block and
     max_px = max(v) + 1984, both integer-exact (values sit deep
     inside 0..4095, no clamping). A decoder that level-shifts by 128,
-    clamps at 255, or returns uint8 breaks the hash immediately.
-    Arrow-batched, one row in -> one row out, no shuffle."""
+    clamps at 255, or returns uint8 breaks the hash immediately."""
     import numpy as np
-    import pandas as pd
 
     need = bw * bh
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("gray_sum", T.LongType()),
-            T.StructField("max_px", T.IntegerType()),
-        ]
+
+    def rows(data):
+        vs = np.frombuffer(bytes(data)[:need], dtype=np.uint8)
+        coeffs = np.zeros((bh, bw, 8, 8), dtype=np.int64)
+        coeffs[:, :, 0, 0] = vs.reshape(bh, bw).astype(np.int64) - 64
+        dec = decode_image_deep(encode_jpeg_gray_coeffs(coeffs, precision=12))
+        yield (int(dec.shape[1]), int(dec.shape[0]),
+               int(dec.astype(np.int64).sum()), int(dec.max()))
+
+    return _map_media(
+        df, id_col, bytes_col, "width int, height int, gray_sum long, max_px int", rows
     )
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, data in zip(pdf[id_col], pdf[bytes_col]):
-                vs = np.frombuffer(bytes(data)[:need], dtype=np.uint8)
-                coeffs = np.zeros((bh, bw, 8, 8), dtype=np.int64)
-                coeffs[:, :, 0, 0] = vs.reshape(bh, bw).astype(np.int64) - 64
-                dec = decode_image_deep(
-                    encode_jpeg_gray_coeffs(coeffs, precision=12)
-                )
-                rows.append(
-                    (int(mid), int(dec.shape[1]), int(dec.shape[0]),
-                     int(dec.astype(np.int64).sum()), int(dec.max()))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "width", "height", "gray_sum", "max_px"],
-            )
-
-    return _spread_for_cpu(df).mapInPandas(fn, schema)
 
 
 def png_roundtrip_stats(
@@ -2008,65 +1934,29 @@ def png_roundtrip_stats(
     h: int,
     filters=None,
 ) -> DataFrame:
-    """mapInPandas: interpret each row's bytes as w x h RGB pixels,
-    write a REAL PNG from them (zlib-deflated IDAT; per-scanline filter
-    types default to cycling 0..4 so None/Sub/Up/Average/Paeth are ALL
-    on the decode path of every image), decode it back with
-    decode_image, and emit exact channel sums of the DECODED pixels —
-    the shape an oracle can replay directly from the source bytes,
-    proving the zlib + unfilter pipeline inverts to identity. Arrow-
-    batched, one row in -> one row out, no shuffle."""
+    """Interpret each row's bytes as w x h RGB pixels, write a REAL PNG
+    from them (zlib-deflated IDAT; per-scanline filter types default to
+    cycling 0..4 so None/Sub/Up/Average/Paeth are ALL on the decode path
+    of every image), decode it back with decode_image, and emit exact
+    channel sums of the DECODED pixels — the shape an oracle can replay
+    directly from the source bytes, proving the zlib + unfilter pipeline
+    inverts to identity."""
     import numpy as np
-    import pandas as pd
 
     flts = list(filters) if filters is not None else [r % 5 for r in range(h)]
     need = w * h * 3
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("pix_sum", T.LongType()),
-            T.StructField("r_sum", T.LongType()),
-            T.StructField("g_sum", T.LongType()),
-            T.StructField("b_sum", T.LongType()),
-        ]
+
+    def rows(data):
+        px = np.frombuffer(bytes(data)[:need], dtype=np.uint8).reshape(h, w, 3)
+        dec = decode_image(encode_png(px, filters=flts))
+        sums = dec.astype(np.int64).sum(axis=(0, 1))
+        yield (int(dec.shape[1]), int(dec.shape[0]), int(sums.sum()),
+               int(sums[0]), int(sums[1]), int(sums[2]))
+
+    return _map_media(
+        df, id_col, bytes_col,
+        "width int, height int, pix_sum long, r_sum long, g_sum long, b_sum long", rows,
     )
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, data in zip(pdf[id_col], pdf[bytes_col]):
-                px = np.frombuffer(
-                    bytes(data)[:need], dtype=np.uint8
-                ).reshape(h, w, 3)
-                dec = decode_image(encode_png(px, filters=flts))
-                sums = dec.astype(np.int64).sum(axis=(0, 1))
-                rows.append(
-                    (
-                        int(mid),
-                        int(dec.shape[1]),
-                        int(dec.shape[0]),
-                        int(sums.sum()),
-                        int(sums[0]),
-                        int(sums[1]),
-                        int(sums[2]),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id",
-                    "width",
-                    "height",
-                    "pix_sum",
-                    "r_sum",
-                    "g_sum",
-                    "b_sum",
-                ],
-            )
-
-    return _spread_for_cpu(df).mapInPandas(fn, schema)
 
 
 def png_palette_roundtrip_stats(
@@ -2085,59 +1975,24 @@ def png_palette_roundtrip_stats(
     geometry), decoded back through the PLTE lookup, and reduced to
     exact channel sums of the LOOKED-UP RGB pixels — replayable by an
     oracle that applies the palette arithmetic to the source bytes
-    directly. Arrow-batched, one row in -> one row out, no shuffle."""
+    directly."""
     import numpy as np
-    import pandas as pd
 
     flts = list(filters) if filters is not None else [r % 5 for r in range(h)]
     pal = np.asarray(palette, dtype=np.uint8)
     need = w * h
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("pix_sum", T.LongType()),
-            T.StructField("r_sum", T.LongType()),
-            T.StructField("g_sum", T.LongType()),
-            T.StructField("b_sum", T.LongType()),
-        ]
+
+    def rows(data):
+        idx = np.frombuffer(bytes(data)[:need], dtype=np.uint8).reshape(h, w)
+        dec = decode_image(encode_png_palette(idx, pal, filters=flts))
+        sums = dec.astype(np.int64).sum(axis=(0, 1))
+        yield (int(dec.shape[1]), int(dec.shape[0]), int(sums.sum()),
+               int(sums[0]), int(sums[1]), int(sums[2]))
+
+    return _map_media(
+        df, id_col, bytes_col,
+        "width int, height int, pix_sum long, r_sum long, g_sum long, b_sum long", rows,
     )
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, data in zip(pdf[id_col], pdf[bytes_col]):
-                idx = np.frombuffer(
-                    bytes(data)[:need], dtype=np.uint8
-                ).reshape(h, w)
-                dec = decode_image(encode_png_palette(idx, pal, filters=flts))
-                sums = dec.astype(np.int64).sum(axis=(0, 1))
-                rows.append(
-                    (
-                        int(mid),
-                        int(dec.shape[1]),
-                        int(dec.shape[0]),
-                        int(sums.sum()),
-                        int(sums[0]),
-                        int(sums[1]),
-                        int(sums[2]),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id",
-                    "width",
-                    "height",
-                    "pix_sum",
-                    "r_sum",
-                    "g_sum",
-                    "b_sum",
-                ],
-            )
-
-    return _spread_for_cpu(df).mapInPandas(fn, schema)
 
 
 def png_gray16_adam7_roundtrip_stats(
@@ -2158,58 +2013,24 @@ def png_gray16_adam7_roundtrip_stats(
     RGB), and pos_sum = Σ i·v over ROW-MAJOR position i — the
     position-weighted sum is the load-bearing one: a pass scattered to
     the wrong origin/step preserves the pixel multiset and both plain
-    sums, but not the positions. Arrow-batched mapInPandas, one row in
-    -> one row out, no shuffle — the same 100 TB decode-map shape as
-    the sibling queries."""
+    sums, but not the positions."""
     import numpy as np
-    import pandas as pd
 
     need = w * h
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("gray_sum", T.LongType()),
-            T.StructField("pix_sum", T.LongType()),
-            T.StructField("pos_sum", T.LongType()),
-        ]
-    )
     pos = np.arange(1, need + 1, dtype=np.int64).reshape(h, w)
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, data in zip(pdf[id_col], pdf[bytes_col]):
-                v = np.frombuffer(bytes(data)[:need], dtype=np.uint8).astype(
-                    np.uint16
-                )
-                img16 = ((v << 8) | ((3 * v) & 0xFF)).reshape(h, w)
-                dec = decode_image(encode_png_gray16_adam7(img16))
-                gray = dec[:, :, 0].astype(np.int64)
-                rows.append(
-                    (
-                        int(mid),
-                        int(dec.shape[1]),
-                        int(dec.shape[0]),
-                        int(gray.sum()),
-                        int(dec.astype(np.int64).sum()),
-                        int((gray * pos).sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id",
-                    "width",
-                    "height",
-                    "gray_sum",
-                    "pix_sum",
-                    "pos_sum",
-                ],
-            )
+    def rows(data):
+        v = np.frombuffer(bytes(data)[:need], dtype=np.uint8).astype(np.uint16)
+        img16 = ((v << 8) | ((3 * v) & 0xFF)).reshape(h, w)
+        dec = decode_image(encode_png_gray16_adam7(img16))
+        gray = dec[:, :, 0].astype(np.int64)
+        yield (int(dec.shape[1]), int(dec.shape[0]), int(gray.sum()),
+               int(dec.astype(np.int64).sum()), int((gray * pos).sum()))
 
-    return _spread_for_cpu(df).mapInPandas(fn, schema)
+    return _map_media(
+        df, id_col, bytes_col,
+        "width int, height int, gray_sum long, pix_sum long, pos_sum long", rows,
+    )
 
 
 def _fake_feature(data: bytes, dim: int = 8) -> list[float]:
@@ -2225,7 +2046,9 @@ def _fake_feature(data: bytes, dim: int = 8) -> list[float]:
 
 
 def extract_features(df: DataFrame, id_col: str, bytes_col: str) -> DataFrame:
-    """mapInPandas feature extraction: Arrow batches in, Arrow batches out.
+    """Feature extraction: byte length, md5 digest and the deterministic
+    stand-in embedding per media value (FEATURE_SCHEMA). NULL bytes give
+    n_bytes 0 and a NULL digest.
 
     Partition-sizing note: media rows are large, so upstream should
     repartition to keep (rows_per_partition x avg_media_size) within
@@ -2234,52 +2057,31 @@ def extract_features(df: DataFrame, id_col: str, bytes_col: str) -> DataFrame:
     """
     import hashlib
 
-    import pandas as pd
+    def rows(data):
+        if data is None:
+            yield 0, None, _fake_feature(b"")
+        else:
+            yield len(data), hashlib.md5(data).hexdigest(), _fake_feature(data)
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            data = pdf[bytes_col]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf[id_col].astype("int64"),
-                    "n_bytes": data.map(lambda b: len(b) if b is not None else 0).astype("int64"),
-                    "content_md5": data.map(
-                        lambda b: hashlib.md5(b).hexdigest() if b is not None else None
-                    ),
-                    "feature": data.map(lambda b: _fake_feature(b or b"")),
-                }
-            )
-
-    return _spread_for_cpu(df).mapInPandas(fn, FEATURE_SCHEMA)
+    return _map_media(
+        df, id_col, bytes_col,
+        "n_bytes long, content_md5 string, feature array<float>", rows,
+    )
 
 
 def sample_frames(df: DataFrame, id_col: str, bytes_col: str, every_ms: int = 1000) -> DataFrame:
     """Video frame-sampling plumbing: 1->n rows per media item.
 
     The decoder is stubbed (no codecs here): emits deterministic frame
-    offsets from the fake 'duration' = n_bytes. Real impl swaps the body,
-    the schema and the mapInPandas shape stay.
+    offsets from the fake 'duration' = n_bytes. Real impl swaps the body;
+    the schema and the map shape stay.
     """
-    import pandas as pd
 
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("frame_idx", T.IntegerType()),
-            T.StructField("offset_ms", T.LongType()),
-        ]
-    )
+    def rows(data):
+        duration = len(data) if data is not None else 0
+        yield from enumerate(range(0, duration, every_ms))
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, data in zip(pdf[id_col], pdf[bytes_col]):
-                duration = len(data) if data is not None else 0
-                for i, off in enumerate(range(0, duration, every_ms)):
-                    rows.append((int(mid), i, off))
-            yield pd.DataFrame(rows, columns=["media_id", "frame_idx", "offset_ms"])
-
-    return _spread_for_cpu(df).mapInPandas(fn, schema)
+    return _map_media(df, id_col, bytes_col, "frame_idx int, offset_ms long", rows)
 
 
 def resize_media(
@@ -2303,44 +2105,28 @@ def resize_media(
     unchanged. pix_checksum (sum of output bytes) makes either path
     independently checkable without shipping pixel buffers around.
     """
-    import pandas as pd
+    import numpy as np
 
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("out_w", T.IntegerType()),
-            T.StructField("out_h", T.IntegerType()),
-            T.StructField("n_pixels", T.IntegerType()),
-            T.StructField("pix_checksum", T.LongType()),
-            T.StructField("pixels", T.BinaryType()),
-        ]
-    )
     n = out_w * out_h
 
-    def fn(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        import numpy as np
+    def rows(data):
+        data = data or b""
+        try:
+            img = decode_image(data)
+            ys = (np.arange(out_h) * img.shape[0]) // out_h
+            xs = (np.arange(out_w) * img.shape[1]) // out_w
+            pix = img[ys][:, xs].tobytes()
+        except (NotImplementedError, ValueError, IndexError):
+            if len(data) == 0:
+                pix = bytes(n)
+            else:
+                pix = bytes(data[(i * len(data)) // n] for i in range(n))
+        yield out_w, out_h, len(pix), sum(pix), pix
 
-        for pdf in batches:
-            rows = []
-            for mid, data in zip(pdf[id_col], pdf[bytes_col]):
-                data = data or b""
-                try:
-                    img = decode_image(data)
-                    ys = (np.arange(out_h) * img.shape[0]) // out_h
-                    xs = (np.arange(out_w) * img.shape[1]) // out_w
-                    pix = img[ys][:, xs].tobytes()
-                except (NotImplementedError, ValueError, IndexError):
-                    if len(data) == 0:
-                        pix = bytes(n)
-                    else:
-                        pix = bytes(data[(i * len(data)) // n] for i in range(n))
-                rows.append((int(mid), out_w, out_h, len(pix), sum(pix), pix))
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "out_w", "out_h", "n_pixels", "pix_checksum", "pixels"],
-            )
-
-    return _spread_for_cpu(df).mapInPandas(fn, schema)
+    return _map_media(
+        df, id_col, bytes_col,
+        "out_w int, out_h int, n_pixels int, pix_checksum long, pixels binary", rows,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -3271,6 +3057,45 @@ def iter_gif_frames(data: bytes):
             raise ValueError(f"GIF: unknown block 0x{b0:02x}")
 
 
+def _tile_grid(data):
+    """The 4x5 gate grid: a row's first 20 bytes, each tiled to an 8x8
+    block of a 32x40 image."""
+    import numpy as np
+
+    vs = np.frombuffer(bytes(data)[:20], dtype=np.uint8)
+    return np.repeat(np.repeat(vs.reshape(5, 4), 8, axis=0), 8, axis=1)
+
+
+def _tile_rgb_gate(df, id_col, bytes_col, encode) -> DataFrame:
+    """Shared body of the GIF, WebP and RLE8-BMP gates: ``encode`` writes
+    the 32x40 tile grid (_tile_grid) as a real image; the decoded pixels
+    reduce to channel sums plus pos_sum_r, the R value weighted by its
+    1-based row-major position (closed form v*(16384*tr + 512*tc + 7456)
+    per tile), which pins pixel ORDER where the sums cannot."""
+    import numpy as np
+
+    def rows(data):
+        img = decode_image(encode(_tile_grid(data)))
+        s = img.astype(np.int64).sum(axis=(0, 1))
+        pos = np.arange(1, img.shape[0] * img.shape[1] + 1, dtype=np.int64)
+        pr = int((pos * img[:, :, 0].astype(np.int64).ravel()).sum())
+        yield int(img.shape[1]), int(img.shape[0]), int(s[0]), int(s[1]), int(s[2]), pr
+
+    return _map_media(
+        df, id_col, bytes_col,
+        "width int, height int, sum_r long, sum_g long, sum_b long, pos_sum_r long",
+        rows,
+    )
+
+
+def _ramp_palette():
+    """The 128-entry gate palette (i, 2i, 255 - i)."""
+    import numpy as np
+
+    i = np.arange(128, dtype=np.uint8)
+    return np.stack([i, 2 * i, 255 - i], axis=1)
+
+
 def gif_anim_stats(df: DataFrame, id_col: str, bytes_col: str) -> DataFrame:
     """Animated-GIF frame walk under an exact oracle: each row's first
     20 bytes v become a 4-FRAME animation (frame f = bytes v[5f..5f+5]
@@ -3282,51 +3107,32 @@ def gif_anim_stats(df: DataFrame, id_col: str, bytes_col: str) -> DataFrame:
     index sum) pins frame ORDER; psum (position-weighted, closed form
     (f+1) * v * (512*tc + 9248) per tile) pins the de-interlace of odd
     frames — a reader that skips de-scattering later frames preserves
-    wsum but not psum. Arrow-batched, one row in -> one row out, no
-    shuffle — the decode-map shape."""
+    wsum but not psum."""
     import numpy as np
-    import pandas as pd
 
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("n_frames", T.IntegerType()),
-            T.StructField("sum_delay_cs", T.LongType()),
-            T.StructField("wsum", T.LongType()),
-            T.StructField("psum", T.LongType()),
+    pal = np.stack([np.arange(128, dtype=np.uint8)] * 3, 1)
+    posw = (np.arange(8 * 40, dtype=np.int64) + 1).reshape(8, 40)
+
+    def rows(data):
+        vs = np.frombuffer(bytes(data)[:20], dtype=np.uint8)
+        frames = [
+            np.repeat(np.repeat(vs[5 * f : 5 * f + 5][None, :], 8, axis=0), 8, axis=1)
+            for f in range(4)
         ]
+        delays = [int(vs[5 * f]) + 1 for f in range(4)]
+        n = wsum = psum = sdel = 0
+        for fr in iter_gif_frames(encode_gif_anim(frames, pal, delays)):
+            n += 1
+            sdel += fr["delay_cs"]
+            ind = fr["indices"].astype(np.int64)
+            wsum += n * int(ind.sum())
+            psum += n * int((ind * posw).sum())
+        yield n, sdel, wsum, psum
+
+    return _map_media(
+        df, id_col, bytes_col,
+        "n_frames int, sum_delay_cs long, wsum long, psum long", rows,
     )
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        pal = np.stack([np.arange(128, dtype=np.uint8)] * 3, 1)
-        for pdf in batches:
-            rows = []
-            for mid, data in zip(pdf[id_col], pdf[bytes_col]):
-                vs = np.frombuffer(bytes(data)[:20], dtype=np.uint8)
-                frames = [
-                    np.repeat(np.repeat(vs[5 * f : 5 * f + 5][None, :],
-                                        8, axis=0), 8, axis=1)
-                    for f in range(4)
-                ]
-                delays = [int(vs[5 * f]) + 1 for f in range(4)]
-                gif = encode_gif_anim(frames, pal, delays)
-                n = wsum = psum = sdel = 0
-                posw = (np.arange(8 * 40, dtype=np.int64) + 1).reshape(8, 40)
-                for fr in iter_gif_frames(gif):
-                    n += 1
-                    sdel += fr["delay_cs"]
-                    ind = fr["indices"].astype(np.int64)
-                    wsum += n * int(ind.sum())
-                    psum += n * int((ind * posw).sum())
-                rows.append((int(mid), n, sdel, wsum, psum))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "n_frames", "sum_delay_cs",
-                               "wsum", "psum"],
-            )
-
-    return _spread_for_cpu(df).mapInPandas(fn, schema)
 
 
 def gif_roundtrip_stats(df: DataFrame, id_col: str, bytes_col: str) -> DataFrame:
@@ -3340,51 +3146,11 @@ def gif_roundtrip_stats(df: DataFrame, id_col: str, bytes_col: str) -> DataFrame
     reduced to exact channel sums. pos_sum_r weights each pixel's R
     value by its row-major position, which collapses per 8x8 tile to
     the closed form v * (16384*tr + 512*tc + 7456): a pass scattered
-    to the wrong rows preserves the channel sums but not pos_sum_r.
-    Arrow-batched, one row in -> one row out, no shuffle."""
-    import numpy as np
-    import pandas as pd
-
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("sum_r", T.LongType()),
-            T.StructField("sum_g", T.LongType()),
-            T.StructField("sum_b", T.LongType()),
-            T.StructField("pos_sum_r", T.LongType()),
-        ]
+    to the wrong rows preserves the channel sums but not pos_sum_r."""
+    ramp = _ramp_palette()
+    return _tile_rgb_gate(
+        df, id_col, bytes_col, lambda grid: encode_gif(grid, ramp, interlace=True)
     )
-    ramp = None
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        nonlocal ramp
-        import numpy as np
-
-        if ramp is None:
-            i = np.arange(128, dtype=np.uint8)
-            ramp = np.stack([i, 2 * i, 255 - i], axis=1)
-        for pdf in batches:
-            rows = []
-            for mid, data in zip(pdf[id_col], pdf[bytes_col]):
-                vs = np.frombuffer(bytes(data)[:20], dtype=np.uint8)
-                grid = np.repeat(np.repeat(vs.reshape(5, 4), 8, axis=0), 8, axis=1)
-                img = decode_image(encode_gif(grid, ramp, interlace=True))
-                s = img.astype(np.int64).sum(axis=(0, 1))
-                pos = np.arange(1, img.shape[0] * img.shape[1] + 1, dtype=np.int64)
-                pr = int((pos * img[:, :, 0].astype(np.int64).ravel()).sum())
-                rows.append(
-                    (int(mid), int(img.shape[1]), int(img.shape[0]),
-                     int(s[0]), int(s[1]), int(s[2]), pr)
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "width", "height",
-                         "sum_r", "sum_g", "sum_b", "pos_sum_r"],
-            )
-
-    return _spread_for_cpu(df).mapInPandas(fn, schema)
 
 
 def webp_roundtrip_stats(df: DataFrame, id_col: str, bytes_col: str) -> DataFrame:
@@ -3402,52 +3168,16 @@ def webp_roundtrip_stats(df: DataFrame, id_col: str, bytes_col: str) -> DataFram
     the hash. Decoder pinned independently of the writer by
     hand-packed bitstream goldens (tests/test_webp.py: cache hit,
     backward refs incl. overlap fill, meta-prefix group switch,
-    code-length repeats, both transforms). Arrow-batched, one row in
-    -> one row out, no shuffle — the 100 TB decode-map shape."""
+    code-length repeats, both transforms)."""
     import numpy as np
-    import pandas as pd
 
     from ssp_spark.operators.webp import encode_webp_lossless
 
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("sum_r", T.LongType()),
-            T.StructField("sum_g", T.LongType()),
-            T.StructField("sum_b", T.LongType()),
-            T.StructField("pos_sum_r", T.LongType()),
-        ]
-    )
+    def encode(grid):
+        rgb = np.stack([grid, 255 - grid, 2 * grid], axis=2)
+        return encode_webp_lossless(rgb, cache_bits=5)
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            rows = []
-            for mid, data in zip(pdf[id_col], pdf[bytes_col]):
-                vs = np.frombuffer(bytes(data)[:20], dtype=np.uint8)
-                grid = np.stack(
-                    [vs, 255 - vs, 2 * vs], axis=1
-                ).reshape(5, 4, 3).astype(np.uint8)
-                tiled = np.repeat(np.repeat(grid, 8, axis=0), 8, axis=1)
-                img = decode_image(encode_webp_lossless(tiled, cache_bits=5))
-                s = img.astype(np.int64).sum(axis=(0, 1))
-                pos = np.arange(1, img.shape[0] * img.shape[1] + 1,
-                                dtype=np.int64)
-                pr = int((pos * img[:, :, 0].astype(np.int64).ravel()).sum())
-                rows.append(
-                    (int(mid), int(img.shape[1]), int(img.shape[0]),
-                     int(s[0]), int(s[1]), int(s[2]), pr)
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "width", "height",
-                         "sum_r", "sum_g", "sum_b", "pos_sum_r"],
-            )
-
-    return _spread_for_cpu(df).mapInPandas(fn, schema)
+    return _tile_rgb_gate(df, id_col, bytes_col, encode)
 
 
 def tiff_roundtrip_stats(df: DataFrame, id_col: str, bytes_col: str) -> DataFrame:
@@ -3461,41 +3191,20 @@ def tiff_roundtrip_stats(df: DataFrame, id_col: str, bytes_col: str) -> DataFram
     goldens so the pair cannot silently cancel), then decoded through
     the full IFD walk + strip assembly + PackBits path. Channel sums
     and the closed-form position-weighted sum replay from the source
-    bytes. Arrow-batched, one row in -> one row out, no shuffle."""
+    bytes."""
     import numpy as np
-    import pandas as pd
 
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("gray_sum", T.LongType()),
-            T.StructField("pos_sum", T.LongType()),
-        ]
+    def rows(data):
+        t = encode_tiff(_tile_grid(data), byte_order="big", compression=32773,
+                        photometric=0, rows_per_strip=16)
+        img = decode_image(t)
+        g = img[:, :, 0].astype(np.int64)
+        pos = np.arange(1, g.size + 1, dtype=np.int64)
+        yield int(img.shape[1]), int(img.shape[0]), int(g.sum()), int((pos * g.ravel()).sum())
+
+    return _map_media(
+        df, id_col, bytes_col, "width int, height int, gray_sum long, pos_sum long", rows
     )
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, data in zip(pdf[id_col], pdf[bytes_col]):
-                vs = np.frombuffer(bytes(data)[:20], dtype=np.uint8)
-                grid = np.repeat(np.repeat(vs.reshape(5, 4), 8, axis=0), 8, axis=1)
-                t = encode_tiff(grid, byte_order="big", compression=32773,
-                                photometric=0, rows_per_strip=16)
-                img = decode_image(t)
-                g = img[:, :, 0].astype(np.int64)
-                pos = np.arange(1, g.size + 1, dtype=np.int64)
-                rows.append(
-                    (int(mid), int(img.shape[1]), int(img.shape[0]),
-                     int(g.sum()), int((pos * g.ravel()).sum()))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "width", "height", "gray_sum", "pos_sum"],
-            )
-
-    return _spread_for_cpu(df).mapInPandas(fn, schema)
 
 
 def bmp_rle8_roundtrip_stats(df: DataFrame, id_col: str, bytes_col: str) -> DataFrame:
@@ -3505,46 +3214,11 @@ def bmp_rle8_roundtrip_stats(df: DataFrame, id_col: str, bytes_col: str) -> Data
     (the 8-wide tile runs become run packets) and decoded back through
     the color-table + RLE + row-flip path. pos_sum_r is the
     load-bearing output: dropping the bottom-up flip preserves the
-    channel sums but reverses the tile-row weights. Arrow-batched,
-    one row in -> one row out, no shuffle."""
-    import numpy as np
-    import pandas as pd
-
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("sum_r", T.LongType()),
-            T.StructField("sum_g", T.LongType()),
-            T.StructField("sum_b", T.LongType()),
-            T.StructField("pos_sum_r", T.LongType()),
-        ]
+    channel sums but reverses the tile-row weights."""
+    ramp = _ramp_palette()
+    return _tile_rgb_gate(
+        df, id_col, bytes_col, lambda grid: encode_bmp8(grid, ramp, rle=True)
     )
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        i8 = np.arange(128, dtype=np.uint8)
-        ramp = np.stack([i8, 2 * i8, 255 - i8], axis=1)
-        for pdf in batches:
-            rows = []
-            for mid, data in zip(pdf[id_col], pdf[bytes_col]):
-                vs = np.frombuffer(bytes(data)[:20], dtype=np.uint8)
-                grid = np.repeat(np.repeat(vs.reshape(5, 4), 8, axis=0), 8, axis=1)
-                img = decode_image(encode_bmp8(grid, ramp, rle=True))
-                s = img.astype(np.int64).sum(axis=(0, 1))
-                pos = np.arange(1, img.shape[0] * img.shape[1] + 1, dtype=np.int64)
-                pr = int((pos * img[:, :, 0].astype(np.int64).ravel()).sum())
-                rows.append(
-                    (int(mid), int(img.shape[1]), int(img.shape[0]),
-                     int(s[0]), int(s[1]), int(s[2]), pr)
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "width", "height",
-                         "sum_r", "sum_g", "sum_b", "pos_sum_r"],
-            )
-
-    return _spread_for_cpu(df).mapInPandas(fn, schema)
 
 
 def _g711_mulaw_table():
@@ -3856,51 +3530,35 @@ def decode_audio(data: bytes):
 
 
 def audio_features(df: DataFrame, id_col: str, bytes_col: str) -> DataFrame:
-    """Per-clip audio statistics through mapInPandas: duration_ms, RMS
-    amplitude, and zero-crossing rate (per-million, integer) of the
-    first channel — the cheap quality/energy signals an audio-corpus
-    curation pass filters on. Real numbers for PCM WAV (decode_audio);
-    undecodable rows pass through with NULL features (the disclosed
-    compressed-codec gap), never an error — at 100 TB a corrupt or
-    exotic clip must not kill the scan."""
+    """Per-clip audio statistics: duration_ms, RMS amplitude (integer
+    RMS of int16 samples), and zero-crossing rate (per million samples)
+    of the first channel — the cheap quality/energy signals an
+    audio-corpus curation pass filters on. Real numbers for PCM WAV
+    (decode_audio); undecodable rows pass through with NULL features
+    (the disclosed compressed-codec gap), never an error — at 100 TB a
+    corrupt or exotic clip must not kill the scan."""
     import numpy as np
-    import pandas as pd
 
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("sample_rate", T.IntegerType()),
-            T.StructField("duration_ms", T.LongType()),
-            T.StructField("rms", T.LongType()),          # integer RMS of int16 samples
-            T.StructField("zcr_ppm", T.LongType()),      # crossings per million samples
-        ]
+    def rows(data):
+        try:
+            samples, rate = decode_audio(bytes(data or b""))
+            ch = samples[:, 0].astype(np.int64)
+            n = len(ch)
+            dur = (n * 1000) // rate if rate else 0
+            rms = int(np.sqrt((ch * ch).mean())) if n else 0
+            zc = int(((ch[:-1] * ch[1:]) < 0).sum()) if n > 1 else 0
+            zcr = (zc * 1_000_000) // (n - 1) if n > 1 else 0
+        except (NotImplementedError, ValueError, IndexError, KeyError):
+            # disclosed codec gaps and corrupt/truncated streams (FLAC
+            # frame CRC, ADPCM block_align=0, table lookups) alike
+            yield None, None, None, None
+            return
+        yield int(rate), dur, rms, zcr
+
+    return _map_media(
+        df, id_col, bytes_col,
+        "sample_rate int, duration_ms long, rms long, zcr_ppm long", rows,
     )
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, data in zip(pdf[id_col], pdf[bytes_col]):
-                try:
-                    samples, rate = decode_audio(bytes(data or b""))
-                    ch = samples[:, 0].astype(np.int64)
-                    n = len(ch)
-                    dur = (n * 1000) // rate if rate else 0
-                    rms = int(np.sqrt((ch * ch).mean())) if n else 0
-                    zc = int(((ch[:-1] * ch[1:]) < 0).sum()) if n > 1 else 0
-                    zcr = (zc * 1_000_000) // (n - 1) if n > 1 else 0
-                    rows.append((int(mid), int(rate), dur, rms, zcr))
-                except (NotImplementedError, ValueError, IndexError, KeyError):
-                    # NotImplementedError: disclosed codec gaps; the rest:
-                    # corrupt/truncated streams (FLAC frame CRC, ADPCM
-                    # block_align=0, table lookups) — one bad clip must
-                    # never kill the scan, matching the image path.
-                    rows.append((int(mid), None, None, None, None))
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "sample_rate", "duration_ms", "rms", "zcr_ppm"],
-            )
-
-    return _spread_for_cpu(df).mapInPandas(fn, schema)
 
 
 def g711_roundtrip_stats(df: DataFrame, id_col: str, bytes_col: str,
@@ -3915,51 +3573,29 @@ def g711_roundtrip_stats(df: DataFrame, id_col: str, bytes_col: str,
     piecewise-linear formulas (pure integer bit arithmetic, so a wrong
     segment shift or sign anywhere breaks the hash); pos_sum_mulaw
     weights each sample by its 1-based position, pinning codeword
-    ORDER through the container. Arrow-batched, one row in -> one row
-    out, no shuffle — the 100 TB decode-map shape."""
+    ORDER through the container."""
     import numpy as np
-    import pandas as pd
 
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("n_samples", T.IntegerType()),
-            T.StructField("sample_rate", T.IntegerType()),
-            T.StructField("sum_mulaw", T.LongType()),
-            T.StructField("sum_abs_mulaw", T.LongType()),
-            T.StructField("pos_sum_mulaw", T.LongType()),
-            T.StructField("sum_alaw", T.LongType()),
-            T.StructField("sum_abs_alaw", T.LongType()),
-        ]
+    def rows(data):
+        vs = np.frombuffer(bytes(data)[:n_bytes], dtype=np.uint8)
+        codes = np.empty(2 * len(vs), dtype=np.uint8)
+        codes[0::2] = vs
+        codes[1::2] = 255 - vs
+        raw = codes.tobytes()
+        su, rate = decode_audio(encode_wav(raw, 7, 1, 8000, 8))
+        sa, _ = decode_audio(encode_wav(raw, 6, 1, 8000, 8))
+        u = su[:, 0].astype(np.int64)
+        a = sa[:, 0].astype(np.int64)
+        pos = np.arange(1, len(u) + 1, dtype=np.int64)
+        yield (len(u), int(rate), int(u.sum()), int(np.abs(u).sum()),
+               int((pos * u).sum()), int(a.sum()), int(np.abs(a).sum()))
+
+    return _map_media(
+        df, id_col, bytes_col,
+        "n_samples int, sample_rate int, sum_mulaw long, sum_abs_mulaw long, "
+        "pos_sum_mulaw long, sum_alaw long, sum_abs_alaw long",
+        rows,
     )
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, data in zip(pdf[id_col], pdf[bytes_col]):
-                vs = np.frombuffer(bytes(data)[:n_bytes], dtype=np.uint8)
-                codes = np.empty(2 * len(vs), dtype=np.uint8)
-                codes[0::2] = vs
-                codes[1::2] = 255 - vs
-                raw = codes.tobytes()
-                su, rate = decode_audio(encode_wav(raw, 7, 1, 8000, 8))
-                sa, _ = decode_audio(encode_wav(raw, 6, 1, 8000, 8))
-                u = su[:, 0].astype(np.int64)
-                a = sa[:, 0].astype(np.int64)
-                pos = np.arange(1, len(u) + 1, dtype=np.int64)
-                rows.append(
-                    (int(mid), len(u), int(rate), int(u.sum()),
-                     int(np.abs(u).sum()), int((pos * u).sum()),
-                     int(a.sum()), int(np.abs(a).sum()))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "n_samples", "sample_rate",
-                         "sum_mulaw", "sum_abs_mulaw", "pos_sum_mulaw",
-                         "sum_alaw", "sum_abs_alaw"],
-            )
-
-    return _spread_for_cpu(df).mapInPandas(fn, schema)
 
 
 def ima_adpcm_roundtrip_stats(df: DataFrame, id_col: str, bytes_col: str,
@@ -3972,53 +3608,26 @@ def ima_adpcm_roundtrip_stats(df: DataFrame, id_col: str, bytes_col: str,
     through the full RIFF parse + block-header + nibble-delta fold.
     The oracle replays the decode as a recursive SQL fold over the
     published 89-entry step table, so a wrong clamp, index adjust, or
-    nibble order anywhere breaks the hash. Arrow-batched, no shuffle."""
+    nibble order anywhere breaks the hash."""
     import numpy as np
-    import pandas as pd
 
     need = 2 + n_data_bytes
     spb = 1 + 2 * n_data_bytes
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("n_samples", T.IntegerType()),
-            T.StructField("sample_rate", T.IntegerType()),
-            T.StructField("sum_val", T.LongType()),
-            T.StructField("sum_abs", T.LongType()),
-            T.StructField("last_val", T.IntegerType()),
-        ]
+
+    def rows(data):
+        bs = bytes(data)[:need]
+        pred = (bs[0] - 64) * 256
+        block = pred.to_bytes(2, "little", signed=True) + bytes([bs[1] % 89, 0]) + bs[2:]
+        wav = encode_wav(block, 0x11, 1, 8000, 4, block_align=len(block),
+                         extra=spb.to_bytes(2, "little"))
+        s, rate = decode_audio(wav)
+        ch = s[:, 0].astype(np.int64)
+        yield len(ch), int(rate), int(ch.sum()), int(np.abs(ch).sum()), int(ch[-1])
+
+    return _map_media(
+        df, id_col, bytes_col,
+        "n_samples int, sample_rate int, sum_val long, sum_abs long, last_val int", rows,
     )
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, data in zip(pdf[id_col], pdf[bytes_col]):
-                bs = bytes(data)[:need]
-                pred = (bs[0] - 64) * 256
-                idx = bs[1] % 89
-                block = (
-                    pred.to_bytes(2, "little", signed=True)
-                    + bytes([idx, 0])
-                    + bs[2:]
-                )
-                wav = encode_wav(
-                    block, 0x11, 1, 8000, 4,
-                    block_align=len(block),
-                    extra=spb.to_bytes(2, "little"),
-                )
-                s, rate = decode_audio(wav)
-                ch = s[:, 0].astype(np.int64)
-                rows.append(
-                    (int(mid), len(ch), int(rate), int(ch.sum()),
-                     int(np.abs(ch).sum()), int(ch[-1]))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "n_samples", "sample_rate",
-                         "sum_val", "sum_abs", "last_val"],
-            )
-
-    return _spread_for_cpu(df).mapInPandas(fn, schema)
 
 
 def flac_roundtrip_stats(df: DataFrame, id_col: str, bytes_col: str,
@@ -4032,47 +3641,24 @@ def flac_roundtrip_stats(df: DataFrame, id_col: str, bytes_col: str,
     subframe's fixed predictor fold, single-partition Rice decode,
     frame CRC-16. Samples are the prefix sums s_i = s_0 + sum(d_j),
     which the oracle replays with a SQL window; sum_abs makes every
-    intermediate value load-bearing and last_val pins the full chain.
-    Arrow-batched, one row in -> one row out, no shuffle."""
+    intermediate value load-bearing and last_val pins the full chain."""
     import numpy as np
-    import pandas as pd
 
     from ssp_spark.operators.flac import encode_flac
 
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("n_samples", T.IntegerType()),
-            T.StructField("sample_rate", T.IntegerType()),
-            T.StructField("sum_val", T.LongType()),
-            T.StructField("sum_abs", T.LongType()),
-            T.StructField("last_val", T.IntegerType()),
-        ]
+    def rows(data):
+        bs = bytes(data)[:n_bytes]
+        samples = [(bs[0] - 64) * 256]
+        for b in bs[1:]:
+            samples.append(samples[-1] + (b - 64))
+        dec, rate = decode_audio(encode_flac(samples, 8000, fixed_order=1, rice_param=8))
+        ch = dec[:, 0].astype(np.int64)
+        yield len(ch), int(rate), int(ch.sum()), int(np.abs(ch).sum()), int(ch[-1])
+
+    return _map_media(
+        df, id_col, bytes_col,
+        "n_samples int, sample_rate int, sum_val long, sum_abs long, last_val int", rows,
     )
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, data in zip(pdf[id_col], pdf[bytes_col]):
-                bs = bytes(data)[:n_bytes]
-                samples = [(bs[0] - 64) * 256]
-                for b in bs[1:]:
-                    samples.append(samples[-1] + (b - 64))
-                dec, rate = decode_audio(
-                    encode_flac(samples, 8000, fixed_order=1, rice_param=8)
-                )
-                ch = dec[:, 0].astype(np.int64)
-                rows.append(
-                    (int(mid), len(ch), int(rate), int(ch.sum()),
-                     int(np.abs(ch).sum()), int(ch[-1]))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "n_samples", "sample_rate",
-                         "sum_val", "sum_abs", "last_val"],
-            )
-
-    return _spread_for_cpu(df).mapInPandas(fn, schema)
 
 
 def iter_ppm_frames(data: bytes):
@@ -4112,41 +3698,21 @@ def sample_ppm_stream_frames(
     at ``fps`` — the real variant of sample_frames' byte-stride stub
     (compressed containers need real demuxers; this is the uncompressed
     interchange path, exactly like decode_image/decode_audio). Rows that
-    are not PPM streams yield nothing (filtered, not failed)."""
-    import pandas as pd
+    are not PPM streams yield nothing (filtered, not failed); a truncated
+    or corrupt stream keeps the frames found before the damage."""
 
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("frame_idx", T.IntegerType()),
-            T.StructField("offset_bytes", T.LongType()),
-            T.StructField("offset_ms", T.LongType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-        ]
+    def rows(data):
+        try:
+            for i, (off, w, h) in enumerate(iter_ppm_frames(bytes(data or b""))):
+                if i % every_n == 0:
+                    yield i, off, (i * 1000) // fps, w, h
+        except (ValueError, IndexError):
+            pass
+
+    return _map_media(
+        df, id_col, bytes_col,
+        "frame_idx int, offset_bytes long, offset_ms long, width int, height int", rows,
     )
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, data in zip(pdf[id_col], pdf[bytes_col]):
-                try:
-                    for i, (off, w, h) in enumerate(iter_ppm_frames(bytes(data or b""))):
-                        if i % every_n == 0:
-                            rows.append(
-                                (int(mid), i, off, (i * 1000) // fps, w, h)
-                            )
-                except (ValueError, IndexError):
-                    pass  # truncated/corrupt stream: keep the frames already found
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "frame_idx", "offset_bytes", "offset_ms",
-                    "width", "height",
-                ],
-            )
-
-    return _spread_for_cpu(df).mapInPandas(fn, schema)
 
 
 def parse_y4m_header(data: bytes):
@@ -4212,54 +3778,36 @@ def iter_y4m_frames(data: bytes):
 
 
 def y4m_frame_stats(df: DataFrame, id_col: str, bytes_col: str) -> DataFrame:
-    """Per-clip Y4M index + luma energy through mapInPandas: frame
-    count, geometry, fps, and the position-weighted sum of per-frame
-    Y-plane totals (weight = frame_idx + 1, so a frame walked at the
-    wrong offset or order breaks the value). Real parsing end-to-end:
-    header tags, FRAME marker walk, planar Y extraction. Non-Y4M rows
-    yield nothing (filtered, not failed) — at 100 TB a corrupt clip
-    must not kill the scan."""
+    """Per-clip Y4M index + luma energy: frame count, geometry, fps, and
+    the position-weighted sum of per-frame Y-plane totals (weight =
+    frame_idx + 1, so a frame walked at the wrong offset or order breaks
+    the value). Real parsing end-to-end: header tags, FRAME marker walk,
+    planar Y extraction. Non-Y4M rows yield nothing (filtered, not
+    failed) — at 100 TB a corrupt clip must not kill the scan."""
     import numpy as np
-    import pandas as pd
 
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("n_frames", T.IntegerType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("fps_num", T.IntegerType()),
-            T.StructField("weighted_y_sum", T.LongType()),
-            T.StructField("last_frame_offset", T.LongType()),
-        ]
+    def rows(data):
+        raw = bytes(data or b"")
+        try:
+            w, h, fnum, fden, chroma, _ = parse_y4m_header(raw)
+            wsum = 0
+            nf = 0
+            last_off = -1
+            for off, idx in iter_y4m_frames(raw):
+                y = np.frombuffer(raw, dtype=np.uint8, count=w * h, offset=off)
+                wsum += (idx + 1) * int(y.astype(np.int64).sum())
+                nf = idx + 1
+                last_off = off
+        except (ValueError, NotImplementedError):
+            return
+        yield nf, w, h, fnum, wsum, last_off
+
+    return _map_media(
+        df, id_col, bytes_col,
+        "n_frames int, width int, height int, fps_num int, weighted_y_sum long, "
+        "last_frame_offset long",
+        rows,
     )
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, data in zip(pdf[id_col], pdf[bytes_col]):
-                raw = bytes(data or b"")
-                try:
-                    w, h, fnum, fden, chroma, _ = parse_y4m_header(raw)
-                    wsum = 0
-                    nf = 0
-                    last_off = -1
-                    for off, idx in iter_y4m_frames(raw):
-                        y = np.frombuffer(raw, dtype=np.uint8, count=w * h,
-                                          offset=off)
-                        wsum += (idx + 1) * int(y.astype(np.int64).sum())
-                        nf = idx + 1
-                        last_off = off
-                    rows.append((int(mid), nf, w, h, fnum, wsum, last_off))
-                except (ValueError, NotImplementedError):
-                    pass
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "n_frames", "width", "height",
-                         "fps_num", "weighted_y_sum", "last_frame_offset"],
-            )
-
-    return _spread_for_cpu(df).mapInPandas(fn, schema)
 
 
 def encode_y4m(frames_y, w: int, h: int, fps=(25, 1), chroma: str = "420jpeg",
@@ -4287,11 +3835,11 @@ AHASH_SCHEMA = "media_id long, ahash long, n_pixels int"
 
 def ahash_images(df: DataFrame, id_col: str, bytes_col: str) -> DataFrame:
     """Average-hash (aHash) perceptual fingerprint over REAL decoded
-    pixels: decode_image -> per-pixel grayscale -> one bit per pixel,
-    set iff the pixel is strictly brighter than the image mean. The
-    classic perceptual-dedup primitive (pHash's simpler sibling):
-    near-identical images — recompressed, slightly filtered — land in
-    the same bucket, so exact-duplicate grouping on the hash is
+    pixels (AHASH_SCHEMA): decode_image -> per-pixel grayscale -> one
+    bit per pixel, set iff the pixel is strictly brighter than the image
+    mean. The classic perceptual-dedup primitive (pHash's simpler
+    sibling): near-identical images — recompressed, slightly filtered —
+    land in the same bucket, so exact-duplicate grouping on the hash is
     perceptual near-dup detection at 100 TB cost of ONE map-side
     projection + a groupBy on a 64-bit key.
 
@@ -4302,28 +3850,15 @@ def ahash_images(df: DataFrame, id_col: str, bytes_col: str) -> DataFrame:
     packed little-endian into a BIGINT (needs n_pixels <= 63; callers
     hash thumbnails, which is the aHash contract anyway)."""
     import numpy as np
-    import pandas as pd
 
-    def one(b: bytes):
-        img = decode_image(b).astype(np.int64)
+    def rows(data):
+        img = decode_image(data).astype(np.int64)
         gray = img.sum(axis=2).ravel()  # row-major, 0..765 each
         n = gray.size
-        total = int(gray.sum())
-        bits = (gray * n) > total
+        bits = (gray * n) > int(gray.sum())
         h = 0
         for i in np.nonzero(bits)[0]:
             h |= 1 << int(i)
-        return h, n
+        yield h, n
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pairs = pdf[bytes_col].map(one)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf[id_col].astype("int64"),
-                    "ahash": pairs.map(lambda t: t[0]).astype("int64"),
-                    "n_pixels": pairs.map(lambda t: t[1]).astype("int32"),
-                }
-            )
-
-    return _spread_for_cpu(df).mapInPandas(fn, AHASH_SCHEMA)
+    return _map_media(df, id_col, bytes_col, "ahash long, n_pixels int", rows)

@@ -191,6 +191,36 @@ sh AS (
 
 _SQL_SHINGLES = _sql_shingles(3)
 
+
+def _sql_doc_bytes(n: int) -> str:
+    """The codec gates' input: ``img`` holds each document's first n
+    characters as ``px`` when they are n single-byte characters (the
+    chars == bytes guard _doc_prefix_bytes applies on the Spark side);
+    ``b`` holds one row (doc_id, i, v) per 1-based position i with its
+    byte value v."""
+    return f"""img AS (
+  SELECT doc_id, substr(text, 1, {n}) AS px
+  FROM documents WHERE length(text) >= {n}
+    AND strlen(substr(text, 1, {n})) = {n}
+),
+b AS (
+  SELECT doc_id, i, ascii(substr(px, i, 1)) AS v
+  FROM img, (SELECT unnest(generate_series(1, {n})) AS i) u
+)"""
+
+
+def _doc_prefix_bytes(spark: SparkSession, sf_dir: str, n: int) -> DataFrame:
+    """(doc_id, px): each document's first n characters as UTF-8 bytes,
+    kept only when they encode to exactly n bytes, so the payload's
+    chars equal its bytes and the DuckDB replay (_sql_doc_bytes) can
+    read them with ascii(substr())."""
+    return (
+        load_table(spark, "documents", sf_dir)
+        .filter(F.length("text") >= n)
+        .select("doc_id", F.encode(F.substring("text", 1, n), "utf-8").alias("px"))
+        .filter(F.octet_length("px") == n)
+    )
+
 _SQL_HASH64 = "('0x' || substr(md5({x}), 1, 15))::BIGINT"
 
 # Multiply-shift seed family constants (ssp_spark.functions._mix_consts,
@@ -2127,6 +2157,8 @@ def streaming_wordcount_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     must equal the batch word_count exactly (same oracle)."""
     import uuid
 
+    from ssp_spark.streaming import _await_bounded
+
     docs_schema = load_table(spark, "documents", sf_dir).schema
     # file stream source needs a DIRECTORY; select the one fixture file by glob
     sdf = (
@@ -2148,7 +2180,7 @@ def streaming_wordcount_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    _await_bounded(q, 120)
     return spark.table(name)
 
 
@@ -3564,9 +3596,15 @@ def lineitem_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Non-parquet sources (csv / json) exercised end-to-end
 # ---------------------------------------------------------------------------
 
-# Scratch area for source round-trips (inside the repo; driver fixtures are
-# read-only). Small dimension tables only — the export is part of the query.
-_SCRATCH = "/root/repo/.scratch"
+import tempfile as _tempfile  # noqa: E402
+
+# Scratch area for source round-trips (the fixtures are read-only): under
+# the first Spark local dir, else the system temp dir. Small dimension
+# tables only — the export is part of the query.
+_SCRATCH = _os.path.join(
+    (_os.environ.get("SPARK_LOCAL_DIRS") or _tempfile.gettempdir()).split(",")[0],
+    "ssp_spark_scratch",
+)
 
 
 @_q(
@@ -4759,11 +4797,8 @@ def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_q(
     "multimodal_resize_decoded",
-    """
-    WITH img AS (
-      SELECT doc_id, substr(text, 1, 48) AS px
-      FROM documents WHERE length(text) >= 48
-    )
+    f"""
+    WITH {_sql_doc_bytes(48)}
     SELECT doc_id AS media_id, 2 AS out_w, 2 AS out_h, 12 AS n_pixels,
            CAST((SELECT sum(ascii(substr(px, p.base * 3 + ch, 1)))
                  FROM (SELECT unnest([0, 2, 8, 10]) AS base) p,
@@ -4782,22 +4817,12 @@ def multimodal_resize_decoded(spark: SparkSession, sf_dir: str) -> DataFrame:
     only when chars == bytes, so BOTH sides enforce the ASCII guard
     structurally (Spark: the 48-char payload must encode to 48 UTF-8
     bytes; oracle: strlen = 48) instead of trusting the fixture to stay
-    pure ASCII (r8 ADVICE). Proves the numpy PPM decoder, not just the
+    pure ASCII. Proves the numpy PPM decoder, not just the
     byte-sampling fallback, against an exact oracle."""
     from ssp_spark.operators import multimodal as mm
 
-    docs = (
-        load_table(spark, "documents", sf_dir)
-        .filter(F.length("text") >= 48)
-        .select(
-            "doc_id",
-            F.encode(F.substring("text", 1, 48), "utf-8").alias("__px"),
-        )
-        .filter(F.octet_length("__px") == 48)
-        .select(
-            "doc_id",
-            F.concat(F.lit(b"P6\n4 4\n255\n"), F.col("__px")).alias("data"),
-        )
+    docs = _doc_prefix_bytes(spark, sf_dir, 48).select(
+        "doc_id", F.concat(F.lit(b"P6\n4 4\n255\n"), F.col("px")).alias("data")
     )
     out = mm.resize_media(docs, "doc_id", "data", out_w=2, out_h=2)
     return out.select("media_id", "out_w", "out_h", "n_pixels", "pix_checksum")
@@ -4805,16 +4830,8 @@ def multimodal_resize_decoded(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_q(
     "multimodal_decode_png",
-    """
-    WITH img AS (
-      SELECT doc_id, substr(text, 1, 60) AS px
-      FROM documents WHERE length(text) >= 60
-        AND strlen(substr(text, 1, 60)) = 60
-    ),
-    b AS (
-      SELECT doc_id, i, ascii(substr(px, i, 1)) AS v
-      FROM img, (SELECT unnest(generate_series(1, 60)) AS i) u
-    )
+    f"""
+    WITH {_sql_doc_bytes(60)}
     SELECT doc_id AS media_id, 4 AS width, 5 AS height,
            CAST(sum(v) AS BIGINT) AS pix_sum,
            CAST(sum(CASE WHEN (i - 1) % 3 = 0 THEN v ELSE 0 END) AS BIGINT)
@@ -4845,39 +4862,22 @@ def multimodal_decode_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB this is the classic decode-map: pure per-row CPU that
     scales with executors, zero exchanges.
 
-    ASCII guard (r8 ADVICE): the cross-engine hash needs the payload's
-    CHARS to equal its BYTES, and the fixture being pure ASCII made
-    that true only by accident of the data. Both sides now enforce it
-    structurally — Spark keeps rows whose first-60-chars UTF-8
+    ASCII guard: the cross-engine hash needs the payload's CHARS to
+    equal its BYTES. Both sides enforce it structurally — Spark keeps
+    rows whose first-60-chars UTF-8
     encoding is exactly 60 bytes, the oracle keeps strlen(px) = 60 —
     so a future non-ASCII document drops identically from both frames
     instead of silently diverging the hash."""
     from ssp_spark.operators import multimodal as mm
 
-    docs = (
-        load_table(spark, "documents", sf_dir)
-        .filter(F.length("text") >= 60)
-        .select(
-            "doc_id",
-            F.encode(F.substring("text", 1, 60), "utf-8").alias("px"),
-        )
-        .filter(F.octet_length("px") == 60)
-    )
+    docs = _doc_prefix_bytes(spark, sf_dir, 60)
     return mm.png_roundtrip_stats(docs, "doc_id", "px", w=4, h=5)
 
 
 @_q(
     "multimodal_decode_png_palette",
-    """
-    WITH img AS (
-      SELECT doc_id, substr(text, 1, 20) AS px
-      FROM documents WHERE length(text) >= 20
-        AND strlen(substr(text, 1, 20)) = 20
-    ),
-    b AS (
-      SELECT doc_id, ascii(substr(px, i, 1)) AS v
-      FROM img, (SELECT unnest(generate_series(1, 20)) AS i) u
-    )
+    f"""
+    WITH {_sql_doc_bytes(20)}
     SELECT doc_id AS media_id, 4 AS width, 5 AS height,
            CAST(sum(v + (2 * v) % 256 + (7 * v) % 256) AS BIGINT) AS pix_sum,
            CAST(sum(v) AS BIGINT) AS r_sum,
@@ -4888,8 +4888,7 @@ def multimodal_decode_png(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def multimodal_decode_png_palette(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The indexed-PNG (color type 3) decode path under the driver
-    gate — the round-9 slice of the codec (VERDICT r8 #4): each
-    document's first 20 bytes become the INDEX PLANE of a genuine 4x5
+    gate: each document's first 20 bytes become the INDEX PLANE of a genuine 4x5
     8-bit palette PNG (real deflated IDAT + PLTE, scanline filters
     cycling None/Sub/Up/Average/Paeth so all five reconstruction paths
     run with bpp=1 — the one-byte-pixel filter geometry truecolor
@@ -4911,15 +4910,7 @@ def multimodal_decode_png_palette(spark: SparkSession, sf_dir: str) -> DataFrame
     from ssp_spark.operators import multimodal as mm
 
     palette = [(i, (2 * i) % 256, (7 * i) % 256) for i in range(128)]
-    docs = (
-        load_table(spark, "documents", sf_dir)
-        .filter(F.length("text") >= 20)
-        .select(
-            "doc_id",
-            F.encode(F.substring("text", 1, 20), "utf-8").alias("px"),
-        )
-        .filter(F.octet_length("px") == 20)
-    )
+    docs = _doc_prefix_bytes(spark, sf_dir, 20)
     return mm.png_palette_roundtrip_stats(
         docs, "doc_id", "px", w=4, h=5, palette=palette
     )
@@ -4927,16 +4918,8 @@ def multimodal_decode_png_palette(spark: SparkSession, sf_dir: str) -> DataFrame
 
 @_q(
     "multimodal_decode_jpeg",
-    """
-    WITH img AS (
-      SELECT doc_id, substr(text, 1, 20) AS px
-      FROM documents WHERE length(text) >= 20
-        AND strlen(substr(text, 1, 20)) = 20
-    ),
-    b AS (
-      SELECT doc_id, ascii(substr(px, i, 1)) AS v
-      FROM img, (SELECT unnest(generate_series(1, 20)) AS i) u
-    )
+    f"""
+    WITH {_sql_doc_bytes(20)}
     SELECT doc_id AS media_id, 32 AS width, 40 AS height,
            CAST(3 * sum(64 * (v + 64)) AS BIGINT) AS pix_sum,
            CAST(sum(64 * (v + 64)) AS BIGINT) AS gray_sum
@@ -4944,9 +4927,8 @@ def multimodal_decode_png_palette(spark: SparkSession, sf_dir: str) -> DataFrame
     """,
 )
 def multimodal_decode_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Baseline JPEG decode under the driver gate — the round-9 stretch
-    slice of the codec (VERDICT r8 gap #1): each document's first 20
-    bytes v become the quantized DC coefficients (v - 64, so negative
+    """Baseline JPEG decode under the oracle gate: each document's
+    first 20 bytes v become the quantized DC coefficients (v - 64, so negative
     differential categories are exercised) of a genuine 4x5-block
     grayscale baseline JPEG written at the COEFFICIENT level
     (encode_jpeg_gray_coeffs: Annex K.3 Huffman tables, differential DC
@@ -4968,30 +4950,14 @@ def multimodal_decode_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     same 100 TB decode-map shape as the PNG gate queries."""
     from ssp_spark.operators import multimodal as mm
 
-    docs = (
-        load_table(spark, "documents", sf_dir)
-        .filter(F.length("text") >= 20)
-        .select(
-            "doc_id",
-            F.encode(F.substring("text", 1, 20), "utf-8").alias("px"),
-        )
-        .filter(F.octet_length("px") == 20)
-    )
+    docs = _doc_prefix_bytes(spark, sf_dir, 20)
     return mm.jpeg_roundtrip_stats(docs, "doc_id", "px", bw=4, bh=5)
 
 
 @_q(
     "multimodal_decode_jpeg_progressive",
-    """
-    WITH img AS (
-      SELECT doc_id, substr(text, 1, 20) AS px
-      FROM documents WHERE length(text) >= 20
-        AND strlen(substr(text, 1, 20)) = 20
-    ),
-    b AS (
-      SELECT doc_id, ascii(substr(px, i, 1)) AS v
-      FROM img, (SELECT unnest(generate_series(1, 20)) AS i) u
-    )
+    f"""
+    WITH {_sql_doc_bytes(20)}
     SELECT doc_id AS media_id, 32 AS width, 40 AS height,
            CAST(3 * sum(64 * (v + 64)) AS BIGINT) AS pix_sum,
            CAST(sum(64 * (v + 64)) AS BIGINT) AS gray_sum
@@ -4999,8 +4965,7 @@ def multimodal_decode_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def multimodal_decode_jpeg_progressive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Progressive (SOF2) JPEG decode under the driver gate — the
-    round-10 closure of the codec's last major disclosed boundary.
+    """Progressive (SOF2) JPEG decode under the oracle gate.
     Same 4x5-block DC payload as `multimodal_decode_jpeg` (bytes ->
     dc = v - 64), but the stream is a REAL three-scan progressive file
     (encode_jpeg_gray_coeffs_progressive: DC first at Al=1 with the
@@ -5023,26 +4988,14 @@ def multimodal_decode_jpeg_progressive(spark: SparkSession, sf_dir: str) -> Data
     same 100 TB decode-map shape as the sibling gate queries."""
     from ssp_spark.operators import multimodal as mm
 
-    docs = (
-        load_table(spark, "documents", sf_dir)
-        .filter(F.length("text") >= 20)
-        .select(
-            "doc_id",
-            F.encode(F.substring("text", 1, 20), "utf-8").alias("px"),
-        )
-        .filter(F.octet_length("px") == 20)
-    )
+    docs = _doc_prefix_bytes(spark, sf_dir, 20)
     return mm.jpeg_progressive_roundtrip_stats(docs, "doc_id", "px", bw=4, bh=5)
 
 
 @_q(
     "multimodal_decode_jpeg420",
-    """
-    WITH img AS (
-      SELECT doc_id, substr(text, 1, 24) AS px
-      FROM documents WHERE length(text) >= 24
-        AND strlen(substr(text, 1, 24)) = 24
-    ),
+    f"""
+    WITH {_sql_doc_bytes(24)},
     blk AS (
       SELECT doc_id,
              (j - 1) // 4 AS br, (j - 1) % 4 AS bc,
@@ -5065,9 +5018,9 @@ def multimodal_decode_jpeg_progressive(spark: SparkSession, sf_dir: str) -> Data
     """,
 )
 def multimodal_decode_jpeg420(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Chroma-subsampled (4:2:0) JPEG decode under the driver gate —
-    the round-10 codec slice (VERDICT r9 #7: 4:2:0 is the dominant
-    real-corpus JPEG form). Each document's first 24 bytes become the
+    """Chroma-subsampled (4:2:0) JPEG decode under the oracle gate
+    (4:2:0 is the dominant real-corpus JPEG form). Each document's
+    first 24 bytes become the
     DC coefficients of a genuine 2x2-MCU (32x32) baseline 4:2:0 JPEG
     (bytes 1-16 the 4x4 luma grid, 17-20 / 21-24 the 2x2 Cb/Cr grids
     quantized to multiples of 5 in [-20, 20]) written at the
@@ -5097,30 +5050,14 @@ def multimodal_decode_jpeg420(spark: SparkSession, sf_dir: str) -> DataFrame:
     same 100 TB decode-map shape as the sibling gate queries."""
     from ssp_spark.operators import multimodal as mm
 
-    docs = (
-        load_table(spark, "documents", sf_dir)
-        .filter(F.length("text") >= 24)
-        .select(
-            "doc_id",
-            F.encode(F.substring("text", 1, 24), "utf-8").alias("px"),
-        )
-        .filter(F.octet_length("px") == 24)
-    )
+    docs = _doc_prefix_bytes(spark, sf_dir, 24)
     return mm.jpeg420_roundtrip_stats(docs, "doc_id", "px")
 
 
 @_q(
     "multimodal_decode_png_adam7",
-    """
-    WITH img AS (
-      SELECT doc_id, substr(text, 1, 20) AS px
-      FROM documents WHERE length(text) >= 20
-        AND strlen(substr(text, 1, 20)) = 20
-    ),
-    b AS (
-      SELECT doc_id, i, ascii(substr(px, i, 1)) AS v
-      FROM img, (SELECT unnest(generate_series(1, 20)) AS i) u
-    )
+    f"""
+    WITH {_sql_doc_bytes(20)}
     SELECT doc_id AS media_id, 4 AS width, 5 AS height,
            CAST(sum(v) AS BIGINT) AS gray_sum,
            CAST(3 * sum(v) AS BIGINT) AS pix_sum,
@@ -5129,7 +5066,7 @@ def multimodal_decode_jpeg420(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def multimodal_decode_png_adam7(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The round-9 full-matrix PNG decoder additions — grayscale
+    """The full-matrix PNG decoder paths — grayscale
     colorize, 16-bit samples, Adam7 per-pass defiltering — under the
     driver gate in ONE stream: each document's first 20 bytes become
     the HIGH bytes of the 16-bit gray samples of a genuine 4x5
@@ -5150,36 +5087,17 @@ def multimodal_decode_png_adam7(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan: one documents scan -> mapInPandas (Arrow-batched, row-local
     encode/decode, no shuffle) -> driver-hashable 6-column frame; the
-    same 100 TB decode-map shape as the sibling queries. Not in the
-    round-9 driver window (its 50 slots were committed to the r4-stale
-    rotation before this query existed); it leads the r10 queue with
-    the r5 cohort."""
+    same 100 TB decode-map shape as the sibling queries."""
     from ssp_spark.operators import multimodal as mm
 
-    docs = (
-        load_table(spark, "documents", sf_dir)
-        .filter(F.length("text") >= 20)
-        .select(
-            "doc_id",
-            F.encode(F.substring("text", 1, 20), "utf-8").alias("px"),
-        )
-        .filter(F.octet_length("px") == 20)
-    )
+    docs = _doc_prefix_bytes(spark, sf_dir, 20)
     return mm.png_gray16_adam7_roundtrip_stats(docs, "doc_id", "px", w=4, h=5)
 
 
 @_q(
     "multimodal_decode_bmp_rle8",
-    """
-    WITH img AS (
-      SELECT doc_id, substr(text, 1, 20) AS px
-      FROM documents WHERE length(text) >= 20
-        AND strlen(substr(text, 1, 20)) = 20
-    ),
-    b AS (
-      SELECT doc_id, i, ascii(substr(px, i, 1)) AS v
-      FROM img, (SELECT unnest(generate_series(1, 20)) AS i) u
-    )
+    f"""
+    WITH {_sql_doc_bytes(20)}
     SELECT doc_id AS media_id, 32 AS width, 40 AS height,
            CAST(64 * sum(v) AS BIGINT) AS sum_r,
            CAST(128 * sum(v) AS BIGINT) AS sum_g,
@@ -5191,8 +5109,8 @@ def multimodal_decode_png_adam7(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def multimodal_decode_bmp_rle8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RLE8 (BI_RLE8) palette BMP decode under the driver gate — the
-    round-10 completion of the BMP matrix past 24-bit BI_RGB: 8-bit
+    """RLE8 (BI_RLE8) palette BMP decode under the oracle gate, the
+    BMP matrix past 24-bit BI_RGB: 8-bit
     color-table BMPs, uncompressed and run-length encoded. Same tile
     construction and palette as the GIF gate, but the container
     exercises BMP's distinct machinery: the BGRA color table, the
@@ -5208,30 +5126,14 @@ def multimodal_decode_bmp_rle8(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale) -> driver-hashable 7-column frame."""
     from ssp_spark.operators import multimodal as mm
 
-    docs = (
-        load_table(spark, "documents", sf_dir)
-        .filter(F.length("text") >= 20)
-        .select(
-            "doc_id",
-            F.encode(F.substring("text", 1, 20), "utf-8").alias("px"),
-        )
-        .filter(F.octet_length("px") == 20)
-    )
+    docs = _doc_prefix_bytes(spark, sf_dir, 20)
     return mm.bmp_rle8_roundtrip_stats(docs, "doc_id", "px")
 
 
 @_q(
     "multimodal_video_y4m_index",
-    """
-    WITH img AS (
-      SELECT doc_id, substr(text, 1, 5) AS px
-      FROM documents WHERE length(text) >= 5
-        AND strlen(substr(text, 1, 5)) = 5
-    ),
-    b AS (
-      SELECT doc_id, i, ascii(substr(px, i, 1)) AS v
-      FROM img, (SELECT unnest(generate_series(1, 5)) AS i) u
-    )
+    f"""
+    WITH {_sql_doc_bytes(5)}
     SELECT doc_id AS media_id, 5 AS n_frames, 16 AS width, 8 AS height,
            25 AS fps_num,
            CAST(128 * sum(i * v) AS BIGINT) AS weighted_y_sum,
@@ -5258,15 +5160,7 @@ def multimodal_video_y4m_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     inlined bytes (MEDIA_META uri layout), identical plan shape."""
     from ssp_spark.operators import multimodal as mm
 
-    docs = (
-        load_table(spark, "documents", sf_dir)
-        .filter(F.length("text") >= 5)
-        .select(
-            "doc_id",
-            F.encode(F.substring("text", 1, 5), "utf-8").alias("px"),
-        )
-        .filter(F.octet_length("px") == 5)
-    )
+    docs = _doc_prefix_bytes(spark, sf_dir, 5)
 
     def build(batches):
         import pandas as pd
@@ -5295,16 +5189,8 @@ def multimodal_video_y4m_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_q(
     "multimodal_decode_tiff",
-    """
-    WITH img AS (
-      SELECT doc_id, substr(text, 1, 20) AS px
-      FROM documents WHERE length(text) >= 20
-        AND strlen(substr(text, 1, 20)) = 20
-    ),
-    b AS (
-      SELECT doc_id, i, ascii(substr(px, i, 1)) AS v
-      FROM img, (SELECT unnest(generate_series(1, 20)) AS i) u
-    )
+    f"""
+    WITH {_sql_doc_bytes(20)}
     SELECT doc_id AS media_id, 32 AS width, 40 AS height,
            CAST(64 * sum(v) AS BIGINT) AS gray_sum,
            CAST(sum(v * (16384 * ((i - 1) // 4)
@@ -5314,8 +5200,8 @@ def multimodal_video_y4m_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def multimodal_decode_tiff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Baseline TIFF 6.0 decode under the driver gate — the round-10
-    scan/scientific-corpus format slice. Each document's first 20
+    """Baseline TIFF 6.0 decode under the oracle gate (the
+    scan/scientific-corpus format). Each document's first 20
     bytes tile to the same 32x40 grid as the GIF gate, but the
     container exercises TIFF's distinct machinery: big-endian (MM)
     byte order, the IFD tag walk, THREE strips via RowsPerStrip=16
@@ -5333,30 +5219,14 @@ def multimodal_decode_tiff(spark: SparkSession, sf_dir: str) -> DataFrame:
     same 100 TB decode-map shape as the sibling gate queries."""
     from ssp_spark.operators import multimodal as mm
 
-    docs = (
-        load_table(spark, "documents", sf_dir)
-        .filter(F.length("text") >= 20)
-        .select(
-            "doc_id",
-            F.encode(F.substring("text", 1, 20), "utf-8").alias("px"),
-        )
-        .filter(F.octet_length("px") == 20)
-    )
+    docs = _doc_prefix_bytes(spark, sf_dir, 20)
     return mm.tiff_roundtrip_stats(docs, "doc_id", "px")
 
 
 @_q(
     "multimodal_decode_audio_flac",
-    """
-    WITH img AS (
-      SELECT doc_id, substr(text, 1, 20) AS px
-      FROM documents WHERE length(text) >= 20
-        AND strlen(substr(text, 1, 20)) = 20
-    ),
-    b AS (
-      SELECT doc_id, i, ascii(substr(px, i, 1)) AS v
-      FROM img, (SELECT unnest(generate_series(1, 20)) AS i) u
-    ),
+    f"""
+    WITH {_sql_doc_bytes(20)},
     s AS (
       SELECT doc_id, i,
              SUM(CASE WHEN i = 1 THEN (v - 64) * 256 ELSE v - 64 END)
@@ -5371,8 +5241,8 @@ def multimodal_decode_tiff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def multimodal_decode_audio_flac(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FLAC decode under the driver gate — the round-10 lossless-audio
-    slice (operators/flac.py: a complete frame-level decoder —
+    """FLAC decode under the oracle gate (operators/flac.py: a
+    complete frame-level decoder —
     STREAMINFO, sync + header codes + UTF-8 frame numbers + CRC-8,
     CONSTANT/VERBATIM/FIXED/LPC subframes, partitioned Rice with the
     raw-bits escape, left/right/mid-side decorrelation, frame CRC-16).
@@ -5391,30 +5261,14 @@ def multimodal_decode_audio_flac(spark: SparkSession, sf_dir: str) -> DataFrame:
     same 100 TB decode-map shape as the sibling gate queries."""
     from ssp_spark.operators import multimodal as mm
 
-    docs = (
-        load_table(spark, "documents", sf_dir)
-        .filter(F.length("text") >= 20)
-        .select(
-            "doc_id",
-            F.encode(F.substring("text", 1, 20), "utf-8").alias("px"),
-        )
-        .filter(F.octet_length("px") == 20)
-    )
+    docs = _doc_prefix_bytes(spark, sf_dir, 20)
     return mm.flac_roundtrip_stats(docs, "doc_id", "px", n_bytes=20)
 
 
 @_q(
     "multimodal_decode_jpeg12",
-    """
-    WITH img AS (
-      SELECT doc_id, substr(text, 1, 20) AS px
-      FROM documents WHERE length(text) >= 20
-        AND strlen(substr(text, 1, 20)) = 20
-    ),
-    b AS (
-      SELECT doc_id, ascii(substr(px, i, 1)) AS v
-      FROM img, (SELECT unnest(generate_series(1, 20)) AS i) u
-    )
+    f"""
+    WITH {_sql_doc_bytes(20)}
     SELECT doc_id AS media_id, 32 AS width, 40 AS height,
            CAST(sum(64 * (v + 1984)) AS BIGINT) AS gray_sum,
            CAST(max(v) + 1984 AS INT) AS max_px
@@ -5423,8 +5277,7 @@ def multimodal_decode_audio_flac(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def multimodal_decode_jpeg12(spark: SparkSession, sf_dir: str) -> DataFrame:
     """12-bit (SOF0 precision 12) grayscale JPEG decode under the
-    driver gate — the round-10 closure of a disclosed codec boundary
-    (the medical/scientific-imaging profile). Same DC-only 4x5-block
+    oracle gate (the medical/scientific-imaging profile). Same DC-only 4x5-block
     construction as `multimodal_decode_jpeg` (dc = v - 64 on a real
     Huffman stream), but written at precision 12 and decoded through
     decode_image_deep: the 2048 level shift and 0..4095 clamp make
@@ -5439,30 +5292,14 @@ def multimodal_decode_jpeg12(spark: SparkSession, sf_dir: str) -> DataFrame:
     same 100 TB decode-map shape as the sibling gate queries."""
     from ssp_spark.operators import multimodal as mm
 
-    docs = (
-        load_table(spark, "documents", sf_dir)
-        .filter(F.length("text") >= 20)
-        .select(
-            "doc_id",
-            F.encode(F.substring("text", 1, 20), "utf-8").alias("px"),
-        )
-        .filter(F.octet_length("px") == 20)
-    )
+    docs = _doc_prefix_bytes(spark, sf_dir, 20)
     return mm.jpeg12_roundtrip_stats(docs, "doc_id", "px", bw=4, bh=5)
 
 
 @_q(
     "multimodal_decode_gif",
-    """
-    WITH img AS (
-      SELECT doc_id, substr(text, 1, 20) AS px
-      FROM documents WHERE length(text) >= 20
-        AND strlen(substr(text, 1, 20)) = 20
-    ),
-    b AS (
-      SELECT doc_id, i, ascii(substr(px, i, 1)) AS v
-      FROM img, (SELECT unnest(generate_series(1, 20)) AS i) u
-    )
+    f"""
+    WITH {_sql_doc_bytes(20)}
     SELECT doc_id AS media_id, 32 AS width, 40 AS height,
            CAST(64 * sum(v) AS BIGINT) AS sum_r,
            CAST(128 * sum(v) AS BIGINT) AS sum_g,
@@ -5474,8 +5311,7 @@ def multimodal_decode_jpeg12(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def multimodal_decode_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GIF (LZW) decode under the driver gate — the round-10 closure
-    of the web-corpus image format the tier was missing. Each
+    """GIF (LZW) decode under the oracle gate. Each
     document's first 20 bytes v become a 4x5 grid of indices into the
     128-entry palette (v, 2v, 255-v), tiled 8x8 to a 32x40 image
     (1,280 pixels — the LZW table grows through a code-width bump),
@@ -5496,30 +5332,14 @@ def multimodal_decode_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
     same 100 TB decode-map shape as the sibling gate queries."""
     from ssp_spark.operators import multimodal as mm
 
-    docs = (
-        load_table(spark, "documents", sf_dir)
-        .filter(F.length("text") >= 20)
-        .select(
-            "doc_id",
-            F.encode(F.substring("text", 1, 20), "utf-8").alias("px"),
-        )
-        .filter(F.octet_length("px") == 20)
-    )
+    docs = _doc_prefix_bytes(spark, sf_dir, 20)
     return mm.gif_roundtrip_stats(docs, "doc_id", "px")
 
 
 @_q(
     "multimodal_gif_anim_index",
-    """
-    WITH img AS (
-      SELECT doc_id, substr(text, 1, 20) AS px
-      FROM documents WHERE length(text) >= 20
-        AND strlen(substr(text, 1, 20)) = 20
-    ),
-    b AS (
-      SELECT doc_id, i, ascii(substr(px, i, 1)) AS v
-      FROM img, (SELECT unnest(generate_series(1, 20)) AS i) u
-    )
+    f"""
+    WITH {_sql_doc_bytes(20)}
     SELECT doc_id AS media_id, 4 AS n_frames,
            CAST(sum(CASE WHEN (i - 1) % 5 = 0 THEN v + 1 ELSE 0 END)
                 AS BIGINT) AS sum_delay_cs,
@@ -5531,7 +5351,7 @@ def multimodal_decode_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def multimodal_gif_anim_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANIMATED-GIF frame walking under the driver gate — the video
-    tier's GIF twin of the Y4M index (round 11; web corpora are full
+    tier's GIF twin of the Y4M index (web corpora are full
     of multi-frame GIFs and frame sampling needs the per-frame
     payloads, not just frame 1). Each document's first 20 bytes become
     a REAL 4-frame GIF89a animation (encode_gif_anim: NETSCAPE loop
@@ -5548,30 +5368,14 @@ def multimodal_gif_anim_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     same 100 TB decode-map shape as the sibling gate queries."""
     from ssp_spark.operators import multimodal as mm
 
-    docs = (
-        load_table(spark, "documents", sf_dir)
-        .filter(F.length("text") >= 20)
-        .select(
-            "doc_id",
-            F.encode(F.substring("text", 1, 20), "utf-8").alias("px"),
-        )
-        .filter(F.octet_length("px") == 20)
-    )
+    docs = _doc_prefix_bytes(spark, sf_dir, 20)
     return mm.gif_anim_stats(docs, "doc_id", "px")
 
 
 @_q(
     "multimodal_decode_webp",
-    """
-    WITH img AS (
-      SELECT doc_id, substr(text, 1, 20) AS px
-      FROM documents WHERE length(text) >= 20
-        AND strlen(substr(text, 1, 20)) = 20
-    ),
-    b AS (
-      SELECT doc_id, i, ascii(substr(px, i, 1)) AS v
-      FROM img, (SELECT unnest(generate_series(1, 20)) AS i) u
-    )
+    f"""
+    WITH {_sql_doc_bytes(20)}
     SELECT doc_id AS media_id, 32 AS width, 40 AS height,
            CAST(64 * sum(v) AS BIGINT) AS sum_r,
            CAST(64 * sum(255 - v) AS BIGINT) AS sum_g,
@@ -5583,9 +5387,7 @@ def multimodal_gif_anim_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def multimodal_decode_webp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lossless-WebP (VP8L) decode under the driver gate — the round-11
-    closure of the web-corpus image format whose "no anchors" boundary
-    round 10's hand-bitstream technique dissolved (VERDICT r10 #3).
+    """Lossless-WebP (VP8L) decode under the oracle gate.
     Each document's first 20 bytes v become a 4x5 grid of colors
     (r=v, g=255-v, b=2v) tiled 8x8 to 32x40, written as a REAL VP8L
     stream (canonical-Huffman prefix codes via the code-length code,
@@ -5603,30 +5405,14 @@ def multimodal_decode_webp(spark: SparkSession, sf_dir: str) -> DataFrame:
     same 100 TB decode-map shape as the sibling gate queries."""
     from ssp_spark.operators import multimodal as mm
 
-    docs = (
-        load_table(spark, "documents", sf_dir)
-        .filter(F.length("text") >= 20)
-        .select(
-            "doc_id",
-            F.encode(F.substring("text", 1, 20), "utf-8").alias("px"),
-        )
-        .filter(F.octet_length("px") == 20)
-    )
+    docs = _doc_prefix_bytes(spark, sf_dir, 20)
     return mm.webp_roundtrip_stats(docs, "doc_id", "px")
 
 
 @_q(
     "multimodal_decode_audio_g711",
-    """
-    WITH img AS (
-      SELECT doc_id, substr(text, 1, 20) AS px
-      FROM documents WHERE length(text) >= 20
-        AND strlen(substr(text, 1, 20)) = 20
-    ),
-    b AS (
-      SELECT doc_id, i, ascii(substr(px, i, 1)) AS v
-      FROM img, (SELECT unnest(generate_series(1, 20)) AS i) u
-    ),
+    f"""
+    WITH {_sql_doc_bytes(20)},
     cw AS (
       SELECT doc_id, 2 * i - 1 AS p, v AS c FROM b
       UNION ALL
@@ -5659,9 +5445,9 @@ def multimodal_decode_webp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def multimodal_decode_audio_g711(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """G.711 μ-law + A-law audio decode under the driver gate — the
-    round-10 extension of decode_audio past 16-bit PCM to the two
-    telephony log-PCM codings every speech corpus carries. Each
+    """G.711 μ-law + A-law audio decode under the oracle gate:
+    decode_audio past 16-bit PCM on the two telephony log-PCM codings
+    every speech corpus carries. Each
     document's first 20 bytes v become the 40-codeword stream
     [v, 255-v, ...] (the complement pairing drives both sign halves of
     both laws), wrapped into REAL format-7 and format-6 WAV containers
@@ -5682,26 +5468,14 @@ def multimodal_decode_audio_g711(spark: SparkSession, sf_dir: str) -> DataFrame:
     same 100 TB decode-map shape as the image gate queries."""
     from ssp_spark.operators import multimodal as mm
 
-    docs = (
-        load_table(spark, "documents", sf_dir)
-        .filter(F.length("text") >= 20)
-        .select(
-            "doc_id",
-            F.encode(F.substring("text", 1, 20), "utf-8").alias("px"),
-        )
-        .filter(F.octet_length("px") == 20)
-    )
+    docs = _doc_prefix_bytes(spark, sf_dir, 20)
     return mm.g711_roundtrip_stats(docs, "doc_id", "px", n_bytes=20)
 
 
 @_q(
     "multimodal_decode_audio_adpcm",
-    """
-    WITH RECURSIVE img AS (
-      SELECT doc_id, substr(text, 1, 10) AS px
-      FROM documents WHERE length(text) >= 10
-        AND strlen(substr(text, 1, 10)) = 10
-    ),
+    f"""
+    WITH RECURSIVE {_sql_doc_bytes(10)},
     st(i, s) AS (
       SELECT * FROM (VALUES
         (0,7),(1,8),(2,9),(3,10),(4,11),(5,12),(6,13),(7,14),(8,16),
@@ -5762,7 +5536,7 @@ def multimodal_decode_audio_g711(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def multimodal_decode_audio_adpcm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IMA/DVI ADPCM (WAVE format 0x11) decode under the driver gate —
-    the round-10 stateful-audio slice: each document's first 10 bytes
+    the stateful-audio gate: each document's first 10 bytes
     become a REAL single-block mono ADPCM WAV (byte0 scales to the
     block-header predictor, both signs; byte1 picks the step index
     v % 89; bytes 2..9 carry 16 nibble deltas, low nibble first) and
@@ -5783,15 +5557,7 @@ def multimodal_decode_audio_adpcm(spark: SparkSession, sf_dir: str) -> DataFrame
     this query pins the CODEC against an independent replay."""
     from ssp_spark.operators import multimodal as mm
 
-    docs = (
-        load_table(spark, "documents", sf_dir)
-        .filter(F.length("text") >= 10)
-        .select(
-            "doc_id",
-            F.encode(F.substring("text", 1, 10), "utf-8").alias("px"),
-        )
-        .filter(F.octet_length("px") == 10)
-    )
+    docs = _doc_prefix_bytes(spark, sf_dir, 10)
     return mm.ima_adpcm_roundtrip_stats(docs, "doc_id", "px", n_data_bytes=8)
 
 
@@ -9600,12 +9366,8 @@ def event_trigram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_q(
     "image_ahash_buckets",
-    """
-    WITH img AS (
-      SELECT doc_id, substr(text, 1, 48) AS px
-      FROM documents WHERE length(text) >= 48
-        AND strlen(substr(text, 1, 48)) = 48
-    ),
+    f"""
+    WITH {_sql_doc_bytes(48)},
     g AS (
       SELECT doc_id, p.p AS p,
              ascii(substr(px, p.p * 3 + 1, 1))
@@ -9642,22 +9404,12 @@ def image_ahash_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     key — the cheapest possible image-dedup pass, with Hamming-banded
     joins (the simhash machinery) as the documented near-miss upgrade.
     The oracle rebuilds every bit with ascii(substr()) arithmetic —
-    chars == bytes enforced structurally on both sides (the r8-ADVICE
+    chars == bytes enforced structurally on both sides (the
     ASCII guard: Spark keeps 48-byte encodings, the oracle strlen=48)."""
     from ssp_spark.operators import multimodal as mm
 
-    docs = (
-        load_table(spark, "documents", sf_dir)
-        .filter(F.length("text") >= 48)
-        .select(
-            "doc_id",
-            F.encode(F.substring("text", 1, 48), "utf-8").alias("__px"),
-        )
-        .filter(F.octet_length("__px") == 48)
-        .select(
-            "doc_id",
-            F.concat(F.lit(b"P6\n4 4\n255\n"), F.col("__px")).alias("data"),
-        )
+    docs = _doc_prefix_bytes(spark, sf_dir, 48).select(
+        "doc_id", F.concat(F.lit(b"P6\n4 4\n255\n"), F.col("px")).alias("data")
     )
     h = mm.ahash_images(docs, "doc_id", "data")
     w = Window.partitionBy("ahash")

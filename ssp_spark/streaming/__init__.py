@@ -25,6 +25,24 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 
+def _await_bounded(q, timeout_s: float):
+    """Wait for a bounded (availableNow) query to finish and return it.
+    On timeout the query is stopped and TimeoutError is raised with
+    ``q.lastProgress`` attached as ``last_progress``, so a partial sink
+    is never read as a complete result; a query that failed re-raises
+    its error from awaitTermination."""
+    if q.awaitTermination(timeout_s):
+        return q
+    progress = q.lastProgress
+    q.stop()
+    err = TimeoutError(
+        f"streaming query {q.name or q.id} did not finish within {timeout_s} s; "
+        f"last progress: {progress}"
+    )
+    err.last_progress = progress
+    raise err
+
+
 def replay_to_memory(sdf: DataFrame, name: str, timeout_s: float = 120.0) -> DataFrame:
     """Run a bounded streaming plan to completion into a memory sink and
     return the result table (ssp Close-protocol analogue)."""
@@ -35,9 +53,8 @@ def replay_to_memory(sdf: DataFrame, name: str, timeout_s: float = 120.0) -> Dat
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout_s)
-    spark = sdf.sparkSession
-    return spark.table(name)
+    _await_bounded(q, timeout_s)
+    return sdf.sparkSession.table(name)
 
 
 def replay_update_to_memory(sdf: DataFrame, name: str, timeout_s: float = 120.0) -> DataFrame:
@@ -48,7 +65,7 @@ def replay_update_to_memory(sdf: DataFrame, name: str, timeout_s: float = 120.0)
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout_s)
+    _await_bounded(q, timeout_s)
     return sdf.sparkSession.table(name)
 
 
@@ -148,7 +165,7 @@ def with_late_side_output(
 def wait_all_streams(spark: SparkSession, timeout_s: float = 120.0) -> None:
     deadline = time.time() + timeout_s
     for q in spark.streams.active:
-        q.awaitTermination(max(0.1, deadline - time.time()))
+        _await_bounded(q, max(0.1, deadline - time.time()))
 
 
 def has_transform_with_state() -> bool:
@@ -257,8 +274,7 @@ def fanout_sinks(
             batch_df.unpersist()
 
     q = sdf.writeStream.foreachBatch(handle).trigger(availableNow=True).start()
-    q.awaitTermination(timeout_s)
-    return q
+    return _await_bounded(q, timeout_s)
 
 
 def dedup_stream(
@@ -602,8 +618,7 @@ def upsert_parquet_sink(
         # merely wasteful, not wrong — the per-key merge is idempotent)
         w = w.option("checkpointLocation", checkpoint)
     q = w.trigger(availableNow=True).start()
-    q.awaitTermination(timeout_s)
-    return q
+    return _await_bounded(q, timeout_s)
 
 
 def incremental_dedup_sink(
@@ -685,8 +700,7 @@ def incremental_dedup_sink(
             batch_df.unpersist()
 
     q = sdf.writeStream.foreachBatch(handle).trigger(availableNow=True).start()
-    q.awaitTermination(timeout_s)
-    return q
+    return _await_bounded(q, timeout_s)
 
 
 def table_versions(path: str) -> list[int]:

@@ -1229,15 +1229,13 @@ def test_codec_gates_decode_map_shape(spark):
     cartesian products. A hash-partitioned Exchange appearing here
     would mean a gate silently grew a shuffle that 100 TB would pay
     per decoded row."""
-    for name in (
-        "multimodal_decode_gif",
-        "multimodal_decode_tiff",
-        "multimodal_decode_audio_flac",
-        "multimodal_decode_jpeg12",
-        "multimodal_decode_bmp_rle8",
-        "multimodal_decode_webp",
-        "multimodal_gif_anim_index",
-    ):
+    names = sorted(
+        n for n in QUERIES
+        if n.startswith("multimodal_decode_")
+        or n in ("multimodal_video_y4m_index", "multimodal_gif_anim_index")
+    )
+    assert len(names) == 16, names
+    for name in names:
         df = QUERIES[name](spark, SF_SMOKE)
         s = plans.plan_string(df, "simple")
         assert "hashpartitioning" not in s, name

@@ -258,10 +258,16 @@ def test_simhash_pairs_lowest_band_emission_matches_distinct(spark):
 
 
 def test_simhash_pairs_rejects_over_4_bands(spark):
-    # the 16-bit survivor lanes pack at most 4 bands into one long
+    # the 16-bit survivor lanes pack at most 4 bands into one long, and
+    # band_val + 1 fits a lane only while band values are <= 15 bits
+    # (bits=32, bands=2 gives 16-bit values that would overflow it)
     df = spark.createDataFrame([(1, "aa bb")], "doc_id long, text string")
-    with pytest.raises(ValueError, match="at most 4 bands"):
-        dedup.simhash_pairs(df, bands=5)
+    for kwargs, msg in (
+        ({"bands": 5}, "at most 4 bands"),
+        ({"bits": 32, "bands": 2}, "at most 15 bits"),
+    ):
+        with pytest.raises(ValueError, match=msg):
+            dedup.simhash_pairs(df, **kwargs)
 
 
 # ---------------------------------------------------------------------------

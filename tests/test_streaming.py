@@ -1583,3 +1583,17 @@ def test_stream_stream_anti_join_boundary_and_workaround(spark, tmpdir):
     # 600s batch expires its window; ad 5 (t=600) unclicked but its
     # window is open at stream end -> held, not emitted.
     assert got == [(2, 2)]
+
+
+def test_replay_timeout_raises_and_stops_the_query(spark, tmpdir):
+    """A bounded replay that outlives its timeout fails loudly, with the
+    last progress attached, and leaves no query running, instead of
+    returning a partial memory table as if it were complete."""
+    src = os.path.join(tmpdir, "words")
+    _write_parquet(spark, [(i, w) for i, w in enumerate(WORDS)], "pos long, word string", src)
+    sdf = spark.readStream.schema("pos long, word string").parquet(src)
+    name = f"to_{uuid.uuid4().hex[:8]}"
+    with pytest.raises(TimeoutError, match=name) as exc:
+        ss.replay_to_memory(sdf, name, timeout_s=0.001)
+    assert hasattr(exc.value, "last_progress")
+    assert not [q for q in spark.streams.active if q.name == name]
