@@ -44,6 +44,7 @@ import numpy as np
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from ssp_spark.session import get_spark  # noqa: E402
+from ssp_spark.streaming import _await_bounded  # noqa: E402
 
 TARGET_BYTES = 10 * 1024 * 1024  # bytesIn in wordcount_test.go:12
 N_FILES = 12  # SetParallelism(12) in wordcount_test.go:37
@@ -125,7 +126,7 @@ def main() -> None:
                 .trigger(availableNow=True)
                 .start()
             )
-            q.awaitTermination(600)
+            _await_bounded(q, 600)
             return time.perf_counter() - t0
 
         batch_cold = batch_once()

@@ -1,13 +1,11 @@
 """SparkSession factory tuned for this engine.
 
 The reference engine (affo/ssp) hand-builds its runtime: one goroutine per
-operator instance, bounded channels, FNV-64a hash partitioning
-(/root/reference/engine.go:268-278, datastream.go:43-57, key.go:66-70).
-We instead configure Spark once and let Catalyst/Tungsten own execution:
+operator instance, bounded channels, FNV-64a hash partitioning. We instead
+configure Spark once and let Catalyst/Tungsten own execution:
 
 - AQE on: runtime shuffle-partition coalescing, skew-join splitting and
-  dynamic broadcast conversion replace ssp's static ``par`` clone count
-  (/root/reference/engine.go:297-330).
+  dynamic broadcast conversion replace ssp's static ``par`` clone count.
 - Arrow on: every Python-side operator (pandas UDFs, applyInPandas) moves
   data in columnar batches, never row-at-a-time.
 - Session timezone pinned to UTC so event-time semantics are stable and
@@ -16,6 +14,8 @@ We instead configure Spark once and let Catalyst/Tungsten own execution:
   TIMESTAMP(NANOS), which Spark 4 refuses to read natively; we read the
   raw int64 and convert to a microsecond timestamp in the catalog layer
   (same ns->us truncation DuckDB applies).
+- Streaming checkpoints are written through Hadoop's ``FileSystem`` API
+  rather than ``FileContext`` (see the comment in ``get_spark``).
 
 At 100 TB these remain the right knobs; only sizing differs, so every
 scale-sensitive value is env-overridable instead of hard-coded.
@@ -131,23 +131,21 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         # Local-mode sizing: in local[n] the driver JVM IS the executor —
-        # all n task threads share this one heap. 8g was the round-1 value
-        # sized for the MB-scale fixtures; the round-9 sf10 suite run died
-        # of GC thrash (GCLocker retries, dropped localCheckpoint blocks)
-        # with 120 GB of host RAM idle. 48g is the honest local analogue
-        # of a cluster's per-executor memory and leaves headroom for the
-        # paired DuckDB process. Still env-overridable.
+        # all n task threads share this one heap. An 8g heap died of GC
+        # thrash on the sf10 suite (GCLocker retries, dropped
+        # localCheckpoint blocks) with most of the host's RAM idle. 48g is
+        # the local analogue of a cluster's per-executor memory and leaves
+        # headroom for the paired DuckDB process. Still env-overridable.
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.shuffle.spill.compress", "true")
-        # Round 13 (guide §4, the Python boundary): PySpark 4 wraps EVERY
-        # DataFrame/Column API call with call-site capture for error
-        # enrichment (pyspark/errors/utils.py _with_origin) — per call
-        # that is a getActiveSession lookup, a conf read, a Python stack
-        # walk and a JVM PySparkCurrentOrigin set/clear: 3-4 extra py4j
-        # round trips. Plan CONSTRUCTION runs inside the bench's timed
-        # region, and measured builds halve with it off (e.g.
-        # embedding_standardize 1.22 -> 0.55 s, bootstrap_ci_spend
+        # PySpark 4 wraps EVERY DataFrame/Column API call with call-site
+        # capture for error enrichment (pyspark/errors/utils.py
+        # _with_origin) — per call that is a getActiveSession lookup, a
+        # conf read, a Python stack walk and a JVM PySparkCurrentOrigin
+        # set/clear: 3-4 extra py4j round trips. Plan construction runs
+        # inside every timed query, and measured builds halve with it off
+        # (e.g. embedding_standardize 1.22 -> 0.55 s, bootstrap_ci_spend
         # 0.55 -> 0.27 s). Purely driver-side Python overhead — plans,
         # results and execution are bit-identical; only error messages
         # lose the "was called from queries.py:123" context line, and
@@ -157,6 +155,28 @@ def get_spark(
         .config(
             "spark.python.sql.dataFrameDebugging.enabled",
             "true" if os.environ.get("SPARK_GRAFT_DF_DEBUG") == "1" else "false",
+        )
+        # Every streaming trigger durably writes an offset-log entry, a
+        # commit-log entry, a source-log entry and one state-store delta
+        # per state partition, each with its Hadoop .crc and checksum
+        # sidecar, as a temp file renamed into place. Spark's default
+        # FileContext-based manager renames through FileContext, which
+        # resolves symlinks via RawLocalFileSystem.getFileLinkStatus;
+        # without Hadoop's native library that forks a `readlink` child,
+        # and every permission set forks a `chmod` child. One 20 s
+        # stream_window benchmark run (perfbench, seed 5, 4-vCPU Linux VM)
+        # forked 9,269 processes over 47 triggers: 7,389 readlink and
+        # 1,880 chmod, ~200 per trigger, 85% under the state store's
+        # directory. The FileSystem-based manager keeps the same
+        # temp-file-then-rename protocol and, for overwriteIfPossible=false,
+        # the same refusal to overwrite an existing file (exists check,
+        # rename, re-check on failure); the same run then forked 2,835
+        # processes over 72 triggers, ~40 per trigger, all but 5 of them
+        # chmod. Checksums and the state-store provider are unchanged.
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
         )
     )
     return builder.getOrCreate()

@@ -10,6 +10,7 @@ import pyspark.sql.functions as F
 
 from ssp_spark import sources
 from ssp_spark.catalog import load_table
+from ssp_spark.streaming import _await_bounded
 from tests.conftest import SF_SMOKE
 
 
@@ -60,7 +61,7 @@ def test_json_file_stream_bounded_replay(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    _await_bounded(q, 120)
     got = {r["c_nationkey"]: r["n"] for r in spark.table("src_replay").collect()}
     want = {
         r["c_nationkey"]: r["n"]

@@ -13,6 +13,8 @@ import uuid
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 import pytest
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import StreamingQueryException
 
 from ssp_spark import streaming as ss
 
@@ -54,7 +56,7 @@ def test_running_count_stream_update_emission(spark, tmpdir):
     q = counted.writeStream.format("memory").queryName(name).outputMode("append").trigger(
         availableNow=True
     ).start()
-    q.awaitTermination(120)
+    ss._await_bounded(q, 120)
     got = sorted(f"{r.word}: {r.cnt}" for r in spark.table(name).collect())
     want = sorted(
         ["hello: 1", "hello: 2", "is: 1", "is: 2", "is: 3", "leonida: 1",
@@ -79,7 +81,7 @@ def test_running_count_state_carries_across_batches(spark, tmpdir):
     q = counted.writeStream.format("memory").queryName(name).outputMode("append").trigger(
         availableNow=True
     ).start()
-    q.awaitTermination(120)
+    ss._await_bounded(q, 120)
     got = sorted((r.word, r.cnt) for r in spark.table(name).collect())
     # 'a' reaches 3 across two batches -> counts 1,2,3; 'b' -> 1
     assert got == [("a", 1), ("a", 2), ("a", 3), ("b", 1)]
@@ -112,7 +114,7 @@ def test_windowed_stream_append_drops_late(spark, tmpdir):
     q = win.writeStream.format("memory").queryName(name).outputMode("append").trigger(
         availableNow=True
     ).start()
-    q.awaitTermination(120)
+    ss._await_bounded(q, 120)
     base = 1704067200  # 2024-01-01 epoch
     got = {(r.ws - base, r.cnt) for r in spark.table(name).collect()}
     # [10,20): ts 10,15 -> 2; [20,30): ts 22 -> 1; [40,50) and [50,60)
@@ -139,7 +141,7 @@ def test_late_side_output(spark, tmpdir):
         captured["late"] += [r.k for r in late.collect()]
 
     q = ss.with_late_side_output(sdf, "ts", "10 seconds", on_batch)
-    q.awaitTermination(120)
+    ss._await_bounded(q, 120)
     assert "late1" in captured["late"]
     assert "ok" in captured["on_time"]
     assert "late1" not in captured["on_time"]
@@ -172,7 +174,7 @@ def test_union_watermark_alignment(spark, tmpdir):
     q = win.writeStream.format("memory").queryName(name).outputMode("append").trigger(
         availableNow=True
     ).start()
-    q.awaitTermination(120)
+    ss._await_bounded(q, 120)
     base = 1704067200
     got = {(r.ws - base, r.k, r.cnt) for r in spark.table(name).collect()}
     # min watermark = min(200, 15) - 5 = 10 -> only windows ending <= 10
@@ -211,7 +213,7 @@ def test_stream_stream_join_with_watermarks(spark, tmpdir):
     q = joined.writeStream.format("memory").queryName(name).outputMode("append").trigger(
         availableNow=True
     ).start()
-    q.awaitTermination(120)
+    ss._await_bounded(q, 120)
     base = 1704067200
     got = sorted((r.imp_ad, r.i - base, r.c - base) for r in spark.table(name).collect())
     # ad 1: click 5s after impression (within 30s) -> joins.
@@ -240,7 +242,7 @@ def test_streaming_drop_duplicates_within_watermark(spark, tmpdir):
     q = sdf.writeStream.format("memory").queryName(name).outputMode("append").trigger(
         availableNow=True
     ).start()
-    q.awaitTermination(120)
+    ss._await_bounded(q, 120)
     got = sorted(r.id for r in spark.table(name).collect())
     assert got == [1, 2, 3]
 
@@ -270,7 +272,7 @@ def test_streaming_session_window(spark, tmpdir):
     q = agg.writeStream.format("memory").queryName(name).outputMode("append").trigger(
         availableNow=True
     ).start()
-    q.awaitTermination(120)
+    ss._await_bounded(q, 120)
     base = 1704067200
     got = sorted((r.ws - base, r.we - base, r.n) for r in spark.table(name).collect())
     assert (0, 18, 3) in got  # 0,5,8 merge: session extends to last+gap
@@ -334,7 +336,7 @@ def test_checkpoint_recovery_resumes_state(spark, tmpdir):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        ss._await_bounded(q, 120)
         return sorted((r.word, r.cnt) for r in spark.read.parquet(out).collect())
 
     # phase 1: counts over the first file only
@@ -347,6 +349,103 @@ def test_checkpoint_recovery_resumes_state(spark, tmpdir):
         "append"
     ).json(src)
     assert run() == [("a", 1), ("a", 2), ("a", 3), ("b", 1), ("c", 1)]
+
+
+FS_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+
+def test_checkpoint_file_manager_refuses_overwrite(spark, tmp_path):
+    """Exactly-once rests on the checkpoint manager never overwriting a
+    committed log entry: a second writer of the same batch file must fail
+    at close() and leave the first writer's bytes in place."""
+    jvm = spark._jvm
+    hconf = spark._jsparkSession.sessionState().newHadoopConf()
+    cfm = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(str(tmp_path)), hconf
+    )
+    assert cfm.getClass().getName() == FS_CHECKPOINT_MANAGER
+
+    entry = tmp_path / "0"
+    path = jvm.org.apache.hadoop.fs.Path(str(entry))
+    first = cfm.createAtomic(path, False)
+    first.write(bytearray(b"first"))
+    first.close()
+    second = cfm.createAtomic(path, False)
+    second.write(bytearray(b"second"))
+    with pytest.raises(Py4JJavaError, match="FileAlreadyExists|already exists"):
+        second.close()
+    assert entry.read_bytes() == b"first"
+
+
+def _windowed_foreach_batch_run(spark, src, ckpt, out, fail_in_batch=None):
+    """One availableNow run of a watermarked window count over ``src``
+    into ``out/batch=N`` (one overwrite per batch id: the idempotent
+    foreachBatch sink contract). With ``fail_in_batch=N`` the writer
+    writes one row of batch N and then raises, which ends the run."""
+
+    def write(batch_df, batch_id):
+        target = os.path.join(out, f"batch={batch_id}")
+        if batch_id == fail_in_batch:
+            batch_df.limit(1).write.mode("overwrite").parquet(target)
+            raise RuntimeError(f"injected sink failure in batch {batch_id}")
+        batch_df.write.mode("overwrite").parquet(target)
+
+    sdf = spark.readStream.schema("ts timestamp, k string").option(
+        "maxFilesPerTrigger", 1
+    ).parquet(src)
+    win = ss.windowed_count_stream(
+        sdf, "ts", "k", "10 seconds", "10 seconds", "10 seconds"
+    )
+    q = (
+        win.writeStream.foreachBatch(write)
+        .option("checkpointLocation", ckpt)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    ss._await_bounded(q, 120)
+
+
+def _windows_by_batch(spark, out):
+    rows = spark.read.parquet(out).collect()
+    return sorted((r.batch, r.ws, r.k, r.cnt) for r in rows)
+
+
+def test_windowed_stream_recovers_from_sink_failure_exactly_once(spark, tmpdir):
+    """A sink that fails inside a micro-batch, after a partial write, and
+    a restart from the same checkpoint: the output equals a failure-free
+    run, every window exactly once. The offset log pins the failed
+    batch's input and the state store replays from the last committed
+    version, so the re-delivered batch carries the same windows."""
+    src = os.path.join(tmpdir, "ev")
+    schema = "ts timestamp, k string"
+    # batch 0 moves the watermark to 25 s, so batch 1 emits the four
+    # [0,10) and [10,20) windows of keys x and y
+    first = [(_ts(s), k) for s in [1, 4, 12] for k in "xy"] + [(_ts(35), "x")]
+    _write_parquet(spark, first, schema, src)
+    _write_parquet(spark, [(_ts(s), k) for s in [23, 27, 31] for k in "xyz"], schema, src)
+    _write_parquet(spark, [(_ts(s), "x") for s in [45, 52, 68]], schema, src)
+
+    clean_out = os.path.join(tmpdir, "clean_out")
+    _windowed_foreach_batch_run(spark, src, os.path.join(tmpdir, "clean_ck"), clean_out)
+    want = _windows_by_batch(spark, clean_out)
+    batch1 = [r for r in want if r[0] == 1]
+    assert len(batch1) == 4, want  # the injected failure lands mid-output
+
+    ckpt, out = os.path.join(tmpdir, "ck"), os.path.join(tmpdir, "out")
+    with pytest.raises(StreamingQueryException, match="injected sink failure in batch 1"):
+        _windowed_foreach_batch_run(spark, src, ckpt, out, fail_in_batch=1)
+    partial = spark.read.parquet(os.path.join(out, "batch=1")).count()
+    assert partial == 1
+
+    _windowed_foreach_batch_run(spark, src, ckpt, out)
+    got = _windows_by_batch(spark, out)
+    assert got == want
+    windows = [(ws, k) for _, ws, k, _ in got]
+    assert len(windows) == len(set(windows))
 
 
 def test_stream_static_enrichment_join(spark, tmpdir):
@@ -370,7 +469,7 @@ def test_stream_static_enrichment_join(spark, tmpdir):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    ss._await_bounded(q, 120)
     got = sorted((r.user_id, r.tier, r.amount) for r in spark.table(name).collect())
     assert got == [(1, "gold", 10), (1, "gold", 30), (2, "silver", 20)]
 
@@ -445,7 +544,7 @@ def test_watermark_evicts_state_under_volume(spark, tmpdir):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    ss._await_bounded(q, 300)
     emitted = spark.table(name).count()
 
     progresses = [p for p in q.recentProgress if p["stateOperators"]]
@@ -532,7 +631,7 @@ def test_stream_stream_left_outer_join_emits_null_padded(spark, tmpdir):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    ss._await_bounded(q, 180)
     base = 1704067200
     got = sorted(
         (r.k, r.lep - base, None if r.rep is None else r.rep - base)
@@ -574,7 +673,7 @@ def test_chained_stateful_dedup_then_windowed_count(spark, tmpdir):
     q = sdf.writeStream.format("memory").queryName(name).outputMode("append").trigger(
         availableNow=True
     ).start()
-    q.awaitTermination(120)
+    ss._await_bounded(q, 120)
     got = sorted(
         (r["window"].start.second + 60 * r["window"].start.minute, r.user, r.n)
         for r in spark.table(name).collect()
@@ -622,7 +721,7 @@ def test_dedup_stream_within_watermark(spark, tmpdir):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    ss._await_bounded(q, 120)
     got = sorted(r.event_id for r in spark.table(name).collect())
     # 1 (first), 2, 3, 90, 91, and 1 AGAIN after horizon eviction
     assert got == [1, 1, 2, 3, 90, 91]
@@ -651,7 +750,7 @@ def test_keyed_rate_limit_admits_first_n_per_key(spark, tmpdir):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    ss._await_bounded(q, 120)
     got = {r.event_id for r in spark.table(name).collect()}
     # batch ground truth over the full log: first 2 per user by (ts, id)
     from pyspark.sql import Window
@@ -695,7 +794,7 @@ def test_keyed_rate_limit_chunked_batch_determinism(spark, tmpdir):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        ss._await_bounded(q, 120)
         got = {(r.ts, r.event_id) for r in spark.table(name).collect()}
         assert got == {(100, 19), (101, 18)}
     finally:
@@ -893,6 +992,52 @@ def test_upsert_sink_recovers_lost_pointer_and_converges(spark, tmpdir):
     assert strays == [os.path.basename(os.path.realpath(out))]
 
 
+def test_upsert_sink_recovers_from_failed_pointer_flip(spark, tmpdir, monkeypatch):
+    """The table-pointer flip of batch 1 fails once, after the new version
+    directory is complete: the live table must still be batch 0's, and a
+    restart from the checkpoint re-delivers batch 1 and converges to the
+    failure-free table."""
+    from collections import Counter
+
+    src = os.path.join(tmpdir, "upsert_src")
+    half = len(WORDS) // 2
+    _write_parquet(spark, [(w,) for w in WORDS[:half]], "word string", src)
+    _write_parquet(spark, [(w,) for w in WORDS[half:]], "word string", src)
+    out, ckpt = os.path.join(tmpdir, "view"), os.path.join(tmpdir, "ck")
+
+    real_replace = os.replace
+    flips = []
+
+    def flaky_replace(src_path, dst_path, *a, **kw):
+        if os.path.abspath(dst_path) == os.path.abspath(out):
+            flips.append(dst_path)
+            if len(flips) == 2:
+                raise OSError("injected failure flipping the table pointer")
+        return real_replace(src_path, dst_path, *a, **kw)
+
+    def run():
+        sdf = (
+            spark.readStream.schema("word string")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+        ss.upsert_parquet_sink(sdf.groupBy("word").count(), out, ["word"], checkpoint=ckpt)
+
+    monkeypatch.setattr(os, "replace", flaky_replace)
+    with pytest.raises(
+        StreamingQueryException, match="injected failure flipping the table pointer"
+    ):
+        run()
+    assert _table(spark, out) == sorted(Counter(WORDS[:half]).items())
+
+    run()
+    assert len(flips) == 3  # batch 1 was re-delivered once, nothing replayed twice
+    assert _table(spark, out) == sorted(Counter(WORDS).items())
+    parent, base = os.path.split(out)
+    strays = [d for d in os.listdir(parent) if d.startswith(base + ".__")]
+    assert strays == [os.path.basename(os.path.realpath(out))]
+
+
 def test_bucketed_upsert_rewrites_only_touched_buckets(spark, tmpdir):
     """bucket_by=N partition-pruned upsert: a batch that touches one
     bucket must leave every other bucket's parquet files PHYSICALLY
@@ -1084,7 +1229,7 @@ def test_log_source_replays_all_batches_in_order(spark, tmpdir):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    ss._await_bounded(q, 120)
     rows = spark.sql(f"select * from {sink}").collect()
     assert len(rows) == 5
     per_part = {}
@@ -1178,7 +1323,7 @@ def test_log_source_checkpoint_resume_exactly_once(spark, tmpdir):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        ss._await_bounded(q, 120)
 
     drain()
     first = {(r.partition, r.offset) for r in spark.read.parquet(out).collect()}
@@ -1354,7 +1499,7 @@ def test_stream_stream_left_outer_join_emits_unmatched(spark, tmpdir):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    ss._await_bounded(q, 120)
     base = 1704067200
     got = sorted(
         (r.imp_ad, r.i - base, None if r.c is None else r.c - base)
@@ -1420,7 +1565,7 @@ def test_stream_stream_full_outer_join_emits_both_sides(spark, tmpdir):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    ss._await_bounded(q, 120)
     base = 1704067200
     got = sorted(
         (
@@ -1481,7 +1626,7 @@ def test_stream_stream_left_semi_join_emits_once(spark, tmpdir):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    ss._await_bounded(q, 120)
     base = 1704067200
     got = sorted((r.imp_ad, r.i - base) for r in spark.table(name).collect())
     assert got == [(1, 0)]
@@ -1510,7 +1655,7 @@ def test_complete_mode_reemits_full_updated_table(spark, tmpdir):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    ss._await_bounded(q, 120)
     got = sorted((r.word, r.cnt) for r in spark.table(name).collect())
     # 'a' seen in BOTH batches -> 2 in the final full emission; exactly
     # one row per key (the sink replaced, never appended)
@@ -1576,7 +1721,7 @@ def test_stream_stream_anti_join_boundary_and_workaround(spark, tmpdir):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    ss._await_bounded(q, 120)
     base = 1704067200
     got = sorted((r.imp_ad, r.i - base) for r in spark.table(name).collect())
     # ad 1 clicked -> never emits; ad 2 unclicked -> emits once the
