@@ -3,13 +3,12 @@
 Backed by the ssp_spark package: a PySpark-native engine with the
 capabilities of affo/ssp (see SURVEY.md). ``queries()`` /
 ``oracle_sql()`` are declared in ssp_spark.queries — every operator
-claimed in SURVEY.md §2 has an entry there, and since round 4 EVERY
-registered query carries an exact ANSI-SQL DuckDB oracle (the last
-rows-only approximate ops were upgraded to deterministic, replayable
-formulations). Streaming-only behaviors (watermark drops, state
-eviction, checkpoint resume, sink atomicity) cannot be expressed as a
-batch oracle and are pinned instead by reference-derived golden tests
-in tests/test_streaming.py.
+claimed in SURVEY.md §2 has an entry there, and EVERY registered query
+carries an exact ANSI-SQL DuckDB oracle. Both maps iterate in the
+registry's declaration order. Streaming-only behaviors (watermark
+drops, state eviction, checkpoint resume, sink atomicity) cannot be
+expressed as a batch oracle and are pinned instead by reference-derived
+golden tests in tests/test_streaming.py.
 """
 
 from __future__ import annotations

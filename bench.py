@@ -79,8 +79,7 @@ HEADLINE = [
     "ann_lsh_topk_gemm",
     "dedup_simhash64_pairs",
     # late round-4 additions: the two heaviest new curation operators
-    # (cluster-composition dedup keeper; corpus-model LM scoring) — the
-    # r3_comparable_total subset below stays untouched for comparability
+    # (cluster-composition dedup keeper; corpus-model LM scoring)
     "cluster_dedup_keeper",
     "bigram_lm_score",
     # latest round-4 additions: the new operator families that carry real
@@ -163,36 +162,6 @@ EXPR_TWINS = [
     # round 11 (VERDICT r10 #4): the JVM-fold LSH form joins its shipped
     # GEMM kernel's inverse placement, same as ivf above
     "ann_lsh_topk",
-]
-
-# The 22-query set rounds 1-3 benched: sum reported as r3_comparable_total
-# so round-over-round deltas aren't confounded by suite growth. Explicit
-# list (not HEADLINE[:22]) since round 9: ann_ivf_topk moved to
-# EXPR_TWINS but stays in this comparability sum, drawn from that
-# section's timings under the identical protocol.
-_R3_SET = [
-    "word_count",
-    "q1_pricing_summary",
-    "q3_top_orders",
-    "q5_nation_revenue",
-    "sliding_window_counts",
-    "session_windows",
-    "running_user_spend",
-    "user_activity_pivot",
-    "top_customers_per_nation",
-    "asof_join_purchase_signup",
-    "dedup_jaccard_pairs",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "dedup_embedding_cosine",
-    "ann_topk_bruteforce",
-    "lang_id",
-    "quality_score",
-    "doc_fingerprint",
-    "q6_forecast_revenue",
-    "q18_large_orders",
-    "ann_ivf_topk",
-    "stats_numeric_exact",
 ]
 
 
@@ -455,7 +424,6 @@ def main() -> None:
             t = round(t, 3)
             if t < twin[name]:
                 twin[name], twin_steal[name], twin_foreign[name] = t, st, fo
-    all_timings = {**timings, **twin}
     release_session_artifacts(spark)  # section boundary (see above)
 
     # Codec-gate profile (round 10): absolute Spark wall-clock for the
@@ -572,9 +540,6 @@ def main() -> None:
                 "queries": timings,
                 "sf": sf,
                 "cold_total_sec": round(sum(cold.values()), 3),
-                "r3_comparable_total": round(
-                    sum(all_timings[n] for n in _R3_SET), 3
-                ),
                 "production_hash_profile": prod,
                 "expr_twin_profile": twin,
                 "expr_twin_duckdb": {n: duck[n] for n in EXPR_TWINS if n in duck}
@@ -612,7 +577,6 @@ def main() -> None:
             "unit": "sec",
             "queries": timings,
             "sf": sf,
-            "r3_comparable_total": round(sum(all_timings[n] for n in _R3_SET), 3),
             "cold_total_sec": round(sum(cold.values()), 3),
             "duckdb_total_sec": round(sum(duck[n] for n in HEADLINE if n in duck), 3)
             if duck
@@ -632,9 +596,6 @@ def main() -> None:
                 "unit": "sec",
                 "sf": sf,
                 "n_queries": len(HEADLINE),
-                "r3_comparable_total": round(
-                    sum(all_timings[n] for n in _R3_SET), 3
-                ),
                 "cold_total_sec": round(sum(cold.values()), 3),
                 "duckdb_total_sec": round(
                     sum(duck[n] for n in HEADLINE if n in duck), 3

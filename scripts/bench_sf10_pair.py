@@ -12,7 +12,7 @@ The EXPR_TWINS comparison section is skipped entirely at this scale:
 ann_ivf_topk's expression assignment is the documented workload-grows-
 quadratically row (SCALE.md — its DuckDB oracle alone extrapolates to
 ~25 min/pass at sf10) and both twins' deployment kernels ARE in the
-headline. r3_comparable_total is therefore not emitted here.
+headline.
 
 Prints one JSON line per engine pass plus a final summary line.
 """

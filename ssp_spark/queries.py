@@ -163,11 +163,10 @@ def _fuzzy_part_name_pairs_artifact(spark: SparkSession, sf_dir: str) -> "DataFr
     )
 
 
-def _q(name: str, oracle: str | None = None):
+def _q(name: str, oracle: str):
     def deco(fn: SparkQuery) -> SparkQuery:
         QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE[name] = oracle
+        ORACLE[name] = oracle
         return fn
 
     return deco
@@ -1638,7 +1637,7 @@ def mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.mmr_topk(emb, k=5, shortlist=50)
 
 
-@_q("mmr_diverse_topk_arrow", None)
+@_q("mmr_diverse_topk_arrow", ORACLE["mmr_diverse_topk"])
 def mmr_diverse_topk_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """mmr_diverse_topk's DEPLOYMENT kernel twin (the ann_lsh_topk_gemm
     precedent): identical MMR semantics, but the quantize+relevance pass
@@ -1648,9 +1647,6 @@ def mmr_diverse_topk_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_curation.py pins both kernels identical."""
     emb = load_table(spark, "embeddings", sf_dir)
     return similarity.mmr_topk(emb, k=5, shortlist=50, kernel="arrow")
-
-
-ORACLE["mmr_diverse_topk_arrow"] = ORACLE["mmr_diverse_topk"]
 
 
 def _sql_kcore(k: int, iters: int) -> str:
@@ -2107,7 +2103,10 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.lsh_topk(queries, emb, k=10, probe_radius=2)
 
 
-@_q("ann_lsh_topk_gemm", None)
+# The GEMM kernel is oracle-checked against the SAME ground truth as the
+# JVM fold — the oracle describes bucket/probe/rank semantics, not the
+# kernel (cf. embedding_covariance_blas below).
+@_q("ann_lsh_topk_gemm", ORACLE["ann_lsh_topk"])
 def ann_lsh_topk_gemm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ann_lsh_topk with the blocked-GEMM scoring kernel
     (similarity.lsh_topk_gemm): identical multi-probe candidate
@@ -2130,12 +2129,6 @@ def ann_lsh_topk_gemm(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, "embeddings", sf_dir)
     queries = emb.filter(F.col("vec_id") % 25 == 0)
     return similarity.lsh_topk(queries, emb, k=10, probe_radius=2, kernel="gemm")
-
-
-# The GEMM kernel is oracle-checked against the SAME ground truth as the
-# JVM fold — the oracle describes bucket/probe/rank semantics, not the
-# kernel (cf. embedding_covariance_blas below).
-ORACLE["ann_lsh_topk_gemm"] = ORACLE["ann_lsh_topk"]
 
 
 @_q(
@@ -2933,7 +2926,10 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q("ann_ivf_topk_gemm", None)
+# The GEMM assignment kernel is oracle-checked against the SAME ground
+# truth as the expr fold — the oracle describes codebook/probe/rank
+# semantics, not the kernel (cf. ann_lsh_topk_gemm above).
+@_q("ann_ivf_topk_gemm", ORACLE["ann_ivf_topk"])
 def ann_ivf_topk_gemm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ann_ivf_topk with the GEMM assignment kernel
     (similarity.ivf_cells_gemm): identical codebook, probes, and rank
@@ -2960,12 +2956,6 @@ def ann_ivf_topk_gemm(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.ivf_topk(
         queries, emb, None, k=10, nprobe=2, codebook=codebook, kernel="gemm"
     )
-
-
-# The GEMM assignment kernel is oracle-checked against the SAME ground
-# truth as the expr fold — the oracle describes codebook/probe/rank
-# semantics, not the kernel (cf. ann_lsh_topk_gemm above).
-ORACLE["ann_ivf_topk_gemm"] = ORACLE["ann_ivf_topk"]
 
 
 @_q(
@@ -7915,7 +7905,9 @@ def snapshot_diff_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q("embedding_covariance_blas", None)
+# The blas kernel is oracle-checked against the SAME ground truth as the
+# expression kernel — the oracle describes the moments, not the kernel.
+@_q("embedding_covariance_blas", ORACLE["embedding_covariance"])
 def embedding_covariance_blas(spark: SparkSession, sf_dir: str) -> DataFrame:
     """embedding_covariance with the 'blas' kernel: Arrow-batched numpy
     gram matmul (Q.T @ Q per batch) instead of Catalyst expression
@@ -7925,11 +7917,6 @@ def embedding_covariance_blas(spark: SparkSession, sf_dir: str) -> DataFrame:
     embedding_covariance's oracle verbatim (registered below)."""
     emb = load_table(spark, "embeddings", sf_dir)
     return linalg.covariance_matrix(emb, vec_col="embedding", scale_bits=13, kernel="blas")
-
-
-# The blas kernel is oracle-checked against the SAME ground truth as the
-# expression kernel — the oracle describes the moments, not the kernel.
-ORACLE["embedding_covariance_blas"] = ORACLE["embedding_covariance"]
 
 
 @_q(
@@ -8251,20 +8238,19 @@ def triangle_count_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint()
     )
     edges.unpersist()  # ek materialized: the raw edge blocks are done
-    # Closing by per-edge adjacency INTERSECTION (round 14, guide §2.4/
-    # §1.2 — VERDICT r13 #2): n_triangles = Σ over oriented edges (u,v)
-    # of |out(u) ∩ out(v)| — each triangle {a≺b≺c} counted exactly once
-    # at its LOWEST edge (a,b), since c ∈ out(a) ∩ out(b) and out(c)
-    # never contains b under the orientation. This replaces the r8-r13
-    # wedge enumeration (w1 ⋈ w2 on src, filter kb < kc, probe the
-    # closing edge), which MATERIALIZED the O(m^1.5) wedge stream as
-    # join rows — the query's widest frame (sf1 fixture: 149.4M wedge
+    # Closing by per-edge adjacency INTERSECTION: n_triangles = Σ over
+    # oriented edges (u,v) of |out(u) ∩ out(v)| — each triangle {a≺b≺c}
+    # counted exactly once at its LOWEST edge (a,b), since
+    # c ∈ out(a) ∩ out(b) and out(c) never contains b under the
+    # orientation. A wedge enumeration (w1 ⋈ w2 on src, filter kb < kc,
+    # probe the closing edge) would MATERIALIZE the O(m^1.5) wedge stream
+    # as join rows — the query's widest frame (sf1 fixture: 149.4M wedge
     # rows; closing stage 13.6 s) — only to count the survivors. The
     # intersection form touches the same neighbor elements inside one
     # array kernel per edge row (no wedge rows, no per-wedge hash
-    # probe): measured 13.6 -> 2.0 s on the identical materialized ek
-    # at sf1, count-identical (149,373,230; scripts/
-    # ab_triangle_close_r14.py). The adjacency lists are bounded by the
+    # probe): measured 13.6 -> 2.0 s against the wedge form on the
+    # identical materialized ek at sf1, count-identical (149,373,230
+    # triangles). The adjacency lists are bounded by the
     # orientation's O(sqrt(2m)) max out-degree, and the adjacency FRAME
     # is strictly smaller than ek (same elements, grouped), so the same
     # edge-count gate that sized the old broadcasts applies: under it
@@ -12564,268 +12550,3 @@ def attribution_position_based(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("credit_share"),
         )
     )
-
-
-# ---------------------------------------------------------------------------
-# Driver-gate ordering
-# ---------------------------------------------------------------------------
-# The driver's correctness gate hashes the FIRST 50 registry entries in
-# iteration order (CORRECTNESS_r01/r02 key sets are exactly declaration
-# order through query #50), so registry position decides which queries get
-# the hard DuckDB-oracle signal each round. Round 2 left 44 queries outside
-# that window; round 3 rotates them to the front, together with every query
-# whose implementation or oracle CHANGED this round (map_funcs_roundtrip,
-# approx_distinct_users, stats_numeric, dedup_jaccard_pairs +
-# dedup_minhash_lsh, word_count as flagship canary) — so the union of the
-# r2 + r3 recorded runs covers the full registry with driver evidence.
-# Declaration order above stays thematic; only iteration order changes.
-#
-# Driver-window rotation history: r2 checked the first 50 declared; r3
-# rotated the 44 outside plus changed queries; r4 checked the 35 round-4
-# additions + 15 round-3-no-row + session_windows; r5 checked the 6
-# never-checked late-r4 additions + 8 new/changed + 36 stale-rotated
-# (all 50 green, CORRECTNESS_r05).
-#
-# ROUND-6 window (50), computed from the actual per-query latest-row
-# ages (1 never / 6 r2 / 50 r3 / 47 r4 / 50 r5 at round start):
-# (a) ann_lsh_topk_gemm — the ONLY query with no driver row ever
-#     (VERDICT r5 #1), first in line;
-# (b) changed this round: ann_lsh_topk (kernel= dispatch added),
-#     fuzzy_name_pairs + entity_resolution_parts (short-string side
-#     path rebuilt at the distinct-string level, ADVICE r5);
-# (c) the 6 queries whose latest row is still round 2 (VERDICT r5 #3):
-#     ann_topk_bruteforce, dedup_events_keeper, dedup_simhash,
-#     q1_pricing_summary, quality_score, top_customers_per_nation;
-# (d) 37 of the 50 round-3-latest queries, oldest evidence first
-#     (bm25_topk_docs, weighted_sample_per_source and
-#     graph_reachability_bfs, new this round with no driver rows, take
-#     the other three slots — new queries outrank a repeat
-#     confirmation).
-# ARITHMETIC, stated plainly this time: 21 + 3 + 6 + 50 = 80 candidates
-# for 50 slots, so THIRTY r3-latest queries stay r3 after this round —
-# named here, each with its alternate evidence (every one is ALSO
-# hash-checked against its oracle at sf0.001 by
-# tests/test_oracle_parity.py on every pytest run):
-#   q11_important_parts (rotated out mid-round for the LPA slot;
-#     agg+HAVING-over-subquery family pinned by in-window
-#     q16_supplier_cnt / q2_min_cost_supplier),
-#   q12_ship_priority_class (rotated out mid-round for the winsorize
-#     slot; conditional-sum agg family pinned by in-window
-#     q14_promo_revenue),
-#   q13_custdist (rotated out mid-round for the char-entropy slot;
-#     outer-join count-distribution family pinned by r5-green
-#     left_join_customer_order_counts),
-#   q15_top_supplier (rotated out mid-round for the random-projection
-#     slot; view + scalar-max-subquery family pinned by in-window
-#     q17_small_qty_revenue / q2_min_cost_supplier),
-#   q21_waiting_supplier (rotated out mid-round for the inverted-index
-#     slot; exists/anti-join family pinned by in-window
-#     q4_priority_exists + r5-green semi/anti joins),
-#   regexp_funcs (rotated out mid-round for the decayed-spend slot;
-#     regexp kernels exercised inside in-window bpe_token_stats,
-#     source_text_scan and dedup_span_pairs),
-#   word_count (entry() driver smoke every round; bench),
-#   literal_source_wordcount (same wordcount kernel, in-window via
-#     word-count staples; test_stream_api),
-#   dedup_jaccard_pairs, dedup_minhash_lsh, ann_ivf_topk,
-#   q6_forecast_revenue, q18_large_orders (bench-measured every round),
-#   dedup_simhash_pairs (fingerprint kernel replayed by in-window
-#     dedup_simhash and bench's dedup_simhash64_pairs),
-#   multimodal_resize (shares the mapInPandas plumbing r5-green
-#     multimodal_features/frame_sampling exercise),
-#   event_type_pivot_api (pivot kernel r5-green via
-#     user_activity_pivot),
-#   stats_numeric (its exact-decimal twin stats_numeric_exact is
-#     r5-green and bench-measured every round),
-#   udtf_sentence_split (the UDTF surface is pinned by its own unit
-#     tests; its sibling udaf_user_spend keeps an in-window slot),
-#   salted_join_event_spend (rotated out mid-round for the
-#     graph_reachability_bfs slot; salted-join kernel keeps 3 unit
-#     tests, tests/test_scale_ops.py:16-34),
-#   rolling_30d_spend (rotated out mid-round for the
-#     key_skew_report_events slot; RANGE-frame kernel pinned by
-#     in-window window_frame_funcs),
-#   right_join_order_priority_mix (rotated out mid-round for the
-#     dedup_span_pairs slot; join-direction family r5-green),
-#   approx_distinct_users (rotated out mid-round for the
-#     bpe_token_stats slot; HLL family pinned by r5-green
-#     hll_distinct_users),
-#   array_lateral_explode (rotated out mid-round for the
-#     pit_enrich_events slot; explode/lateral kernel inside in-window
-#     lineitem_unpivot),
-#   asof_join_forward_tolerance (rotated out mid-round for the
-#     kcore_user_graph slot; as-of carry pinned by r5-green
-#     asof_join_purchase_signup + new pit_enrich_events),
-#   bloom_customer_names (rotated out mid-round for the
-#     mmr_diverse_topk slot; Bloom kernel pinned by r4-green
-#     bloom_prefilter_join),
-#   cms_user_counts (rotated out mid-round for the
-#     mmr_diverse_topk_arrow slot; CMS never-underestimates property
-#     test, tests/test_properties.py:84),
-#   dedup_minhash_clusters (rotated out mid-round for the
-#     multimodal_resize_decoded slot; minhash bands bench-measured via
-#     dedup_minhash_lsh, CC via union-find property tests),
-#   lineitem_unpivot (rotated out mid-round for the
-#     k_anonymity_events slot; unpivot kernel pinned by r5-green
-#     user_activity_pivot family),
-#   map_funcs_roundtrip + pipeline_train_manifest (rotated out
-#     mid-round for the EMA/CUSUM recurrence slots; per-run oracle
-#     checks, manifest plan assertion tests/test_plans.py:161).
-# ROUND-7 window (50), computed from the per-query latest-row ages at
-# round start (38 r3 / 46 r4 / 48 r5 / 50 r6, zero never-checked, one
-# failing: psi_drift_orders' r6 hash mismatch — an oracle TYPE skew, not
-# a value bug; fixed this round and re-fronted):
-# (a) the 32 new round-7 queries (no driver rows yet; grew 18 -> 24 ->
-#     29 -> 32 across the round's four batches — later batches took the
-#     slots of mid-round rotations and displaced (c) entries, each
-#     annotated at its former slot below);
-# (b) changed this round: psi_drift_orders (oracle cast fix),
-#     dedup_jaccard_pairs (candidate core factored into
-#     _pair_shared_counts, shared with the new containment_pairs), and
-#     the SIX quality-formula queries (quality_score's 0.5/0.3/0.2
-#     weighted sum rewritten to exact integer arithmetic on both the
-#     Spark and oracle sides after the sf0.1 sweep caught a true
-#     4-decimal tie, 0.42375, that double-rounds differently in Spark
-#     BigDecimal HALF_UP vs DuckDB round(); all six re-verified
-#     hash-match locally at sf0.01 AND sf0.1 this round) —
-#     quality_score, quality_zscore_by_source, cluster_dedup_keeper,
-#     pipeline_curation_v2, token_budget_selection, plus
-#     pipeline_train_manifest which sits in (c) as it is also r3-stale;
-# (a2) the 3 r6 additions that never made a driver window
-#     (exact_percentiles_events, image_ahash_buckets, lexical_richness)
-#     — the only never-checked queries outside (a); never-checked
-#     outranks r3-stale, so they take three (c) slots;
-# (c) 8 of the 38 r3-latest queries. ARITHMETIC, stated plainly:
-#     32 + 3 + 7 + 8 = 50 (the (a) list grew to 24 with the six batch-6
-#     statistics queries — ACF, Theil-Sen, Mann-Kendall, Benford,
-#     CUPED, Kaplan-Meier — then to 29 with the five batch-7
-#     model-eval/resampling queries — Poisson bootstrap CI, Spearman,
-#     calibration bins, lift/gain deciles, activity streaks — then to
-#     32 with isotonic PAV calibration, cross-source quantile
-#     normalization, and position-based attribution; each locally
-#     hash-matched at sf0.001, 0.01 AND 0.1 before taking a slot).
-#     dedup_jaccard_pairs + pipeline_train_manifest in (b)/(c)
-#     are also r3-stale, so TWENTY-NINE r3 queries stay r3 after this
-#     round: approx_distinct_users, the 6 mid-round r6 rotations
-#     (event_type_pivot_api, literal_source_wordcount,
-#     map_funcs_roundtrip, multimodal_resize, stats_numeric,
-#     udtf_sentence_split), the 5 displaced for the changed
-#     quality-family slots (word_count, dedup_minhash_lsh,
-#     dedup_simhash_pairs, q6_forecast_revenue, q18_large_orders),
-#     the 6 displaced for the batch-6 stats slots (ann_ivf_topk,
-#     q11_important_parts, q12_ship_priority_class, q13_custdist,
-#     q15_top_supplier, q21_waiting_supplier), the 5 displaced for
-#     the first batch-7 slots (bloom_customer_names, cms_user_counts,
-#     lineitem_unpivot, regexp_funcs, rolling_30d_spend), the 3
-#     displaced for the second batch-7 slots (array_lateral_explode,
-#     sample_split_hash, window_rank_stats), and the 3 displaced for
-#     the never-checked (a2) slots (right_join_order_priority_mix,
-#     salted_join_event_spend, source_json_scan) — every
-#     displaced query is bench-measured or entry()-smoked by the driver
-#     every round, and ALL queries hash-check vs their oracle at
-#     sf0.001 on every pytest run. All twenty-nine lead the r8 queue
-#     together with the 46 r4-latest queries; after this round ZERO
-#     registry queries are never-driver-checked.
-# ROUND-11 window (50), now historical (CORRECTNESS_r11.json: 50/50
-# green; the full set is pinned in tests/test_registry.py's _R11_*
-# groups): 2 new (multimodal_decode_webp, multimodal_gif_anim_index) +
-# 1 changed (multimodal_decode_jpeg12) + 5 late-r10-plan-changed +
-# 10 queued (ann_lsh_topk + the 9-row r5-stale cohort) + 32 of the 42
-# r6-stale rows = 50. The 9-row r12 queue was the 8 alphabetically-last
-# r6 rows PLUS stratified_sample_events, which multimodal_gif_anim_index
-# displaced (re-verified hash-green at sf0.01 on displacement). This
-# paragraph was corrected in r12 per ADVICE r11: the r11 hand
-# arithmetic had said 1 new / 33 stale / 8 queued; test_registry.py had
-# the right sets all along, and the staleness claim is now COMPUTED,
-# not hand-written (test_registry.py::test_survey_staleness_claim_
-# matches_artifacts derives it from CORRECTNESS_r*.json + this list).
-# ROUND-12 window (50), now historical (CORRECTNESS_r12.json: 50/50
-# green; the full set is pinned in tests/test_registry.py's _R12_*
-# groups): 9 r6-stale rows in the first slots (VERDICT r11 #3) +
-# 7 changed-in-r12 (the bench exchange cuts + two codec-gate kernel
-# branches) + 34 of the 36-row r7-stale cohort. The two
-# alphabetically-last r7 rows (token_freq_spectrum_docs,
-# user_event_entropy) were displaced for the codec-gate slots —
-# re-verified hash-green at sf0.01 before displacement — and lead
-# this round's window under the age-bound reserve.
-_CHECK_FIRST = [
-    # ---- ROUND 14 WINDOW ---------------------------------------------
-    # Pure freshness rotation, computed from the CORRECTNESS_r*.json
-    # evidence ages (the r13 window is consumed: CORRECTNESS_r13.json
-    # hashed all 50 of its rows green). Composition: the ENTIRE 39-row
-    # r9-stale cohort (the oldest evidence after the r13 run — it
-    # includes the two oldest rows, so the age-bound reserve is
-    # inside it) + the 11 alphabetically-first rows of the 47-row
-    # r10-stale cohort = 50. After the r14 driver run the oldest
-    # registry evidence is r10 (the remaining 36 r10 rows), which
-    # leads the r15 queue — see test_registry.py.
-    # Round-14 kernel changes (simhash pair dedup, triangle closing,
-    # bpe spread) do NOT claim slots beyond what the freshness queue
-    # already seats: bpe_token_stats sits in the r9 cohort below, and
-    # dedup_simhash64_pairs / dedup_simhash_pairs / triangle_count_users
-    # were hash-verified against their oracles at sf0.001/0.01/0.1 in
-    # this round's sessions (slot-rule disclosure in
-    # tests/test_registry.py), with full 234-query driver-sim sweeps
-    # after each kernel change.
-    # (a) the 39-row r9-stale cohort, alphabetical:
-    "bigram_lm_score",
-    "bloom_prefilter_join",
-    "bootstrap_ci_spend",
-    "bpe_token_stats",
-    "bucketed_join_order_revenue",
-    "cluster_balanced_sample",
-    "contamination_check",
-    "contrastive_pairs_mining",
-    "daily_spine_fill",
-    "dedup_embedding_lsh",
-    "dedup_incremental_batch",
-    "dedup_ngram_corpus",
-    "doc_chunk_overlap",
-    "domain_mixture_weights",
-    "dq_audit_orders",
-    "embedding_quantize_int8",
-    "event_cooccurrence",
-    "funnel_conversion",
-    "groupwise_regression",
-    "incremental_agg_maintenance",
-    "interval_overlap_orders",
-    "kmeans_embeddings",
-    "mixture_resample",
-    "null_safe_join_props",
-    "pagerank_customer_supplier",
-    "profile_table",
-    "quality_repetition_filter",
-    "range_shard_manifest",
-    "scd1_customer_merge",
-    "sequence_packing",
-    "session_windows",
-    "sink_partitioned_scan",
-    "skew_key_stats",
-    "snapshot_diff_customers",
-    "source_orc_scan",
-    "source_schema_evolution",
-    "stats_numeric_exact",
-    "tfidf_top_terms",
-    "value_histogram",
-    # (b) the 11 alphabetically-first rows of the r10-stale cohort:
-    "anti_join_inactive_customers",
-    "array_funcs_embeddings",
-    "asof_join_purchase_signup",
-    "cohort_retention",
-    "contrastive_pairs_lsh",
-    "corpus_shuffle_order",
-    "cube_order_stats",
-    "cust_above_nation_avg",
-    "date_funcs_monthly_orders",
-    "date_trunc_weekly_orders",
-    "dedup_embedding_cosine",
-]
-
-assert len(_CHECK_FIRST) == 50 and len(set(_CHECK_FIRST)) == 50
-_ORDERED = _CHECK_FIRST + sorted(
-    (n for n in QUERIES if n not in set(_CHECK_FIRST)),
-    key=list(QUERIES).index,
-)
-assert set(_ORDERED) == set(QUERIES)
-QUERIES = {n: QUERIES[n] for n in _ORDERED}
-ORACLE = {n: ORACLE[n] for n in _ORDERED if n in ORACLE}

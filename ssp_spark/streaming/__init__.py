@@ -168,87 +168,6 @@ def wait_all_streams(spark: SparkSession, timeout_s: float = 120.0) -> None:
         _await_bounded(q, max(0.1, deadline - time.time()))
 
 
-def has_transform_with_state() -> bool:
-    """transformWithStateInPandas (Spark 4.x arbitrary-stateful API) needs
-    the protobuf python package for its driver-worker protocol; gate on it
-    so environments without protobuf fall back to applyInPandasWithState
-    (same semantics, no timers/TTL)."""
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
-
-
-def require_rocksdb_provider(spark: SparkSession) -> None:
-    """Explicit, caller-visible opt-in to the RocksDB state store.
-
-    Session-global by Spark's design; call it once at session setup (not
-    from inside library functions) and never under a live checkpoint
-    created with a different provider.
-    """
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
-
-
-def running_count_transform_with_state(
-    sdf: DataFrame, key_col: str, out_col: str = "cnt"
-) -> DataFrame:
-    """The modern (Spark 4.x) form of running_count_stream, on the
-    transformWithStateInPandas API: typed value state, RocksDB-backed,
-    extensible with timers/TTL — the forward path for ssp's
-    NewStatefulNode semantics. Semantically identical to
-    running_count_stream; requires has_transform_with_state().
-
-    NOTE: transformWithState requires the RocksDB state store provider
-    (``spark.sql.streaming.stateStore.providerClass`` =
-    ``...state.RocksDBStateStoreProvider``). The caller must set it
-    before STARTING the query — deliberately not set here: a library
-    function mutating session-global conf would silently switch the
-    provider for every other streaming query in the session, and
-    changing provider under an existing checkpoint breaks recovery.
-    ``require_rocksdb_provider(spark)`` below does it explicitly.
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    out_schema = T.StructType(
-        [T.StructField(key_col, T.StringType()), T.StructField(out_col, T.LongType())]
-    )
-
-    class RunningCount(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle):
-            self.cnt = handle.getValueState("cnt", "n BIGINT")
-
-        def handleInputRows(self, key, rows, timer_values):
-            import pandas as pd
-
-            n = self.cnt.get()[0] if self.cnt.exists() else 0
-            out = []
-            for pdf in rows:
-                m = len(pdf)
-                out.append(
-                    pd.DataFrame({key_col: [key[0]] * m, out_col: range(n + 1, n + m + 1)})
-                )
-                n += m
-            self.cnt.update((n,))
-            yield from out
-
-        def close(self):
-            pass
-
-    return sdf.groupBy(key_col).transformWithStateInPandas(
-        RunningCount(), outputStructType=out_schema, outputMode="Update", timeMode="None"
-    )
-
-
 def fanout_sinks(
     sdf: DataFrame,
     writers: list[Callable[[DataFrame, int], None]],

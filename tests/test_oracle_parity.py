@@ -68,13 +68,3 @@ def test_oracle_result_types_are_driver_hashable(duck):
         f"oracles returning DECIMAL columns (cast them to BIGINT/DOUBLE "
         f"so the driver's arrow hash matches Spark): {offenders}"
     )
-
-
-NO_ORACLE = sorted(set(QUERIES) - set(ORACLE))
-
-
-@pytest.mark.parametrize("name", NO_ORACLE)
-def test_rows_only_queries_run(spark, name):
-    df = QUERIES[name](spark, SF_SMOKE)
-    assert df.count() >= 0
-    assert len(df.columns) > 0

@@ -279,33 +279,6 @@ def test_streaming_session_window(spark, tmpdir):
     assert (30, 42, 2) in got
 
 
-@pytest.mark.skipif(
-    not ss.has_transform_with_state(),
-    reason="transformWithStateInPandas needs the protobuf runtime, which is "
-    "absent here and uninstallable (no-install environment; re-checked r10: "
-    "import google.protobuf still fails, only typeshed stubs exist on this "
-    "image) — the applyInPandasWithState twins cover the same semantics",
-)
-def test_transform_with_state_running_count(spark, tmp_path):
-    """Modern-API twin of test_running_count_stream_update_emission."""
-    src = spark.createDataFrame([("hello",), ("world",), ("hello",), ("hello",)], ["word"])
-    d = str(tmp_path / "tws_src")
-    src.write.json(d)
-    sdf = spark.readStream.schema(src.schema).json(d)
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    ss.require_rocksdb_provider(spark)
-    res = ss.running_count_transform_with_state(sdf, "word")
-    try:
-        out = ss.replay_update_to_memory(res, "tws_golden")
-        got = sorted((r["word"], r["cnt"]) for r in out.collect())
-        assert got == [("hello", 1), ("hello", 2), ("hello", 3), ("world", 1)]
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-
 def test_checkpoint_recovery_resumes_state(spark, tmpdir):
     """Close/restart contract: a keyed stateful stream stopped after batch
     1 and RESTARTED from its checkpoint must (a) not reprocess batch-1
