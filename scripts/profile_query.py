@@ -6,12 +6,21 @@ localCheckpoint materializations, persist warmups) — and (b) the final
 noop-sink action, plus the number of Spark jobs each phase launched.
 Reports min over N repeats per phase. Same session config as bench.py.
 
+``--task-floor`` instead prints one JSON line with the fixed per-task cost
+of a ``get_spark`` session: the wall time of a trivial job
+(``parallelize(range(1604), n).mapPartitions(count)``) at 1/4/8/16 Python
+tasks and of a trivial 8-task JVM-only job (``range`` into the ``noop``
+sink), each the median of 3 runs after one warm-up run.
+
 Usage: SPARK_GRAFT_SF_DIR=... python scripts/profile_query.py q1 q2 ...
+       python scripts/profile_query.py --task-floor
 """
 from __future__ import annotations
 
 import gc
+import json
 import os
+import statistics
 import sys
 import time
 
@@ -25,8 +34,43 @@ from ssp_spark.session import (  # noqa: E402
 )
 
 
+def _median_wall(job, reps: int = 3) -> float:
+    job()  # warm-up: starts the Python workers / compiles the plan
+    walls = []
+    for _ in range(reps):
+        t0 = time.perf_counter()
+        job()
+        walls.append(time.perf_counter() - t0)
+    return round(statistics.median(walls), 3)
+
+
+def task_floor() -> None:
+    spark = get_spark("ssp-spark-task-floor")
+    spark.sparkContext.setLogLevel("ERROR")
+    sc = spark.sparkContext
+
+    def python_job(n: int):
+        return lambda: sc.parallelize(range(1604), n).mapPartitions(
+            lambda it: [sum(1 for _ in it)]
+        ).collect()
+
+    def jvm_job():
+        spark.range(0, 1604, 1, 8).write.format("noop").mode("overwrite").save()
+
+    print(json.dumps({
+        "cores": sc.defaultParallelism,
+        "daemon_module": spark.conf.get("spark.python.daemon.module", "pyspark.daemon"),
+        "python_tasks_s": {n: _median_wall(python_job(n)) for n in (1, 4, 8, 16)},
+        "jvm_tasks_s": {8: _median_wall(jvm_job)},
+    }))
+    spark.stop()
+
+
 def main() -> None:
     names = sys.argv[1:]
+    if names == ["--task-floor"]:
+        task_floor()
+        return
     reps = int(os.environ.get("PROFILE_REPS", "3"))
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark(

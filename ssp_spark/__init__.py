@@ -1,5 +1,5 @@
 """ssp_spark: a PySpark-native analytics engine with the capabilities of
-the affo/ssp stream processor (reference: /root/reference, read-only),
+the affo/ssp stream processor,
 re-expressed Spark-first per SURVEY.md.
 
 Public surface:

@@ -120,7 +120,7 @@ def write_bucketed(
     bucketed on the same key with the same bucket count join with ZERO
     shuffle (asserted in tests/test_scale_ops.py), and groupBy on the
     bucket key skips the exchange too. The reference's analogue is KeyBy
-    edge routing (/root/reference/arch.go:3-6, engine.go:374-386) —
+    edge routing (affo/ssp arch.go:3-6, engine.go:374-386) —
     there, co-location exists only inside one process's channels; here it
     survives on disk across jobs.
 

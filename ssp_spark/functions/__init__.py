@@ -1,7 +1,7 @@
 """Column-expression function library (all JVM-side, codegen-friendly).
 
 The reference has no scalar-function library at all — users write Go
-closures (/root/reference/engine_test.go:549-573 uses strings.ToUpper,
+closures (affo/ssp engine_test.go:549-573 uses strings.ToUpper,
 len, fmt.Sprintf). Here every helper is a Catalyst expression built from
 pyspark.sql.functions, so it stays inside whole-stage codegen; nothing in
 this module touches Python at row level.

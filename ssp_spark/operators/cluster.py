@@ -3,7 +3,7 @@ clustering for training-data curation (topic bucketing, diversity
 sampling, cluster-balanced mixes).
 
 Not in the reference (its users would hand-roll a Go loop over O2 state,
-/root/reference/node.go:57-64); this is a §6-extension operator built the
+affo/ssp node.go:57-64); this is a §6-extension operator built the
 Spark-native way for iterative ML:
 
 - **Assignment is a zero-shuffle projection.** The centroid set is tiny

@@ -10,7 +10,7 @@ would level each one — the number the salted-join operator
 (operators/relational.py) takes as ``n_salts``.
 
 Reference parity note: the reference engine hash-partitions on the key
-with no skew mitigation at all (/root/reference/key.go — a plain hash
+with no skew mitigation at all (affo/ssp key.go — a plain hash
 partitioner); this is a §6 beyond-reference extension.
 
 Scale design: ONE map-side-combined groupBy on the profiled key (the

@@ -1,7 +1,7 @@
 """Iterative graph algorithms over edge-list DataFrames.
 
 The reference has no graph surface (its dedup-adjacent capability is the
-hand-rolled keyed fold, /root/reference/node.go:57-64); connected
+hand-rolled keyed fold, affo/ssp node.go:57-64); connected
 components already lives in operators/dedup.py (hash-to-min label
 propagation). This module adds fixed-iteration PageRank — the canonical
 "iterative join + re-aggregate" Spark workload, and a useful curation

@@ -8,7 +8,7 @@ is non-associative, so no frame rewrite exists. This is precisely the
 case the build rules reserve Python for: the per-key fold runs inside
 applyInPandas (Arrow-batched, one key's ordered series at a time), which
 is also the reference's own O2 shape — its keyed stateful fold
-(/root/reference/node.go:57-73) IS a sequential scan; Spark expresses
+(affo/ssp node.go:57-73) IS a sequential scan; Spark expresses
 the same thing with keyed Arrow batches instead of per-record channel
 hops.
 

@@ -2,7 +2,7 @@
 
 The reference has NO joins, sorts, set ops, or top-k (SURVEY.md §2.3) —
 only a hand-rolled 2-stream align pattern
-(/root/reference/engine_test.go:558-590). Everything here is the
+(affo/ssp engine_test.go:558-590). Everything here is the
 Spark-native surface that subsumes it, with scale notes per operator.
 """
 
@@ -59,7 +59,7 @@ def asof_join(
     is a post-carry projection — no extra join.
 
     Equivalent capability in the reference: the "Align" user pattern
-    (/root/reference/engine_test.go:558-590, README.md:140-205), which
+    (affo/ssp engine_test.go:558-590, README.md:140-205), which
     pairs two streams in arrival order; as-of is its event-time analogue.
     """
     if direction not in ("backward", "forward"):

@@ -6,7 +6,7 @@ projection over the documents scan, so they stream through 100 TB with
 zero shuffles and full whole-stage codegen.
 
 Not present in the reference (its users write Go closures,
-/root/reference/node.go:57-64); these are the §6-extension operators the
+affo/ssp node.go:57-64); these are the §6-extension operators the
 build plan calls for.
 """
 

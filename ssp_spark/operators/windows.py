@@ -3,7 +3,7 @@
 Reference semantics: ssp assigns each record to every ``[k*slide,
 k*slide+size)`` window containing its timestamp and fires a per-window
 fold when the watermark passes window end
-(/root/reference/window.go:83-130,162-177). That is exactly Spark's
+(affo/ssp window.go:83-130,162-177). That is exactly Spark's
 ``F.window(ts, size, slide)`` group-window; the per-window user state is
 the aggregate, and "fire on close" is append-mode output in streaming.
 
@@ -31,7 +31,7 @@ def tumbling(
     """Tumbling event-time window; ``aggs`` maps output name -> agg column.
 
     Mirrors ssp's FixedWindowManager with slide == size
-    (/root/reference/window_test.go:154-230).
+    (affo/ssp window_test.go:154-230).
     """
     return sliding(df, ts_col, size, size, aggs, keys)
 
@@ -59,7 +59,7 @@ def sliding(
     aggs: Mapping[str, Column],
     keys: list[str] | None = None,
 ) -> DataFrame:
-    """Sliding event-time window (ssp /root/reference/window.go:83-111).
+    """Sliding event-time window (affo/ssp window.go:83-111).
 
     Output carries ``ws``/``we`` as epoch seconds (bigint) rather than raw
     timestamps so results are timezone-stable and oracle-comparable.

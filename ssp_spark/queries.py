@@ -442,7 +442,7 @@ def top_customers_per_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def running_user_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch replay of ssp's update-mode emission (NewStatefulNode emits
-    every prefix state — /root/reference/engine_test.go:123-155): one row
+    every prefix state — affo/ssp engine_test.go:123-155): one row
     per event carrying the per-user running sum/count."""
     ev = load_table(spark, "events", sf_dir)
     w = (
@@ -4189,7 +4189,6 @@ from ssp_spark.functions import seeded_hash32_sql as _sh32_sql  # noqa: E402
 from ssp_spark.operators import sketch as _sketch  # noqa: E402
 
 _CMS_D, _CMS_W = 4, 256
-_SQL_H64_OF = "('0x' || substr(md5({x}), 1, 15))::BIGINT"
 
 _CMS_CELLS_SQL = " UNION ALL ".join(
     f"SELECT {d} AS d, {_sh32_sql('h64', d, _CMS_D)} % {_CMS_W} AS w FROM base"
@@ -4205,7 +4204,7 @@ _CMS_PROBES_SQL = " UNION ALL ".join(
     "cms_user_counts",
     f"""
     WITH base AS (
-      SELECT {_SQL_H64_OF.format(x="CAST(user_id AS VARCHAR)")} AS h64 FROM events
+      SELECT {_SQL_HASH64.format(x="CAST(user_id AS VARCHAR)")} AS h64 FROM events
     ),
     cells AS (
       SELECT d, w, CAST(count(*) AS BIGINT) AS cnt
@@ -4213,7 +4212,7 @@ _CMS_PROBES_SQL = " UNION ALL ".join(
     ),
     keys AS (
       SELECT CAST(k AS VARCHAR) AS user_key,
-             {_SQL_H64_OF.format(x="CAST(k AS VARCHAR)")} AS h64
+             {_SQL_HASH64.format(x="CAST(k AS VARCHAR)")} AS h64
       FROM (SELECT unnest(generate_series(0, 19)) AS k)
     ),
     probes AS ({_CMS_PROBES_SQL})
@@ -4253,11 +4252,11 @@ _BLOOM_PROBE_SQL = " UNION ALL ".join(
     "bloom_customer_names",
     f"""
     WITH base AS (
-      SELECT {_SQL_H64_OF.format(x="c_name")} AS h64 FROM customer
+      SELECT {_SQL_HASH64.format(x="c_name")} AS h64 FROM customer
     ),
     bits AS (SELECT DISTINCT bit FROM ({_BLOOM_BITS_SQL})),
     keys AS (
-      SELECT name, {_SQL_H64_OF.format(x="name")} AS h64
+      SELECT name, {_SQL_HASH64.format(x="name")} AS h64
       FROM (SELECT unnest([
         'Customer#000000001', 'Customer#000000002', 'Customer#000000003',
         'Customer#000000004', 'Customer#000000005',
@@ -4288,7 +4287,7 @@ def bloom_customer_names(spark: SparkSession, sf_dir: str) -> DataFrame:
     "stratified_sample_events",
     f"""
     SELECT event_id, event_type FROM events
-    WHERE {_SQL_H64_OF.format(x="CAST(event_id AS VARCHAR)")} % 100 <
+    WHERE {_SQL_HASH64.format(x="CAST(event_id AS VARCHAR)")} % 100 <
           CASE event_type WHEN 'click' THEN 50 WHEN 'view' THEN 10 ELSE 5 END
     """,
 )
@@ -4318,7 +4317,7 @@ _HLL_CONST = _sketch.hll_alpha_m2_pow(_HLL_P)
     f"""
     WITH base AS (
       SELECT event_type,
-             {_SQL_H64_OF.format(x="CAST(user_id AS VARCHAR)")} AS h64
+             {_SQL_HASH64.format(x="CAST(user_id AS VARCHAR)")} AS h64
       FROM events
     ),
     rj AS (
@@ -7132,7 +7131,7 @@ def event_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept AS (
       SELECT d.source, count(*) AS kept_docs
       FROM documents d JOIN rates r ON r.source = d.source
-      WHERE {_SQL_H64_OF.format(x="CAST(doc_id AS VARCHAR)")} % 1000000
+      WHERE {_SQL_HASH64.format(x="CAST(doc_id AS VARCHAR)")} % 1000000
             < r.rate_ppm
       GROUP BY d.source
     )
@@ -8891,7 +8890,7 @@ def bm25_topk_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"""
     WITH s AS (
       SELECT source, doc_id, n_chars,
-             ln(({_SQL_H64_OF.format(x="'wsample:' || CAST(doc_id AS VARCHAR)")} + 1)::DOUBLE
+             ln(({_SQL_HASH64.format(x="'wsample:' || CAST(doc_id AS VARCHAR)")} + 1)::DOUBLE
                 / 1152921504606846976.0) / CAST(n_chars AS DOUBLE) AS k
       FROM documents WHERE n_chars > 0
     )

@@ -1,7 +1,7 @@
 """Sources & sinks.
 
 The reference has only in-memory sources and a log sink
-(/root/reference/datastream.go:15-41, node.go:107-114). Here: batch
+(affo/ssp datastream.go:15-41, node.go:107-114). Here: batch
 parquet/csv/json readers, streaming file/rate sources, memory/parquet/
 noop sinks — thin wrappers that keep options consistent.
 """

@@ -1,7 +1,7 @@
 """ssp-equivalent fluent Stream API over DataFrames.
 
 The reference's user surface is: build a DAG of nodes with
-``NewNode`` (stateless 0..n-out transform, /root/reference/node.go:57-64),
+``NewNode`` (stateless 0..n-out transform, affo/ssp node.go:57-64),
 ``NewStatefulNode`` (per-key fold, node.go:66-73), ``KeyBy``
 (arch.go:3-6), ``AssignTimestamp`` (time.go:7-19), ``NewWindowedNode``
 (window.go:132-160), sources (engine.go:246-250) and sinks
@@ -36,7 +36,7 @@ class Stream:
     @staticmethod
     def from_elements(spark: SparkSession, elems: Iterable[Any], schema=None) -> "Stream":
         """Literal in-memory source (ssp NewStreamFromElements,
-        /root/reference/datastream.go:15-41)."""
+        affo/ssp datastream.go:15-41)."""
         data = [(e,) if not isinstance(e, (tuple, dict)) else e for e in elems]
         return Stream(spark.createDataFrame(data, schema or ["value"]))
 

@@ -4,11 +4,11 @@ onto micro-batch execution.
 Reference model (SURVEY.md §0): unbounded keyed streams, per-record
 event-time + watermark, per-key state that emits on every input, windows
 that fire when the watermark passes window end, Close-based termination
-(/root/reference/engine.go:252-278, window.go:162-177, collect.go:11-18).
+(affo/ssp engine.go:252-278, window.go:162-177, collect.go:11-18).
 
 Spark mapping decisions (SURVEY.md §4.3):
 - global per-micro-batch watermark (ssp's per-record transport is the bug
-  its own README documents — /root/reference/README.md:27-77);
+  its own README documents — affo/ssp README.md:27-77);
 - append mode for window firing (= emit-on-close);
 - update-on-every-record state via applyInPandasWithState;
 - Close protocol -> trigger(availableNow=True) for bounded replays.
@@ -71,7 +71,7 @@ def replay_update_to_memory(sdf: DataFrame, name: str, timeout_s: float = 120.0)
 
 def running_count_stream(sdf: DataFrame, key_col: str, out_col: str = "cnt") -> DataFrame:
     """ssp's flagship word count: emit `key: k` on EVERY arrival
-    (update-on-every-record, /root/reference/engine_test.go:98-110,
+    (update-on-every-record, affo/ssp engine_test.go:98-110,
     bench/wordcount_test.go:14-49).
 
     applyInPandasWithState keyed on ``key_col``; state = running count;

@@ -4,7 +4,11 @@ from __future__ import annotations
 
 import os
 
-from ssp_spark.session import adaptive_enabled_for, sized_shuffle_partitions
+from ssp_spark.session import (
+    adaptive_enabled_for,
+    default_parallelism,
+    sized_shuffle_partitions,
+)
 
 
 def _make_dir(tmp_path, n_bytes):
@@ -32,3 +36,10 @@ def test_adaptive_gate(tmp_path, monkeypatch):
     assert not adaptive_enabled_for(small)
     monkeypatch.setenv("SPARK_GRAFT_AQE_MIN_BYTES", str(1 << 19))
     assert adaptive_enabled_for(small)
+
+
+def test_default_parallelism_falls_back_to_usable_cores(monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert default_parallelism() == len(os.sched_getaffinity(0))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert default_parallelism() == 3

@@ -2,7 +2,7 @@
 
 Each test cites the ssp test it reproduces; comparisons are
 order-insensitive (sorted), exactly as the reference's own tests do
-(/root/reference/engine_test.go:218,610,739-740).
+(affo/ssp engine_test.go:218,610,739-740).
 """
 
 from __future__ import annotations
@@ -13,7 +13,7 @@ from ssp_spark.stream import Stream
 
 
 def test_prefix_sums_golden(spark):
-    """ssp TestEngine (/root/reference/engine_test.go:123-155): source
+    """ssp TestEngine (affo/ssp engine_test.go:123-155): source
     0..4 -> stateful running sum emitting every prefix -> [0,1,3,6,10]."""
     s = Stream(spark.createDataFrame([(i, i) for i in range(5)], ["pos", "v"]))
     out = (

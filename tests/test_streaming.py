@@ -1,6 +1,6 @@
 """Structured Streaming behavior tests: ssp's streaming semantics under
 the SURVEY.md §4.3 decisions, on bounded replays (availableNow == ssp's
-Close protocol, /root/reference/collect.go:11-18).
+Close protocol, affo/ssp collect.go:11-18).
 """
 
 from __future__ import annotations

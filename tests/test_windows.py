@@ -1,7 +1,7 @@
 """Event-time window goldens ported from the reference.
 
 The flagship scenario is ssp's TestParallelEngine_Windows
-(/root/reference/engine_test.go:616-744): 23 timestamped records, 3 keys,
+(affo/ssp engine_test.go:616-744): 23 timestamped records, 3 keys,
 sliding windows size=5 slide=2, out-of-order arrivals. Our engine applies
 the SURVEY.md §4.3 decided semantics:
 
