@@ -1,42 +1,36 @@
 #!/usr/bin/env python
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line: {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}.
+"""Benchmark harness: runs the headline queries on the fixture in
+$SPARK_GRAFT_SF_DIR (default: the sf0.1 test data) on
+local[$SPARK_GRAFT_CPUS] and prints two JSON lines, the full record and
+then a compact one (both carry ``metric``, ``value`` in seconds,
+``queries``, ``sf`` and ``cores``).
 
-Each query is executed to completion (foreach-noop action — full compute,
-no driver-side result transfer). Protocol: one cold pass (JVM + codegen +
-file listing; reported as ``cold_total_sec``), then three full
-steady-state passes over the suite (round 13 — was two; the DuckDB side
-gets the same third pass, see the sweep-loop comment); the headline
-metric is the sum of per-query BEST steady times (the cold pass is NOT
-eligible — it exists only to absorb first-touch costs and is reported
-separately). The steady passes are
-INTERLEAVED (whole-suite sweeps, not back-to-back repeats): this host
-shows bursty CPU steal from neighbors (0 -> 25%+ for tens of seconds),
-and back-to-back repeats land both samples inside the same burst, while
-sweeps separated by minutes give each query two independent draws.
-Three per-sample noise probes gate a retry pass (round 11 — BENCH_r10
-shipped 4.45x contaminated because steal alone is blind to same-VM
-load): hypervisor steal (> SPARK_GRAFT_RETRY_STEAL_PCT, default 5),
-same-VM FOREIGN busy CPU — this VM's busy jiffies minus our own process
-tree's (> SPARK_GRAFT_RETRY_FOREIGN_PCT, default 10) — and a
-band-deviation check against each query's best prior BENCH_r*.json time
-at this sf (> SPARK_GRAFT_BAND_FACTOR x best + 0.25 s, default 3x).
-A suspect best gets up to three clean-draw retries; the probes under
-each reported best are published (``query_steal_pct`` /
-``query_foreign_pct``), and rows still suspect after retries are NAMED
-in ``dirty`` on both output lines. ``host_steal_pct`` reports the steal
-share across the whole bench.
+Each query runs to completion into the ``noop`` sink (full compute, no
+result transfer to the driver). Protocol, per section (``timed_sweeps``):
+one cold pass (JVM, codegen and file listing; reported as
+``cold_total_sec`` and never a candidate), then whole-list sweeps
+INTERLEAVED rather than back-to-back, so that a burst of host noise
+cannot land on every sample of a query; each query keeps its fastest
+sample. The headline is the sum of those bests.
 
-Every run also times the IDENTICAL DuckDB oracle SQL over the same
-parquet files in the same process (``duckdb_*`` keys, own steal window)
-— the same-day same-machine baseline pair BASELINE.md's protocol calls
-for, produced atomically with the Spark numbers instead of by a separate
-ad-hoc run. Disable with SPARK_GRAFT_BENCH_DUCKDB=0.
+A best sample is suspect when hypervisor steal exceeds 5%, when CPU
+burned by processes outside our own tree exceeds 10% (steal cannot see
+same-VM contention), or when it exceeds 3x + 0.25 s the query's best time
+in an earlier record at the same sf and core count (``load_bands``).
+Suspect rows get up to three more draws; those still suspect are named in
+``dirty``.
+
+Every run also times the identical DuckDB oracle SQL over the same parquet
+files in the same process (``duckdb_*`` keys), so each record is a pair.
+Record a run as ``artifacts/BENCH_<tag>.json`` in the shape
+``{"cpus": ..., "sf": ..., "parsed": <full line>}`` and later runs at the
+same sf and core count use it as a band.
 """
 
 from __future__ import annotations
 
+import gc
+import glob
 import json
 import os
 import sys
@@ -44,9 +38,19 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from ssp_spark.queries import QUERIES  # noqa: E402
-from ssp_spark.session import get_spark  # noqa: E402
+from perfbench.probes import HZ, host_jiffies, tree  # noqa: E402
+from ssp_spark.queries import QUERIES, release_session_artifacts  # noqa: E402
+from ssp_spark.session import (  # noqa: E402
+    adaptive_enabled_for,
+    default_parallelism,
+    get_spark,
+    sized_shuffle_partitions,
+)
 
+# Rows that carry real compute on both engines. Rows whose DuckDB oracle
+# runs on a tiny post-aggregation frame stay out: on Spark they would time
+# the multi-stage scheduling floor, not throughput. Where a query has a
+# shipped kernel and an ANSI-replayable twin, the kernel is the headline row.
 HEADLINE = [
     "word_count",
     "q1_pricing_summary",
@@ -69,23 +73,10 @@ HEADLINE = [
     "q6_forecast_revenue",
     "q18_large_orders",
     "stats_numeric_exact",
-    # round-4 additions: the lsh_buckets sign-matrix rewrite needs a bench
-    # row to show the win; the production-width simhash is a new operator.
-    # Round 11 (VERDICT r10 #4): the LSH headline row is the GEMM
-    # deployment kernel, per the suite's own ivf convention — the expr
-    # form moved to EXPR_TWINS (its 26x sf0.1 optics were floor + six
-    # tiny stages on a 2k-vector corpus, exponent 0.98, DuckDB
-    # infeasible at sf10; BASELINE.md round 11 records the disposition).
     "ann_lsh_topk_gemm",
     "dedup_simhash64_pairs",
-    # late round-4 additions: the two heaviest new curation operators
-    # (cluster-composition dedup keeper; corpus-model LM scoring)
     "cluster_dedup_keeper",
     "bigram_lm_score",
-    # latest round-4 additions: the new operator families that carry real
-    # compute (fuzzy blocking+verify, iterative CC composition, the
-    # histogram-window sharding; the d² moment explode moved to
-    # EXPR_TWINS below in round 9)
     "fuzzy_name_pairs",
     "entity_resolution_parts",
     "range_shard_manifest",
@@ -94,151 +85,88 @@ HEADLINE = [
     "attribution_last_touch",
     "embedding_standardize",
     "groupwise_regression",
-    # round-5 addition: the heaviest graph operator (capped pair stage +
-    # degree-ordered wedges) — real multi-stage compute, not floor
     "triangle_count_users",
-    # round-5 addition: the Arrow/numpy gram kernel (the SHIPPED
-    # covariance path for d>256; embedding_covariance above stays the
-    # ANSI-SQL-replayable expression twin — both belong in the record)
     "embedding_covariance_blas",
-    # round-6 additions that carry real compute (the skew advisor stays
-    # out — 0.36 s of pure scheduler floor vs a 0.01 s oracle is a
-    # floor measurement, not a throughput one): frontier BFS (iterative
-    # joins), substring-window dedup (explode + inverted-index join),
-    # and the BPE encode projection (12 literal replaces per word over
-    # the whole corpus — near-parity with DuckDB, 1.7 s vs 1.4 s)
     "graph_reachability_bfs",
     "dedup_span_pairs",
     "bpe_token_stats",
-    # late round-6 additions: the MMR deployment kernel BEATS the DuckDB
-    # oracle outright (0.83 s vs 2.17 s — its 5-stage greedy CTE pays
-    # correlated-subquery costs our shortlist-collect greedy doesn't),
-    # and the two keyed recurrences carry real sequential compute on
-    # both engines (recursive-CTE replay on the oracle side)
     "mmr_diverse_topk_arrow",
     "ema_daily_user_spend",
     "cusum_user_activity",
-    # round-7 additions that carry real compute: the range-sharded
-    # skyline (its DuckDB oracle is the O(n²) NOT EXISTS dominance join
-    # — the distributed plan's whole point), asymmetric containment
-    # (inverted-index candidate core + dual-direction scoring), and the
-    # two-state Holt recurrence (recursive-CTE replay on the oracle)
     "skyline_pareto_parts",
     "containment_dedup_pairs",
     "holt_trend_user_spend",
-    # round-7 batch-7 addition: the Poisson bootstrap's 64-way resample
-    # explode carries real compute on BOTH engines (each expands ~64x
-    # the purchase rows through the md5 weight map: 1.99 s vs 0.62 s).
-    # The other seven batch-7 queries stay out by the same recorded
-    # rule that excludes the skew advisor above: their DuckDB oracles
-    # run on tiny post-aggregation frames (spearman 0.021 s, streaks
-    # 0.031 s, quantile-normalize 0.084 s, attribution 0.057 s at
-    # sf0.1 — measured 2026-08-15), so a suite row would time our
-    # multi-stage scheduler floor, not throughput; the model-eval
-    # deciles' data cost is the roc_auc norm fold already in the
-    # suite's embedding family. All eight stay driver-hashed (r7
-    # window) and 100x-measured (SCALE.md).
     "bootstrap_ci_spend",
-    # round-8 addition: the GEMM assignment kernel twin for IVF (the
-    # sf1 suite point exposed the expr kernel's corpus x cells stage as
-    # 69.9 s of the 248 s total; the twin pins the deployment number —
-    # cf. the ann_lsh_topk / ann_lsh_topk_gemm precedent above)
     "ann_ivf_topk_gemm",
 ]
 
-# Round 9 (VERDICT r8 #1): the two deliberate "expression twin" rows —
-# ANSI-replayable oracle-shaped forms whose SHIPPED kernels
-# (embedding_covariance_blas, ann_ivf_topk_gemm) are in HEADLINE and win
-# outright — move to this secondary comparison section, exactly like the
-# md5/xxhash production-hash profile: measured every run under the same
-# best-of-2 + steal-retry protocol, DuckDB-paired, reported as
-# ``expr_twin_profile`` / ``expr_twin_duckdb``, but NOT summed into the
-# headline ratio. Both keep their driver correctness rows (they share
-# their kernels' oracles) — only the bench placement changes, and
-# BASELINE.md round 9 records the disposition.
+# The oracle-shaped expression twins of headline kernels: same protocol and
+# DuckDB-paired, but reported apart from the headline ratio.
 EXPR_TWINS = [
     "embedding_covariance",
     "ann_ivf_topk",
-    # round 11 (VERDICT r10 #4): the JVM-fold LSH form joins its shipped
-    # GEMM kernel's inverse placement, same as ivf above
     "ann_lsh_topk",
 ]
 
+# Decode throughput of the media codec gates. No DuckDB ratio: the oracle
+# side replays bytes analytically and is no codec.
+CODEC_PROFILE = [
+    "multimodal_decode_png",
+    "multimodal_decode_webp",
+    "multimodal_decode_jpeg",
+    "multimodal_decode_jpeg420",
+    "multimodal_decode_jpeg_progressive",
+    "multimodal_decode_jpeg12",
+    "multimodal_decode_gif",
+    "multimodal_decode_tiff",
+    "multimodal_decode_bmp_rle8",
+    "multimodal_decode_audio_g711",
+    "multimodal_decode_audio_adpcm",
+    "multimodal_decode_audio_flac",
+    "multimodal_video_y4m_index",
+]
 
-def cpu_jiffies() -> tuple[int, int, int]:
-    """(total, steal, busy) jiffies from /proc/stat — host-noise probes.
+# Headline rows whose plans call portable_hash64. The md5 form exists only
+# so DuckDB can replay the hashes; these are re-timed under the xxhash64
+# deployment profile (SSP_PORTABLE_HASH=off) to record that parity cost.
+HASH_BOUND = [
+    "dedup_minhash_lsh",
+    "dedup_simhash",
+    "dedup_simhash64_pairs",
+    "doc_fingerprint",
+]
 
-    ``busy`` = user+nice+system+irq+softirq (NOT idle/iowait/steal): the
-    CPU this VM actually executed. Steal alone proved blind in round 10 —
-    the accountable artifact shipped 4.45x with steal at 3.1% because the
-    contention was same-VM (another process on this host), which the
-    hypervisor steal counter cannot see. ``busy`` minus our own process
-    tree's jiffies (below) IS visible to it.
-    """
-    try:
-        vals = [int(x) for x in open("/proc/stat").readline().split()[1:]]
-        steal = vals[7] if len(vals) > 7 else 0
-        busy = sum(vals[i] for i in (0, 1, 2, 5, 6) if i < len(vals))
-        return sum(vals), steal, busy
-    except Exception:
-        return 0, 0, 0
+TABLES = (
+    "region nation customer supplier part orders lineitem events documents embeddings"
+).split()
+RECORDS = os.path.join(os.path.dirname(os.path.abspath(__file__)), "artifacts")
+STEAL_PCT = 5.0
+FOREIGN_PCT = 10.0
+BAND_FACTOR = 3.0
+RETRIES = 3
+COMPACT_MAX = 1900  # readers of the run log may keep only its last ~2 KB
 
 
 def tree_jiffies() -> int:
-    """utime+stime jiffies summed over THIS process's /proc subtree
-    (python driver + the Spark JVM it launched + Arrow worker daemons).
-    Same USER_HZ unit as /proc/stat, so ``busy_delta - tree_delta`` is
-    the CPU other processes on this VM burned during a sample window —
-    the round-10 contamination signal steal-only detection missed."""
-    try:
-        me = os.getpid()
-        ppid: dict[int, int] = {}
-        cost: dict[int, int] = {}
-        for d in os.listdir("/proc"):
-            if not d.isdigit():
-                continue
-            try:
-                fields = open(f"/proc/{d}/stat").read().rsplit(") ", 1)[1].split()
-                # fields[1]=ppid, fields[11]=utime, fields[12]=stime,
-                # fields[13]=cutime, fields[14]=cstime (indices after
-                # the comm field). cutime/cstime hold jiffies of REAPED
-                # children (e.g. recycled PySpark workers) — without
-                # them a worker that exits mid-sample vanishes from the
-                # t1 tree sum while staying in the VM-wide busy counter
-                # and gets misattributed to foreign CPU.
-                ppid[int(d)] = int(fields[1])
-                cost[int(d)] = (int(fields[11]) + int(fields[12])
-                                + int(fields[13]) + int(fields[14]))
-            except Exception:
-                continue
-        total = 0
-        for pid in cost:
-            p = pid
-            for _ in range(64):  # bounded ancestor walk
-                if p == me:
-                    total += cost[pid]
-                    break
-                p = ppid.get(p, 0)
-                if p <= 1:
-                    break
-        return total
-    except Exception:
-        return 0
+    """CPU jiffies of this process and its descendants (the Spark JVM and
+    the Python workers), reaped children included."""
+    return sum(cpu for cpu, _ in tree().values())
 
 
-def load_bands(sf: float) -> dict[str, float]:
-    """Per-query best prior-artifact time at this sf, min over every
-    BENCH_r*.json in the repo root. Used by the band-deviation retry
-    gate (round 11): a sample N-times above its own multi-round best is
-    contaminated no matter what the steal counter says."""
-    import glob
+def steal_pct(j0: tuple[int, int, int], j1: tuple[int, int, int]) -> float:
+    return round(100.0 * (j1[1] - j0[1]) / max(j1[0] - j0[0], 1), 1)
 
+
+def load_bands(sf: float, cores: int) -> dict[str, float]:
+    """Per-query best time over the records in ``RECORDS`` taken at this
+    sf on this many cores; empty (the band gate off) when there are none."""
     bands: dict[str, float] = {}
-    here = os.path.dirname(os.path.abspath(__file__))
-    for p in sorted(glob.glob(os.path.join(here, "BENCH_r*.json"))):
+    for p in sorted(glob.glob(os.path.join(RECORDS, "BENCH_*.json"))):
         try:
-            parsed = json.load(open(p)).get("parsed") or {}
-            if not isinstance(parsed, dict) or parsed.get("sf") != sf:
+            with open(p) as f:
+                rec = json.load(f)
+            parsed = rec.get("parsed") or {}
+            if rec.get("cpus") != cores or not isinstance(parsed, dict) or parsed.get("sf") != sf:
                 continue
             for k, v in (parsed.get("queries") or {}).items():
                 if isinstance(v, (int, float)) and v > 0:
@@ -248,368 +176,163 @@ def load_bands(sf: float) -> dict[str, float]:
     return bands
 
 
+def suspect(sample: tuple, band: float | None) -> bool:
+    wall, steal, foreign = sample[:3]
+    if steal > STEAL_PCT or foreign > FOREIGN_PCT:
+        return True
+    return band is not None and wall > BAND_FACTOR * band + 0.25
+
+
 def run_once(spark, name: str, sf_dir: str) -> tuple[float, float, float, float]:
-    """(wall s, steal%, foreign-busy%, own-tree CPU s) for this query's window.
-
-    Per-sample steal is the hypervisor-noise signal (round 3's
-    "ann_ivf_topk 3.2x regression" was a steal burst); per-sample
-    FOREIGN busy — this VM's busy jiffies minus our own process tree's —
-    is the same-VM-contention signal round 10 proved necessary (eight
-    rows inflated 5-30x at 3% steal because another process on the host
-    was eating the cores). Both are recorded under each query's reported
-    best, so a contaminated number is visibly dirty even when no retry
-    rescued it. Round 13 adds the fourth channel: the query's OWN-TREE
-    CPU seconds (tree_jiffies delta / USER_HZ) — the 2.80x HEAD pair
-    this round drew rows 1.3-1.7x inflated with steal AND foreign at
-    zero, i.e. the excess CPU was burned inside our own process tree
-    (sustained JIT storms); publishing wall vs own-CPU per row makes
-    that adjudication mechanical in the artifact instead of forensic.
-    """
-    # Release prior queries' pinned blocks (localCheckpoint RDDs are freed
-    # by py4j finalizers only after Python GC runs) so each measurement
-    # sees a clean block manager.
-    import gc
-
+    """(wall s, steal %, foreign busy %, own-tree CPU s) over one query.
+    Own-tree CPU separates excess work inside our process tree (JIT, GC)
+    from contention by other processes, which the two % probes see."""
+    # localCheckpoint blocks of earlier queries are freed by py4j
+    # finalizers only after a Python GC
     gc.collect()
-    jt0, js0, jb0 = cpu_jiffies()
-    tr0 = tree_jiffies()
+    h0, tr0 = host_jiffies(), tree_jiffies()
     t0 = time.perf_counter()
-    df = QUERIES[name](spark, sf_dir)
-    df.write.format("noop").mode("overwrite").save()
+    QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
     wall = time.perf_counter() - t0
-    jt1, js1, jb1 = cpu_jiffies()
-    tr1 = tree_jiffies()
-    dt = max(jt1 - jt0, 1)
-    steal = round(100.0 * (js1 - js0) / dt, 1) if jt1 else 0.0
-    foreign = (
-        round(100.0 * max((jb1 - jb0) - (tr1 - tr0), 0) / dt, 1) if jt1 else 0.0
-    )
-    cpu = round((tr1 - tr0) / 100.0, 2)  # USER_HZ=100 on this platform
-    return wall, steal, foreign, cpu
+    h1, tr1 = host_jiffies(), tree_jiffies()
+    dt = max(h1[0] - h0[0], 1)
+    foreign = round(100.0 * max((h1[2] - h0[2]) - (tr1 - tr0), 0) / dt, 1)
+    return wall, steal_pct(h0, h1), foreign, round((tr1 - tr0) / HZ, 2)
+
+
+def timed_sweeps(run, names: list[str], sweeps: int, *, cold: bool = True,
+                 retry_bands: dict[str, float] | None = None):
+    """Time ``names`` with ``run(name) -> (wall s, *probes)``.
+
+    An optional cold pass, then ``sweeps`` interleaved sweeps keeping each
+    name's fastest sample (wall rounded to ms), then, when ``retry_bands``
+    is given, up to ``RETRIES`` more draws for each name whose best is
+    still suspect. Returns ({name: cold wall}, {name: best sample})."""
+    first = {n: round(run(n)[0], 3) for n in names} if cold else {}
+    best: dict[str, tuple] = {}
+
+    def draw(n: str) -> None:
+        wall, *probes = run(n)
+        sample = (round(wall, 3), *probes)
+        if n not in best or sample[0] < best[n][0]:
+            best[n] = sample
+
+    for _ in range(sweeps):
+        for n in names:
+            draw(n)
+    if retry_bands is not None:
+        for n in names:
+            for _ in range(RETRIES):
+                if not suspect(best[n], retry_bands.get(n)):
+                    break
+                draw(n)
+    return first, best
+
+
+def column(best: dict[str, tuple], i: int = 0) -> dict[str, float]:
+    """{name: item i of its best sample}; item 0 is the wall time."""
+    return {n: s[i] for n, s in best.items()}
+
+
+def duckdb_pass(sf_dir: str, names: list[str]) -> tuple[dict[str, float], float]:
+    """The same oracle SQL on DuckDB over the same parquet files: a cold
+    pass and three sweeps, as on the Spark side. Returns the best walls
+    and the steal % over the pass."""
+    import duckdb
+
+    from ssp_spark.queries import ORACLE
+
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
+
+    def run(name: str) -> tuple[float]:
+        t0 = time.perf_counter()
+        con.execute(ORACLE[name]).fetchall()
+        return (time.perf_counter() - t0,)
+
+    h0 = host_jiffies()
+    _, best = timed_sweeps(run, names, 3)
+    return column(best), steal_pct(h0, host_jiffies())
+
+
+def compact_line(record: dict) -> str:
+    """The record's totals and dirty rows in one short JSON line, printed
+    last so the stdout tail always parses; the per-query map goes when
+    the line would not fit."""
+    keys = ("metric", "value", "unit", "queries", "sf", "cores", "cold_total_sec",
+            "duckdb_total_sec", "host_steal_pct", "duckdb_steal_pct")
+    small = {k: record[k] for k in keys}
+    small["n_dirty"] = len(record["dirty"])
+    small["dirty"] = record["dirty"]
+    line = json.dumps(small, separators=(",", ":"))
+    if len(line) > COMPACT_MAX:
+        small["n_queries"] = len(small.pop("queries"))
+        small["dirty"] = small["dirty"][:8]
+        line = json.dumps(small, separators=(",", ":"))
+    return line
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
-    from ssp_spark.session import adaptive_enabled_for, sized_shuffle_partitions
-
-    # Both scale knobs sized from the input volume (see ssp_spark.session):
-    # shuffle partitions ~ input bytes (clamped to [8, 3x cores]) and AQE
-    # gated on >= 1 GiB — at megabyte scale reduce-task scheduling and
-    # AQE's per-exchange re-planning ARE the wall clock, with nothing for
-    # either to win back. Env overrides (SPARK_GRAFT_SHUFFLE_PARTITIONS /
-    # SPARK_GRAFT_AQE_MIN_BYTES) still apply.
-    sp = (
-        None
-        if "SPARK_GRAFT_SHUFFLE_PARTITIONS" in os.environ
-        else sized_shuffle_partitions(sf_dir)
-    )
+    cores = default_parallelism()
     spark = get_spark(
         "ssp-spark-bench",
-        shuffle_partitions=sp,
+        shuffle_partitions=sized_shuffle_partitions(sf_dir),
         adaptive=adaptive_enabled_for(sf_dir),
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    t_all, s_all, _ = cpu_jiffies()
-    run_once(spark, "word_count", sf_dir)  # warmup: JVM + codegen + file listing
+    def run(name: str) -> tuple[float, float, float, float]:
+        return run_once(spark, name, sf_dir)
 
-    cold: dict[str, float] = {}
-    for name in HEADLINE:
-        cold[name] = round(run_once(spark, name, sf_dir)[0], 3)
-
-    # Three interleaved steady-state sweeps (round 13 — was two): each
-    # query gets samples separated by full suite passes, so a steal
-    # burst can't poison them all. The third sweep is the robustness
-    # response to this round's 2.80x HEAD pair, whose rows were
-    # inflated 1.3-1.7x by sustained in-JVM JIT storms that NO noise
-    # probe can see (steal and foreign both zero) and that the 3x band
-    # gate is too coarse to retry: one more independent draw per query
-    # halves the chance the min keeps an inflated sample. The estimator
-    # is unchanged (per-query min over steady samples) and the DuckDB
-    # side below gets the SAME third sweep, so the pair stays
-    # symmetric. The cold pass is deliberately NOT a candidate for the
-    # min — the headline is a steady-state number.
-    timings: dict[str, float] = {}
-    best_steal: dict[str, float] = {}
-    best_foreign: dict[str, float] = {}
-    best_cpu: dict[str, float] = {}
-    for _sweep in range(3):
-        for name in HEADLINE:
-            t, st, fo, cp = run_once(spark, name, sf_dir)
-            t = round(t, 3)
-            if name not in timings or t < timings[name]:
-                timings[name], best_steal[name], best_foreign[name] = t, st, fo
-                best_cpu[name] = cp
-
-    # Noise-retry pass (round 11, VERDICT r10 #1): a query's best sample
-    # is suspect if ANY of three independent signals fires —
-    #   (1) hypervisor steal above SPARK_GRAFT_RETRY_STEAL_PCT (default 5);
-    #   (2) same-VM foreign busy above SPARK_GRAFT_RETRY_FOREIGN_PCT
-    #       (default 10% of this VM's cores — the signal round 10's
-    #       contaminated artifact needed: 8 rows inflated 5-30x at 3%
-    #       steal because another process on the host ate the CPUs);
-    #   (3) band deviation: the sample exceeds BAND_FACTOR (default 3) x
-    #       its best prior-artifact time at this sf (+0.25 s scheduler
-    #       floor so sub-second rows don't retry on jitter) — catches
-    #       contention NO probe sees, because a clean code path does not
-    #       get 5x slower between rounds without a diff to explain it.
-    # Suspect queries get up to three clean draws, keeping the min; the
-    # signals under each reported best are published, and rows still
-    # suspect after retries are NAMED in the compact tail (round 10's
-    # artifact could not even identify its own dirty rows).
-    retry_above = float(os.environ.get("SPARK_GRAFT_RETRY_STEAL_PCT", "5"))
-    foreign_above = float(os.environ.get("SPARK_GRAFT_RETRY_FOREIGN_PCT", "10"))
-    band_factor = float(os.environ.get("SPARK_GRAFT_BAND_FACTOR", "3"))
-    bands = load_bands(sf)
-
-    def suspect(name: str, t: dict[str, float], stl: dict[str, float],
-                fgn: dict[str, float]) -> bool:
-        if stl.get(name, 0.0) > retry_above or fgn.get(name, 0.0) > foreign_above:
-            return True
-        b = bands.get(name)
-        return b is not None and t[name] > band_factor * b + 0.25
-
-    for name in HEADLINE:
-        for _attempt in range(3):
-            if not suspect(name, timings, best_steal, best_foreign):
-                break
-            t, st, fo, cp = run_once(spark, name, sf_dir)
-            t = round(t, 3)
-            if t < timings[name]:
-                timings[name], best_steal[name], best_foreign[name] = t, st, fo
-                best_cpu[name] = cp
-
-    dirty = sorted(
-        n for n in HEADLINE if suspect(n, timings, best_steal, best_foreign)
-    )
-    total = round(sum(timings.values()), 3)
-
-    # Section-boundary block release (round 13, VERDICT r12 #4):
-    # SCALE.md round 12 measured 100-300 MB of pinned localCheckpoint
-    # blocks per pair artifact at sf1, accumulated across suite
-    # sections, degrading LATE samples up to 7x under GC pressure.
-    # release_session_artifacts drops the memoized artifacts and every
-    # pinned RDD block. Boundary-only on purpose: WITHIN the headline
-    # section the artifact memo stays warm, so consumer rows keep
-    # timing consumption (the disclosed semantics), and no later
-    # section consumes a memoized artifact, so the release is
-    # timing-neutral there — it only removes the measurement hazard.
-    from ssp_spark.queries import release_session_artifacts
-
+    h0 = host_jiffies()
+    run("word_count")  # warm-up before the cold pass
+    bands = load_bands(sf, cores)
+    cold, head = timed_sweeps(run, HEADLINE, 3, retry_bands=bands)
+    dirty = sorted(n for n in HEADLINE if suspect(head[n], bands.get(n)))
+    # Between sections, drop the memoized artifacts and every pinned block:
+    # within the headline, consumer rows time consumption of a warm memo,
+    # but blocks kept across sections slow later samples under GC pressure.
     release_session_artifacts(spark)
-
-    # Secondary section: the oracle-shaped expression twins, identical
-    # protocol (cold + two interleaved sweeps + steal-gated retries) but
-    # reported separately from the headline ratio (see EXPR_TWINS note).
-    twin: dict[str, float] = {}
-    twin_steal: dict[str, float] = {}
-    twin_foreign: dict[str, float] = {}
-    for name in EXPR_TWINS:  # cold pass, not eligible for the min
-        run_once(spark, name, sf_dir)
-    # three sweeps since round 14 (ADVICE r13): the DuckDB loop below
-    # already takes 3 draws over HEADLINE + EXPR_TWINS, so the twins'
-    # Spark side was the one asymmetric (2-draw) section of the pair.
-    for _sweep in range(3):
-        for name in EXPR_TWINS:
-            t, st, fo, _cp = run_once(spark, name, sf_dir)
-            t = round(t, 3)
-            if name not in twin or t < twin[name]:
-                twin[name], twin_steal[name], twin_foreign[name] = t, st, fo
-    for name in EXPR_TWINS:
-        for _attempt in range(3):
-            if not suspect(name, twin, twin_steal, twin_foreign):
-                break
-            t, st, fo, _cp = run_once(spark, name, sf_dir)
-            t = round(t, 3)
-            if t < twin[name]:
-                twin[name], twin_steal[name], twin_foreign[name] = t, st, fo
-    release_session_artifacts(spark)  # section boundary (see above)
-
-    # Codec-gate profile (round 10): absolute Spark wall-clock for the
-    # multimodal decode gates, same cold + best-of-2 interleaved
-    # protocol. DELIBERATELY reported without a DuckDB ratio and kept
-    # out of the headline sum: the oracle side of these queries is an
-    # analytic byte replay, not a codec (SCALE.md round-10 disclosure),
-    # so the honest record is decode THROUGHPUT, not an engine
-    # comparison.
-    CODEC_PROFILE = [
-        "multimodal_decode_png",
-        "multimodal_decode_webp",
-        "multimodal_decode_jpeg",
-        "multimodal_decode_jpeg420",
-        "multimodal_decode_jpeg_progressive",
-        "multimodal_decode_jpeg12",
-        "multimodal_decode_gif",
-        "multimodal_decode_tiff",
-        "multimodal_decode_bmp_rle8",
-        "multimodal_decode_audio_g711",
-        "multimodal_decode_audio_adpcm",
-        "multimodal_decode_audio_flac",
-        "multimodal_video_y4m_index",
-    ]
-    codec: dict[str, float] = {}
-    for name in CODEC_PROFILE:  # cold pass, not eligible for the min
-        run_once(spark, name, sf_dir)
-    for _sweep in range(2):
-        for name in CODEC_PROFILE:
-            t = round(run_once(spark, name, sf_dir)[0], 3)
-            if name not in codec or t < codec[name]:
-                codec[name] = t
-
-    # Production hash profile: the md5-based portable_hash64 exists ONLY so
-    # DuckDB oracles can replay hashes bit-for-bit; a deployment would use
-    # the xxhash64 profile (SSP_PORTABLE_HASH=off — same 60-bit domain, no
-    # cross-engine replay). Measure EVERY hash-bound headline query under
-    # it to record the md5-parity tax; the headline stays the
-    # oracle-checkable config. Same best-of-2 protocol. (ann_lsh_topk left
-    # this list in round 4: its hyperplane signs are now precomputed
-    # driver-side, so no per-row portable hash remains in its plan.)
-    # (dedup_jaccard_pairs left this list in round 11: its plan has had
-    # ZERO portable_hash64 calls since the xxhash64 shingle compression
-    # landed — shingles stay strings until a JVM xxhash64, and the
-    # oracle groups by the strings themselves — so the md5/xxhash flip
-    # is a no-op on its plan and the old "md5-parity tax" reading was a
-    # sampling artifact; SCALE.md round-11 records the adjudication.)
-    HASH_BOUND = [
-        "dedup_minhash_lsh",
-        "dedup_simhash",
-        "dedup_simhash64_pairs",
-        "doc_fingerprint",
-    ]
-    release_session_artifacts(spark)  # section boundary (see above)
+    _, twin = timed_sweeps(run, EXPR_TWINS, 3, retry_bands=bands)
+    release_session_artifacts(spark)
+    _, codec = timed_sweeps(run, CODEC_PROFILE, 2)
+    release_session_artifacts(spark)
     os.environ["SSP_PORTABLE_HASH"] = "off"
-    prod: dict[str, float] = {}
     try:
-        for _sweep in range(2):
-            for name in HASH_BOUND:
-                t = round(run_once(spark, name, sf_dir)[0], 3)
-                prod[name] = min(prod.get(name, t), t)
+        _, prod = timed_sweeps(run, HASH_BOUND, 2, cold=False)
     finally:
         del os.environ["SSP_PORTABLE_HASH"]
-
-    t_end, s_end, _ = cpu_jiffies()
-    steal_pct = (
-        round(100.0 * (s_end - s_all) / max(t_end - t_all, 1), 1) if t_end else None
-    )
-    # final boundary: the DuckDB pass below shares this host — it should
-    # not compete with the JVM's retained blocks for memory/page cache
+    host_steal = steal_pct(h0, host_jiffies())
     release_session_artifacts(spark)
+    duck, duck_steal = duckdb_pass(sf_dir, HEADLINE + EXPR_TWINS)
 
-    # Same-day same-machine baseline: the identical oracle SQL in DuckDB
-    # over the same parquet files, same best-of-2 interleaved protocol,
-    # its own steal window — so every bench record IS a pair.
-    duck: dict[str, float] = {}
-    duck_steal = None
-    if os.environ.get("SPARK_GRAFT_BENCH_DUCKDB", "1") not in ("0", "false"):
-        import duckdb
-
-        from ssp_spark.queries import ORACLE
-
-        con = duckdb.connect()
-        for t in (
-            "region nation customer supplier part orders lineitem "
-            "events documents embeddings"
-        ).split():
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-            )
-        dt_all, ds_all, _ = cpu_jiffies()
-        for name in HEADLINE + EXPR_TWINS:  # cold pass (not eligible)
-            con.execute(ORACLE[name]).fetchall()
-        # three steady sweeps — symmetric with the Spark side (round 13)
-        for _sweep in range(3):
-            for name in HEADLINE + EXPR_TWINS:
-                t0 = time.perf_counter()
-                con.execute(ORACLE[name]).fetchall()
-                t = round(time.perf_counter() - t0, 3)
-                duck[name] = min(duck.get(name, t), t)
-        dt_end, ds_end, _ = cpu_jiffies()
-        duck_steal = (
-            round(100.0 * (ds_end - ds_all) / max(dt_end - dt_all, 1), 1)
-            if dt_end
-            else None
-        )
-
-    print(
-        json.dumps(
-            {
-                "metric": "headline_queries_total",
-                "value": total,
-                "unit": "sec",
-                "queries": timings,
-                "sf": sf,
-                "cold_total_sec": round(sum(cold.values()), 3),
-                "production_hash_profile": prod,
-                "expr_twin_profile": twin,
-                "expr_twin_duckdb": {n: duck[n] for n in EXPR_TWINS if n in duck}
-                or None,
-                "codec_profile": codec,
-                "host_steal_pct": steal_pct,
-                "query_steal_pct": best_steal,
-                "query_foreign_pct": best_foreign,
-                "query_cpu_sec": best_cpu,
-                "dirty": dirty,
-                "duckdb_total_sec": round(sum(duck[n] for n in HEADLINE if n in duck), 3)
-                if duck
-                else None,
-                "duckdb_queries": duck or None,
-                "duckdb_steal_pct": duck_steal,
-            }
-        )
-    )
-    # The driver records only the last ~2 KB of stdout; the full record
-    # above outgrew that in round 4 (BENCH_r04 `parsed: null` — only the
-    # DuckDB suffix survived the tail). Emit a compact line LAST — the
-    # contract fields plus both engines' totals and the noise adjudicators,
-    # but without the per-query steal / production-hash / duckdb-per-query
-    # maps that blew the budget — so whatever parser reads the tail always
-    # finds one complete JSON object (~1.3 KB for the 35-query suite; a
-    # guard below asserts it stays under the tail).
-    # Round 11: dirty rows are NAMED (not just counted) — BENCH_r10's
-    # contaminated artifact could not identify its own 2 dirty rows
-    # because the full record with query_steal_pct fell off the 2 KB
-    # tail. The names are the adjudication handle the judge needs.
-    compact = json.dumps(
-        {
-            "metric": "headline_queries_total",
-            "value": total,
-            "unit": "sec",
-            "queries": timings,
-            "sf": sf,
-            "cold_total_sec": round(sum(cold.values()), 3),
-            "duckdb_total_sec": round(sum(duck[n] for n in HEADLINE if n in duck), 3)
-            if duck
-            else None,
-            "host_steal_pct": steal_pct,
-            "duckdb_steal_pct": duck_steal,
-            "n_dirty": len(dirty),
-            "dirty": dirty,
-        },
-        separators=(",", ":"),
-    )
-    if len(compact) > 1900:  # tail budget: drop per-query map, keep totals
-        compact = json.dumps(
-            {
-                "metric": "headline_queries_total",
-                "value": total,
-                "unit": "sec",
-                "sf": sf,
-                "n_queries": len(HEADLINE),
-                "cold_total_sec": round(sum(cold.values()), 3),
-                "duckdb_total_sec": round(
-                    sum(duck[n] for n in HEADLINE if n in duck), 3
-                )
-                if duck
-                else None,
-                "host_steal_pct": steal_pct,
-                "duckdb_steal_pct": duck_steal,
-                "n_dirty": len(dirty),
-                "dirty": dirty[:8],
-            },
-            separators=(",", ":"),
-        )
-    print(compact)
+    timings = column(head)
+    record = {
+        "metric": "headline_queries_total",
+        "value": round(sum(timings.values()), 3),
+        "unit": "sec",
+        "queries": timings,
+        "sf": sf,
+        "cores": cores,
+        "cold_total_sec": round(sum(cold.values()), 3),
+        "production_hash_profile": column(prod),
+        "expr_twin_profile": column(twin),
+        "expr_twin_duckdb": {n: duck[n] for n in EXPR_TWINS},
+        "codec_profile": column(codec),
+        "host_steal_pct": host_steal,
+        "query_steal_pct": column(head, 1),
+        "query_foreign_pct": column(head, 2),
+        "query_cpu_sec": column(head, 3),
+        "dirty": dirty,
+        "duckdb_total_sec": round(sum(duck[n] for n in HEADLINE), 3),
+        "duckdb_queries": duck,
+        "duckdb_steal_pct": duck_steal,
+    }
+    print(json.dumps(record))
+    print(compact_line(record))
     spark.stop()
 
 

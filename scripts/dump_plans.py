@@ -1,11 +1,10 @@
 #!/usr/bin/env python
 """Dump .explain('formatted') for every headline + expr-twin query into
-plans/<tag>/<query>_<suffix>.txt — the optimization round's plan evidence
-(the judge cannot run Spark; these files are what plan claims are checked
-against). Session config mirrors bench.py exactly (sized shuffle
-partitions, input-gated AQE) so the captured plan is the benched plan.
+<out_dir>/<query>_<suffix>.txt, the plan evidence for a plan-level claim.
+Session config mirrors bench.py (sized shuffle partitions, input-gated
+AQE) so the captured plan is the benched plan.
 
-Usage: python scripts/dump_plans.py <suffix> [query ...]
+Usage: python scripts/dump_plans.py <out_dir> <suffix> [query ...]
   suffix: 'before' / 'after' (file name suffix)
   query:  optional subset; default = HEADLINE + EXPR_TWINS
 """
@@ -27,14 +26,11 @@ from ssp_spark.session import (  # noqa: E402
 
 
 def main() -> None:
-    suffix = sys.argv[1] if len(sys.argv) > 1 else "before"
-    names = sys.argv[2:] or (HEADLINE + EXPR_TWINS)
+    if len(sys.argv) < 3:
+        raise SystemExit(__doc__)
+    out_dir, suffix = sys.argv[1], sys.argv[2]
+    names = sys.argv[3:] or (HEADLINE + EXPR_TWINS)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans",
-        os.environ.get("SPARK_GRAFT_PLAN_TAG", "r13"),
-    )
     os.makedirs(out_dir, exist_ok=True)
     sp = sized_shuffle_partitions(sf_dir)
     spark = get_spark(

@@ -4,7 +4,8 @@
 eager driver-side work the query does while building (count() gates,
 localCheckpoint materializations, persist warmups) — and (b) the final
 noop-sink action, plus the number of Spark jobs each phase launched.
-Reports min over N repeats per phase. Same session config as bench.py.
+Reports the fastest of REPS repeats per query. Same session config as
+bench.py.
 
 ``--task-floor`` instead prints one JSON line with the fixed per-task cost
 of a ``get_spark`` session: the wall time of a trivial job
@@ -32,6 +33,8 @@ from ssp_spark.session import (  # noqa: E402
     get_spark,
     sized_shuffle_partitions,
 )
+
+REPS = 3
 
 
 def _median_wall(job, reps: int = 3) -> float:
@@ -71,7 +74,6 @@ def main() -> None:
     if names == ["--task-floor"]:
         task_floor()
         return
-    reps = int(os.environ.get("PROFILE_REPS", "3"))
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark(
         "ssp-spark-profile",
@@ -93,7 +95,7 @@ def main() -> None:
     for name in names:
         best_b = best_a = float("inf")
         bjobs = ajobs = 0
-        for _ in range(reps):
+        for _ in range(REPS):
             gc.collect()
             j0 = job_count()
             t0 = time.perf_counter()
@@ -112,8 +114,7 @@ def main() -> None:
             f"{best_b + best_a:8.3f}"
         )
         # per-name boundary release: without it, pinned localCheckpoint
-        # blocks from earlier names' reps degrade later names (the
-        # SCALE.md round-12 late-sample hazard, reproduced here)
+        # blocks from earlier names' reps slow later names under GC pressure
         release_session_artifacts(spark)
     spark.stop()
 

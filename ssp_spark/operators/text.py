@@ -280,9 +280,7 @@ def contamination(
 # does — it keeps the prior recompute plan, whose second pass is pure
 # CPU over the already-exchanged rows. Unknown input size (non-file
 # sources) takes the safe recompute path.
-_LM_PERSIST_INPUT_BYTES = int(
-    os.environ.get("SSP_LM_PERSIST_INPUT_BYTES", str(256 << 20))
-)
+_LM_PERSIST_INPUT_BYTES = 256 << 20
 
 # One cached stream per session: each lm_score call releases the
 # previous call's blocks (VERDICT r12 #4 — leaked persist blocks degrade

@@ -8000,7 +8000,7 @@ _TRIANGLE_BROADCAST_EDGES = 4_000_000
 # edges exceed the gate and take the unchanged distributed plan
 # (O(m^1.5) set probes make a pure-Python fold the wrong tool past
 # ~100k edges — the gate is sized below that knee).
-_TRIANGLE_DRIVER_EDGES = int(_os.environ.get("SSP_TRIANGLE_DRIVER_EDGES", "65536"))
+_TRIANGLE_DRIVER_EDGES = 65536
 
 
 def _capped_user_days(

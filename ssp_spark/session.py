@@ -19,10 +19,12 @@ configure Spark once and let Catalyst/Tungsten own execution:
 - Python workers fork from ``ssp_spark.worker_daemon`` instead of
   ``pyspark.daemon``: the same daemon, but a worker re-reads a zip on its
   ``sys.path`` only when the file changed, not on every task (see the
-  comment in ``get_spark``).
+  comment in ``get_spark``). The workers get this package's parent
+  directory on ``PYTHONPATH``, so the driver may run from any directory.
 
 At 100 TB these remain the right knobs; only sizing differs, so every
-scale-sensitive value is env-overridable instead of hard-coded.
+scale-sensitive value is sized from the input or the host, or set by the
+caller, instead of hard-coded.
 """
 
 from __future__ import annotations
@@ -106,14 +108,13 @@ def get_spark(
     one shuffle partition per core avoids tiny-task overhead, while AQE
     coalescing keeps post-filter stages from running 32 near-empty tasks.
     On a real cluster this would be ~2-3x total executor cores; callers
-    pass it explicitly, set SPARK_GRAFT_SHUFFLE_PARTITIONS, or size it
-    from the input with ``sized_shuffle_partitions``. ``adaptive``
-    defaults on (the at-scale posture); ``adaptive_enabled_for`` gives
-    the input-gated policy.
+    pass it explicitly or size it from the input with
+    ``sized_shuffle_partitions``. ``adaptive`` defaults on (the at-scale
+    posture); ``adaptive_enabled_for`` gives the input-gated policy.
     """
     cpus = default_parallelism()
     if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", str(cpus)))
+        shuffle_partitions = cpus
     aqe = "true" if adaptive else "false"
     builder = (
         SparkSession.builder.appName(app_name)
@@ -196,4 +197,12 @@ def get_spark(
         # 0.20-0.21 s and 0.29-0.32 s (8 JVM-only tasks: 0.06-0.08 s).
         .config("spark.python.daemon.module", "ssp_spark.worker_daemon")
     )
+    # Workers run `python -m ssp_spark.worker_daemon` in the driver's
+    # working directory, which finds the package only from the repository
+    # root. A PYTHONPATH that already holds the package's parent is left
+    # as it is, so those workers keep exactly the caller's environment.
+    parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    on_path = os.environ.get("PYTHONPATH", "").split(os.pathsep)
+    if parent not in {os.path.abspath(p) for p in on_path if p}:
+        builder = builder.config("spark.executorEnv.PYTHONPATH", parent)
     return builder.getOrCreate()

@@ -6,6 +6,7 @@ from __future__ import annotations
 import importlib
 import os
 import runpy
+import subprocess
 import sys
 import zipfile
 import zipimport
@@ -105,3 +106,17 @@ def test_pyfile_added_after_first_python_task_is_importable(spark, tmp_path):
         yield ssp_late_pyfile_probe.VALUE
 
     assert sc.parallelize(range(4), 4).mapPartitions(load).collect() == [41] * 4
+
+
+def test_workers_find_the_package_from_any_working_directory(tmp_path):
+    """A driver started outside the repository root, with no PYTHONPATH,
+    still runs Python tasks: get_spark puts the package's parent on the
+    workers' path."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, os.path.join(root, "scripts", "profile_query.py"), "--task-floor"],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert "python_tasks_s" in out.stdout
