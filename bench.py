@@ -33,12 +33,14 @@ import gc
 import glob
 import json
 import os
+import re
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from perfbench.probes import HZ, host_jiffies, tree  # noqa: E402
+from ssp_spark.catalog import DEFAULT_SF_DIR  # noqa: E402
 from ssp_spark.queries import QUERIES, release_session_artifacts  # noqa: E402
 from ssp_spark.session import (  # noqa: E402
     adaptive_enabled_for,
@@ -155,6 +157,13 @@ def tree_jiffies() -> int:
 
 def steal_pct(j0: tuple[int, int, int], j1: tuple[int, int, int]) -> float:
     return round(100.0 * (j1[1] - j0[1]) / max(j1[0] - j0[0], 1), 1)
+
+
+def fixture_sf(sf_dir: str) -> float | None:
+    """The scale factor of a fixture directory named sf<N> (sf0.1, sf10),
+    else None: a run on any other directory has no bands."""
+    m = re.fullmatch(r"sf(\d+(?:\.\d+)?)", os.path.basename(sf_dir.rstrip("/")))
+    return float(m.group(1)) if m else None
 
 
 def load_bands(sf: float, cores: int) -> dict[str, float]:
@@ -274,8 +283,8 @@ def compact_line(record: dict) -> str:
 
 
 def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
+    sf_dir = DEFAULT_SF_DIR
+    sf = fixture_sf(sf_dir)
     cores = default_parallelism()
     spark = get_spark(
         "ssp-spark-bench",
@@ -289,7 +298,7 @@ def main() -> None:
 
     h0 = host_jiffies()
     run("word_count")  # warm-up before the cold pass
-    bands = load_bands(sf, cores)
+    bands = load_bands(sf, cores) if sf is not None else {}
     cold, head = timed_sweeps(run, HEADLINE, 3, retry_bands=bands)
     dirty = sorted(n for n in HEADLINE if suspect(head[n], bands.get(n)))
     # Between sections, drop the memoized artifacts and every pinned block:

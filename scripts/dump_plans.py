@@ -17,6 +17,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bench import EXPR_TWINS, HEADLINE  # noqa: E402
+from ssp_spark.catalog import DEFAULT_SF_DIR  # noqa: E402
 from ssp_spark.queries import QUERIES  # noqa: E402
 from ssp_spark.session import (  # noqa: E402
     adaptive_enabled_for,
@@ -30,7 +31,7 @@ def main() -> None:
         raise SystemExit(__doc__)
     out_dir, suffix = sys.argv[1], sys.argv[2]
     names = sys.argv[3:] or (HEADLINE + EXPR_TWINS)
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf_dir = DEFAULT_SF_DIR
     os.makedirs(out_dir, exist_ok=True)
     sp = sized_shuffle_partitions(sf_dir)
     spark = get_spark(

@@ -5,13 +5,13 @@ zero-row copies of the fixture tables and report crashes.
 A 100 TB pipeline routinely hits empty partitions, empty sources, and
 empty intermediate states; a query that compiles its model from data
 (k-means seeds, PageRank N, token-budget cuts, partitioned sinks) must
-degrade to the empty frame, not throw. Round 6 ran this sweep and fixed
-the five crashes it found (cluster.assign empty codebook, pagerank N=0,
-sink_partitioned_scan schema inference, token_budget empty cut map);
-tests/test_scale_ops.py pins those five. This script is the full
-re-sweep for future rounds:
+degrade to the empty frame, not throw. An earlier run of this sweep
+found five crashes, since fixed (cluster.assign empty codebook, pagerank
+N=0, sink_partitioned_scan schema inference, token_budget empty cut map);
+tests/test_scale_ops.py pins those five. This script re-runs the full
+sweep on a get_spark session:
 
-    python scripts/empty_sweep.py        # ~4 min, prints ok/FAIL lines
+    python scripts/empty_sweep.py        # ~2 min on 4 cores, prints ok/FAIL lines
 """
 
 from __future__ import annotations
@@ -22,22 +22,16 @@ import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession  # noqa: E402
-
-TABLES = "region nation customer supplier part orders lineitem events documents embeddings"
+from ssp_spark.catalog import TABLES  # noqa: E402
+from ssp_spark.session import get_spark  # noqa: E402
 
 
 def main() -> int:
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .appName("empty-sweep")
-        .getOrCreate()
-    )
+    spark = get_spark("empty-sweep")
     spark.sparkContext.setLogLevel("ERROR")
     src = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     d = tempfile.mkdtemp(prefix="empty_sf_")
-    for t in TABLES.split():
+    for t in TABLES:
         df = spark.read.parquet(f"{src}/{t}.parquet")
         df.limit(0).write.parquet(os.path.join(d, f"{t}.parquet"))
     from ssp_spark.queries import QUERIES

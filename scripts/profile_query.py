@@ -27,6 +27,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from ssp_spark.catalog import DEFAULT_SF_DIR  # noqa: E402
 from ssp_spark.queries import QUERIES, release_session_artifacts  # noqa: E402
 from ssp_spark.session import (  # noqa: E402
     adaptive_enabled_for,
@@ -74,7 +75,7 @@ def main() -> None:
     if names == ["--task-floor"]:
         task_floor()
         return
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf_dir = DEFAULT_SF_DIR
     spark = get_spark(
         "ssp-spark-profile",
         shuffle_partitions=sized_shuffle_partitions(sf_dir),

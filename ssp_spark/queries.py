@@ -7,6 +7,12 @@ views. Column names AND types are aligned on both sides; computed floats
 are rounded identically; timestamps are exported as epoch integers so
 results are timezone-representation-free.
 
+Each shared stage is spelled once: a stage that several oracles replay
+is one `_SQL_*`/`_sql_*` fragment mirroring the Spark operator it
+replays (next to `_sql_shingles`), a Spark stage that several queries
+build is one private helper, and a Spark SQL query that reads like its
+oracle runs the oracle's text (`_oracle_on_spark`).
+
 Cross-engine determinism rules used throughout:
 - md5-derived 60-bit hashes (functions.portable_hash64) — identical hex
   in Spark `conv(substr(md5,1,15),16,10)` and DuckDB `('0x'||...)::BIGINT`.
@@ -19,12 +25,13 @@ Cross-engine determinism rules used throughout:
 
 from __future__ import annotations
 
+import re
 from collections.abc import Callable
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from ssp_spark.catalog import load_table
+from ssp_spark.catalog import TABLES, load_table
 from ssp_spark.functions import cosine, portable_hash64, shingles, tokens
 from ssp_spark.operators import (
     cluster,
@@ -48,21 +55,15 @@ SparkQuery = Callable[[SparkSession, str], DataFrame]
 QUERIES: dict[str, SparkQuery] = {}
 ORACLE: dict[str, str] = {}
 
-# Per-session model-artifact cache (IVF codebooks): collected once per
-# (session, dataset), weak-keyed so stopped sessions drop their entries —
-# same lifetime rule as catalog._DF_CACHE.
 import os as _os  # noqa: E402
 import weakref as _weakref  # noqa: E402
 
-_IVF_CODEBOOKS: "_weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    _weakref.WeakKeyDictionary()
-)
-
-# Per-session derived-artifact cache (checkpointed shared frames such as
-# the model-eval trio's scored embeddings and their rank pass): keyed by
-# (artifact, abspath(sf_dir)), weak-keyed by session like _IVF_CODEBOOKS
-# so a stopped session's pinned checkpoint blocks are never handed to a
-# new one. Rationale: four registry queries (roc_auc / calibration /
+# Per-session derived-artifact cache (model artifacts such as the IVF
+# codebook, and checkpointed shared frames such as the model-eval trio's
+# scored embeddings and their rank pass): keyed by (artifact,
+# abspath(sf_dir)), weak-keyed by session like catalog._DF_CACHE so a
+# stopped session's pinned checkpoint blocks are never handed to a new
+# one. Rationale: four registry queries (roc_auc / calibration /
 # lift / isotonic) consume the SAME scored frame and the SAME exact
 # global rank; unmemoized, each paid the rank pass's approxQuantile
 # sketch + offsets collect (measured as ~half the query) plus its own
@@ -80,20 +81,20 @@ def _session_memo(spark: SparkSession, key: tuple, build: Callable):
 
 
 def release_session_artifacts(spark: SparkSession) -> int:
-    """Forget this session's memoized derived artifacts (the
-    checkpointed shared frames in _ARTIFACTS) and drop EVERY pinned RDD
-    block in the session, so long-running processes (bench.py between
-    suite sections — VERDICT r12 #4; SCALE.md round 12 measured 100-300
-    MB of localCheckpoint blocks per pair artifact at sf1 degrading
-    late samples up to 7x under GC pressure) can reclaim block-manager
+    """Forget this session's memoized derived artifacts (_ARTIFACTS:
+    the IVF codebook and the checkpointed shared frames) and drop EVERY
+    pinned RDD block in the session, so long-running processes (bench.py
+    between suite sections; SCALE.md measured 100-300 MB of
+    localCheckpoint blocks per pair artifact at sf1 degrading late
+    samples up to 7x under GC pressure) can reclaim block-manager
     memory at a clean boundary. Returns the number of memoized
     artifacts released.
 
     Order matters: the memo is cleared FIRST so no live reference to a
     lineage-truncated (localCheckpoint) frame survives the block drop —
-    every other cached frame (catalog._DF_CACHE scans, IVF centroid
-    frames) keeps its lineage and recomputes transparently. The next
-    consumer rebuilds its artifact, exactly as the first one did."""
+    every other cached frame (catalog._DF_CACHE scans) keeps its lineage
+    and recomputes transparently. The next consumer rebuilds its
+    artifact, exactly as the first one did."""
     import gc
 
     per_session = _ARTIFACTS.pop(spark, None) or {}
@@ -172,6 +173,18 @@ def _q(name: str, oracle: str):
     return deco
 
 
+_TABLE_REF = re.compile(r"\b(FROM|JOIN)(\s+)(" + "|".join(TABLES) + r")\b")
+
+
+def _oracle_on_spark(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Query ``name``'s oracle SQL run by Spark SQL over the parquet
+    files (each FROM/JOIN <table> reads parquet.`<sf_dir>/<table>.parquet`,
+    no temp-view state): the rows whose SQL both dialects read alike."""
+    return spark.sql(
+        _TABLE_REF.sub(lambda m: f"{m[1]}{m[2]}parquet.`{sf_dir}/{m[3]}.parquet`", ORACLE[name])
+    )
+
+
 # Shared DuckDB SQL fragments -------------------------------------------------
 
 # tokens / n-gram shingles, replicating functions.tokens / functions.shingles
@@ -228,6 +241,267 @@ from ssp_spark.functions import _mix_consts as __mix  # noqa: E402
 
 _SQL_MIX_A = "[" + ", ".join(str(a) for a in __mix(12)[0]) + "]"
 _SQL_MIX_B = "[" + ", ".join(str(b) for b in __mix(12)[1]) + "]"
+
+# dedup._pair_shared_counts(n=4, max_doc_freq=50): `sizes` holds each
+# document's count of kept 4-shingles (those in at most 50 documents) and
+# `pairs` (id1 < id2) the count each two documents share.
+_SQL_SHARED_SHINGLES = f"""{_sql_shingles(4)},
+freq AS (SELECT sh, count(*) AS df_ FROM sh GROUP BY sh),
+kept AS (SELECT s.doc_id, s.sh FROM sh s JOIN freq USING (sh) WHERE df_ <= 50),
+sizes AS (SELECT doc_id, count(*) AS n_sh FROM kept GROUP BY doc_id),
+pairs AS (
+  SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS shared
+  FROM kept a JOIN kept b USING (sh)
+  WHERE a.doc_id < b.doc_id GROUP BY 1, 2
+)"""
+
+# dedup.minhash_lsh_pairs(num_hashes=12, bands=4) over 3-shingles: `mh`
+# holds each seed's minimum over a document's shingle hashes, `banded`
+# each band's three minima as one string, and `pairs` (id1 < id2) every
+# two documents that share a band.
+_SQL_MINHASH_BANDS = f"""{_SQL_SHINGLES},
+base AS (SELECT doc_id, {_SQL_HASH64.format(x="sh")} AS h64 FROM sh),
+mh AS (
+  SELECT doc_id, seed,
+         min(({_SQL_MIX_A}[seed + 1] * (h64 & 4294967295)
+              + {_SQL_MIX_B}[seed + 1]) & 4294967295) AS minhash
+  FROM base CROSS JOIN (SELECT unnest(generate_series(0, 11)) AS seed) s
+  GROUP BY doc_id, seed
+),
+banded AS (
+  SELECT doc_id, CAST(seed // 3 AS INT) AS band,
+         string_agg(minhash::VARCHAR, ',' ORDER BY seed) AS band_sig
+  FROM mh GROUP BY doc_id, band
+)"""
+
+_SQL_MINHASH_PAIRS = f"""{_SQL_MINHASH_BANDS},
+pairs AS (
+  SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
+  FROM banded a JOIN banded b USING (band, band_sig)
+  WHERE a.doc_id < b.doc_id
+)"""
+
+# dedup.connected_components over the undirected edges in `pairs` (id1,
+# id2): `reach` holds (id, label) for every node whose label reaches it,
+# so a node's component is its least label. The query needs WITH
+# RECURSIVE.
+_SQL_COMPONENTS = """edges AS (SELECT id1 AS src, id2 AS dst FROM pairs
+          UNION ALL SELECT id2, id1 FROM pairs),
+nodes AS (SELECT DISTINCT src AS id FROM edges),
+reach(id, label) AS (
+  SELECT id, id FROM nodes
+  UNION
+  SELECT e.src, r.label FROM reach r JOIN edges e ON e.dst = r.id
+)"""
+
+# Near-dup groups: `grouped` maps every document to its MinHash
+# cluster's least doc id, or to its own id when it has no near-duplicate.
+_SQL_NEAR_DUP_GROUPS = f"""{_SQL_MINHASH_PAIRS},
+{_SQL_COMPONENTS},
+comp AS (SELECT id AS doc_id, min(label) AS g FROM reach GROUP BY id),
+grouped AS (
+  SELECT d.doc_id, COALESCE(c.g, d.doc_id) AS group_id
+  FROM documents d LEFT JOIN comp c ON c.doc_id = d.doc_id
+)"""
+
+
+def _sql_quality(cols: str = "") -> str:
+    """text.quality_score: `qt` holds each document's tokens (qtoks),
+    `qm` adds n_tokens, total_len and n_stop, and `q` adds qv, the
+    score in integer units of 1e-4, and quality = qv / 10000.0. ``cols``
+    (e.g. ", source") carries more documents columns through all three."""
+    return rf"""qt AS (SELECT doc_id{cols}, list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') AS qtoks
+       FROM documents),
+qm AS (
+  SELECT *,
+         CAST(len(qtoks) AS INT) AS n_tokens,
+         CAST(list_sum(list_transform(qtoks, x -> length(x))) AS INT) AS total_len,
+         CAST(len(list_filter(qtoks, x -> x IN ('the', 'a', 'of', 'and'))) AS INT) AS n_stop
+  FROM qt
+),
+q AS (
+  SELECT *, qv / 10000.0 AS quality FROM (
+    SELECT *,
+           CASE WHEN n_tokens > 0 THEN
+             (50 * (CAST(n_tokens AS BIGINT) * least(n_tokens, 200)
+                    + 120 * least(4 * CAST(n_stop AS BIGINT), n_tokens)
+                    + 10 * least(CAST(total_len AS BIGINT), 8 * CAST(n_tokens AS BIGINT)))
+              + n_tokens) // (2 * CAST(n_tokens AS BIGINT))
+           ELSE 0 END AS qv
+    FROM qm)
+)"""
+
+
+# Quality-ranked keeper selection: `keeper` flags (keep = 1) the best
+# document of each near-dup group, ties broken by the lower doc id.
+_SQL_NEAR_DUP_KEEPER = f"""{_SQL_NEAR_DUP_GROUPS},
+{_sql_quality()},
+keeper AS (
+  SELECT g.doc_id, g.group_id, q.quality,
+         CAST(row_number() OVER (PARTITION BY g.group_id
+                                 ORDER BY q.quality DESC, g.doc_id) = 1 AS INT) AS keep
+  FROM grouped g JOIN q ON q.doc_id = g.doc_id
+)"""
+
+
+def _sql_simhash(bits: int) -> str:
+    """dedup.simhash: `sim` holds each document's bit-vote fingerprint
+    over its distinct tokens."""
+    return rf"""toks AS (
+  SELECT DISTINCT doc_id,
+         unnest(list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '')) AS tok
+  FROM documents
+),
+h AS (SELECT doc_id, {_SQL_HASH64.format(x="tok")} AS th FROM toks),
+votes AS (
+  SELECT doc_id, b.bit,
+         CASE WHEN ((th >> b.bit) & 1) = 1 THEN 1 ELSE -1 END AS vote
+  FROM h CROSS JOIN (SELECT unnest(generate_series(0, {bits - 1})) AS bit) b
+),
+bits AS (SELECT doc_id, bit, CAST(sum(vote) AS BIGINT) AS s FROM votes GROUP BY doc_id, bit),
+sim AS (
+  SELECT doc_id,
+         CAST(sum(CASE WHEN s > 0 THEN (1::BIGINT << bit) ELSE 0 END) AS BIGINT) AS simhash
+  FROM bits GROUP BY doc_id
+)"""
+
+
+def _sql_simhash_pairs(bits: int, bands: int) -> str:
+    """dedup.simhash_pairs: documents sharing a band of their
+    fingerprints, each (band, value) bucket capped at its 1024 lowest
+    (portable hash, doc id) members."""
+    width = bits // bands
+    return f"""
+    WITH {_sql_simhash(bits)},
+    banded0 AS (
+      SELECT doc_id, b.band, (simhash >> (b.band * {width})) & {(1 << width) - 1} AS band_val
+      FROM sim CROSS JOIN (SELECT unnest(generate_series(0, {bands - 1})) AS band) b
+    ),
+    banded AS (
+      SELECT doc_id, band, band_val FROM (
+        SELECT doc_id, band, band_val,
+               row_number() OVER (
+                 PARTITION BY band, band_val
+                 ORDER BY {_SQL_HASH64.format(x="CAST(doc_id AS VARCHAR)")},
+                          doc_id) AS rn
+        FROM banded0
+      ) WHERE rn <= 1024
+    )
+    SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
+    FROM banded a JOIN banded b USING (band, band_val)
+    WHERE a.doc_id < b.doc_id
+    """
+
+
+def _sql_cust_supp_edges(edges: str = "edges") -> str:
+    """The customer-supplier graph (_cust_supp_edges): `base` holds each
+    distinct (customer, supplier) pair with parity-disjoint ids (cust*2,
+    supp*2+1), and ``edges`` both directions of every pair."""
+    return f"""base AS (SELECT DISTINCT CAST(o_custkey * 2 AS BIGINT) AS src,
+                           CAST(l_suppkey * 2 + 1 AS BIGINT) AS dst
+           FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
+    {edges} AS (SELECT src, dst FROM base UNION ALL SELECT dst, src FROM base)"""
+
+
+# linalg.quantize_expr(x, 13) per embedding element: `q` holds (vec_id,
+# 0-based i, qv).
+_SQL_EMB_QUANT = """q AS (
+  SELECT vec_id, CAST(u.i - 1 AS INT) AS i,
+         CAST(floor(embedding[u.i] * 8192.0) AS BIGINT) AS qv
+  FROM embeddings,
+       LATERAL (SELECT unnest(generate_series(1, len(embedding))) AS i) u
+  WHERE embedding IS NOT NULL AND len(embedding) > 0
+)"""
+
+# linalg.covariance_matrix: `cov` holds the upper triangle (i, j, cov)
+# of the quantized embeddings' covariance, from one pass of integer
+# moments.
+_SQL_EMB_COV = f"""{_SQL_EMB_QUANT},
+f AS (SELECT i, sum(qv) AS s, count(*) AS n FROM q GROUP BY i),
+p AS (
+  SELECT a.i AS i, b.i AS j, sum(a.qv * b.qv) AS sij
+  FROM q a JOIN q b ON a.vec_id = b.vec_id AND b.i >= a.i
+  GROUP BY a.i, b.i
+),
+cov AS (
+  SELECT p.i, p.j,
+         ((CAST(p.sij AS DOUBLE)
+           - CAST(fa.s AS DOUBLE) * CAST(fb.s AS DOUBLE) / CAST(fa.n AS DOUBLE))
+          / CAST(fa.n AS DOUBLE)) / 67108864.0 AS cov
+  FROM p JOIN f fa ON fa.i = p.i JOIN f fb ON fb.i = p.j
+)"""
+
+
+def _sql_unit_vectors(cols: str = "") -> str:
+    """`ve` holds each embedding as DOUBLE[] v with its norm vn (the
+    cosine operands of operators.similarity); ``cols`` (e.g. ", label")
+    carries more embeddings columns."""
+    return f"""ve AS (
+  SELECT vec_id{cols}, embedding::DOUBLE[] AS v,
+         sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS vn
+  FROM embeddings
+)"""
+
+
+# similarity.contrastive_pairs(k_pos=2, k_neg=2)'s tail over `scored`
+# (qid, nid, is_positive, cos): per anchor, the 2 nearest positives and
+# the 2 nearest negatives.
+_SQL_CONTRASTIVE_TOP2 = """ranked AS (
+  SELECT qid, nid, is_positive, cos,
+         row_number() OVER (PARTITION BY qid, is_positive
+                            ORDER BY cos DESC, nid) AS rank
+  FROM scored
+)
+SELECT qid, nid, is_positive, CAST(rank AS INT) AS rank, cos
+FROM ranked WHERE rank <= 2"""
+
+# The daily order count (_daily_orders): `daily` holds (d, c), d the
+# day index.
+_SQL_DAILY_ORDERS = """daily AS (
+  SELECT CAST(epoch(date_trunc('day', o_orderdate)) AS BIGINT) // 86400 AS d,
+         CAST(count(*) AS BIGINT) AS c
+  FROM orders GROUP BY 1
+)"""
+
+# Each user's daily purchase spend: `daily` holds (user_id, d, cents),
+# d the day's epoch second, and `seq` numbers each user's days t = 1, 2, ...
+_SQL_DAILY_USER_SPEND = """daily AS (
+  SELECT user_id,
+         CAST(epoch(date_trunc('day', ts)) AS BIGINT) AS d,
+         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS cents
+  FROM events WHERE event_type = 'purchase' GROUP BY 1, 2
+),
+seq AS (SELECT user_id, d, cents,
+               CAST(row_number() OVER (PARTITION BY user_id ORDER BY d) AS INT) AS t
+        FROM daily)"""
+
+# The per-source mixture frame (_mixture_frame): `w` holds each source's
+# n_docs and tokens, the corpus totals tot_docs and tot_tokens, and the
+# sqrt-damped token share wr.
+_SQL_MIXTURE = r"""per AS (
+  SELECT source, count(*) AS n_docs,
+         CAST(sum(len(list_filter(regexp_split_to_array(text, '\s+'), x -> x <> ''))) AS BIGINT) AS tokens
+  FROM documents GROUP BY source
+),
+t AS (
+  SELECT source, n_docs, tokens,
+         sum(tokens) OVER () AS tot_tokens,
+         sum(n_docs) OVER () AS tot_docs
+  FROM per
+),
+w AS (SELECT *, sqrt(tokens / tot_tokens) AS wr FROM t)"""
+
+
+def _sql_order_stats(grouping: str) -> str:
+    """_order_stats: order count and total per (status, priority) over
+    the grouping sets of ``grouping`` (ROLLUP or CUBE)."""
+    return f"""
+    SELECT coalesce(o_orderstatus, 'ALL') AS status,
+           coalesce(o_orderpriority, 'ALL') AS priority,
+           count(*) AS cnt, round(sum(o_totalprice), 2) AS total
+    FROM orders
+    GROUP BY {grouping} (o_orderstatus, o_orderpriority)
+    """
 
 
 # ---------------------------------------------------------------------------
@@ -685,20 +959,13 @@ def set_ops_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     return users("purchase", 10).intersect(users("error", 10)).exceptAll(users("click", 15)).distinct()
 
 
-@_q(
-    "rollup_order_stats",
-    """
-    SELECT coalesce(o_orderstatus, 'ALL') AS status,
-           coalesce(o_orderpriority, 'ALL') AS priority,
-           count(*) AS cnt, round(sum(o_totalprice), 2) AS total
-    FROM orders
-    GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
-    """,
-)
-def rollup_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _order_stats(spark: SparkSession, sf_dir: str, grouping: str) -> DataFrame:
+    """Order count and total per (status, priority) over the grouping
+    sets of ``grouping`` ("rollup" or "cube"); a rolled-up key reads
+    'ALL'."""
     orders = load_table(spark, "orders", sf_dir)
     return (
-        orders.rollup("o_orderstatus", "o_orderpriority")
+        getattr(orders, grouping)("o_orderstatus", "o_orderpriority")
         .agg(F.count("*").alias("cnt"), F.round(F.sum("o_totalprice"), 2).alias("total"))
         .select(
             F.coalesce("o_orderstatus", F.lit("ALL")).alias("status"),
@@ -707,6 +974,11 @@ def rollup_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total",
         )
     )
+
+
+@_q("rollup_order_stats", _sql_order_stats("ROLLUP"))
+def rollup_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _order_stats(spark, sf_dir, "rollup")
 
 
 @_q(
@@ -868,15 +1140,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 @_q(
     "dedup_jaccard_pairs",
     f"""
-    WITH {_sql_shingles(4)},
-    freq AS (SELECT sh, count(*) AS df_ FROM sh GROUP BY sh),
-    kept AS (SELECT s.doc_id, s.sh FROM sh s JOIN freq USING (sh) WHERE df_ <= 50),
-    sizes AS (SELECT doc_id, count(*) AS n_sh FROM kept GROUP BY doc_id),
-    pairs AS (
-      SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS shared
-      FROM kept a JOIN kept b USING (sh)
-      WHERE a.doc_id < b.doc_id GROUP BY 1, 2
-    )
+    WITH {_SQL_SHARED_SHINGLES}
     SELECT id1, id2, round(shared / (s1.n_sh + s2.n_sh - shared), 6) AS jaccard
     FROM pairs JOIN sizes s1 ON s1.doc_id = id1 JOIN sizes s2 ON s2.doc_id = id2
     WHERE shared / (s1.n_sh + s2.n_sh - shared) >= 0.5
@@ -897,25 +1161,7 @@ def dedup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_q(
     "dedup_minhash_lsh",
-    f"""
-    WITH {_SQL_SHINGLES},
-    base AS (SELECT doc_id, {_SQL_HASH64.format(x="sh")} AS h64 FROM sh),
-    mh AS (
-      SELECT doc_id, seed,
-             min(({_SQL_MIX_A}[seed + 1] * (h64 & 4294967295)
-                  + {_SQL_MIX_B}[seed + 1]) & 4294967295) AS minhash
-      FROM base CROSS JOIN (SELECT unnest(generate_series(0, 11)) AS seed) s
-      GROUP BY doc_id, seed
-    ),
-    banded AS (
-      SELECT doc_id, CAST(seed // 3 AS INT) AS band,
-             string_agg(minhash::VARCHAR, ',' ORDER BY seed) AS band_sig
-      FROM mh GROUP BY doc_id, band
-    )
-    SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-    FROM banded a JOIN banded b USING (band, band_sig)
-    WHERE a.doc_id < b.doc_id
-    """,
+    f"WITH {_SQL_MINHASH_PAIRS} SELECT id1, id2 FROM pairs",
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(12)+LSH(4 bands x 3 rows) candidate pairs, md5-portable
@@ -955,23 +1201,7 @@ def dedup_span_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_q(
     "dedup_simhash",
-    rf"""
-    WITH toks AS (
-      SELECT DISTINCT doc_id,
-             unnest(list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '')) AS tok
-      FROM documents
-    ),
-    h AS (SELECT doc_id, {_SQL_HASH64.format(x="tok")} AS th FROM toks),
-    votes AS (
-      SELECT doc_id, b.bit,
-             CASE WHEN ((th >> b.bit) & 1) = 1 THEN 1 ELSE -1 END AS vote
-      FROM h CROSS JOIN (SELECT unnest(generate_series(0, 31)) AS bit) b
-    ),
-    bits AS (SELECT doc_id, bit, CAST(sum(vote) AS BIGINT) AS s FROM votes GROUP BY doc_id, bit)
-    SELECT doc_id,
-           CAST(sum(CASE WHEN s > 0 THEN (1::BIGINT << bit) ELSE 0 END) AS BIGINT) AS simhash
-    FROM bits GROUP BY doc_id
-    """,
+    f"WITH {_sql_simhash(32)} SELECT doc_id, simhash FROM sim",
 )
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """32-bit SimHash fingerprints (bit-vote over distinct tokens)."""
@@ -1063,27 +1293,13 @@ def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_q(
     "quality_score",
-    r"""
-    WITH t AS (
-      SELECT doc_id, list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') AS toks
-      FROM documents
-    ), m AS (
-      SELECT doc_id,
-             CAST(len(toks) AS INT) AS n_tokens,
-             CAST(list_sum(list_transform(toks, x -> length(x))) AS INT) AS total_len,
-             CAST(len(list_filter(toks, x -> x IN ('the', 'a', 'of', 'and'))) AS INT) AS n_stop
-      FROM t
-    )
+    f"""
+    WITH {_sql_quality()}
     SELECT doc_id, n_tokens,
            round(CASE WHEN n_tokens > 0 THEN total_len / n_tokens ELSE 0.0 END, 4) AS avg_token_len,
            round(CASE WHEN n_tokens > 0 THEN n_stop / n_tokens ELSE 0.0 END, 4) AS stopword_ratio,
-           CASE WHEN n_tokens > 0 THEN
-             ((50 * (CAST(n_tokens AS BIGINT) * least(n_tokens, 200)
-                     + 120 * least(4 * CAST(n_stop AS BIGINT), n_tokens)
-                     + 10 * least(CAST(total_len AS BIGINT), 8 * CAST(n_tokens AS BIGINT)))
-               + n_tokens) // (2 * CAST(n_tokens AS BIGINT))) / 10000.0
-           ELSE 0.0 END AS quality
-    FROM m
+           quality
+    FROM q
     """,
 )
 def quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1293,15 +1509,32 @@ def cluster_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _cust_supp_edges(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """(base, edges): the customer-supplier interaction graph of the
+    graph rows (who bought from whom via orders x lineitem). ``base``
+    holds each distinct (src, dst) pair with parity-disjoint node ids
+    (cust*2, supp*2+1); ``edges`` adds the reversed copy, so the graph
+    is symmetric and no node leaks rank mass. The parities are disjoint,
+    so the union is already duplicate-free and needs no second distinct."""
+    orders = load_table(spark, "orders", sf_dir)
+    li = load_table(spark, "lineitem", sf_dir)
+    base = (
+        orders.join(li, orders.o_orderkey == li.l_orderkey)
+        .select(
+            (F.col("o_custkey") * 2).cast("long").alias("src"),
+            (F.col("l_suppkey") * 2 + 1).cast("long").alias("dst"),
+        )
+        .distinct()
+    )
+    return base, base.union(base.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+
+
 def _sql_pagerank(iters: int, d: float) -> str:
     """DuckDB replay of the fixed-iteration PageRank (operators/graph.py):
     identical seeds (uniform 1/N), literals, and update rule, iteration
     by iteration over the same symmetric customer-supplier edge list."""
     steps = [
-        """base AS (SELECT DISTINCT CAST(o_custkey * 2 AS BIGINT) AS src,
-                           CAST(l_suppkey * 2 + 1 AS BIGINT) AS dst
-           FROM orders JOIN lineitem ON o_orderkey = l_orderkey)""",
-        "edges AS (SELECT src, dst FROM base UNION ALL SELECT dst, src FROM base)",
+        _sql_cust_supp_edges(),
         "deg AS (SELECT src, count(*) AS deg FROM edges GROUP BY src)",
         "nn AS (SELECT count(DISTINCT src) AS n FROM edges)",
         "r0 AS (SELECT DISTINCT src AS node, 1.0 / n AS rank FROM edges CROSS JOIN nn)",
@@ -1330,30 +1563,14 @@ def pagerank_customer_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     workload. Node ids are parity-disjoint (cust*2, supp*2+1). 3 rounds,
     damping 0.85; the oracle replays each round. See operators/graph.py
     for the per-iteration exchange accounting."""
-    orders = load_table(spark, "orders", sf_dir)
-    li = load_table(spark, "lineitem", sf_dir)
-    base = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .select(
-            (F.col("o_custkey") * 2).cast("long").alias("src"),
-            (F.col("l_suppkey") * 2 + 1).cast("long").alias("dst"),
-        )
-        .distinct()
-    )
-    # reversed copy: src/dst parities are disjoint, so the union is
-    # already duplicate-free — no second distinct pass
-    edges = base.union(base.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    _, edges = _cust_supp_edges(spark, sf_dir)
     return graph.pagerank(edges, iters=3, damping=0.85)
 
 
 @_q(
     "graph_reachability_bfs",
-    """
-    WITH RECURSIVE base AS (
-      SELECT DISTINCT CAST(o_custkey * 2 AS BIGINT) AS src,
-                      CAST(l_suppkey * 2 + 1 AS BIGINT) AS dst
-      FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-    edges AS (SELECT src, dst FROM base UNION ALL SELECT dst, src FROM base),
+    f"""
+    WITH RECURSIVE {_sql_cust_supp_edges()},
     seeds AS (SELECT DISTINCT src FROM base ORDER BY src LIMIT 3),
     reach(node, hops) AS (
       SELECT src, 0 FROM seeds
@@ -1377,17 +1594,7 @@ def graph_reachability_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     UNION ALL-only (path-multiplying, verified on this build), which is
     exactly why the operator exists — see operators/graph.py:62 and the
     native-CTE consistency test in tests/test_curation.py."""
-    orders = load_table(spark, "orders", sf_dir)
-    li = load_table(spark, "lineitem", sf_dir)
-    base = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .select(
-            (F.col("o_custkey") * 2).cast("long").alias("src"),
-            (F.col("l_suppkey") * 2 + 1).cast("long").alias("dst"),
-        )
-        .distinct()
-    )
-    edges = base.union(base.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    base, edges = _cust_supp_edges(spark, sf_dir)
     seeds = base.select("src").distinct().orderBy("src").limit(3)
     return graph.bfs_levels(edges, seeds, max_hops=3)
 
@@ -1434,16 +1641,8 @@ def k_anonymity_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_q(
     "ema_daily_user_spend",
-    """
-    WITH RECURSIVE daily AS (
-      SELECT user_id,
-             CAST(epoch(date_trunc('day', ts)) AS BIGINT) AS d,
-             CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS cents
-      FROM events WHERE event_type = 'purchase' GROUP BY 1, 2
-    ),
-    seq AS (SELECT user_id, d, cents,
-                   CAST(row_number() OVER (PARTITION BY user_id ORDER BY d) AS INT) AS t
-            FROM daily),
+    f"""
+    WITH RECURSIVE {_SQL_DAILY_USER_SPEND},
     rec(key, t, x, y) AS (
       SELECT user_id, 1, cents, CAST(cents AS DOUBLE) FROM seq WHERE t = 1
       UNION ALL
@@ -1653,10 +1852,7 @@ def _sql_kcore(k: int, iters: int) -> str:
     """DuckDB replay of fixed-iteration k-core peeling (graph.kcore_prune)
     over the same symmetric customer-supplier edge list."""
     steps = [
-        """base AS (SELECT DISTINCT CAST(o_custkey * 2 AS BIGINT) AS src,
-                           CAST(l_suppkey * 2 + 1 AS BIGINT) AS dst
-           FROM orders JOIN lineitem ON o_orderkey = l_orderkey)""",
-        "e0 AS (SELECT src, dst FROM base UNION ALL SELECT dst, src FROM base)",
+        _sql_cust_supp_edges("e0"),
     ]
     for t in range(iters):
         steps.append(
@@ -1684,17 +1880,7 @@ def kcore_user_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     propped up by other weak nodes; peeling removes the support chains).
     Fixed rounds, oracle replays each peel; see graph.kcore_prune for
     the per-round exchange accounting."""
-    orders = load_table(spark, "orders", sf_dir)
-    li = load_table(spark, "lineitem", sf_dir)
-    base = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .select(
-            (F.col("o_custkey") * 2).cast("long").alias("src"),
-            (F.col("l_suppkey") * 2 + 1).cast("long").alias("dst"),
-        )
-        .distinct()
-    )
-    edges = base.union(base.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    _, edges = _cust_supp_edges(spark, sf_dir)
     return graph.kcore_prune(edges, k=8, iters=3)
 
 
@@ -1704,10 +1890,7 @@ def _sql_lpa(iters: int) -> str:
     edge list as _sql_kcore: per round, each node's next label is the
     most frequent neighbour label, ties -> smallest label."""
     steps = [
-        """base AS (SELECT DISTINCT CAST(o_custkey * 2 AS BIGINT) AS src,
-                           CAST(l_suppkey * 2 + 1 AS BIGINT) AS dst
-           FROM orders JOIN lineitem ON o_orderkey = l_orderkey)""",
-        "e AS (SELECT src, dst FROM base UNION ALL SELECT dst, src FROM base)",
+        _sql_cust_supp_edges("e"),
         "l0 AS (SELECT DISTINCT src AS node, src AS lab FROM e)",
     ]
     for t in range(1, iters + 1):
@@ -1742,17 +1925,7 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
     engine; the oracle unrolls each round. Per-round cost is one
     key-partitioned edge x label join plus |V|-bounded aggregates — no
     windows, no global sorts; see graph.label_propagation."""
-    orders = load_table(spark, "orders", sf_dir)
-    li = load_table(spark, "lineitem", sf_dir)
-    base = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .select(
-            (F.col("o_custkey") * 2).cast("long").alias("src"),
-            (F.col("l_suppkey") * 2 + 1).cast("long").alias("dst"),
-        )
-        .distinct()
-    )
-    edges = base.union(base.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    _, edges = _cust_supp_edges(spark, sf_dir)
     return graph.label_propagation(edges, iters=3)
 
 
@@ -2068,11 +2241,7 @@ _SQL_LSH_MASKS = ", ".join(str(m) for m in similarity.probe_masks(8, 2))
 @_q(
     "ann_lsh_topk",
     f"""
-    WITH ve AS (
-      SELECT vec_id, embedding::DOUBLE[] AS v,
-             sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS vn
-      FROM embeddings
-    ),
+    WITH {_sql_unit_vectors()},
     b AS (SELECT vec_id, v, vn, {_SQL_LSH_BUCKET} AS bucket FROM ve),
     probes AS (
       SELECT vec_id, v, vn, xor(bucket, m) AS bucket
@@ -2136,12 +2305,7 @@ def ann_lsh_topk_gemm(spark: SparkSession, sf_dir: str) -> DataFrame:
     # A bounded replay must end at exactly the batch answer, so the batch
     # word_count oracle applies verbatim — full row+hash check, not the
     # weaker rows-only contract.
-    r"""
-    SELECT word, count(*) AS cnt
-    FROM (SELECT unnest(list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '')) AS word
-          FROM documents)
-    GROUP BY word
-    """,
+    ORACLE["word_count"],
 )
 def streaming_wordcount_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded streaming replay of the flagship word count: file stream ->
@@ -2182,28 +2346,9 @@ def streaming_wordcount_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_q(
-    "cube_order_stats",
-    """
-    SELECT coalesce(o_orderstatus, 'ALL') AS status,
-           coalesce(o_orderpriority, 'ALL') AS priority,
-           count(*) AS cnt, round(sum(o_totalprice), 2) AS total
-    FROM orders
-    GROUP BY CUBE (o_orderstatus, o_orderpriority)
-    """,
-)
+@_q("cube_order_stats", _sql_order_stats("CUBE"))
 def cube_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, "orders", sf_dir)
-    return (
-        orders.cube("o_orderstatus", "o_orderpriority")
-        .agg(F.count("*").alias("cnt"), F.round(F.sum("o_totalprice"), 2).alias("total"))
-        .select(
-            F.coalesce("o_orderstatus", F.lit("ALL")).alias("status"),
-            F.coalesce("o_orderpriority", F.lit("ALL")).alias("priority"),
-            "cnt",
-            "total",
-        )
-    )
+    return _order_stats(spark, sf_dir, "cube")
 
 
 @_q(
@@ -2218,15 +2363,7 @@ def cube_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def grouping_sets_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUPING SETS via SQL over the parquet path (no temp-view state)."""
-    return spark.sql(
-        f"""
-        SELECT coalesce(o_orderstatus, 'ALL') AS status,
-               coalesce(o_orderpriority, 'ALL') AS priority,
-               count(*) AS cnt
-        FROM parquet.`{sf_dir}/orders.parquet`
-        GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority))
-        """
-    )
+    return _oracle_on_spark(spark, sf_dir, "grouping_sets_orders")
 
 
 @_q(
@@ -2782,19 +2919,7 @@ def q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     an exact sum/count; revenue is summed as cent-scaled BIGINT so the
     accumulation order cannot move the result (a raw double sum is
     partition-order-dependent before rounding)."""
-    return spark.sql(
-        f"""
-        SELECT round(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) / 7e2, 2)
-                 AS avg_yearly,
-               count(*) AS n_items
-        FROM parquet.`{sf_dir}/lineitem.parquet`
-        JOIN parquet.`{sf_dir}/part.parquet` ON p_partkey = l_partkey
-        WHERE p_brand = 'Brand#13'
-          AND l_quantity < (SELECT 0.5 * avg(l2.l_quantity)
-                            FROM parquet.`{sf_dir}/lineitem.parquet` l2
-                            WHERE l2.l_partkey = p_partkey)
-        """
-    )
+    return _oracle_on_spark(spark, sf_dir, "q17_small_qty_revenue")
 
 
 @_q(
@@ -2852,38 +2977,38 @@ def q22_idle_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     correlated NOT EXISTS (no pending order), which Catalyst turns into
     a left anti join. The average is round(sum)/count so both engines
     divide identical operands."""
-    return spark.sql(
-        f"""
-        SELECT c_nationkey, count(*) AS numcust, round(sum(c_acctbal), 2) AS totacctbal
-        FROM parquet.`{sf_dir}/customer.parquet` c
-        WHERE c_acctbal > (SELECT round(sum(c_acctbal), 2) / count(*)
-                           FROM parquet.`{sf_dir}/customer.parquet`)
-          AND NOT EXISTS (SELECT 1 FROM parquet.`{sf_dir}/orders.parquet` o
-                          WHERE o.o_custkey = c.c_custkey AND o.o_orderstatus = 'P')
-        GROUP BY c_nationkey
-        """
-    )
+    return _oracle_on_spark(spark, sf_dir, "q22_idle_rich_customers")
+
+
+def _ivf_codebook(spark: SparkSession, sf_dir: str) -> tuple[list, DataFrame]:
+    """(codebook, centroid frame) of the IVF rows: the vectors with
+    vec_id % 50 == 7, a deterministic stand-in for k-means centroids so
+    the oracle can rebuild the identical index. A per-(session, dataset)
+    model artifact, collected once and reused across calls."""
+
+    def build():
+        emb = load_table(spark, "embeddings", sf_dir)
+        codebook = similarity.ivf_codebook(emb.filter(F.col("vec_id") % 50 == 7))
+        return codebook, similarity._centroid_frame(spark, codebook)
+
+    return _session_memo(spark, ("ivf_codebook", _os.path.abspath(sf_dir)), build)
 
 
 @_q(
     "ann_ivf_topk",
-    """
+    f"""
     WITH cent AS (
       SELECT vec_id AS cid, embedding::DOUBLE[] AS cv,
              sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS cn
       FROM embeddings WHERE vec_id % 50 = 7
     ),
-    corp AS (
-      SELECT vec_id, embedding::DOUBLE[] AS v,
-             sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS vn
-      FROM embeddings
-    ),
+    {_sql_unit_vectors()},
     asg AS (
       SELECT vec_id, v, vn, cid FROM (
         SELECT c.vec_id, c.v, c.vn, n.cid,
                row_number() OVER (PARTITION BY c.vec_id
                  ORDER BY round(list_dot_product(c.v, n.cv) / (c.vn * n.cn), 6) DESC, n.cid) AS rn
-        FROM corp c CROSS JOIN cent n)
+        FROM ve c CROSS JOIN cent n)
       WHERE rn = 1
     ),
     probes AS (
@@ -2891,7 +3016,7 @@ def q22_idle_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT c.vec_id, c.v, c.vn, n.cid,
                row_number() OVER (PARTITION BY c.vec_id
                  ORDER BY round(list_dot_product(c.v, n.cv) / (c.vn * n.cn), 6) DESC, n.cid) AS rn
-        FROM corp c CROSS JOIN cent n WHERE c.vec_id % 25 = 0)
+        FROM ve c CROSS JOIN cent n WHERE c.vec_id % 25 = 0)
       WHERE rn <= 2
     )
     SELECT qid, nid, CAST(rank AS INT) AS rank, cos FROM (
@@ -2913,14 +3038,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     and reused across calls — same reuse rule as catalog.load_table."""
     emb = load_table(spark, "embeddings", sf_dir)
     queries = emb.filter(F.col("vec_id") % 25 == 0)
-    per_session = _IVF_CODEBOOKS.setdefault(spark, {})
-    cached = per_session.get(sf_dir)
-    if cached is None:
-        centroids = emb.filter(F.col("vec_id") % 50 == 7)
-        codebook = similarity.ivf_codebook(centroids)
-        cent_frame = similarity._centroid_frame(spark, codebook)
-        cached = per_session[sf_dir] = (codebook, cent_frame)
-    codebook, cent_frame = cached
+    codebook, cent_frame = _ivf_codebook(spark, sf_dir)
     return similarity.ivf_topk(
         queries, emb, None, k=10, nprobe=2, codebook=codebook, cent_frame=cent_frame
     )
@@ -2935,7 +3053,7 @@ def ann_ivf_topk_gemm(spark: SparkSession, sf_dir: str) -> DataFrame:
     (similarity.ivf_cells_gemm): identical codebook, probes, and rank
     semantics, but the corpus x cells scoring — the ENTIRE wall clock
     once cells grow with the corpus (sf1 measured 69.9 s on the expr
-    kernel, BASELINE.md round 8) — runs as one numpy matmul per Arrow
+    kernel, BASELINE.md) — runs as one numpy matmul per Arrow
     batch. vnorms and the final candidate cosines stay on the exact
     JVM index-order fold, so the only divergence risk vs the expr twin
     is a CELL choice whose rounded cosine sits on a 1e-6 boundary (the
@@ -2945,14 +3063,7 @@ def ann_ivf_topk_gemm(spark: SparkSession, sf_dir: str) -> DataFrame:
     deployment switch — so the driver row covers the wiring."""
     emb = load_table(spark, "embeddings", sf_dir)
     queries = emb.filter(F.col("vec_id") % 25 == 0)
-    per_session = _IVF_CODEBOOKS.setdefault(spark, {})
-    cached = per_session.get(sf_dir)
-    if cached is None:
-        centroids = emb.filter(F.col("vec_id") % 50 == 7)
-        codebook = similarity.ivf_codebook(centroids)
-        cent_frame = similarity._centroid_frame(spark, codebook)
-        cached = per_session[sf_dir] = (codebook, cent_frame)
-    codebook, _ = cached
+    codebook, _ = _ivf_codebook(spark, sf_dir)
     return similarity.ivf_topk(
         queries, emb, None, k=10, nprobe=2, codebook=codebook, kernel="gemm"
     )
@@ -3097,33 +3208,8 @@ def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 @_q(
     "dedup_minhash_clusters",
     f"""
-    WITH RECURSIVE {_SQL_SHINGLES},
-    base AS (SELECT doc_id, {_SQL_HASH64.format(x="sh")} AS h64 FROM sh),
-    mh AS (
-      SELECT doc_id, seed,
-             min(({_SQL_MIX_A}[seed + 1] * (h64 & 4294967295)
-                  + {_SQL_MIX_B}[seed + 1]) & 4294967295) AS minhash
-      FROM base CROSS JOIN (SELECT unnest(generate_series(0, 11)) AS seed) s
-      GROUP BY doc_id, seed
-    ),
-    banded AS (
-      SELECT doc_id, CAST(seed // 3 AS INT) AS band,
-             string_agg(minhash::VARCHAR, ',' ORDER BY seed) AS band_sig
-      FROM mh GROUP BY doc_id, band
-    ),
-    pairs AS (
-      SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-      FROM banded a JOIN banded b USING (band, band_sig)
-      WHERE a.doc_id < b.doc_id
-    ),
-    edges AS (SELECT id1 AS src, id2 AS dst FROM pairs
-              UNION ALL SELECT id2, id1 FROM pairs),
-    nodes AS (SELECT DISTINCT src AS id FROM edges),
-    reach(id, label) AS (
-      SELECT id, id FROM nodes
-      UNION
-      SELECT e.src, r.label FROM reach r JOIN edges e ON e.dst = r.id
-    )
+    WITH RECURSIVE {_SQL_MINHASH_PAIRS},
+    {_SQL_COMPONENTS}
     SELECT id AS doc_id, min(label) AS component_id FROM reach GROUP BY id
     """,
 )
@@ -3146,42 +3232,11 @@ def dedup_minhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 @_q(
     "leakage_safe_split",
     f"""
-    WITH RECURSIVE {_SQL_SHINGLES},
-    base AS (SELECT doc_id, {_SQL_HASH64.format(x="sh")} AS h64 FROM sh),
-    mh AS (
-      SELECT doc_id, seed,
-             min(({_SQL_MIX_A}[seed + 1] * (h64 & 4294967295)
-                  + {_SQL_MIX_B}[seed + 1]) & 4294967295) AS minhash
-      FROM base CROSS JOIN (SELECT unnest(generate_series(0, 11)) AS seed) s
-      GROUP BY doc_id, seed
-    ),
-    banded AS (
-      SELECT doc_id, CAST(seed // 3 AS INT) AS band,
-             string_agg(minhash::VARCHAR, ',' ORDER BY seed) AS band_sig
-      FROM mh GROUP BY doc_id, band
-    ),
-    pairs AS (
-      SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-      FROM banded a JOIN banded b USING (band, band_sig)
-      WHERE a.doc_id < b.doc_id
-    ),
-    edges AS (SELECT id1 AS src, id2 AS dst FROM pairs
-              UNION ALL SELECT id2, id1 FROM pairs),
-    nodes AS (SELECT DISTINCT src AS id FROM edges),
-    reach(id, label) AS (
-      SELECT id, id FROM nodes
-      UNION
-      SELECT e.src, r.label FROM reach r JOIN edges e ON e.dst = r.id
-    ),
-    comp AS (SELECT id AS doc_id, min(label) AS g FROM reach GROUP BY id),
-    grouped AS (
-      SELECT d.doc_id, COALESCE(c.g, d.doc_id) AS g
-      FROM documents d LEFT JOIN comp c ON c.doc_id = d.doc_id
-    ),
+    WITH RECURSIVE {_SQL_NEAR_DUP_GROUPS},
     assigned AS (
-      SELECT doc_id, g,
-             CASE WHEN {_SQL_HASH64.format(x="g::VARCHAR")} % 100 < 80 THEN 'train'
-                  WHEN {_SQL_HASH64.format(x="g::VARCHAR")} % 100 < 90 THEN 'valid'
+      SELECT doc_id, group_id AS g,
+             CASE WHEN {_SQL_HASH64.format(x="group_id::VARCHAR")} % 100 < 80 THEN 'train'
+                  WHEN {_SQL_HASH64.format(x="group_id::VARCHAR")} % 100 < 90 THEN 'valid'
                   ELSE 'test' END AS split
       FROM grouped
     )
@@ -3449,92 +3504,22 @@ def event_type_pivot_api(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_q(
     "dedup_simhash_pairs",
-    rf"""
-    WITH toks AS (
-      SELECT DISTINCT doc_id,
-             unnest(list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '')) AS tok
-      FROM documents
-    ),
-    h AS (SELECT doc_id, {_SQL_HASH64.format(x="tok")} AS th FROM toks),
-    votes AS (
-      SELECT doc_id, b.bit,
-             CASE WHEN ((th >> b.bit) & 1) = 1 THEN 1 ELSE -1 END AS vote
-      FROM h CROSS JOIN (SELECT unnest(generate_series(0, 31)) AS bit) b
-    ),
-    bits AS (SELECT doc_id, bit, CAST(sum(vote) AS BIGINT) AS s FROM votes GROUP BY doc_id, bit),
-    sim AS (
-      SELECT doc_id,
-             CAST(sum(CASE WHEN s > 0 THEN (1::BIGINT << bit) ELSE 0 END) AS BIGINT) AS simhash
-      FROM bits GROUP BY doc_id
-    ),
-    banded0 AS (
-      SELECT doc_id, b.band, (simhash >> (b.band * 8)) & 255 AS band_val
-      FROM sim CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS band) b
-    ),
-    banded AS (
-      SELECT doc_id, band, band_val FROM (
-        SELECT doc_id, band, band_val,
-               row_number() OVER (
-                 PARTITION BY band, band_val
-                 ORDER BY {_SQL_HASH64.format(x="CAST(doc_id AS VARCHAR)")},
-                          doc_id) AS rn
-        FROM banded0
-      ) WHERE rn <= 1024
-    )
-    SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-    FROM banded a JOIN banded b USING (band, band_val)
-    WHERE a.doc_id < b.doc_id
-    """,
+    _sql_simhash_pairs(32, 4),
 )
 def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash Hamming-candidate pairs (operators.dedup.simhash_pairs):
     4×8-bit band rotation over the 32-bit fingerprints — any pair within
     Hamming distance 3 is guaranteed captured (pigeonhole), hot band
     buckets bounded at 1024 docs by the deterministic
-    (portable_hash64, id) rank the oracle replays (round-9 guard, see
-    dedup.banded_fingerprints; bites at sf0.1 where the templated text
+    (portable_hash64, id) rank the oracle replays (see
+    dedup.banded_fingerprints; the cap bites at sf0.1 where the templated text
     collides to 2566-doc buckets)."""
     return dedup.simhash_pairs(load_table(spark, "documents", sf_dir))
 
 
 @_q(
     "dedup_simhash64_pairs",
-    rf"""
-    WITH toks AS (
-      SELECT DISTINCT doc_id,
-             unnest(list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '')) AS tok
-      FROM documents
-    ),
-    h AS (SELECT doc_id, {_SQL_HASH64.format(x="tok")} AS th FROM toks),
-    votes AS (
-      SELECT doc_id, b.bit,
-             CASE WHEN ((th >> b.bit) & 1) = 1 THEN 1 ELSE -1 END AS vote
-      FROM h CROSS JOIN (SELECT unnest(generate_series(0, 59)) AS bit) b
-    ),
-    bits AS (SELECT doc_id, bit, CAST(sum(vote) AS BIGINT) AS s FROM votes GROUP BY doc_id, bit),
-    sim AS (
-      SELECT doc_id,
-             CAST(sum(CASE WHEN s > 0 THEN (1::BIGINT << bit) ELSE 0 END) AS BIGINT) AS simhash
-      FROM bits GROUP BY doc_id
-    ),
-    banded0 AS (
-      SELECT doc_id, b.band, (simhash >> (b.band * 15)) & 32767 AS band_val
-      FROM sim CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS band) b
-    ),
-    banded AS (
-      SELECT doc_id, band, band_val FROM (
-        SELECT doc_id, band, band_val,
-               row_number() OVER (
-                 PARTITION BY band, band_val
-                 ORDER BY {_SQL_HASH64.format(x="CAST(doc_id AS VARCHAR)")},
-                          doc_id) AS rn
-        FROM banded0
-      ) WHERE rn <= 1024
-    )
-    SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-    FROM banded a JOIN banded b USING (band, band_val)
-    WHERE a.doc_id < b.doc_id
-    """,
+    _sql_simhash_pairs(60, 4),
 )
 def dedup_simhash64_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The production-width simhash variant (the 32-bit query's docstring
@@ -3546,8 +3531,8 @@ def dedup_simhash64_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Hamming distance ≤ 3 always captured). The fingerprint stage is the
     same ZERO-shuffle map-side fold — band width changes constants, not
     the plan. Hot band buckets bounded at 1024 by the oracle-replayed
-    deterministic rank (round-9 sf10 guard, dedup.banded_fingerprints;
-    bites at sf0.1 — max bucket 1582 pre-cap)."""
+    deterministic rank (dedup.banded_fingerprints; the cap bites at
+    sf0.1 — max bucket 1582 pre-cap)."""
     return dedup.simhash_pairs(
         load_table(spark, "documents", sf_dir), bits=60, bands=4
     )
@@ -3763,33 +3748,7 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums, so the double division is identical cross-engine. The ORDER BY
     carries a full unique tiebreak (..., p_partkey, suppkey) so LIMIT is
     deterministic. Catalyst decorrelates the min into an aggregate+join."""
-    return spark.sql(
-        f"""
-        WITH cost AS (
-          SELECT l_partkey AS partkey, l_suppkey AS suppkey,
-                 sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS price_cents,
-                 sum(CAST(round(l_quantity) AS BIGINT)) AS qty
-          FROM parquet.`{sf_dir}/lineitem.parquet` GROUP BY 1, 2
-        ),
-        unit_eu AS (
-          SELECT c.partkey, c.suppkey, c.price_cents / c.qty AS unit_price,
-                 s_name, round(s_acctbal, 2) AS acctbal, n_name
-          FROM cost c
-          JOIN parquet.`{sf_dir}/supplier.parquet` ON s_suppkey = c.suppkey
-          JOIN parquet.`{sf_dir}/nation.parquet` ON n_nationkey = s_nationkey
-          JOIN parquet.`{sf_dir}/region.parquet` ON r_regionkey = n_regionkey
-          WHERE r_name = 'EUROPE'
-        )
-        SELECT p_partkey, p_name, s_name, n_name, acctbal,
-               round(unit_price, 4) AS unit_price
-        FROM unit_eu u JOIN parquet.`{sf_dir}/part.parquet` ON p_partkey = u.partkey
-        WHERE p_size <= 5
-          AND unit_price = (SELECT min(u2.unit_price) FROM unit_eu u2
-                            WHERE u2.partkey = u.partkey)
-        ORDER BY acctbal DESC, n_name, s_name, p_partkey, u.suppkey
-        LIMIT 100
-        """
-    )
+    return _oracle_on_spark(spark, sf_dir, "q2_min_cost_supplier")
 
 
 @_q(
@@ -3823,29 +3782,7 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     happens once per year row, so the ratio is bit-identical. Catalyst
     broadcasts every dimension (region/nation/supplier/part at this SF)
     and the two fact tables shuffle once each on the join key."""
-    return spark.sql(
-        f"""
-        SELECT yr,
-               round(CAST(sum(CASE WHEN supp_nation = 'NATION_7' THEN rev_e4 ELSE 0 END)
-                          AS DOUBLE) / CAST(sum(rev_e4) AS DOUBLE), 6) AS mkt_share
-        FROM (
-          SELECT CAST(year(o_orderdate) AS INT) AS yr,
-                 CAST(round(l_extendedprice * 100) AS BIGINT)
-                   * (100 - CAST(round(l_discount * 100) AS BIGINT)) AS rev_e4,
-                 n2.n_name AS supp_nation
-          FROM parquet.`{sf_dir}/lineitem.parquet`
-          JOIN parquet.`{sf_dir}/orders.parquet` ON o_orderkey = l_orderkey
-          JOIN parquet.`{sf_dir}/customer.parquet` ON c_custkey = o_custkey
-          JOIN parquet.`{sf_dir}/nation.parquet` n1 ON n1.n_nationkey = c_nationkey
-          JOIN parquet.`{sf_dir}/region.parquet` ON r_regionkey = n1.n_regionkey
-          JOIN parquet.`{sf_dir}/supplier.parquet` ON s_suppkey = l_suppkey
-          JOIN parquet.`{sf_dir}/nation.parquet` n2 ON n2.n_nationkey = s_nationkey
-          JOIN parquet.`{sf_dir}/part.parquet` ON p_partkey = l_partkey
-          WHERE r_name = 'AMERICA' AND p_type = 'ECONOMY'
-        )
-        GROUP BY yr
-        """
-    )
+    return _oracle_on_spark(spark, sf_dir, "q8_market_share")
 
 
 @_q(
@@ -3871,23 +3808,7 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     LIKE part filter. No partsupp supply cost in the fixtures, so cost is
     restated as half the part's retail price per unit; the whole amount
     stays an exact 1e-4-dollar BIGINT until one final division."""
-    return spark.sql(
-        f"""
-        SELECT n_name AS nation, CAST(year(o_orderdate) AS INT) AS yr,
-               CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
-                          * (100 - CAST(round(l_discount * 100) AS BIGINT))
-                        - 50 * CAST(round(p_retailprice * 100) AS BIGINT)
-                             * CAST(round(l_quantity) AS BIGINT)) AS BIGINT) / 1e4
-                 AS profit
-        FROM parquet.`{sf_dir}/lineitem.parquet`
-        JOIN parquet.`{sf_dir}/part.parquet` ON p_partkey = l_partkey
-        JOIN parquet.`{sf_dir}/supplier.parquet` ON s_suppkey = l_suppkey
-        JOIN parquet.`{sf_dir}/nation.parquet` ON n_nationkey = s_nationkey
-        JOIN parquet.`{sf_dir}/orders.parquet` ON o_orderkey = l_orderkey
-        WHERE p_name LIKE '%red%'
-        GROUP BY n_name, year(o_orderdate)
-        """
-    )
+    return _oracle_on_spark(spark, sf_dir, "q9_product_profit")
 
 
 @_q(
@@ -3914,22 +3835,7 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     Catalyst plans as a reused exchange + broadcast of the one-row total,
     not a recompute. Cent-BIGINT sums; the only double is the shared
     threshold, derived identically on both engines."""
-    return spark.sql(
-        f"""
-        WITH val AS (
-          SELECT l_partkey AS partkey,
-                 sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS val_cents
-          FROM parquet.`{sf_dir}/lineitem.parquet`
-          JOIN parquet.`{sf_dir}/supplier.parquet` ON s_suppkey = l_suppkey
-          JOIN parquet.`{sf_dir}/nation.parquet` ON n_nationkey = s_nationkey
-          WHERE n_name IN ('NATION_3', 'NATION_8')
-          GROUP BY l_partkey
-        )
-        SELECT partkey, CAST(val_cents AS BIGINT) AS val_cents
-        FROM val
-        WHERE val_cents > (SELECT sum(val_cents) / 500.0 FROM val)
-        """
-    )
+    return _oracle_on_spark(spark, sf_dir, "q11_important_parts")
 
 
 @_q(
@@ -3988,18 +3894,7 @@ def q13_custdist(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows) — a groupBy over a groupBy, the classic two-level aggregation.
     The join-side filter sits in the ON clause so zero-order customers
     survive; Q13's o_comment NOT LIKE filter is restated on priority."""
-    return spark.sql(
-        f"""
-        SELECT c_count, CAST(count(*) AS BIGINT) AS custdist
-        FROM (
-          SELECT c_custkey, count(o_orderkey) AS c_count
-          FROM parquet.`{sf_dir}/customer.parquet` LEFT JOIN parquet.`{sf_dir}/orders.parquet`
-            ON o_custkey = c_custkey AND o_orderpriority <> '5-LOW'
-          GROUP BY c_custkey
-        )
-        GROUP BY c_count
-        """
-    )
+    return _oracle_on_spark(spark, sf_dir, "q13_custdist")
 
 
 @_q(
@@ -4060,19 +3955,7 @@ def q16_supplier_cnt(spark: SparkSession, sf_dir: str) -> DataFrame:
     with negated filters and a NOT IN anti-join (complaint suppliers ->
     negative account balance here). Catalyst plans the NOT IN as a null-
     aware anti join; the distinct count aggregates after it."""
-    return spark.sql(
-        f"""
-        SELECT p_brand, p_type, p_size,
-               CAST(count(DISTINCT l_suppkey) AS BIGINT) AS supplier_cnt
-        FROM parquet.`{sf_dir}/lineitem.parquet`
-        JOIN parquet.`{sf_dir}/part.parquet` ON p_partkey = l_partkey
-        WHERE p_brand <> 'Brand#13' AND p_type <> 'PROMO'
-          AND p_size IN (1, 5, 9, 14, 19, 23, 36, 45)
-          AND l_suppkey NOT IN (SELECT s_suppkey FROM parquet.`{sf_dir}/supplier.parquet`
-                                WHERE s_acctbal < 0)
-        GROUP BY p_brand, p_type, p_size
-        """
-    )
+    return _oracle_on_spark(spark, sf_dir, "q16_supplier_cnt")
 
 
 @_q(
@@ -4153,32 +4036,7 @@ def q21_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     IS the scale-correct plan: two shuffles of lineitem, no repeated
     correlated probes. Lateness is shipdate > orderdate + 100 days (no
     receipt/commit dates in the fixtures)."""
-    return spark.sql(
-        f"""
-        WITH late AS (
-          SELECT l_orderkey, l_suppkey
-          FROM parquet.`{sf_dir}/lineitem.parquet`
-          JOIN parquet.`{sf_dir}/orders.parquet` ON o_orderkey = l_orderkey
-          WHERE o_orderstatus = 'F'
-            AND l_shipdate > o_orderdate + INTERVAL 100 DAY
-          GROUP BY 1, 2
-        ),
-        stats AS (
-          SELECT l_orderkey, count(DISTINCT l_suppkey) AS n_supp
-          FROM parquet.`{sf_dir}/lineitem.parquet` GROUP BY 1
-        ),
-        late_stats AS (SELECT l_orderkey, count(*) AS n_late FROM late GROUP BY 1)
-        SELECT s_name, CAST(count(*) AS BIGINT) AS numwait
-        FROM late
-        JOIN stats USING (l_orderkey)
-        JOIN late_stats USING (l_orderkey)
-        JOIN parquet.`{sf_dir}/supplier.parquet` ON s_suppkey = late.l_suppkey
-        WHERE n_supp > 1 AND n_late = 1
-        GROUP BY s_name
-        ORDER BY numwait DESC, s_name
-        LIMIT 100
-        """
-    )
+    return _oracle_on_spark(spark, sf_dir, "q21_waiting_supplier")
 
 
 # ---------------------------------------------------------------------------
@@ -4391,16 +4249,7 @@ def window_rank_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rank-distribution window functions (percent_rank / cume_dist) with
     a fully deterministic frame order (totalprice, orderkey unique). Both
     are exact small-integer ratios, so the doubles agree cross-engine."""
-    return spark.sql(
-        f"""
-        SELECT o_orderkey, o_orderpriority,
-               round(percent_rank() OVER w, 6) AS pr,
-               round(cume_dist() OVER w, 6) AS cd
-        FROM parquet.`{sf_dir}/orders.parquet`
-        WHERE o_orderkey % 50 = 0
-        WINDOW w AS (PARTITION BY o_orderpriority ORDER BY o_totalprice, o_orderkey)
-        """
-    )
+    return _oracle_on_spark(spark, sf_dir, "window_rank_stats")
 
 
 # ---------------------------------------------------------------------------
@@ -4653,27 +4502,15 @@ def asof_join_forward_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
 @_q(
     "pipeline_train_manifest",
     f"""
-    WITH t AS (
-      SELECT doc_id, text,
-             list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '') AS toks
-      FROM documents
-    ), m AS (
-      SELECT doc_id, text,
-             CAST(len(toks) AS INT) AS n_tokens,
-             CAST(list_sum(list_transform(toks, x -> length(x))) AS INT) AS total_len,
-             CAST(len(list_filter(toks, x -> x IN ('the', 'a', 'of', 'and'))) AS INT) AS n_stop,
-             len(list_filter(toks, x -> x IN ('the', 'a', 'fast', 'slow'))) AS en,
-             len(list_filter(toks, x -> x IN ('data', 'value', 'row')))     AS de,
-             len(list_filter(toks, x -> x IN ('query', 'filter', 'merge'))) AS fr
-      FROM t
+    WITH {_sql_quality()},
+    m AS (
+      SELECT doc_id, quality,
+             len(list_filter(qtoks, x -> x IN ('the', 'a', 'fast', 'slow'))) AS en,
+             len(list_filter(qtoks, x -> x IN ('data', 'value', 'row')))     AS de,
+             len(list_filter(qtoks, x -> x IN ('query', 'filter', 'merge'))) AS fr
+      FROM q
     ), scored AS (
-      SELECT doc_id, text,
-             CASE WHEN n_tokens > 0 THEN
-               ((50 * (CAST(n_tokens AS BIGINT) * least(n_tokens, 200)
-                       + 120 * least(4 * CAST(n_stop AS BIGINT), n_tokens)
-                       + 10 * least(CAST(total_len AS BIGINT), 8 * CAST(n_tokens AS BIGINT)))
-                 + n_tokens) // (2 * CAST(n_tokens AS BIGINT))) / 10000.0
-             ELSE 0.0 END AS quality,
+      SELECT doc_id, quality,
              CASE WHEN en >= de AND en >= fr AND en > 0 THEN 'en'
                   WHEN de >= fr AND de > 0 THEN 'de'
                   WHEN fr > 0 THEN 'fr'
@@ -4692,10 +4529,10 @@ def asof_join_forward_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
              CASE WHEN h % 100 < 80 THEN 'train'
                   WHEN h % 100 < 90 THEN 'valid'
                   ELSE 'test' END AS split
-      FROM (SELECT doc_id, {{h64}} AS h FROM kept)
+      FROM (SELECT doc_id, {_SQL_HASH64.format(x="doc_id::VARCHAR")} AS h FROM kept)
     )
     GROUP BY split
-    """.replace("{h64}", _SQL_HASH64.format(x="doc_id::VARCHAR")),
+    """,
 )
 def pipeline_train_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The composite the engine exists for — a full training-data curation
@@ -4943,16 +4780,8 @@ def multimodal_decode_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mm.jpeg_roundtrip_stats(docs, "doc_id", "px", bw=4, bh=5)
 
 
-@_q(
-    "multimodal_decode_jpeg_progressive",
-    f"""
-    WITH {_sql_doc_bytes(20)}
-    SELECT doc_id AS media_id, 32 AS width, 40 AS height,
-           CAST(3 * sum(64 * (v + 64)) AS BIGINT) AS pix_sum,
-           CAST(sum(64 * (v + 64)) AS BIGINT) AS gray_sum
-    FROM b GROUP BY doc_id
-    """,
-)
+# Same payload as the baseline JPEG, so the same decoded pixels.
+@_q("multimodal_decode_jpeg_progressive", ORACLE["multimodal_decode_jpeg"])
 def multimodal_decode_jpeg_progressive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Progressive (SOF2) JPEG decode under the oracle gate.
     Same 4x5-block DC payload as `multimodal_decode_jpeg` (bytes ->
@@ -5285,20 +5114,8 @@ def multimodal_decode_jpeg12(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mm.jpeg12_roundtrip_stats(docs, "doc_id", "px", bw=4, bh=5)
 
 
-@_q(
-    "multimodal_decode_gif",
-    f"""
-    WITH {_sql_doc_bytes(20)}
-    SELECT doc_id AS media_id, 32 AS width, 40 AS height,
-           CAST(64 * sum(v) AS BIGINT) AS sum_r,
-           CAST(128 * sum(v) AS BIGINT) AS sum_g,
-           CAST(64 * sum(255 - v) AS BIGINT) AS sum_b,
-           CAST(sum(v * (16384 * ((i - 1) // 4)
-                         + 512 * ((i - 1) % 4) + 7456)) AS BIGINT)
-             AS pos_sum_r
-    FROM b GROUP BY doc_id
-    """,
-)
+# Same palette payload as the RLE8 BMP, so the same decoded pixels.
+@_q("multimodal_decode_gif", ORACLE["multimodal_decode_bmp_rle8"])
 def multimodal_decode_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GIF (LZW) decode under the oracle gate. Each
     document's first 20 bytes v become a 4x5 grid of indices into the
@@ -5948,21 +5765,31 @@ def scd1_customer_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     return relational.merge_upsert(base, chg, ["c_custkey"], delete_col="is_del")
 
 
+def _mixture_frame(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, Window]:
+    """(t, w): per source, n_docs and tokens, the corpus totals tot_docs
+    and tot_tokens, and the sqrt-damped token share wr; ``w`` is the
+    unpartitioned window over that frame, which has one row per domain,
+    so the single-partition window stays domain-sized at any corpus size."""
+    docs = load_table(spark, "documents", sf_dir)
+    per = docs.groupBy("source").agg(
+        F.count("*").alias("n_docs"),
+        F.sum(F.size(tokens(F.col("text")))).alias("tokens"),
+    )
+    w = Window.partitionBy()
+    t = per.select(
+        "source",
+        "n_docs",
+        "tokens",
+        F.sum("tokens").over(w).alias("tot_tokens"),
+        F.sum("n_docs").over(w).alias("tot_docs"),
+    ).withColumn("wr", F.sqrt(F.col("tokens") / F.col("tot_tokens")))
+    return t, w
+
+
 @_q(
     "domain_mixture_weights",
-    r"""
-    WITH per AS (
-      SELECT source, count(*) AS n_docs,
-             CAST(sum(len(list_filter(regexp_split_to_array(text, '\s+'), x -> x <> ''))) AS BIGINT) AS tokens
-      FROM documents GROUP BY source
-    ),
-    t AS (
-      SELECT source, n_docs, tokens,
-             sum(tokens) OVER () AS tot_tokens,
-             sum(n_docs) OVER () AS tot_docs
-      FROM per
-    ),
-    w AS (SELECT *, sqrt(tokens / tot_tokens) AS wr FROM t)
+    f"""
+    WITH {_SQL_MIXTURE}
     SELECT source, n_docs, tokens,
            round(tokens / tot_tokens, 6) AS token_share,
            round(wr / sum(wr) OVER (), 6) AS mix_weight,
@@ -5982,19 +5809,7 @@ def domain_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     run on that DOMAIN-level frame (rows = #domains, constant), so the
     single-partition window is O(domains), never O(corpus). floor (not
     round) on target_docs keeps the integerization engine-exact."""
-    docs = load_table(spark, "documents", sf_dir)
-    per = docs.groupBy("source").agg(
-        F.count("*").alias("n_docs"),
-        F.sum(F.size(tokens(F.col("text")))).alias("tokens"),
-    )
-    w = Window.partitionBy()  # domain-level frame: #domains rows, constant
-    t = per.select(
-        "source",
-        "n_docs",
-        "tokens",
-        F.sum("tokens").over(w).alias("tot_tokens"),
-        F.sum("n_docs").over(w).alias("tot_docs"),
-    ).withColumn("wr", F.sqrt(F.col("tokens") / F.col("tot_tokens")))
+    t, w = _mixture_frame(spark, sf_dir)
     return t.select(
         "source",
         "n_docs",
@@ -6010,61 +5825,8 @@ def domain_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 @_q(
     "cluster_dedup_keeper",
     f"""
-    WITH RECURSIVE {_SQL_SHINGLES},
-    base AS (SELECT doc_id, {_SQL_HASH64.format(x="sh")} AS h64 FROM sh),
-    mh AS (
-      SELECT doc_id, seed,
-             min(({_SQL_MIX_A}[seed + 1] * (h64 & 4294967295)
-                  + {_SQL_MIX_B}[seed + 1]) & 4294967295) AS minhash
-      FROM base CROSS JOIN (SELECT unnest(generate_series(0, 11)) AS seed) s
-      GROUP BY doc_id, seed
-    ),
-    banded AS (
-      SELECT doc_id, CAST(seed // 3 AS INT) AS band,
-             string_agg(minhash::VARCHAR, ',' ORDER BY seed) AS band_sig
-      FROM mh GROUP BY doc_id, band
-    ),
-    pairs AS (
-      SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-      FROM banded a JOIN banded b USING (band, band_sig)
-      WHERE a.doc_id < b.doc_id
-    ),
-    edges AS (SELECT id1 AS src, id2 AS dst FROM pairs
-              UNION ALL SELECT id2, id1 FROM pairs),
-    nodes AS (SELECT DISTINCT src AS id FROM edges),
-    reach(id, label) AS (
-      SELECT id, id FROM nodes
-      UNION
-      SELECT e.src, r.label FROM reach r JOIN edges e ON e.dst = r.id
-    ),
-    comp AS (SELECT id AS doc_id, min(label) AS g FROM reach GROUP BY id),
-    qt AS (SELECT doc_id, list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '') AS qtoks
-           FROM documents),
-    qm AS (
-      SELECT doc_id,
-             CAST(len(qtoks) AS INT) AS n_tokens,
-             CAST(list_sum(list_transform(qtoks, x -> length(x))) AS INT) AS total_len,
-             CAST(len(list_filter(qtoks, x -> x IN ('the', 'a', 'of', 'and'))) AS INT) AS n_stop
-      FROM qt
-    ),
-    q AS (
-      SELECT doc_id,
-             CASE WHEN n_tokens > 0 THEN
-               ((50 * (CAST(n_tokens AS BIGINT) * least(n_tokens, 200)
-                       + 120 * least(4 * CAST(n_stop AS BIGINT), n_tokens)
-                       + 10 * least(CAST(total_len AS BIGINT), 8 * CAST(n_tokens AS BIGINT)))
-                 + n_tokens) // (2 * CAST(n_tokens AS BIGINT))) / 10000.0
-             ELSE 0.0 END AS quality
-      FROM qm
-    ),
-    grouped AS (
-      SELECT d.doc_id, COALESCE(c.g, d.doc_id) AS group_id
-      FROM documents d LEFT JOIN comp c ON c.doc_id = d.doc_id
-    )
-    SELECT g.doc_id, g.group_id, q.quality,
-           CAST(row_number() OVER (PARTITION BY g.group_id
-                                   ORDER BY q.quality DESC, g.doc_id) = 1 AS INT) AS keep
-    FROM grouped g JOIN q ON q.doc_id = g.doc_id
+    WITH RECURSIVE {_SQL_NEAR_DUP_KEEPER}
+    SELECT doc_id, group_id, quality, keep FROM keeper
     """,
 )
 def cluster_dedup_keeper(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6091,7 +5853,7 @@ def cluster_dedup_keeper(spark: SparkSession, sf_dir: str) -> DataFrame:
     # _minhash_pairs_artifact — dedup_minhash_lsh measures building it)
     pairs = _minhash_pairs_artifact(spark, sf_dir)
     comp = dedup.connected_components(pairs).withColumnRenamed("id", "doc_id")
-    # Fused quality (round 13, guide §2.4): quality_score is a pure
+    # Fused quality: quality_score is a pure
     # per-row projection, so the previous grouped.join(q, "doc_id") was
     # a full corpus self-join — two exchanges + a join whose only
     # purpose was to glue two projections of the SAME documents row
@@ -6198,20 +5960,7 @@ def sink_partitioned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 @_q(
     "dedup_incremental_batch",
     f"""
-    WITH {_SQL_SHINGLES},
-    base AS (SELECT doc_id, {_SQL_HASH64.format(x="sh")} AS h64 FROM sh),
-    mh AS (
-      SELECT doc_id, seed,
-             min(({_SQL_MIX_A}[seed + 1] * (h64 & 4294967295)
-                  + {_SQL_MIX_B}[seed + 1]) & 4294967295) AS minhash
-      FROM base CROSS JOIN (SELECT unnest(generate_series(0, 11)) AS seed) s
-      GROUP BY doc_id, seed
-    ),
-    banded AS (
-      SELECT doc_id, CAST(seed // 3 AS INT) AS band,
-             string_agg(minhash::VARCHAR, ',' ORDER BY seed) AS band_sig
-      FROM mh GROUP BY doc_id, band
-    ),
+    WITH {_SQL_MINHASH_BANDS},
     pairs AS (
       SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
       FROM banded a JOIN banded b USING (band, band_sig)
@@ -6255,12 +6004,8 @@ def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_q(
     "contrastive_pairs_mining",
-    """
-    WITH ve AS (
-      SELECT vec_id, label, embedding::DOUBLE[] AS v,
-             sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS vn
-      FROM embeddings
-    ),
+    f"""
+    WITH {_sql_unit_vectors(", label")},
     scored AS (
       SELECT q.vec_id AS qid, c.vec_id AS nid,
              CAST(q.label = c.label AS INT) AS is_positive,
@@ -6268,15 +6013,7 @@ def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM ve q JOIN ve c ON q.vec_id <> c.vec_id
       WHERE q.vec_id % 50 = 0
     ),
-    ranked AS (
-      SELECT qid, nid, is_positive, cos,
-             row_number() OVER (PARTITION BY qid, is_positive
-                                ORDER BY cos DESC, nid) AS rank
-      FROM scored
-    )
-    SELECT qid, nid, is_positive, CAST(rank AS INT) AS rank, cos
-    FROM ranked
-    WHERE rank <= 2
+    {_SQL_CONTRASTIVE_TOP2}
     """,
 )
 def contrastive_pairs_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6295,16 +6032,12 @@ def contrastive_pairs_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
 @_q(
     "contrastive_pairs_lsh",
     f"""
-    WITH ve AS (
-      SELECT vec_id, label, embedding::DOUBLE[] AS v,
-             sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS vn
-      FROM embeddings
-    ),
-    b AS (SELECT vec_id, label, v, vn, {{bucket}} AS bucket FROM ve),
+    WITH {_sql_unit_vectors(", label")},
+    b AS (SELECT vec_id, label, v, vn, {_SQL_LSH_BUCKET} AS bucket FROM ve),
     probes AS (
       SELECT vec_id, label, v, vn, xor(bucket, m) AS bucket
       FROM (SELECT * FROM b WHERE vec_id % 50 = 0),
-           LATERAL (SELECT unnest([{{masks}}]) AS m) u
+           LATERAL (SELECT unnest([{_SQL_LSH_MASKS}]) AS m) u
     ),
     scored AS (
       SELECT q.vec_id AS qid, c.vec_id AS nid,
@@ -6312,15 +6045,8 @@ def contrastive_pairs_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
              round(list_dot_product(q.v, c.v) / (q.vn * c.vn), 6) AS cos
       FROM probes q JOIN b c ON c.bucket = q.bucket AND c.vec_id <> q.vec_id
     ),
-    ranked AS (
-      SELECT qid, nid, is_positive, cos,
-             row_number() OVER (PARTITION BY qid, is_positive
-                                ORDER BY cos DESC, nid) AS rank
-      FROM scored
-    )
-    SELECT qid, nid, is_positive, CAST(rank AS INT) AS rank, cos
-    FROM ranked WHERE rank <= 2
-    """.format(bucket=_SQL_LSH_BUCKET, masks=_SQL_LSH_MASKS),
+    {_SQL_CONTRASTIVE_TOP2}
+    """,
 )
 def contrastive_pairs_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Contrastive pair mining with the LSH-blocked candidate generator
@@ -6486,11 +6212,7 @@ def source_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 @_q(
     "dedup_embedding_lsh",
     f"""
-    WITH ve AS (
-      SELECT vec_id, embedding::DOUBLE[] AS v,
-             sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS vn
-      FROM embeddings
-    ),
+    WITH {_sql_unit_vectors()},
     b AS (SELECT vec_id, v, vn, {_SQL_LSH_BUCKET} AS bucket FROM ve)
     SELECT a.vec_id AS id1, c.vec_id AS id2,
            round(list_dot_product(a.v, c.v) / (a.vn * c.vn), 6) AS cos
@@ -6516,63 +6238,7 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 @_q(
     "pipeline_curation_v2",
     f"""
-    WITH RECURSIVE {_SQL_SHINGLES},
-    base AS (SELECT doc_id, {_SQL_HASH64.format(x="sh")} AS h64 FROM sh),
-    mh AS (
-      SELECT doc_id, seed,
-             min(({_SQL_MIX_A}[seed + 1] * (h64 & 4294967295)
-                  + {_SQL_MIX_B}[seed + 1]) & 4294967295) AS minhash
-      FROM base CROSS JOIN (SELECT unnest(generate_series(0, 11)) AS seed) s
-      GROUP BY doc_id, seed
-    ),
-    banded AS (
-      SELECT doc_id, CAST(seed // 3 AS INT) AS band,
-             string_agg(minhash::VARCHAR, ',' ORDER BY seed) AS band_sig
-      FROM mh GROUP BY doc_id, band
-    ),
-    pairs AS (
-      SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-      FROM banded a JOIN banded b USING (band, band_sig)
-      WHERE a.doc_id < b.doc_id
-    ),
-    edges AS (SELECT id1 AS src, id2 AS dst FROM pairs
-              UNION ALL SELECT id2, id1 FROM pairs),
-    nodes AS (SELECT DISTINCT src AS id FROM edges),
-    reach(id, label) AS (
-      SELECT id, id FROM nodes
-      UNION
-      SELECT e.src, r.label FROM reach r JOIN edges e ON e.dst = r.id
-    ),
-    comp AS (SELECT id AS doc_id, min(label) AS g FROM reach GROUP BY id),
-    qt AS (SELECT doc_id, list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '') AS qtoks
-           FROM documents),
-    qm AS (
-      SELECT doc_id,
-             CAST(len(qtoks) AS INT) AS n_tokens,
-             CAST(list_sum(list_transform(qtoks, x -> length(x))) AS INT) AS total_len,
-             CAST(len(list_filter(qtoks, x -> x IN ('the', 'a', 'of', 'and'))) AS INT) AS n_stop
-      FROM qt
-    ),
-    q AS (
-      SELECT doc_id,
-             CASE WHEN n_tokens > 0 THEN
-               ((50 * (CAST(n_tokens AS BIGINT) * least(n_tokens, 200)
-                       + 120 * least(4 * CAST(n_stop AS BIGINT), n_tokens)
-                       + 10 * least(CAST(total_len AS BIGINT), 8 * CAST(n_tokens AS BIGINT)))
-                 + n_tokens) // (2 * CAST(n_tokens AS BIGINT))) / 10000.0
-             ELSE 0.0 END AS quality
-      FROM qm
-    ),
-    grouped AS (
-      SELECT d.doc_id, COALESCE(c.g, d.doc_id) AS group_id
-      FROM documents d LEFT JOIN comp c ON c.doc_id = d.doc_id
-    ),
-    keeper AS (
-      SELECT g.doc_id,
-             CAST(row_number() OVER (PARTITION BY g.group_id
-                                     ORDER BY q.quality DESC, g.doc_id) = 1 AS INT) AS keep
-      FROM grouped g JOIN q ON q.doc_id = g.doc_id
-    ),
+    WITH RECURSIVE {_SQL_NEAR_DUP_KEEPER},
     bbi AS (
       SELECT qt.doc_id, qtoks[i] || ' ' || qtoks[i+1] AS bg, qtoks[i] AS w1
       FROM qt, LATERAL (SELECT unnest(generate_series(1, greatest(len(qtoks)-1, 0))) AS i) u
@@ -6609,8 +6275,8 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def pipeline_curation_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The round-4 flagship composition: every late-round curation signal
-    in ONE lazy plan. Per document — bigram-LM perplexity (drop the
+    """The flagship composition: every curation signal in ONE lazy
+    plan. Per document — bigram-LM perplexity (drop the
     too-surprising tail, ppl > 30), Gopher repetition flags (drop
     repetitive boilerplate), and quality-ranked near-dup keeper selection
     (one survivor per MinHash cluster) — intersected, then rolled up to a
@@ -6667,27 +6333,8 @@ def pipeline_curation_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_q(
     "quality_zscore_by_source",
-    r"""
-    WITH qt AS (SELECT doc_id, source,
-                       list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') AS qtoks
-                FROM documents),
-    qm AS (
-      SELECT doc_id, source,
-             CAST(len(qtoks) AS INT) AS n_tokens,
-             CAST(list_sum(list_transform(qtoks, x -> length(x))) AS INT) AS total_len,
-             CAST(len(list_filter(qtoks, x -> x IN ('the', 'a', 'of', 'and'))) AS INT) AS n_stop
-      FROM qt
-    ),
-    q AS (
-      SELECT doc_id, source,
-             CASE WHEN n_tokens > 0 THEN
-               ((50 * (CAST(n_tokens AS BIGINT) * least(n_tokens, 200)
-                       + 120 * least(4 * CAST(n_stop AS BIGINT), n_tokens)
-                       + 10 * least(CAST(total_len AS BIGINT), 8 * CAST(n_tokens AS BIGINT)))
-                 + n_tokens) // (2 * CAST(n_tokens AS BIGINT))) / 10000.0
-             ELSE 0.0 END AS quality
-      FROM qm
-    ),
+    f"""
+    WITH {_sql_quality(", source")},
     i AS (SELECT doc_id, source, quality,
                  CAST(round(quality * 10000) AS BIGINT) AS qi FROM q),
     s AS (SELECT *, count(*) OVER (PARTITION BY source) AS n,
@@ -6772,7 +6419,7 @@ def fuzzy_name_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_q(
     "entity_resolution_parts",
-    """
+    f"""
     WITH RECURSIVE names AS (
       SELECT p_name, min(p_partkey) AS nid, count(*) AS n_parts
       FROM part WHERE p_name IS NOT NULL GROUP BY p_name
@@ -6782,14 +6429,7 @@ def fuzzy_name_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM names a JOIN names b ON a.nid < b.nid
       WHERE levenshtein(a.p_name, b.p_name) <= 2
     ),
-    edges AS (SELECT id1 AS src, id2 AS dst FROM pairs
-              UNION ALL SELECT id2, id1 FROM pairs),
-    nodes AS (SELECT DISTINCT src AS id FROM edges),
-    reach(id, label) AS (
-      SELECT id, id FROM nodes
-      UNION
-      SELECT e.src, r.label FROM reach r JOIN edges e ON e.dst = r.id
-    ),
+    {_SQL_COMPONENTS},
     comp AS (SELECT id, min(label) AS component_id FROM reach GROUP BY id),
     labeled AS (
       SELECT n.p_name, n.n_parts, coalesce(c.component_id, n.nid) AS component_id
@@ -6813,7 +6453,7 @@ def entity_resolution_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle's recursive CTE verifies the fixpoint transitively.
     Singleton names (no fuzzy partner) are their own component."""
     part = load_table(spark, "part", sf_dir)
-    # Round 13, examined and left alone: a persist-free variant (rely on
+    # Examined and left alone: a persist-free variant (rely on
     # ReuseExchange to dedup the four uses of this rollup) was profiled
     # at sf0.1 — build dropped 0.99 -> 0.64 s but the un-checkpointed
     # final plan recomputed the rollup in the action phase (0.035 ->
@@ -6875,26 +6515,7 @@ def entity_resolution_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_q(
     "embedding_covariance",
-    """
-    WITH q AS (
-      SELECT vec_id, CAST(u.i - 1 AS INT) AS i,
-             CAST(floor(embedding[u.i] * 8192.0) AS BIGINT) AS qv
-      FROM embeddings,
-           LATERAL (SELECT unnest(generate_series(1, len(embedding))) AS i) u
-      WHERE embedding IS NOT NULL AND len(embedding) > 0
-    ),
-    f AS (SELECT i, sum(qv) AS s, count(*) AS n FROM q GROUP BY i),
-    p AS (
-      SELECT a.i AS i, b.i AS j, sum(a.qv * b.qv) AS sij
-      FROM q a JOIN q b ON a.vec_id = b.vec_id AND b.i >= a.i
-      GROUP BY a.i, b.i
-    )
-    SELECT p.i, p.j,
-           ((CAST(p.sij AS DOUBLE)
-             - CAST(fa.s AS DOUBLE) * CAST(fb.s AS DOUBLE) / CAST(fa.n AS DOUBLE))
-            / CAST(fa.n AS DOUBLE)) / 67108864.0 AS cov
-    FROM p JOIN f fa ON fa.i = p.i JOIN f fb ON fb.i = p.j
-    """,
+    f"WITH {_SQL_EMB_COV} SELECT i, j, cov FROM cov",
 )
 def embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact population covariance matrix (upper triangle) of the
@@ -6912,27 +6533,8 @@ def embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_q(
     "embedding_correlation",
-    """
-    WITH q AS (
-      SELECT vec_id, CAST(u.i - 1 AS INT) AS i,
-             CAST(floor(embedding[u.i] * 8192.0) AS BIGINT) AS qv
-      FROM embeddings,
-           LATERAL (SELECT unnest(generate_series(1, len(embedding))) AS i) u
-      WHERE embedding IS NOT NULL AND len(embedding) > 0
-    ),
-    f AS (SELECT i, sum(qv) AS s, count(*) AS n FROM q GROUP BY i),
-    p AS (
-      SELECT a.i AS i, b.i AS j, sum(a.qv * b.qv) AS sij
-      FROM q a JOIN q b ON a.vec_id = b.vec_id AND b.i >= a.i
-      GROUP BY a.i, b.i
-    ),
-    cov AS (
-      SELECT p.i, p.j,
-             ((CAST(p.sij AS DOUBLE)
-               - CAST(fa.s AS DOUBLE) * CAST(fb.s AS DOUBLE) / CAST(fa.n AS DOUBLE))
-              / CAST(fa.n AS DOUBLE)) / 67108864.0 AS cov
-      FROM p JOIN f fa ON fa.i = p.i JOIN f fb ON fb.i = p.j
-    ),
+    f"""
+    WITH {_SQL_EMB_COV},
     d AS (SELECT i, cov AS var_ FROM cov WHERE i = j)
     SELECT c.i, c.j,
            CASE WHEN di.var_ > 0 AND dj.var_ > 0
@@ -7105,20 +6707,8 @@ def event_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_q(
     "mixture_resample",
-    rf"""
-    WITH per AS (
-      SELECT source, count(*) AS n_docs,
-             CAST(sum(len(list_filter(regexp_split_to_array(text, '\s+'),
-                                      x -> x <> ''))) AS BIGINT) AS tokens
-      FROM documents GROUP BY source
-    ),
-    t AS (
-      SELECT source, n_docs, tokens,
-             sum(tokens) OVER () AS tot_tokens,
-             sum(n_docs) OVER () AS tot_docs
-      FROM per
-    ),
-    w AS (SELECT *, sqrt(tokens / tot_tokens) AS wr FROM t),
+    f"""
+    WITH {_SQL_MIXTURE},
     rates AS (
       SELECT source, n_docs,
              CAST(floor(wr / sum(wr) OVER () * tot_docs / 2) AS BIGINT)
@@ -7150,18 +6740,7 @@ def mixture_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter under a broadcast rate lookup; kept counts are one bounded
     aggregate. Integer ppm rates keep the threshold engine-exact."""
     docs = load_table(spark, "documents", sf_dir)
-    per = docs.groupBy("source").agg(
-        F.count("*").alias("n_docs"),
-        F.sum(F.size(tokens(F.col("text")))).alias("tokens"),
-    )
-    w = Window.partitionBy()  # domain-level frame: #domains rows, constant
-    t = per.select(
-        "source",
-        "n_docs",
-        "tokens",
-        F.sum("tokens").over(w).alias("tot_tokens"),
-        F.sum("n_docs").over(w).alias("tot_docs"),
-    ).withColumn("wr", F.sqrt(F.col("tokens") / F.col("tot_tokens")))
+    t, w = _mixture_frame(spark, sf_dir)
     target = F.floor(
         F.col("wr") / F.sum("wr").over(w) * F.col("tot_docs") / 2
     ).cast("long")
@@ -7512,14 +7091,8 @@ def attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_q(
     "embedding_standardize",
-    """
-    WITH q AS (
-      SELECT vec_id, CAST(u.i - 1 AS INT) AS i,
-             CAST(floor(embedding[u.i] * 8192.0) AS BIGINT) AS qv
-      FROM embeddings,
-           LATERAL (SELECT unnest(generate_series(1, len(embedding))) AS i) u
-      WHERE embedding IS NOT NULL AND len(embedding) > 0
-    ),
+    f"""
+    WITH {_SQL_EMB_QUANT},
     st AS (
       SELECT i, count(*) AS n,
              CAST(sum(qv) AS DOUBLE) AS s1,
@@ -7549,7 +7122,7 @@ def embedding_standardize(spark: SparkSession, sf_dir: str) -> DataFrame:
     immune to FP summation order. Zero-variance dimensions are excluded
     by an exact integer-moment predicate on both engines.
 
-    Degenerate-input contract (ADVICE r4): an all-zero-variance corpus
+    Degenerate-input contract: an all-zero-variance corpus
     leaves the model empty — the oracle's inner join then yields NO
     rows, and so does this side (empty frame, same schema) instead of
     the former AttributeError. And n_dims is computed PER ROW (count of
@@ -7599,12 +7172,12 @@ def embedding_standardize(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-vector join. Each per-dim term is floor()'d to an integer
     # BEFORE the fold, so the sum is order-independent and the fold
     # order is irrelevant to exactness. (The previous 64-term unrolled
-    # when/element_at chain was the slow shape the round-5 dot-kernel
+    # when/element_at chain was the slow shape a dot-kernel
     # measurement exposed: 64 per-row array accesses each re-paying
     # null/bounds checks — the single-walk HOF replaces it, measured
     # 2.4 -> ~1.1 s at sf0.1.)
     d_model = max(model) + 1
-    # Round 13 (guide §4): the model literal is assembled as ONE parsed
+    # The model literal is assembled as ONE parsed
     # SQL string instead of d_model x (2 lit + 2 alias + struct) py4j
     # Column calls — the listcomp was ~2/3 of this query's measured
     # plan-construction time (cProfile: 6.5 of 9.6 s in a contended
@@ -8314,27 +7887,9 @@ def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_q(
     "token_budget_selection",
-    r"""
-    WITH t AS (
-      SELECT doc_id, source,
-             list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') AS toks
-      FROM documents
-    ), m AS (
-      SELECT doc_id, source,
-             CAST(len(toks) AS INT) AS n_tokens,
-             CAST(list_sum(list_transform(toks, x -> length(x))) AS INT) AS total_len,
-             CAST(len(list_filter(toks, x -> x IN ('the', 'a', 'of', 'and'))) AS INT) AS n_stop
-      FROM t
-    ), q AS (
-      SELECT doc_id, source, n_tokens,
-             CASE WHEN n_tokens > 0 THEN
-               ((50 * (CAST(n_tokens AS BIGINT) * least(n_tokens, 200)
-                       + 120 * least(4 * CAST(n_stop AS BIGINT), n_tokens)
-                       + 10 * least(CAST(total_len AS BIGINT), 8 * CAST(n_tokens AS BIGINT)))
-                 + n_tokens) // (2 * CAST(n_tokens AS BIGINT))) / 10000.0
-             ELSE 0.0 END AS quality
-      FROM m
-    ), c AS (
+    f"""
+    WITH {_sql_quality(", source")},
+    c AS (
       SELECT doc_id, source, n_tokens, quality,
              sum(n_tokens) OVER (PARTITION BY source
                                  ORDER BY quality DESC, doc_id
@@ -8357,7 +7912,7 @@ def token_budget_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     is kept iff the running token sum INCLUDING it stays within budget.
 
     Plan — exact histogram prefilter, then one small keyed window (the
-    scale refinement IN CODE, not prose — round-4's standard): quality
+    scale refinement is in the code, not in prose): quality
     is rounded to 4 decimals, so the per-source quality HISTOGRAM
     (groupBy(source, quality) with summed tokens) is bounded by
     |sources| x 10^4 regardless of corpus size. The cut quality per
@@ -9791,16 +9346,8 @@ def stratified_kfold_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_q(
     "holt_trend_user_spend",
-    """
-    WITH RECURSIVE daily AS (
-      SELECT user_id,
-             CAST(epoch(date_trunc('day', ts)) AS BIGINT) AS d,
-             CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS cents
-      FROM events WHERE event_type = 'purchase' GROUP BY 1, 2
-    ),
-    seq AS (SELECT user_id, d, cents,
-                   CAST(row_number() OVER (PARTITION BY user_id ORDER BY d) AS INT) AS t
-            FROM daily),
+    f"""
+    WITH RECURSIVE {_SQL_DAILY_USER_SPEND},
     rec(key, t, x, l, b) AS (
       SELECT user_id, 1, cents, CAST(cents AS DOUBLE), CAST(0 AS DOUBLE)
       FROM seq WHERE t = 1
@@ -9911,15 +9458,7 @@ def time_split_embargo_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 @_q(
     "containment_dedup_pairs",
     f"""
-    WITH {_sql_shingles(4)},
-    freq AS (SELECT sh, count(*) AS df_ FROM sh GROUP BY sh),
-    kept AS (SELECT s.doc_id, s.sh FROM sh s JOIN freq USING (sh) WHERE df_ <= 50),
-    sizes AS (SELECT doc_id, count(*) AS n_sh FROM kept GROUP BY doc_id),
-    pairs AS (
-      SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS shared
-      FROM kept a JOIN kept b USING (sh)
-      WHERE a.doc_id < b.doc_id GROUP BY 1, 2
-    )
+    WITH {_SQL_SHARED_SHINGLES}
     SELECT id1, id2,
            round(shared / s1.n_sh, 6) AS containment_1_in_2,
            round(shared / s2.n_sh, 6) AS containment_2_in_1
@@ -10912,14 +10451,20 @@ def roc_auc_embedding_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def _daily_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(d, c): the daily order count, d the day index — the series the
+    trend rows test."""
+    orders = load_table(spark, "orders", sf_dir)
+    day = F.floor(
+        F.unix_timestamp(F.date_trunc("day", "o_orderdate")) / 86400
+    ).cast("long")
+    return orders.groupBy(day.alias("d")).agg(F.count("*").cast("long").alias("c"))
+
+
 @_q(
     "acf_daily_orders",
-    """
-    WITH daily AS (
-      SELECT CAST(epoch(date_trunc('day', o_orderdate)) AS BIGINT) // 86400 AS d,
-             CAST(count(*) AS BIGINT) AS c
-      FROM orders GROUP BY 1
-    ),
+    f"""
+    WITH {_SQL_DAILY_ORDERS},
     tot AS (
       SELECT CAST(count(*) AS BIGINT) AS n,
              CAST(sum(CAST(c AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS s,
@@ -10962,13 +10507,7 @@ def acf_daily_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-join on day index and the whole statistic costs one
     map-side-combined groupBy over orders plus model-frame joins — no
     window, no sort, no shuffle beyond the daily rollup."""
-    orders = load_table(spark, "orders", sf_dir)
-    day = F.floor(
-        F.unix_timestamp(F.date_trunc("day", "o_orderdate")) / 86400
-    ).cast("long")
-    daily = orders.groupBy(day.alias("d")).agg(
-        F.count("*").cast("long").alias("c")
-    )
+    daily = _daily_orders(spark, sf_dir)
 
     def dec(c: F.Column) -> F.Column:
         return c.cast("decimal(38,0)")
@@ -11011,12 +10550,8 @@ def acf_daily_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_q(
     "theil_sen_trend_orders",
-    """
-    WITH daily AS (
-      SELECT CAST(epoch(date_trunc('day', o_orderdate)) AS BIGINT) // 86400 AS d,
-             CAST(count(*) AS BIGINT) AS c
-      FROM orders GROUP BY 1
-    ),
+    f"""
+    WITH {_SQL_DAILY_ORDERS},
     nd AS (SELECT CAST(count(*) AS BIGINT) AS n_days FROM daily),
     pairs AS (
       SELECT a.d AS d1, b.d AS d2,
@@ -11062,15 +10597,7 @@ def theil_sen_trend_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     (range-sharded exact ranks — parallel shard-local sorts, no global
     sort, no SinglePartition funnel); the pair count m is n(n-1)/2 from
     the day count, not a second action."""
-    orders = load_table(spark, "orders", sf_dir)
-    day = F.floor(
-        F.unix_timestamp(F.date_trunc("day", "o_orderdate")) / 86400
-    ).cast("long")
-    daily = (
-        orders.groupBy(day.alias("d"))
-        .agg(F.count("*").cast("long").alias("c"))
-        .localCheckpoint()
-    )
+    daily = _daily_orders(spark, sf_dir).localCheckpoint()
     n_days = daily.count()
     m = n_days * (n_days - 1) // 2
     right = daily.select(F.col("d").alias("d2"), F.col("c").alias("c2"))
@@ -11083,8 +10610,8 @@ def theil_sen_trend_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     # over defaultParallelism partitions spreads 20-100x finer than the
     # partition count (guide §2.5's rule) and skips the keyless
     # repartition's retry-determinism local sort. Derived from the core
-    # count like every other spread (VERDICT r13 #6 — this was the one
-    # hard-coded 32); the pair frame is day-bounded so it cannot explode.
+    # count like every other spread; the pair frame is day-bounded so it
+    # cannot explode.
     pairs = daily.repartition(
         daily.sparkSession.sparkContext.defaultParallelism, "d"
     ).join(
@@ -11131,12 +10658,8 @@ def theil_sen_trend_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_q(
     "mann_kendall_trend_orders",
-    """
-    WITH daily AS (
-      SELECT CAST(epoch(date_trunc('day', o_orderdate)) AS BIGINT) // 86400 AS d,
-             CAST(count(*) AS BIGINT) AS c
-      FROM orders GROUP BY 1
-    ),
+    f"""
+    WITH {_SQL_DAILY_ORDERS},
     tot AS (SELECT CAST(count(*) AS BIGINT) AS n FROM daily),
     sgn AS (
       SELECT CAST(sum(CASE WHEN b.c > a.c THEN 1
@@ -11173,15 +10696,7 @@ def mann_kendall_trend_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     days² (time-bounded), computed as a broadcast self-join over the
     daily rollup; n(n-1)(2n+5) stays < 2^63 for any plausible range
     (a 3000-year series would still fit)."""
-    orders = load_table(spark, "orders", sf_dir)
-    day = F.floor(
-        F.unix_timestamp(F.date_trunc("day", "o_orderdate")) / 86400
-    ).cast("long")
-    daily = (
-        orders.groupBy(day.alias("d"))
-        .agg(F.count("*").cast("long").alias("c"))
-        .localCheckpoint()
-    )
+    daily = _daily_orders(spark, sf_dir).localCheckpoint()
     tot = daily.agg(F.count("*").cast("long").alias("n"))
     right = daily.select(F.col("d").alias("d2"), F.col("c").alias("c2"))
     sgn = (
@@ -12338,32 +11853,8 @@ def isotonic_calibration_embeddings(
 
 @_q(
     "quantile_normalize_quality",
-    r"""
-    WITH qt AS (SELECT doc_id, source,
-                       list_filter(regexp_split_to_array(text, '\s+'),
-                                   x -> x <> '') AS qtoks
-                FROM documents),
-    qm AS (
-      SELECT doc_id, source,
-             CAST(len(qtoks) AS INT) AS n_tokens,
-             CAST(list_sum(list_transform(qtoks, x -> length(x))) AS INT)
-               AS total_len,
-             CAST(len(list_filter(qtoks,
-                                  x -> x IN ('the', 'a', 'of', 'and')))
-               AS INT) AS n_stop
-      FROM qt
-    ),
-    q AS (
-      SELECT doc_id, source,
-             CASE WHEN n_tokens > 0 THEN
-               ((50 * (CAST(n_tokens AS BIGINT) * least(n_tokens, 200)
-                       + 120 * least(4 * CAST(n_stop AS BIGINT), n_tokens)
-                       + 10 * least(CAST(total_len AS BIGINT),
-                                    8 * CAST(n_tokens AS BIGINT)))
-                 + n_tokens) // (2 * CAST(n_tokens AS BIGINT)))
-             ELSE 0 END AS qv
-      FROM qm
-    ),
+    f"""
+    WITH {_sql_quality(", source")},
     r AS (
       SELECT doc_id, source, qv,
              row_number() OVER (PARTITION BY source ORDER BY qv, doc_id)

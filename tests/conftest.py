@@ -4,8 +4,6 @@ import os
 
 import pytest
 
-os.environ.setdefault("SPARK_GRAFT_CPUS", "8")  # tests: small local parallelism
-
 SF_SMOKE = os.environ.get("SSP_TEST_SF_DIR", "/root/testdata/sf0.001")
 SF_CORRECT = "/root/testdata/sf0.01"
 

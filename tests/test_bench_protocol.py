@@ -18,6 +18,16 @@ def _record(path, cpus, sf, queries):
         json.dump({"cpus": cpus, "sf": sf, "parsed": {"sf": sf, "queries": queries}}, f)
 
 
+def test_fixture_sf_reads_any_directory_name():
+    """sf<N> directories carry their scale factor; any other fixture
+    directory (e.g. a locally built 10x copy) runs with no bands instead
+    of failing before the session starts."""
+    assert bench.fixture_sf("/data/testdata/sf0.1") == 0.1
+    assert bench.fixture_sf("/data/.scalefix/sf10/") == 10.0
+    assert bench.fixture_sf("/tmp/fixture10x") is None
+    assert bench.fixture_sf("/tmp/sf") is None
+
+
 def test_load_bands_is_min_over_prior_artifacts_at_matching_sf():
     bands = bench.load_bands(0.1, 32)
     # the 32-core records are in-repo; every headline staple has a band
