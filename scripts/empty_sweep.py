@@ -17,6 +17,7 @@ sweep on a get_spark session:
 from __future__ import annotations
 
 import os
+import shutil
 import sys
 import tempfile
 
@@ -31,22 +32,24 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
     src = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     d = tempfile.mkdtemp(prefix="empty_sf_")
-    for t in TABLES:
-        df = spark.read.parquet(f"{src}/{t}.parquet")
-        df.limit(0).write.parquet(os.path.join(d, f"{t}.parquet"))
-    from ssp_spark.queries import QUERIES
+    try:
+        for t in TABLES:
+            df = spark.read.parquet(f"{src}/{t}.parquet")
+            df.limit(0).write.parquet(os.path.join(d, f"{t}.parquet"))
+        from ssp_spark.queries import QUERIES
 
-    fails = []
-    for n in QUERIES:
-        try:
-            QUERIES[n](spark, d).count()
-        except Exception as e:  # noqa: BLE001 — diagnostic sweep
-            fails.append(n)
-            print(f"FAIL {n} :: {str(e).splitlines()[0][:140]}", flush=True)
-    print(f"ok: {len(QUERIES) - len(fails)} fail: {len(fails)}")
-    spark.stop()
+        fails = []
+        for n in QUERIES:
+            try:
+                QUERIES[n](spark, d).count()
+            except Exception as e:  # noqa: BLE001 — diagnostic sweep
+                fails.append(n)
+                print(f"FAIL {n} :: {str(e).splitlines()[0][:140]}", flush=True)
+        print(f"ok: {len(QUERIES) - len(fails)} fail: {len(fails)}")
+    finally:
+        spark.stop()
+        shutil.rmtree(d, ignore_errors=True)
     return 1 if fails else 0
-
 
 if __name__ == "__main__":
     raise SystemExit(main())

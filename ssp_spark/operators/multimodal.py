@@ -5,18 +5,27 @@ struct; every decode/feature step is a per-value ``rows`` body run by
 _map_media, one Arrow-batched mapInPandas, so bytes stream through
 executors without driver collection.
 ``decode_image`` is a REAL decoder, stdlib + numpy only, for the
-formats a pure implementation can carry: binary PPM P6; 24-bit BI_RGB
-BMP (bottom-up rows, 4-byte padding); PNG across its FULL static
-matrix (zlib inflate + all five scanline filters; all five color
-types incl. grayscale and gray+alpha; sample depths 1/2/4/8/16;
-Adam7 interlace); and baseline sequential JPEG (SOF0: Huffman entropy
-decode, dequant, float64 iDCT, level shift — grayscale, 4:4:4 and
-chroma-subsampled 4:2:0/4:2:2 YCbCr) — resize_media resizes actual
-pixels for those. Codec profiles a pure implementation cannot
-reasonably carry (webp; progressive/arithmetic JPEG) raise
-NotImplementedError and
-byte-level deterministic fallbacks keep the plumbing testable; a
-deployment swaps PIL/OpenCV into decode_image only.
+formats a pure implementation can carry: netpbm, BMP, PNG across its
+FULL static matrix (zlib inflate + all five scanline filters; all five
+color types; sample depths 1/2/4/8/16; Adam7 interlace), JPEG
+(baseline and progressive Huffman, 8-bit, grayscale / 4:4:4 /
+chroma-subsampled YCbCr; 12-bit grayscale through
+``decode_image_deep``), GIF, baseline TIFF, QOI and lossless WebP —
+resize_media resizes actual pixels for those. Codec profiles a pure
+implementation cannot reasonably carry (lossy webp, arithmetic-coded
+JPEG) raise NotImplementedError and byte-level deterministic fallbacks
+keep the plumbing testable; a deployment swaps PIL/OpenCV into
+decode_image only.
+
+One codec per format: each image format has ONE reader and its writers
+share ONE set of encoding helpers — PNG: _decode_png, with
+_png_filter_line / _png_scanlines / _png_file under all three writers;
+JPEG: _decode_jpeg (one marker loop, one scan walker _jpeg_scan, one
+dequantize + iDCT pass for baseline and progressive frames), with
+_jpeg_header / _jpeg_scan_bytes / _jpeg_put_block under all three
+writers; GIF: the _gif_frames block walk under both _decode_gif and
+iter_gif_frames, with _gif_header / _gif_frame_bytes under both
+writers. A new profile extends these, not a copy of them.
 
 At 100 TB the binary column is usually a pointer (uri, offset, length)
 into an object store rather than inlined bytes; both layouts share the
@@ -122,8 +131,8 @@ def decode_image(data: bytes):
     static-image matrix (all five color types, depths 1-16, Adam7 —
     see _decode_png; alpha stripped, 16-bit high-byte); and baseline
     JPEG (SOF0 Huffman + iDCT, grayscale / 4:4:4 / subsampled
-    4:2:0-family YCbCr — see _decode_jpeg; SOF2 progressive routes to
-    _decode_jpeg_progressive); and GIF87a/89a (real LZW, interlace,
+    4:2:0-family YCbCr — see _decode_jpeg, which also decodes SOF2
+    progressive frames); and GIF87a/89a (real LZW, interlace,
     transparency — see _decode_gif); QOI (all six spec ops, 64-slot
     index, run/diff/luma — see ssp_spark.operators.qoi); and lossless
     WebP (VP8L: full
@@ -233,9 +242,8 @@ def decode_image(data: bytes):
         # (top-down row order), and a corrupt 31-bit dimension would
         # otherwise drive the index grid / palette gather into
         # hundred-GiB allocations that thrash for minutes before
-        # failing (the r12 fuzz pass caught 149-233 s decodes on
-        # 2-byte-flipped RLE8 streams) — the same pre-allocation guard
-        # as the QOI and TIFF tag paths
+        # failing (2-byte flips in an RLE8 stream are enough) — the
+        # same pre-allocation guard as the QOI and TIFF tag paths
         if w <= 0 or h == 0 or abs(h) * w > (1 << 26):
             raise ValueError("BMP: unreasonable dimensions")
         if bpp == 24 and comp == 0:
@@ -266,8 +274,8 @@ def decode_image(data: bytes):
                 # tiny stream declare an arbitrarily huge image of
                 # "undefined" (index-0) pixels, so the global pixel
                 # guard above still admits multi-hundred-MB gathers
-                # from sub-KB corrupt files (the r12 fuzz pass measured
-                # 8.7 s on a 952-byte flip). Bound the declared area by
+                # from sub-KB corrupt files (seconds per decode on a
+                # 1-KB stream with one flipped byte). Bound the declared area by
                 # the input's paint capacity: one run pair covers at
                 # most 255 pixels, so 2048 px/byte is ~16x anything a
                 # real encoder emits; a blank-giant image saved as an
@@ -597,6 +605,75 @@ def _decode_png(data: bytes):
     return img
 
 
+def _png_filter_line(cur, prev, ft: int, bpp: int):
+    """Apply PNG filter ``ft`` to one scanline for ENCODING (the exact
+    inverse of _png_defilter's reconstruction, spec §6 — unsigned byte
+    arithmetic, left-neighbor distance ``bpp``). ``cur``/``prev`` are
+    int64 arrays of the current and prior RAW scanlines; every
+    predictor reads raw bytes only, so Paeth vectorizes here even
+    though its decode is sequential."""
+    import numpy as np
+
+    if ft == 0:
+        return cur & 0xFF
+    if ft == 2:
+        return (cur - prev) & 0xFF
+    if ft not in (1, 3, 4):
+        raise ValueError(f"PNG filter type {ft}")
+    pad = np.zeros(bpp, dtype=np.int64)
+    a = np.concatenate([pad, cur[:-bpp]])  # left
+    if ft == 1:
+        return (cur - a) & 0xFF
+    if ft == 3:
+        return (cur - ((a + prev) >> 1)) & 0xFF
+    c = np.concatenate([pad, prev[:-bpp]])  # upper left
+    p = a + prev - c
+    pa, pb, pc = np.abs(p - a), np.abs(p - prev), np.abs(p - c)
+    pr = np.where((pa <= pb) & (pa <= pc), a, np.where(pb <= pc, prev, c))
+    return (cur - pr) & 0xFF
+
+
+def _png_scanlines(lines, fts, bpp: int) -> bytes:
+    """The filtered scanlines of one image or Adam7 pass: ``lines`` is
+    the (n, stride) array of raw scanline bytes, ``fts`` the filter type
+    of each row; every row is written as its filter-type byte then the
+    filtered bytes, the first row predicting from a zero row."""
+    import numpy as np
+
+    lines = np.asarray(lines, dtype=np.int64)
+    raw = bytearray()
+    prev = np.zeros(lines.shape[1], dtype=np.int64)
+    for r, cur in enumerate(lines):
+        ft = fts[r]
+        line = _png_filter_line(cur, prev, ft, bpp)
+        raw.append(ft)
+        raw += line.astype(np.uint8).tobytes()
+        prev = cur
+    return bytes(raw)
+
+
+def _png_file(w: int, h: int, depth: int, color_type: int, interlace: int,
+              raw: bytes, plte: bytes | None = None) -> bytes:
+    """Signature, IHDR, optional PLTE, one zlib-deflated IDAT of the
+    filtered scanlines ``raw``, IEND — each chunk length-prefixed and
+    CRC-32 suffixed (spec §5.3)."""
+    import struct
+    import zlib
+
+    def chunk(ctype: bytes, body: bytes) -> bytes:
+        crc = zlib.crc32(ctype + body) & 0xFFFFFFFF
+        return struct.pack(">I", len(body)) + ctype + body + struct.pack(">I", crc)
+
+    ihdr = struct.pack(">IIBBBBB", w, h, depth, color_type, 0, 0, interlace)
+    return (
+        b"\x89PNG\r\n\x1a\n"
+        + chunk(b"IHDR", ihdr)
+        + (chunk(b"PLTE", plte) if plte is not None else b"")
+        + chunk(b"IDAT", zlib.compress(raw))
+        + chunk(b"IEND", b"")
+    )
+
+
 def encode_png(img, filters=None) -> bytes:
     """Minimal REAL PNG writer (stdlib zlib/struct only): 8-bit RGB,
     non-interlaced, one zlib-deflated IDAT. ``filters`` picks the filter
@@ -605,61 +682,14 @@ def encode_png(img, filters=None) -> bytes:
     against _decode_png's — the golden tests pin decode against
     hand-assembled fixed bytes, and the driver-gated query uses this
     writer only to SOURCE real deflate streams from fixture text."""
-    import struct
-    import zlib
-
     import numpy as np
 
     a = np.asarray(img, dtype=np.uint8)
     h, w, ch = a.shape
     if ch != 3:
         raise ValueError("encode_png writes 8-bit RGB only")
-    stride = w * 3
-    flat = a.reshape(h, stride).astype(np.int64)
-    filters = list(filters) if filters is not None else [0] * h
-    raw = bytearray()
-    prev = np.zeros(stride, dtype=np.int64)
-    for r in range(h):
-        cur = flat[r]
-        ft = filters[r]
-        if ft == 0:
-            line = cur
-        elif ft == 1:
-            left = np.concatenate([np.zeros(3, dtype=np.int64), cur[:-3]])
-            line = (cur - left) & 0xFF
-        elif ft == 2:
-            line = (cur - prev) & 0xFF
-        elif ft == 3:
-            left = np.concatenate([np.zeros(3, dtype=np.int64), cur[:-3]])
-            line = (cur - ((left + prev) >> 1)) & 0xFF
-        elif ft == 4:
-            line = np.empty(stride, dtype=np.int64)
-            for x in range(stride):
-                aa = int(cur[x - 3]) if x >= 3 else 0
-                bb = int(prev[x])
-                cc = int(prev[x - 3]) if x >= 3 else 0
-                p = aa + bb - cc
-                pa, pb, pc = abs(p - aa), abs(p - bb), abs(p - cc)
-                pr = aa if (pa <= pb and pa <= pc) else (bb if pb <= pc else cc)
-                line[x] = (cur[x] - pr) & 0xFF
-        else:
-            raise ValueError(f"PNG filter type {ft}")
-        raw.append(ft)
-        raw += bytes(int(v) for v in line)
-        prev = cur
-
-    def chunk(ctype: bytes, body: bytes) -> bytes:
-        crc = zlib.crc32(ctype + body) & 0xFFFFFFFF
-        return struct.pack(">I", len(body)) + ctype + body + struct.pack(">I", crc)
-
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-    idat = zlib.compress(bytes(raw))
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", idat)
-        + chunk(b"IEND", b"")
-    )
+    fts = list(filters) if filters is not None else [0] * h
+    return _png_file(w, h, 8, 2, 0, _png_scanlines(a.reshape(h, w * 3), fts, 3))
 
 
 def encode_png_palette(indices, palette, filters=None) -> bytes:
@@ -673,9 +703,6 @@ def encode_png_palette(indices, palette, filters=None) -> bytes:
     1-byte-pixel geometry the truecolor goldens cannot reach. Used by
     the driver-gated palette query to source real deflate streams; the
     decode goldens stay hand-assembled so shared bugs cannot cancel."""
-    import struct
-    import zlib
-
     import numpy as np
 
     a = np.asarray(indices, dtype=np.uint8)
@@ -685,82 +712,8 @@ def encode_png_palette(indices, palette, filters=None) -> bytes:
         raise ValueError("palette must be (N<=256, 3) uint8")
     if int(a.max(initial=0)) >= p.shape[0]:
         raise ValueError("palette index out of range")
-    flat = a.astype(np.int64)
-    filters = list(filters) if filters is not None else [0] * h
-    raw = bytearray()
-    prev = np.zeros(w, dtype=np.int64)
-    for r in range(h):
-        cur = flat[r]
-        ft = filters[r]
-        if ft == 0:
-            line = cur
-        elif ft == 1:
-            left = np.concatenate([np.zeros(1, dtype=np.int64), cur[:-1]])
-            line = (cur - left) & 0xFF
-        elif ft == 2:
-            line = (cur - prev) & 0xFF
-        elif ft == 3:
-            left = np.concatenate([np.zeros(1, dtype=np.int64), cur[:-1]])
-            line = (cur - ((left + prev) >> 1)) & 0xFF
-        elif ft == 4:
-            line = np.empty(w, dtype=np.int64)
-            for x in range(w):
-                aa = int(cur[x - 1]) if x >= 1 else 0
-                bb = int(prev[x])
-                cc = int(prev[x - 1]) if x >= 1 else 0
-                pp = aa + bb - cc
-                pa, pb, pc = abs(pp - aa), abs(pp - bb), abs(pp - cc)
-                pr = aa if (pa <= pb and pa <= pc) else (bb if pb <= pc else cc)
-                line[x] = (cur[x] - pr) & 0xFF
-        else:
-            raise ValueError(f"PNG filter type {ft}")
-        raw.append(ft)
-        raw += bytes(int(v) for v in line)
-        prev = cur
-
-    def chunk(ctype: bytes, body: bytes) -> bytes:
-        crc = zlib.crc32(ctype + body) & 0xFFFFFFFF
-        return struct.pack(">I", len(body)) + ctype + body + struct.pack(">I", crc)
-
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 3, 0, 0, 0)
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"PLTE", p.tobytes())
-        + chunk(b"IDAT", zlib.compress(bytes(raw)))
-        + chunk(b"IEND", b"")
-    )
-
-
-def _png_filter_line(cur, prev, ft: int, bpp: int):
-    """Apply PNG filter ``ft`` to one scanline for ENCODING (the exact
-    inverse of _png_defilter's reconstruction, spec §6 — unsigned byte
-    arithmetic, left-neighbor distance ``bpp``). ``cur``/``prev`` are
-    int64 arrays of the current and prior RECONSTRUCTED scanlines."""
-    import numpy as np
-
-    if ft == 0:
-        return cur & 0xFF
-    if ft in (1, 3):
-        left = np.concatenate([np.zeros(bpp, dtype=np.int64), cur[:-bpp]])
-        if ft == 1:
-            return (cur - left) & 0xFF
-        return (cur - ((left + prev) >> 1)) & 0xFF
-    if ft == 2:
-        return (cur - prev) & 0xFF
-    if ft == 4:
-        n = len(cur)
-        line = np.empty(n, dtype=np.int64)
-        for x in range(n):
-            a = int(cur[x - bpp]) if x >= bpp else 0
-            b = int(prev[x])
-            c = int(prev[x - bpp]) if x >= bpp else 0
-            p = a + b - c
-            pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-            pr = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-            line[x] = (cur[x] - pr) & 0xFF
-        return line
-    raise ValueError(f"PNG filter type {ft}")
+    fts = list(filters) if filters is not None else [0] * h
+    return _png_file(w, h, 8, 3, 0, _png_scanlines(a, fts, 1), plte=p.tobytes())
 
 
 def encode_png_gray16_adam7(img, filters=None) -> bytes:
@@ -771,69 +724,47 @@ def encode_png_gray16_adam7(img, filters=None) -> bytes:
     with bpp=2 — ``filters`` indexes a GLOBAL scanline counter across
     passes (default cycling 0..4), so all five filter types run
     somewhere in the pass structure of any image tall enough. One
-    stream exercises the three round-9 decoder additions at once
-    (grayscale colorize, 16-bit samples, per-pass interlace
-    defiltering); used by the driver query to source real deflate
-    streams, while the decode goldens stay hand-assembled so writer
-    and reader bugs cannot cancel."""
-    import struct
-    import zlib
-
+    stream exercises grayscale colorize, 16-bit samples and per-pass
+    interlace defiltering in the decoder at once; used by the driver
+    query to source real deflate streams, while the decode goldens stay
+    hand-assembled so writer and reader bugs cannot cancel."""
     import numpy as np
 
     a = np.asarray(img, dtype=np.uint16)
     h, w = a.shape
-    if filters is not None:
-        n_scan = sum(
-            a[y0::dy, x0::dx].shape[0]
-            for x0, y0, dx, dy in _ADAM7
-            if a[y0::dy, x0::dx].size
+    passes = [a[y0::dy, x0::dx] for x0, y0, dx, dy in _ADAM7]
+    passes = [sub for sub in passes if sub.size]  # empty passes write nothing (§8.2)
+    n_scan = sum(sub.shape[0] for sub in passes)
+    if filters is None:
+        fts = [s % 5 for s in range(n_scan)]
+    elif len(filters) < n_scan:
+        raise ValueError(
+            f"filters has {len(filters)} entries but the Adam7 pass "
+            f"structure of a {h}x{w} image has {n_scan} scanlines"
         )
-        if len(filters) < n_scan:
-            raise ValueError(
-                f"filters has {len(filters)} entries but the Adam7 pass "
-                f"structure of a {h}x{w} image has {n_scan} scanlines"
-            )
-    raw = bytearray()
+    else:
+        fts = [int(f) for f in filters[:n_scan]]
+    raw = b""
     scan = 0
-    for x0, y0, dx, dy in _ADAM7:
-        sub = a[y0::dy, x0::dx]
-        if sub.shape[0] == 0 or sub.shape[1] == 0:
-            continue  # empty pass writes no scanlines (spec §8.2)
-        prev = np.zeros(sub.shape[1] * 2, dtype=np.int64)
-        for r in range(sub.shape[0]):
-            cur = np.frombuffer(
-                sub[r].astype(">u2").tobytes(), dtype=np.uint8
-            ).astype(np.int64)
-            ft = int(filters[scan]) if filters is not None else scan % 5
-            line = _png_filter_line(cur, prev, ft, 2)
-            raw.append(ft)
-            raw += bytes(int(v) for v in line)
-            prev = cur
-            scan += 1
-
-    def chunk(ctype: bytes, body: bytes) -> bytes:
-        crc = zlib.crc32(ctype + body) & 0xFFFFFFFF
-        return struct.pack(">I", len(body)) + ctype + body + struct.pack(">I", crc)
-
-    ihdr = struct.pack(">IIBBBBB", w, h, 16, 0, 0, 0, 1)
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(bytes(raw)))
-        + chunk(b"IEND", b"")
-    )
+    for sub in passes:
+        n = sub.shape[0]
+        lines = sub.astype(">u2").view(np.uint8).reshape(n, -1)
+        raw += _png_scanlines(lines, fts[scan : scan + n], 2)
+        scan += n
+    return _png_file(w, h, 16, 0, 1, raw)
 
 
 # ---------------------------------------------------------------------------
-# Baseline JPEG (ITU-T T.81): stdlib + numpy decoder and coefficient-level
-# writers. Scope (disclosed): baseline sequential DCT (SOF0), 8-bit, Huffman
-# entropy coding, grayscale or YCbCr — including chroma-subsampled frames
-# (4:2:0 / 4:2:2 / any dividing sampling factors <= 4; round-10 addition)
-# with nearest-neighbor replication upsampling. Progressive (SOF2),
-# arithmetic coding, 12-bit precision, multi-scan baseline, and
-# non-dividing sampling factors raise NotImplementedError — the same
-# documented-boundary contract as the PNG profiles.
+# JPEG (ITU-T T.81): stdlib + numpy decoder and coefficient-level writers.
+# One reader (_decode_jpeg: one marker loop, one scan walker, one
+# dequantize + iDCT pass) covers baseline sequential (SOF0, 8- and 12-bit)
+# and progressive (SOF2, 8-bit) Huffman frames, grayscale or YCbCr with
+# any dividing sampling factors <= 4 (nearest-neighbor replication
+# upsampling). The three writers share one segment writer and one DC/AC
+# Huffman coder. Arithmetic coding, lossless/hierarchical frames,
+# multi-scan baseline and non-dividing sampling factors raise
+# NotImplementedError — the same documented-boundary contract as the PNG
+# profiles.
 # ---------------------------------------------------------------------------
 
 # zigzag scan order: _JPEG_ZIGZAG[k] = (row, col) of the k-th coefficient
@@ -883,6 +814,13 @@ def _huff_codes(bits: list[int], vals: list[int]) -> dict[int, str]:
             k += 1
         code <<= 1
     return out
+
+
+# flat (row * 8 + col) index of each zigzag position, and the writers'
+# symbol -> code maps for the Annex K.3 tables
+_JPEG_ZZ_FLAT = [r * 8 + c for r, c in _JPEG_ZIGZAG]
+_JPEG_DC_CODES = _huff_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
+_JPEG_AC_CODES = _huff_codes(_JPEG_AC_BITS, _JPEG_AC_VALS)
 
 
 def _idct_matrix():
@@ -946,255 +884,35 @@ def _extend(v: int, t: int) -> int:
 
 
 def _decode_jpeg(data: bytes, deep: bool = False):
-    """Pure stdlib+numpy baseline JPEG decoder (ITU-T T.81): marker
-    parse, DQT/DHT tables, Huffman-decoded DC diffs (EXTEND) + AC
-    run/size with EOB/ZRL, dequantize, de-zigzag, float64 separable
-    iDCT (exact for DC-only blocks — the driver-gate contract), +128
-    level shift, clamp; grayscale replicated to (h, w, 3), 3-component
-    YCbCr converted with the JFIF coefficients (np.round — half-even at
-    an exact .5, which no oracle replays: the color path is pinned by
-    unit goldens, the driver-gate contract rides grayscale DC blocks).
-    Restart markers honored (DC predictors reset, bitstream realigned).
-    Chroma-subsampled frames (4:2:0 / 4:2:2 / any dividing sampling
-    factors <= 4 — round-10 addition, VERDICT r9 #7: the dominant
-    real-corpus JPEG form) decode via the T.81 A.2.3 interleaved MCU
-    structure (hi x vi blocks per component per MCU into per-component
-    subsampled planes, MCU-padded then cropped) with nearest-neighbor
-    sample replication upsampling (T.81 mandates no filter; replication
-    is the integer-exact, oracle-replayable choice). Progressive /
-    arithmetic / 12-bit / multi-scan-baseline / non-dividing sampling
-    factors raise NotImplementedError by the module's
-    documented-boundary contract. ``deep=True`` (the
-    decode_image_deep entry) admits 12-bit grayscale frames, decoded
-    with a 2048 level shift and 0..4095 clamp to a (h, w) uint16
-    plane."""
+    """Pure stdlib+numpy JPEG decoder (ITU-T T.81), one marker loop for
+    baseline sequential (SOF0) and progressive (SOF2) Huffman frames.
+    DQT/DHT/DRI segments may come anywhere before the scans that use
+    them (progressive files redefine tables between scans). Every scan
+    runs through _jpeg_scan into per-component (bv, bh, 64) zigzag
+    coefficient arrays; a baseline frame is one scan carrying DC and AC
+    together (Ss=0, Se=63, Ah=Al=0) and decoding stops after it, a
+    progressive frame accumulates every scan up to EOI. One dequantize
+    + de-zigzag + float64 separable iDCT pass (exact for DC-only blocks
+    — the driver-gate contract) then renders the planes, level-shifted
+    by 2^(P-1) and clamped to 0..2^P-1 for frame precision P, and
+    _jpeg_finish upsamples, crops and converts them.
+
+    Grayscale, 3-component YCbCr and chroma-subsampled frames (4:2:0 /
+    4:2:2 / any dividing sampling factors <= 4, the common camera form)
+    decode; arithmetic / lossless / hierarchical frames, baseline frames
+    split over several scans, and non-dividing sampling factors raise
+    NotImplementedError by the module's documented-boundary contract.
+    12-bit precision is baseline-only and needs ``deep=True`` (the
+    decode_image_deep entry): a 12-bit grayscale frame decodes to a
+    (h, w) uint16 plane, which decode_image's (h, w, 3) uint8 contract
+    cannot carry."""
     import numpy as np
 
     qt: dict[int, "np.ndarray"] = {}
     huff: dict[tuple[int, int], dict[str, int]] = {}
-    frame = None
+    frame = coeffs = None
+    progressive = scanned = False
     restart = 0
-    pos = 2
-    while pos + 4 <= len(data):
-        if data[pos] != 0xFF:
-            raise ValueError("bad JPEG marker stream")
-        marker = data[pos + 1]
-        if marker == 0xD9:  # EOI
-            break
-        seglen = int.from_bytes(data[pos + 2 : pos + 4], "big")
-        body = data[pos + 4 : pos + 2 + seglen]
-        if marker == 0xDB:  # DQT
-            i = 0
-            while i < len(body):
-                pq, tq = body[i] >> 4, body[i] & 0xF
-                if pq != 0:
-                    raise NotImplementedError("16-bit JPEG quant tables")
-                tbl = np.zeros((8, 8), dtype=np.int64)
-                for k in range(64):
-                    tbl[_JPEG_ZIGZAG[k]] = body[i + 1 + k]
-                qt[tq] = tbl
-                i += 65
-        elif marker == 0xC4:  # DHT
-            i = 0
-            while i < len(body):
-                tc, th = body[i] >> 4, body[i] & 0xF
-                bits = list(body[i + 1 : i + 17])
-                n = sum(bits)
-                vals = list(body[i + 17 : i + 17 + n])
-                huff[(tc, th)] = {
-                    c: s for s, c in _huff_codes(bits, vals).items()
-                }
-                i += 17 + n
-        elif marker == 0xC0:  # SOF0 baseline
-            prec, h, w, nc = body[0], int.from_bytes(body[1:3], "big"), int.from_bytes(body[3:5], "big"), body[5]
-            if prec not in (8, 12):
-                raise ValueError(f"JPEG precision {prec}")
-            if prec == 12 and not deep:
-                # 12-bit cannot fit decode_image's (h, w, 3) uint8
-                # contract; decode_image_deep carries it losslessly
-                raise NotImplementedError("12-bit JPEG (use decode_image_deep)")
-            comps = []
-            for c in range(nc):
-                cid, hv, tq = body[6 + 3 * c], body[7 + 3 * c], body[8 + 3 * c]
-                hi, vi = hv >> 4, hv & 0xF
-                if not (1 <= hi <= 4 and 1 <= vi <= 4):
-                    raise ValueError(f"JPEG sampling factors {hi}x{vi}")
-                comps.append((cid, hi, vi, tq))
-            hmax = max(c[1] for c in comps)
-            vmax = max(c[2] for c in comps)
-            if any(hmax % c[1] or vmax % c[2] for c in comps):
-                # T.81 permits this, but upsampling would be fractional;
-                # no mainstream encoder emits it (disclosed boundary)
-                raise NotImplementedError(
-                    "JPEG with non-dividing sampling factors"
-                )
-            frame = (h, w, comps, hmax, vmax, prec)
-        elif marker == 0xC2:  # SOF2 progressive (Huffman)
-            # round-10 addition: hand the whole stream to the
-            # multi-scan coefficient-accumulation decoder
-            return _decode_jpeg_progressive(data)
-        elif marker in (0xC1, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
-            raise NotImplementedError("non-baseline JPEG (arithmetic/lossless/differential)")
-        elif marker == 0xDD:  # DRI
-            restart = int.from_bytes(body[0:2], "big")
-        elif marker == 0xDA:  # SOS
-            if frame is None:
-                raise ValueError("JPEG SOS before SOF0")
-            h, w, comps, hmax, vmax, prec = frame
-            half, maxv = float(1 << (prec - 1)), (1 << prec) - 1
-            ns = body[0]
-            if ns != len(comps):
-                # baseline permits per-component scans; every camera/
-                # libjpeg baseline file is single-scan interleaved
-                raise NotImplementedError("multi-scan baseline JPEG")
-            ctabs = {}
-            for c in range(ns):
-                cs, tt = body[1 + 2 * c], body[2 + 2 * c]
-                ctabs[cs] = (tt >> 4, tt & 0xF)
-            br = _BitReader(data, pos + 2 + seglen)
-            m = _idct_matrix()
-            # MCU grid: one MCU covers 8*hmax x 8*vmax source pixels
-            # (T.81 A.2.3); component i contributes hi x vi blocks per
-            # MCU into its OWN (subsampled) plane, padded to whole MCUs.
-            mcx = (w + 8 * hmax - 1) // (8 * hmax)
-            mcy = (h + 8 * vmax - 1) // (8 * vmax)
-            planes = [
-                np.zeros((mcy * 8 * vi, mcx * 8 * hi), dtype=np.int64)
-                for (_, hi, vi, _) in comps
-            ]
-            pred = [0] * len(comps)
-            nmcu = mcx * mcy
-            for mcu in range(nmcu):
-                if restart and mcu and mcu % restart == 0:
-                    p = br.byte_align_pos()
-                    if not (data[p] == 0xFF and 0xD0 <= data[p + 1] <= 0xD7):
-                        raise ValueError("expected JPEG restart marker")
-                    br = _BitReader(data, p + 2)
-                    pred = [0] * len(comps)
-                myy, mxx = divmod(mcu, mcx)
-                for ci, (cid, hi, vi, tq) in enumerate(comps):
-                    dc_t, ac_t = ctabs[cid]
-                    for byy in range(vi):
-                        for bxx in range(hi):
-                            zz = np.zeros(64, dtype=np.int64)
-                            t = _huff_decode(br, huff[(0, dc_t)])
-                            if t > 16:
-                                # T.81 F.1: DC categories stop at 11
-                                # (8-bit) / 15 (12-bit). A corrupt DHT
-                                # can define symbols up to 255, and
-                                # read_bits(255) makes the python-int
-                                # predictor overflow the int64 store
-                                # (r13 fuzz find: OverflowError is
-                                # outside the kernels' catch set)
-                                raise ValueError("JPEG DC category out of range")
-                            diff = _extend(br.read_bits(t), t) if t else 0
-                            pred[ci] += diff
-                            zz[0] = pred[ci]
-                            k = 1
-                            while k < 64:
-                                rs = _huff_decode(br, huff[(1, ac_t)])
-                                r, s = rs >> 4, rs & 0xF
-                                if s == 0:
-                                    if r == 15:
-                                        k += 16  # ZRL
-                                        continue
-                                    break  # EOB
-                                k += r
-                                if k > 63:
-                                    raise ValueError("JPEG AC run past block end")
-                                zz[k] = _extend(br.read_bits(s), s)
-                                k += 1
-                            coeff = np.zeros((8, 8), dtype=np.float64)
-                            for kk in range(64):
-                                coeff[_JPEG_ZIGZAG[kk]] = (
-                                    zz[kk] * qt[tq][_JPEG_ZIGZAG[kk]]
-                                )
-                            block = m.T @ coeff @ m
-                            px = np.clip(
-                                np.round(block + half), 0, maxv
-                            ).astype(np.int64)
-                            r0 = (myy * vi + byy) * 8
-                            c0 = (mxx * hi + bxx) * 8
-                            planes[ci][r0 : r0 + 8, c0 : c0 + 8] = px
-            return _jpeg_finish(planes, comps, hmax, vmax, h, w, prec)
-        # APPn/COM/other: skip
-        pos += 2 + seglen
-    raise ValueError("JPEG missing SOS scan")
-
-
-def _jpeg_finish(planes, comps, hmax: int, vmax: int, h: int, w: int,
-                 prec: int = 8):
-    """Shared decoder tail: upsample each subsampled plane to full
-    resolution by sample REPLICATION (nearest-neighbor — the
-    integer-exact, oracle-replayable choice; T.81 does not mandate a
-    filter), crop the MCU padding, then grayscale-replicate or
-    JFIF-convert. 12-bit grayscale returns the (h, w) uint16 plane
-    losslessly (the decode_image_deep contract); 12-bit color stays a
-    disclosed boundary."""
-    import numpy as np
-
-    planes = [
-        np.repeat(np.repeat(p, vmax // vi, axis=0), hmax // hi, axis=1)[:h, :w]
-        for p, (_, hi, vi, _) in zip(planes, comps)
-    ]
-    if prec == 12:
-        if len(comps) == 1:
-            return np.ascontiguousarray(planes[0].astype(np.uint16))
-        raise NotImplementedError("12-bit color JPEG")
-    if len(comps) == 1:
-        g = planes[0].astype(np.uint8)
-        return np.ascontiguousarray(np.stack([g, g, g], axis=2))
-    if len(comps) == 3:
-        y, cb, cr = (p.astype(np.float64) for p in planes)
-        r = y + 1.402 * (cr - 128.0)
-        g = y - 0.344136 * (cb - 128.0) - 0.714136 * (cr - 128.0)
-        b = y + 1.772 * (cb - 128.0)
-        rgb = np.stack([r, g, b], axis=2)
-        return np.clip(np.round(rgb), 0, 255).astype(np.uint8)
-    raise NotImplementedError(f"JPEG with {len(comps)} components")
-
-
-def _decode_jpeg_progressive(data: bytes):
-    """Progressive (SOF2, Huffman) JPEG decoder — the round-10 closure
-    of the codec's last major disclosed boundary. Coefficients
-    accumulate in zigzag-order per-block arrays across ALL scans, then
-    one dequant + iDCT pass renders the final image (this decoder
-    targets the complete stream, not intermediate previews):
-
-    - DC scans (Ss=Se=0): first pass (Ah=0) Huffman-decodes
-      differential DC with EXTEND and stores ``diff << Al`` (T.81
-      G.1.2.1, successive-approximation point transform); refinement
-      passes (Ah>0) append one raw bit per block at position Al.
-      Multi-component DC scans interleave by MCU exactly like baseline
-      (hi x vi blocks per component per MCU).
-    - AC scans (Ss>=1): single-component by spec (B.2.3); blocks walk
-      the COMPONENT's own ceil(comp_w/8) x ceil(comp_h/8) raster (not
-      the MCU-padded grid). First pass (Ah=0) is run/size with EOBn
-      end-of-band runs — code (r,0), r<15 means EOB over
-      (1<<r)+extra-1 FOLLOWING blocks — ZRL, and ``value << Al``
-      (G.1.2.2). Refinement passes (Ah>0) implement the G.1.2.3
-      correction-bit algorithm: newly-significant coefficients arrive
-      as s=1 codes with a sign bit, every already-nonzero coefficient
-      crossed (including during EOB runs) consumes one correction bit
-      appended at Al.
-    - Restart markers reset the DC predictors AND the EOB run and
-      realign the reader; the interval counts MCUs (interleaved) or
-      blocks (single-component scans), per scan.
-    - DQT/DHT/DRI segments may redefine tables between scans.
-
-    Arithmetic coding and 12-bit precision still raise
-    NotImplementedError (documented boundary). Goldens: hand-assembled
-    multi-scan bitstreams in tests/test_multimodal.py pin DC
-    refinement, AC spectral selection, EOB runs, and AC
-    successive-approximation correction bits independently of the
-    progressive writer."""
-    import numpy as np
-
-    qt: dict[int, "np.ndarray"] = {}
-    huff: dict[tuple[int, int], dict[str, int]] = {}
-    frame = None
-    restart = 0
-    coeffs = None  # per component: (bv_pad, bh_pad, 64) zigzag-order
     pos = 2
     while pos + 4 <= len(data):
         if data[pos] != 0xFF:
@@ -1224,99 +942,174 @@ def _decode_jpeg_progressive(data: bytes):
                 vals = list(body[i + 17 : i + 17 + n])
                 huff[(tc, th)] = {c: s for s, c in _huff_codes(bits, vals).items()}
                 i += 17 + n
-        elif marker == 0xC2:  # SOF2
-            prec = body[0]
-            h = int.from_bytes(body[1:3], "big")
-            w = int.from_bytes(body[3:5], "big")
-            nc = body[5]
-            if prec != 8:
-                raise NotImplementedError("12-bit JPEG")
-            comps = []
-            for c in range(nc):
-                cid, hv, tq = body[6 + 3 * c], body[7 + 3 * c], body[8 + 3 * c]
-                hi, vi = hv >> 4, hv & 0xF
-                if not (1 <= hi <= 4 and 1 <= vi <= 4):
-                    raise ValueError(f"JPEG sampling factors {hi}x{vi}")
-                comps.append((cid, hi, vi, tq))
-            hmax = max(c[1] for c in comps)
-            vmax = max(c[2] for c in comps)
-            if any(hmax % c[1] or vmax % c[2] for c in comps):
-                raise NotImplementedError("JPEG with non-dividing sampling factors")
+        elif marker in (0xC0, 0xC2):  # SOF0 baseline / SOF2 progressive
+            progressive = marker == 0xC2
+            frame = _jpeg_frame(body, progressive, deep)
+            h, w, comps, hmax, vmax, _ = frame
+            # one (bv, bh, 64) array per component over the MCU-padded
+            # grid: one MCU covers 8*hmax x 8*vmax source pixels and
+            # component i contributes hi x vi blocks per MCU (T.81 A.2.3)
             mcx = (w + 8 * hmax - 1) // (8 * hmax)
             mcy = (h + 8 * vmax - 1) // (8 * vmax)
-            frame = (h, w, comps, hmax, vmax, mcx, mcy)
             coeffs = [
                 np.zeros((mcy * vi, mcx * hi, 64), dtype=np.int64)
                 for (_, hi, vi, _) in comps
             ]
-        elif marker in (0xC9, 0xCA, 0xCB):
-            raise NotImplementedError("arithmetic-coded JPEG")
+        elif marker in (0xC1, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
+            raise NotImplementedError("non-baseline JPEG (arithmetic/lossless/differential)")
         elif marker == 0xDD:  # DRI
             restart = int.from_bytes(body[0:2], "big")
         elif marker == 0xDA:  # SOS
             if frame is None:
-                raise ValueError("JPEG SOS before SOF2")
-            h, w, comps, hmax, vmax, mcx, mcy = frame
-            ns = body[0]
-            scomps = []  # (component index, dc table, ac table)
-            for c in range(ns):
-                cs, tt = body[1 + 2 * c], body[2 + 2 * c]
-                ci = next(
-                    (i for i, cc in enumerate(comps) if cc[0] == cs), None
-                )
-                if ci is None:
-                    # a bare next() here raised StopIteration on corrupt
-                    # scans (r13 fuzz find, splice mode) — outside the
-                    # kernels' catch set, and silently iteration-ending
-                    # if a decode is ever driven from a generator
-                    raise ValueError("JPEG scan references unknown component")
-                scomps.append((ci, tt >> 4, tt & 0xF))
-            ss, se = body[1 + 2 * ns], body[2 + 2 * ns]
-            ahal = body[3 + 2 * ns]
-            ah, al = ahal >> 4, ahal & 0xF
-            br = _BitReader(data, pos + 2 + seglen)
-            pos = _jpeg_progressive_scan(
-                data, br, coeffs, comps, scomps, ss, se, ah, al,
-                restart, h, w, hmax, vmax, mcx, mcy, huff,
-            )
-            continue  # pos already advanced past the scan's entropy data
+                raise ValueError("JPEG SOS before SOF")
+            pos = _jpeg_scan(data, pos + 2 + seglen, body, frame, coeffs,
+                             progressive, restart, huff)
+            scanned = True
+            if not progressive:
+                break  # a baseline frame is its one scan
+            continue  # pos already points past the scan's entropy data
+        # APPn/COM/other: skip
         pos += 2 + seglen
-    if frame is None or coeffs is None:
-        raise ValueError("progressive JPEG missing SOF2/scan data")
-    h, w, comps, hmax, vmax, mcx, mcy = frame
+    if frame is None or not (progressive or scanned):
+        # a progressive frame renders whatever scans arrived (none: flat
+        # grey); a baseline frame needs its scan
+        raise ValueError("JPEG missing SOS scan")
+    h, w, comps, hmax, vmax, prec = frame
+    half, maxv = float(1 << (prec - 1)), (1 << prec) - 1
     m = _idct_matrix()
     planes = []
-    for ci, (cid, hi, vi, tq) in enumerate(comps):
-        bv, bh = coeffs[ci].shape[0], coeffs[ci].shape[1]
+    for cf, (_, _, _, tq) in zip(coeffs, comps):
+        bv, bh = cf.shape[0], cf.shape[1]
+        nat = np.zeros((bv, bh, 64), dtype=np.float64)
+        nat[:, :, _JPEG_ZZ_FLAT] = cf * qt[tq].reshape(64)[_JPEG_ZZ_FLAT]
+        nat = nat.reshape(bv, bh, 8, 8)
         plane = np.zeros((bv * 8, bh * 8), dtype=np.int64)
-        q = qt[tq]
         for r in range(bv):
             for c in range(bh):
-                zz = coeffs[ci][r, c]
-                coeff = np.zeros((8, 8), dtype=np.float64)
-                for kk in range(64):
-                    coeff[_JPEG_ZIGZAG[kk]] = zz[kk] * q[_JPEG_ZIGZAG[kk]]
-                block = m.T @ coeff @ m
+                block = m.T @ nat[r, c] @ m
                 plane[r * 8 : r * 8 + 8, c * 8 : c * 8 + 8] = np.clip(
-                    np.round(block + 128.0), 0, 255
+                    np.round(block + half), 0, maxv
                 ).astype(np.int64)
         planes.append(plane)
-    return _jpeg_finish(planes, comps, hmax, vmax, h, w)
+    return _jpeg_finish(planes, comps, hmax, vmax, h, w, prec)
 
 
-def _jpeg_progressive_scan(
-    data, br, coeffs, comps, scomps, ss, se, ah, al,
-    restart, h, w, hmax, vmax, mcx, mcy, huff,
-):
-    """Decode ONE progressive scan into the coefficient arrays; returns
-    the byte position just past the scan's entropy data (for the outer
-    marker loop). See _decode_jpeg_progressive for the algorithm map."""
-    interleaved = len(scomps) > 1
-    if ss == 0 and se != 0:
-        raise ValueError("progressive scan mixes DC and AC")
-    if ss > 0 and interleaved:
-        raise ValueError("progressive AC scan must be single-component")
-    pred = [0] * len(scomps)
+def _jpeg_frame(body: bytes, progressive: bool, deep: bool):
+    """Parse a SOF0/SOF2 body into (h, w, comps, hmax, vmax, precision),
+    comps being (id, hi, vi, quant table) per component."""
+    prec, nc = body[0], body[5]
+    h, w = int.from_bytes(body[1:3], "big"), int.from_bytes(body[3:5], "big")
+    if progressive and prec != 8:
+        raise NotImplementedError("12-bit progressive JPEG")
+    if prec not in (8, 12):
+        raise ValueError(f"JPEG precision {prec}")
+    if prec == 12 and not deep:
+        # 12-bit cannot fit decode_image's (h, w, 3) uint8 contract;
+        # decode_image_deep carries it losslessly
+        raise NotImplementedError("12-bit JPEG (use decode_image_deep)")
+    comps = []
+    for c in range(nc):
+        cid, hv, tq = body[6 + 3 * c], body[7 + 3 * c], body[8 + 3 * c]
+        hi, vi = hv >> 4, hv & 0xF
+        if not (1 <= hi <= 4 and 1 <= vi <= 4):
+            raise ValueError(f"JPEG sampling factors {hi}x{vi}")
+        comps.append((cid, hi, vi, tq))
+    hmax = max(c[1] for c in comps)
+    vmax = max(c[2] for c in comps)
+    if any(hmax % c[1] or vmax % c[2] for c in comps):
+        # T.81 permits this, but upsampling would be fractional; no
+        # mainstream encoder emits it (disclosed boundary)
+        raise NotImplementedError("JPEG with non-dividing sampling factors")
+    return h, w, comps, hmax, vmax, prec
+
+
+def _jpeg_finish(planes, comps, hmax: int, vmax: int, h: int, w: int,
+                 prec: int = 8):
+    """Shared decoder tail: upsample each subsampled plane to full
+    resolution by sample REPLICATION (nearest-neighbor — the
+    integer-exact, oracle-replayable choice; T.81 does not mandate a
+    filter), crop the MCU padding, then grayscale-replicate or
+    JFIF-convert (np.round — half-even at an exact .5, which no oracle
+    replays: the color path is pinned by unit goldens, the driver-gate
+    contract rides grayscale DC blocks). 12-bit grayscale returns the
+    (h, w) uint16 plane losslessly (the decode_image_deep contract);
+    12-bit color stays a disclosed boundary."""
+    import numpy as np
+
+    planes = [
+        np.repeat(np.repeat(p, vmax // vi, axis=0), hmax // hi, axis=1)[:h, :w]
+        for p, (_, hi, vi, _) in zip(planes, comps)
+    ]
+    if prec == 12:
+        if len(comps) == 1:
+            return np.ascontiguousarray(planes[0].astype(np.uint16))
+        raise NotImplementedError("12-bit color JPEG")
+    if len(comps) == 1:
+        g = planes[0].astype(np.uint8)
+        return np.ascontiguousarray(np.stack([g, g, g], axis=2))
+    if len(comps) == 3:
+        y, cb, cr = (p.astype(np.float64) for p in planes)
+        r = y + 1.402 * (cr - 128.0)
+        g = y - 0.344136 * (cb - 128.0) - 0.714136 * (cr - 128.0)
+        b = y + 1.772 * (cb - 128.0)
+        rgb = np.stack([r, g, b], axis=2)
+        return np.clip(np.round(rgb), 0, 255).astype(np.uint8)
+    raise NotImplementedError(f"JPEG with {len(comps)} components")
+
+
+def _jpeg_scan(data, pos, sos, frame, coeffs, progressive, restart, huff):
+    """Decode ONE scan, whose entropy data starts at ``pos``, into the
+    coefficient arrays; returns the byte position just past that data
+    (for the outer marker loop).
+
+    - Block order (T.81 A.2.2/A.2.3): a scan of several components
+      interleaves by MCU (hi x vi blocks per component per MCU); a
+      one-component scan is non-interleaved and walks the COMPONENT's
+      own ceil(comp_w/8) x ceil(comp_h/8) block raster, whatever the
+      frame's sampling factors. The restart interval counts MCUs or
+      blocks accordingly; each restart resets the DC predictors and the
+      EOB run and realigns the reader.
+    - A baseline scan must cover every frame component; each block is a
+      differential DC (EXTEND) then AC run/size codes with ZRL and EOB.
+    - Progressive DC scans (Ss=Se=0): the first pass (Ah=0) stores
+      ``diff << Al`` (G.1.2.1 point transform); refinement passes
+      (Ah>0) append one raw bit per block at Al.
+    - Progressive AC scans (Ss>=1) are single-component (G.1.1.1.1).
+      The first pass (Ah=0) codes run/size with EOBn end-of-band runs —
+      code (r,0), r<15, ends this block and the (1<<r)+extra-1
+      FOLLOWING ones — ZRL, and ``value << Al`` (G.1.2.2). Refinement
+      passes (Ah>0) run the G.1.2.3 correction-bit algorithm:
+      newly-significant coefficients arrive as s=1 codes with a sign
+      bit, and every already-nonzero coefficient crossed (including
+      during EOB runs) consumes one correction bit appended at Al."""
+    h, w, comps, hmax, vmax, _ = frame
+    ns = sos[0]
+    if not progressive and ns != len(comps):
+        # baseline permits per-component scans; every camera/libjpeg
+        # baseline file is single-scan interleaved
+        raise NotImplementedError("multi-scan baseline JPEG")
+    scomps = []  # (component index, dc table, ac table)
+    for c in range(ns):
+        cs, tt = sos[1 + 2 * c], sos[2 + 2 * c]
+        ci = next((i for i, cc in enumerate(comps) if cc[0] == cs), None)
+        if ci is None:
+            # a bare next() would raise StopIteration on a corrupt scan:
+            # outside the kernels' catch set, and silently
+            # iteration-ending if a decode ever runs inside a generator
+            raise ValueError("JPEG scan references unknown component")
+        scomps.append((ci, tt >> 4, tt & 0xF))
+    interleaved = ns > 1
+    if progressive:
+        ss, se = sos[1 + 2 * ns], sos[2 + 2 * ns]
+        ah, al = sos[3 + 2 * ns] >> 4, sos[3 + 2 * ns] & 0xF
+        if ss == 0 and se != 0:
+            raise ValueError("progressive scan mixes DC and AC")
+        if ss > 0 and interleaved:
+            raise ValueError("progressive AC scan must be single-component")
+    else:
+        ss, se, ah, al = 0, 63, 0, 0
+    br = _BitReader(data, pos)
+    pred = [0] * ns
     eobrun = 0
 
     def check_restart(unit):
@@ -1326,29 +1119,17 @@ def _jpeg_progressive_scan(
             if not (data[p] == 0xFF and 0xD0 <= data[p + 1] <= 0xD7):
                 raise ValueError("expected JPEG restart marker")
             br = _BitReader(data, p + 2)
-            pred = [0] * len(scomps)
+            pred = [0] * ns
             eobrun = 0
 
-    def decode_dc_first(arr, r, c, si, dc_t):
-        t = _huff_decode(br, huff[(0, dc_t)])
-        if t > 16:  # same bound as the baseline path (corrupt DHT)
-            raise ValueError("JPEG DC category out of range")
-        diff = _extend(br.read_bits(t), t) if t else 0
-        pred[si] += diff
-        arr[r, c, 0] = pred[si] << al
-
-    def decode_dc_refine(arr, r, c):
-        if br.read_bit():
-            arr[r, c, 0] |= 1 << al
-
-    def decode_ac_first(zz):
+    def ac_first(zz, ac_t):
         nonlocal eobrun
         if eobrun > 0:
             eobrun -= 1
             return
-        k = ss
+        k = max(ss, 1)
         while k <= se:
-            rs = _huff_decode(br, huff[(1, scomps[0][2])])
+            rs = _huff_decode(br, huff[(1, ac_t)])
             r, s = rs >> 4, rs & 0xF
             if s == 0:
                 if r == 15:
@@ -1360,21 +1141,18 @@ def _jpeg_progressive_scan(
                 break  # EOB for this block; eobrun covers the following
             k += r
             if k > se:
-                raise ValueError("progressive AC run past band end")
+                raise ValueError("JPEG AC run past band end")
             zz[k] = _extend(br.read_bits(s), s) << al
             k += 1
 
-    def decode_ac_refine(zz):
-        # T.81 G.1.2.3 / the libjpeg decode_mcu_AC_refine structure:
-        # newly-significant coefficients arrive as s=1 codes with a
-        # sign bit; every already-nonzero coefficient crossed consumes
-        # one correction bit appended at Al.
+    def ac_refine(zz, ac_t):
+        # T.81 G.1.2.3 / the libjpeg decode_mcu_AC_refine structure
         nonlocal eobrun
         p1, m1 = 1 << al, -1 << al
         k = ss
         if eobrun == 0:
             while k <= se:
-                rs = _huff_decode(br, huff[(1, scomps[0][2])])
+                rs = _huff_decode(br, huff[(1, ac_t)])
                 r, s = rs >> 4, rs & 0xF
                 val = 0
                 if s == 0:
@@ -1410,49 +1188,47 @@ def _jpeg_progressive_scan(
                 k += 1
             eobrun -= 1
 
-    if ss == 0:
-        # DC scan: interleaved over MCUs, or the single component's
-        # non-interleaved block raster
-        if interleaved:
-            for mcu in range(mcx * mcy):
-                check_restart(mcu)
-                myy, mxx = divmod(mcu, mcx)
-                for si, (ci, dc_t, _) in enumerate(scomps):
-                    _, hi, vi, _ = comps[ci]
-                    for byy in range(vi):
-                        for bxx in range(hi):
-                            r, c = myy * vi + byy, mxx * hi + bxx
-                            if ah == 0:
-                                decode_dc_first(coeffs[ci], r, c, si, dc_t)
-                            else:
-                                decode_dc_refine(coeffs[ci], r, c)
-        else:
-            ci, dc_t, _ = scomps[0]
-            _, hi, vi, _ = comps[ci]
-            cw = (w * hi + hmax - 1) // hmax
-            chh = (h * vi + vmax - 1) // vmax
-            bw, bv = (cw + 7) // 8, (chh + 7) // 8
-            for blk in range(bw * bv):
-                check_restart(blk)
-                r, c = divmod(blk, bw)
-                if ah == 0:
-                    decode_dc_first(coeffs[ci], r, c, 0, dc_t)
-                else:
-                    decode_dc_refine(coeffs[ci], r, c)
+    def block(si, zz, dc_t, ac_t):
+        if ss == 0:
+            if ah == 0:
+                t = _huff_decode(br, huff[(0, dc_t)])
+                if t > 16:
+                    # T.81 F.1: DC categories stop at 11 (8-bit) / 15
+                    # (12-bit). A corrupt DHT can define symbols up to
+                    # 255, and read_bits(255) would overflow the int64
+                    # store with OverflowError, outside the kernels'
+                    # catch set
+                    raise ValueError("JPEG DC category out of range")
+                pred[si] += _extend(br.read_bits(t), t) if t else 0
+                zz[0] = pred[si] << al
+            elif br.read_bit():
+                zz[0] |= 1 << al
+        if se > 0:
+            (ac_first if ah == 0 else ac_refine)(zz, ac_t)
+
+    if interleaved:
+        # the coefficient arrays span the MCU-padded grid: hi x vi
+        # blocks of component i per MCU
+        mcx = coeffs[0].shape[1] // comps[0][1]
+        mcy = coeffs[0].shape[0] // comps[0][2]
+        for mcu in range(mcx * mcy):
+            check_restart(mcu)
+            myy, mxx = divmod(mcu, mcx)
+            for si, (ci, dc_t, ac_t) in enumerate(scomps):
+                _, hi, vi, _ = comps[ci]
+                for byy in range(vi):
+                    for bxx in range(hi):
+                        zz = coeffs[ci][myy * vi + byy, mxx * hi + bxx]
+                        block(si, zz, dc_t, ac_t)
     else:
-        ci = scomps[0][0]
+        ci, dc_t, ac_t = scomps[0]
         _, hi, vi, _ = comps[ci]
-        cw = (w * hi + hmax - 1) // hmax
-        chh = (h * vi + vmax - 1) // vmax
-        bw, bv = (cw + 7) // 8, (chh + 7) // 8
+        bw = ((w * hi + hmax - 1) // hmax + 7) // 8
+        bv = ((h * vi + vmax - 1) // vmax + 7) // 8
         for blk in range(bw * bv):
             check_restart(blk)
             r, c = divmod(blk, bw)
-            zz = coeffs[ci][r, c]
-            if ah == 0:
-                decode_ac_first(zz)
-            else:
-                decode_ac_refine(zz)
+            block(0, coeffs[ci][r, c], dc_t, ac_t)
     return br.byte_align_pos()
 
 
@@ -1502,6 +1278,93 @@ def decode_image_deep(data: bytes):
     raise NotImplementedError("decode_image_deep: only 12-bit JPEG here")
 
 
+def _jpeg_zigzag(blk) -> list[int]:
+    """The 64 coefficients of an (8, 8) natural-order block in zigzag
+    order, as python ints."""
+    return blk.reshape(64)[_JPEG_ZZ_FLAT].tolist()
+
+
+def _jpeg_value_bits(v: int) -> tuple[int, str]:
+    """(category, raw bits) of a DC difference or AC value (T.81
+    F.1.2.1: negative values are sent as v + 2^t - 1)."""
+    if v == 0:
+        return 0, ""
+    t = abs(v).bit_length()
+    return t, format(v + (1 << t) - 1 if v < 0 else v, f"0{t}b")
+
+
+def _jpeg_put_dc(bw: _BitWriter, diff: int) -> None:
+    t, bits = _jpeg_value_bits(diff)
+    bw.write(_JPEG_DC_CODES[t] + bits)
+
+
+def _jpeg_put_ac(bw: _BitWriter, zz: list[int]) -> None:
+    """Run/size-code zz[1:] with ZRL for runs over 15 zeros, and EOB
+    unless the last coefficient is nonzero. In a progressive AC scan
+    (Ss=1, Se=63, Al=0) the EOB is an EOB run of one block."""
+    run = 0
+    last_nz = max((k for k in range(1, 64) if zz[k]), default=0)
+    for k in range(1, last_nz + 1):
+        if zz[k] == 0:
+            run += 1
+            continue
+        while run > 15:
+            bw.write(_JPEG_AC_CODES[0xF0])  # ZRL
+            run -= 16
+        s, bits = _jpeg_value_bits(zz[k])
+        bw.write(_JPEG_AC_CODES[(run << 4) | s] + bits)
+        run = 0
+    if last_nz < 63:
+        bw.write(_JPEG_AC_CODES[0x00])  # EOB
+
+
+def _jpeg_put_block(bw: _BitWriter, blk, pred: int) -> int:
+    """One baseline block: differential DC against ``pred``, then the
+    AC codes. Returns the block's DC, the component's next predictor."""
+    zz = _jpeg_zigzag(blk)
+    _jpeg_put_dc(bw, zz[0] - pred)
+    _jpeg_put_ac(bw, zz)
+    return zz[0]
+
+
+def _jpeg_segment(marker: int, body: bytes) -> bytes:
+    return bytes([0xFF, marker]) + (len(body) + 2).to_bytes(2, "big") + body
+
+
+def _jpeg_header(sof: int, precision: int, h: int, w: int, comps, qtable) -> bytes:
+    """SOI, DQT (table 0: ``qtable``, default all 8s), the SOF segment
+    ``sof`` with (id, sampling byte) ``comps`` all on table 0, and DHT
+    with the Annex K.3 luminance DC/AC tables as tables 0."""
+    import numpy as np
+
+    q = np.full((8, 8), 8, dtype=np.int64) if qtable is None else np.asarray(qtable, dtype=np.int64)
+    frame = (
+        bytes([precision]) + h.to_bytes(2, "big") + w.to_bytes(2, "big")
+        + bytes([len(comps)]) + b"".join(bytes([cid, hv, 0]) for cid, hv in comps)
+    )
+    dht = (
+        bytes([0x00]) + bytes(_JPEG_DC_BITS) + bytes(_JPEG_DC_VALS)
+        + bytes([0x10]) + bytes(_JPEG_AC_BITS) + bytes(_JPEG_AC_VALS)
+    )
+    return (
+        b"\xff\xd8"
+        + _jpeg_segment(0xDB, bytes([0]) + bytes(_jpeg_zigzag(q)))
+        + _jpeg_segment(sof, frame)
+        + _jpeg_segment(0xC4, dht)
+    )
+
+
+def _jpeg_scan_bytes(comp_ids, ss: int, se: int, ahal: int, bw: _BitWriter) -> bytes:
+    """SOS (every component on Huffman tables 0) then the flushed
+    entropy-coded data of ``bw``."""
+    bw.flush()
+    sos = (
+        bytes([len(comp_ids)]) + b"".join(bytes([cid, 0x00]) for cid in comp_ids)
+        + bytes([ss, se, ahal])
+    )
+    return _jpeg_segment(0xDA, sos) + bytes(bw.out)
+
+
 def encode_jpeg_gray_coeffs(coeff_blocks, qtable=None, precision: int = 8) -> bytes:
     """Minimal REAL baseline-JPEG writer at the COEFFICIENT level:
     ``coeff_blocks`` is an (by, bx, 8, 8) int array of QUANTIZED DCT
@@ -1517,64 +1380,14 @@ def encode_jpeg_gray_coeffs(coeff_blocks, qtable=None, precision: int = 8) -> by
 
     a = np.asarray(coeff_blocks, dtype=np.int64)
     by, bx = a.shape[0], a.shape[1]
-    h, w = by * 8, bx * 8
-    q = np.full((8, 8), 8, dtype=np.int64) if qtable is None else np.asarray(qtable, dtype=np.int64)
-    dc_codes = _huff_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
-    ac_codes = _huff_codes(_JPEG_AC_BITS, _JPEG_AC_VALS)
-
-    def cat(v: int) -> int:
-        return 0 if v == 0 else int(abs(v)).bit_length()
-
-    def rawbits(v: int, t: int) -> str:
-        if t == 0:
-            return ""
-        if v < 0:
-            v = v + (1 << t) - 1
-        return format(v, f"0{t}b")
-
     bw = _BitWriter()
     pred = 0
-    for myy in range(by):
-        for mxx in range(bx):
-            blk = a[myy, mxx]
-            zz = [int(blk[_JPEG_ZIGZAG[k]]) for k in range(64)]
-            diff = zz[0] - pred
-            pred = zz[0]
-            t = cat(diff)
-            bw.write(dc_codes[t] + rawbits(diff, t))
-            run = 0
-            last_nz = max((k for k in range(1, 64) if zz[k]), default=0)
-            for k in range(1, last_nz + 1):
-                if zz[k] == 0:
-                    run += 1
-                    continue
-                while run > 15:
-                    bw.write(ac_codes[0xF0])  # ZRL
-                    run -= 16
-                s = cat(zz[k])
-                bw.write(ac_codes[(run << 4) | s] + rawbits(zz[k], s))
-                run = 0
-            if last_nz < 63:
-                bw.write(ac_codes[0x00])  # EOB
-    bw.flush()
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes([0xFF, marker]) + (len(body) + 2).to_bytes(2, "big") + body
-
-    dqt = bytes([0]) + bytes(int(q[_JPEG_ZIGZAG[k]]) for k in range(64))
-    sof = bytes([precision]) + h.to_bytes(2, "big") + w.to_bytes(2, "big") + bytes([1, 1, 0x11, 0])
-    dht = (
-        bytes([0x00]) + bytes(_JPEG_DC_BITS) + bytes(_JPEG_DC_VALS)
-        + bytes([0x10]) + bytes(_JPEG_AC_BITS) + bytes(_JPEG_AC_VALS)
-    )
-    sos = bytes([1, 1, 0x00, 0, 63, 0])
+    for row in a:
+        for blk in row:
+            pred = _jpeg_put_block(bw, blk, pred)
     return (
-        b"\xff\xd8"
-        + seg(0xDB, dqt)
-        + seg(0xC0, sof)
-        + seg(0xC4, dht)
-        + seg(0xDA, sos)
-        + bytes(bw.out)
+        _jpeg_header(0xC0, precision, by * 8, bx * 8, [(1, 0x11)], qtable)
+        + _jpeg_scan_bytes([1], 0, 63, 0, bw)
         + b"\xff\xd9"
     )
 
@@ -1606,80 +1419,20 @@ def encode_jpeg_gray_coeffs_progressive(coeff_blocks, qtable=None, al_dc: int = 
         raise ValueError("encode_jpeg_gray_coeffs_progressive supports al_dc=1 only")
     a = np.asarray(coeff_blocks, dtype=np.int64)
     by, bx = a.shape[0], a.shape[1]
-    h, w = by * 8, bx * 8
-    q = np.full((8, 8), 8, dtype=np.int64) if qtable is None else np.asarray(qtable, dtype=np.int64)
-    dc_codes = _huff_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
-    ac_codes = _huff_codes(_JPEG_AC_BITS, _JPEG_AC_VALS)
-
-    def cat(v: int) -> int:
-        return 0 if v == 0 else int(abs(v)).bit_length()
-
-    def rawbits(v: int, t: int) -> str:
-        if t == 0:
-            return ""
-        if v < 0:
-            v = v + (1 << t) - 1
-        return format(v, f"0{t}b")
-
-    # scan 1: DC first at Al=1 (differential over the point transform)
-    bw1 = _BitWriter()
+    blocks = [blk for row in a for blk in row]
+    dc_first, dc_refine, ac_first = _BitWriter(), _BitWriter(), _BitWriter()
     pred = 0
-    for myy in range(by):
-        for mxx in range(bx):
-            dc_pt = int(a[myy, mxx, 0, 0]) >> al_dc
-            diff = dc_pt - pred
-            pred = dc_pt
-            t = cat(diff)
-            bw1.write(dc_codes[t] + rawbits(diff, t))
-    bw1.flush()
-    # scan 2: DC refinement — raw bit ``al_dc - 1`` (= bit 0) per block
-    bw2 = _BitWriter()
-    for myy in range(by):
-        for mxx in range(bx):
-            bw2.write("1" if int(a[myy, mxx, 0, 0]) & 1 else "0")
-    bw2.flush()
-    # scan 3: AC first, full band, per-block EOB runs of one
-    bw3 = _BitWriter()
-    for myy in range(by):
-        for mxx in range(bx):
-            blk = a[myy, mxx]
-            zz = [int(blk[_JPEG_ZIGZAG[k]]) for k in range(64)]
-            run = 0
-            last_nz = max((k for k in range(1, 64) if zz[k]), default=0)
-            for k in range(1, last_nz + 1):
-                if zz[k] == 0:
-                    run += 1
-                    continue
-                while run > 15:
-                    bw3.write(ac_codes[0xF0])  # ZRL
-                    run -= 16
-                s = cat(zz[k])
-                bw3.write(ac_codes[(run << 4) | s] + rawbits(zz[k], s))
-                run = 0
-            if last_nz < 63:
-                bw3.write(ac_codes[0x00])  # EOB run of one block
-    bw3.flush()
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes([0xFF, marker]) + (len(body) + 2).to_bytes(2, "big") + body
-
-    dqt = bytes([0]) + bytes(int(q[_JPEG_ZIGZAG[k]]) for k in range(64))
-    sof = bytes([8]) + h.to_bytes(2, "big") + w.to_bytes(2, "big") + bytes([1, 1, 0x11, 0])
-    dht = (
-        bytes([0x00]) + bytes(_JPEG_DC_BITS) + bytes(_JPEG_DC_VALS)
-        + bytes([0x10]) + bytes(_JPEG_AC_BITS) + bytes(_JPEG_AC_VALS)
-    )
-    sos1 = bytes([1, 1, 0x00, 0, 0, (0 << 4) | al_dc])
-    sos2 = bytes([1, 1, 0x00, 0, 0, (al_dc << 4) | (al_dc - 1)])
-    sos3 = bytes([1, 1, 0x00, 1, 63, 0x00])
+    for blk in blocks:
+        dc = int(blk[0, 0])
+        _jpeg_put_dc(dc_first, (dc >> al_dc) - pred)
+        pred = dc >> al_dc
+        dc_refine.write("1" if dc & 1 else "0")  # bit al_dc - 1 = bit 0
+        _jpeg_put_ac(ac_first, _jpeg_zigzag(blk))
     return (
-        b"\xff\xd8"
-        + seg(0xDB, dqt)
-        + seg(0xC2, sof)
-        + seg(0xC4, dht)
-        + seg(0xDA, sos1) + bytes(bw1.out)
-        + seg(0xDA, sos2) + bytes(bw2.out)
-        + seg(0xDA, sos3) + bytes(bw3.out)
+        _jpeg_header(0xC2, 8, by * 8, bx * 8, [(1, 0x11)], qtable)
+        + _jpeg_scan_bytes([1], 0, 0, al_dc, dc_first)
+        + _jpeg_scan_bytes([1], 0, 0, (al_dc << 4) | (al_dc - 1), dc_refine)
+        + _jpeg_scan_bytes([1], 1, 63, 0x00, ac_first)
         + b"\xff\xd9"
     )
 
@@ -1712,94 +1465,42 @@ def encode_jpeg_ycbcr420_coeffs(y_blocks, cb_blocks, cr_blocks, qtable=None) -> 
             f"4:2:0 grids inconsistent: Y {y.shape[:2]} must be exactly "
             f"2x the chroma grid Cb {cb.shape[:2]} / Cr {cr.shape[:2]}"
         )
-    h, w = mcy * 16, mcx * 16
-    q = np.full((8, 8), 8, dtype=np.int64) if qtable is None else np.asarray(qtable, dtype=np.int64)
-    dc_codes = _huff_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
-    ac_codes = _huff_codes(_JPEG_AC_BITS, _JPEG_AC_VALS)
-
-    def cat(v: int) -> int:
-        return 0 if v == 0 else int(abs(v)).bit_length()
-
-    def rawbits(v: int, t: int) -> str:
-        if t == 0:
-            return ""
-        if v < 0:
-            v = v + (1 << t) - 1
-        return format(v, f"0{t}b")
-
     bw = _BitWriter()
-
-    def put_block(blk, pred: int) -> int:
-        zz = [int(blk[_JPEG_ZIGZAG[k]]) for k in range(64)]
-        diff = zz[0] - pred
-        t = cat(diff)
-        bw.write(dc_codes[t] + rawbits(diff, t))
-        run = 0
-        last_nz = max((k for k in range(1, 64) if zz[k]), default=0)
-        for k in range(1, last_nz + 1):
-            if zz[k] == 0:
-                run += 1
-                continue
-            while run > 15:
-                bw.write(ac_codes[0xF0])  # ZRL
-                run -= 16
-            s = cat(zz[k])
-            bw.write(ac_codes[(run << 4) | s] + rawbits(zz[k], s))
-            run = 0
-        if last_nz < 63:
-            bw.write(ac_codes[0x00])  # EOB
-        return zz[0]
-
     preds = [0, 0, 0]
     for myy in range(mcy):
         for mxx in range(mcx):
             for byy in range(2):
                 for bxx in range(2):
-                    preds[0] = put_block(
-                        y[2 * myy + byy, 2 * mxx + bxx], preds[0]
-                    )
-            preds[1] = put_block(cb[myy, mxx], preds[1])
-            preds[2] = put_block(cr[myy, mxx], preds[2])
-    bw.flush()
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes([0xFF, marker]) + (len(body) + 2).to_bytes(2, "big") + body
-
-    dqt = bytes([0]) + bytes(int(q[_JPEG_ZIGZAG[k]]) for k in range(64))
-    sof = (
-        bytes([8]) + h.to_bytes(2, "big") + w.to_bytes(2, "big")
-        + bytes([3, 1, 0x22, 0, 2, 0x11, 0, 3, 0x11, 0])
-    )
-    dht = (
-        bytes([0x00]) + bytes(_JPEG_DC_BITS) + bytes(_JPEG_DC_VALS)
-        + bytes([0x10]) + bytes(_JPEG_AC_BITS) + bytes(_JPEG_AC_VALS)
-    )
-    sos = bytes([3, 1, 0x00, 2, 0x00, 3, 0x00, 0, 63, 0])
+                    preds[0] = _jpeg_put_block(bw, y[2 * myy + byy, 2 * mxx + bxx], preds[0])
+            preds[1] = _jpeg_put_block(bw, cb[myy, mxx], preds[1])
+            preds[2] = _jpeg_put_block(bw, cr[myy, mxx], preds[2])
+    comps = [(1, 0x22), (2, 0x11), (3, 0x11)]
     return (
-        b"\xff\xd8"
-        + seg(0xDB, dqt)
-        + seg(0xC0, sof)
-        + seg(0xC4, dht)
-        + seg(0xDA, sos)
-        + bytes(bw.out)
+        _jpeg_header(0xC0, 8, mcy * 16, mcx * 16, comps, qtable)
+        + _jpeg_scan_bytes([1, 2, 3], 0, 63, 0, bw)
         + b"\xff\xd9"
     )
 
 
+def _jpeg_dc_blocks(data, bw: int, bh: int):
+    """The DC-only gate grid: a row's first bw*bh bytes v become the
+    quantized DC coefficients v - 64 of a (bh, bw, 8, 8) block grid."""
+    import numpy as np
+
+    vs = np.frombuffer(bytes(data)[: bw * bh], dtype=np.uint8)
+    coeffs = np.zeros((bh, bw, 8, 8), dtype=np.int64)
+    coeffs[:, :, 0, 0] = vs.reshape(bh, bw).astype(np.int64) - 64
+    return coeffs
+
+
 def _jpeg_dc_gate(df, id_col, bytes_col, bw, bh, encode) -> DataFrame:
-    """Shared body of the 8-bit DC-only JPEG gates: each row's first
-    bw*bh bytes v become the DC coefficients v - 64 of a bw x bh block
+    """Shared body of the 8-bit DC-only JPEG gates: the _jpeg_dc_blocks
     grid written by ``encode``; the decoded pixels reduce to exact sums
     (64*(v + 64) per block per channel under Q00 = 8)."""
     import numpy as np
 
-    need = bw * bh
-
     def rows(data):
-        vs = np.frombuffer(bytes(data)[:need], dtype=np.uint8)
-        coeffs = np.zeros((bh, bw, 8, 8), dtype=np.int64)
-        coeffs[:, :, 0, 0] = vs.reshape(bh, bw).astype(np.int64) - 64
-        dec = decode_image(encode(coeffs))
+        dec = decode_image(encode(_jpeg_dc_blocks(data, bw, bh)))
         sums = dec.astype(np.int64).sum(axis=(0, 1))
         yield int(dec.shape[1]), int(dec.shape[0]), int(sums.sum()), int(sums[0])
 
@@ -1911,18 +1612,32 @@ def jpeg12_roundtrip_stats(
     clamps at 255, or returns uint8 breaks the hash immediately."""
     import numpy as np
 
-    need = bw * bh
-
     def rows(data):
-        vs = np.frombuffer(bytes(data)[:need], dtype=np.uint8)
-        coeffs = np.zeros((bh, bw, 8, 8), dtype=np.int64)
-        coeffs[:, :, 0, 0] = vs.reshape(bh, bw).astype(np.int64) - 64
+        coeffs = _jpeg_dc_blocks(data, bw, bh)
         dec = decode_image_deep(encode_jpeg_gray_coeffs(coeffs, precision=12))
         yield (int(dec.shape[1]), int(dec.shape[0]),
                int(dec.astype(np.int64).sum()), int(dec.max()))
 
     return _map_media(
         df, id_col, bytes_col, "width int, height int, gray_sum long, max_px int", rows
+    )
+
+
+def _png_rgb_gate(df, id_col, bytes_col, need: int, encode) -> DataFrame:
+    """Shared body of the 8-bit PNG gates: ``encode`` writes a row's
+    first ``need`` bytes (uint8) as a real PNG; the decoded pixels
+    reduce to exact total and per-channel sums."""
+    import numpy as np
+
+    def rows(data):
+        dec = decode_image(encode(np.frombuffer(bytes(data)[:need], dtype=np.uint8)))
+        sums = dec.astype(np.int64).sum(axis=(0, 1))
+        yield (int(dec.shape[1]), int(dec.shape[0]), int(sums.sum()),
+               int(sums[0]), int(sums[1]), int(sums[2]))
+
+    return _map_media(
+        df, id_col, bytes_col,
+        "width int, height int, pix_sum long, r_sum long, g_sum long, b_sum long", rows,
     )
 
 
@@ -1941,21 +1656,10 @@ def png_roundtrip_stats(
     channel sums of the DECODED pixels — the shape an oracle can replay
     directly from the source bytes, proving the zlib + unfilter pipeline
     inverts to identity."""
-    import numpy as np
-
     flts = list(filters) if filters is not None else [r % 5 for r in range(h)]
-    need = w * h * 3
-
-    def rows(data):
-        px = np.frombuffer(bytes(data)[:need], dtype=np.uint8).reshape(h, w, 3)
-        dec = decode_image(encode_png(px, filters=flts))
-        sums = dec.astype(np.int64).sum(axis=(0, 1))
-        yield (int(dec.shape[1]), int(dec.shape[0]), int(sums.sum()),
-               int(sums[0]), int(sums[1]), int(sums[2]))
-
-    return _map_media(
-        df, id_col, bytes_col,
-        "width int, height int, pix_sum long, r_sum long, g_sum long, b_sum long", rows,
+    return _png_rgb_gate(
+        df, id_col, bytes_col, w * h * 3,
+        lambda px: encode_png(px.reshape(h, w, 3), filters=flts),
     )
 
 
@@ -1980,18 +1684,9 @@ def png_palette_roundtrip_stats(
 
     flts = list(filters) if filters is not None else [r % 5 for r in range(h)]
     pal = np.asarray(palette, dtype=np.uint8)
-    need = w * h
-
-    def rows(data):
-        idx = np.frombuffer(bytes(data)[:need], dtype=np.uint8).reshape(h, w)
-        dec = decode_image(encode_png_palette(idx, pal, filters=flts))
-        sums = dec.astype(np.int64).sum(axis=(0, 1))
-        yield (int(dec.shape[1]), int(dec.shape[0]), int(sums.sum()),
-               int(sums[0]), int(sums[1]), int(sums[2]))
-
-    return _map_media(
-        df, id_col, bytes_col,
-        "width int, height int, pix_sum long, r_sum long, g_sum long, b_sum long", rows,
+    return _png_rgb_gate(
+        df, id_col, bytes_col, w * h,
+        lambda idx: encode_png_palette(idx.reshape(h, w), pal, filters=flts),
     )
 
 
@@ -2784,33 +2479,39 @@ def _gif_lzw_encode(indices: bytes, min_code: int) -> bytes:
 _GIF_INTERLACE = ((0, 8), (4, 8), (2, 4), (1, 2))
 
 
-def _decode_gif(data: bytes):
-    """(h, w, 3) uint8 RGB of the FIRST frame composited onto the
-    logical screen: background color fill, frame blitted at its
-    left/top offset, GCE transparency leaving the background through,
-    local color table overriding the global one, interlaced row
-    de-scattering. Animation beyond frame 1 is out of scope here by
-    design (the video tier handles frame streams); a second image
-    descriptor simply isn't read."""
+def _gif_color_table(data: bytes, pos: int, flags: int):
+    """(color table bytes or None, position after it) for the table a
+    screen or image descriptor's packed ``flags`` declare."""
+    if not flags & 0x80:
+        return None, pos
+    end = pos + 3 * (2 << (flags & 7))
+    return data[pos:end], end
+
+
+def _gif_sub_blocks(data: bytes, pos: int):
+    """(list of data sub-blocks, position after the zero terminator)."""
+    subs = []
+    while data[pos] != 0:
+        sz = data[pos]
+        subs.append(data[pos + 1 : pos + 1 + sz])
+        pos += 1 + sz
+    return subs, pos + 1
+
+
+def _gif_frames(data: bytes):
+    """The one GIF block walk, shared by _decode_gif and
+    iter_gif_frames: yields (frame dict as iter_gif_frames documents
+    it, local color table bytes or None) per image descriptor, LZW
+    decoded and de-interlaced. A frame takes delay and transparency
+    from the graphic-control extension since the previous frame.
+    Generator: blocks after the frames a caller takes are never
+    parsed."""
     import numpy as np
 
     if data[:6] not in (b"GIF87a", b"GIF89a"):
         raise ValueError("not a GIF")
-    w = int.from_bytes(data[6:8], "little")
-    h = int.from_bytes(data[8:10], "little")
-    if w == 0 or h == 0 or w * h > (1 << 26):
-        # same pre-allocation bound as BMP/TIFF: two corrupt 16-bit
-        # dims otherwise drive the LZW loop toward a 4.3-GB expansion
-        # and a 12.9-GB screen composite (r13 fuzz find: a 736-byte
-        # stream decoded for 296 s)
-        raise ValueError("GIF: unreasonable dimensions")
-    flags, bg = data[10], data[11]
-    pos = 13
-    gct = None
-    if flags & 0x80:
-        n = 2 << (flags & 7)
-        gct = np.frombuffer(data[pos : pos + 3 * n], dtype=np.uint8).reshape(n, 3)
-        pos += 3 * n
+    _, pos = _gif_color_table(data, 13, data[10])
+    delay_cs = 0
     transparent = None
     while pos < len(data):
         b0 = data[pos]
@@ -2818,69 +2519,130 @@ def _decode_gif(data: bytes):
             break
         if b0 == 0x21:  # extension: label + sub-blocks
             label = data[pos + 1]
-            pos += 2
-            subs = []
-            while data[pos] != 0:
-                sz = data[pos]
-                subs.append(data[pos + 1 : pos + 1 + sz])
-                pos += 1 + sz
-            pos += 1
-            if label == 0xF9 and subs and (subs[0][0] & 1):
-                transparent = subs[0][3]
+            subs, pos = _gif_sub_blocks(data, pos + 2)
+            if label == 0xF9 and subs:
+                delay_cs = int.from_bytes(subs[0][1:3], "little")
+                transparent = subs[0][3] if subs[0][0] & 1 else None
         elif b0 == 0x2C:  # image descriptor
             left = int.from_bytes(data[pos + 1 : pos + 3], "little")
             top = int.from_bytes(data[pos + 3 : pos + 5], "little")
             iw = int.from_bytes(data[pos + 5 : pos + 7], "little")
             ih = int.from_bytes(data[pos + 7 : pos + 9], "little")
             if iw == 0 or ih == 0 or iw * ih > (1 << 26):
+                # the LZW decode below expands toward iw*ih bytes
                 raise ValueError("GIF: unreasonable dimensions")
             iflags = data[pos + 9]
-            pos += 10
-            lct = gct
-            if iflags & 0x80:
-                n = 2 << (iflags & 7)
-                lct = np.frombuffer(data[pos : pos + 3 * n], dtype=np.uint8).reshape(n, 3)
-                pos += 3 * n
-            if lct is None:
-                raise ValueError("GIF image with no color table")
+            lct, pos = _gif_color_table(data, pos + 10, iflags)
             min_code = data[pos]
-            pos += 1
-            comp = bytearray()
-            while data[pos] != 0:
-                sz = data[pos]
-                comp += data[pos + 1 : pos + 1 + sz]
-                pos += 1 + sz
-            pos += 1
+            subs, pos = _gif_sub_blocks(data, pos + 1)
             idx = np.frombuffer(
-                _gif_lzw_decode(bytes(comp), min_code, iw * ih), dtype=np.uint8
+                _gif_lzw_decode(b"".join(subs), min_code, iw * ih), dtype=np.uint8
             )
             if len(idx) < iw * ih:
                 idx = np.pad(idx, (0, iw * ih - len(idx)))
             rows = idx.reshape(ih, iw)
             if iflags & 0x40:  # interlaced: de-scatter the pass rows
+                order = [y for start, step in _GIF_INTERLACE for y in range(start, ih, step)]
                 orig = np.empty_like(rows)
-                src = 0
-                for start, step in _GIF_INTERLACE:
-                    for y in range(start, ih, step):
-                        orig[y] = rows[src]
-                        src += 1
+                orig[order] = rows
                 rows = orig
-            if idx.max(initial=0) >= len(lct):
-                raise ValueError("GIF pixel index beyond color table")
-            screen = np.zeros((h, w, 3), dtype=np.uint8)
-            if gct is not None and bg < len(gct):
-                screen[:, :] = gct[bg]
-            frame = lct[rows]  # (ih, iw, 3)
-            if transparent is not None:
-                opaque = rows != transparent
-                region = screen[top : top + ih, left : left + iw]
-                region[opaque] = frame[opaque]
-            else:
-                screen[top : top + ih, left : left + iw] = frame
-            return screen
+            yield {
+                "left": left, "top": top, "width": iw, "height": ih,
+                "interlaced": bool(iflags & 0x40), "delay_cs": delay_cs,
+                "transparent": transparent, "indices": rows,
+            }, lct
+            delay_cs, transparent = 0, None
         else:
             raise ValueError(f"GIF: unknown block 0x{b0:02x}")
-    raise ValueError("GIF with no image data")
+
+
+def _decode_gif(data: bytes):
+    """(h, w, 3) uint8 RGB of the FIRST frame composited onto the
+    logical screen: background color fill, frame blitted at its
+    left/top offset, GCE transparency leaving the background through,
+    local color table overriding the global one, interlaced row
+    de-scattering (the frame itself comes from _gif_frames). Animation
+    beyond frame 1 is out of scope here by design (iter_gif_frames
+    walks every frame); a second image descriptor simply isn't read."""
+    import numpy as np
+
+    w = int.from_bytes(data[6:8], "little")
+    h = int.from_bytes(data[8:10], "little")
+    if w == 0 or h == 0 or w * h > (1 << 26):
+        # same pre-allocation bound as BMP/TIFF: two corrupt 16-bit
+        # dims would otherwise drive a multi-GB screen composite
+        raise ValueError("GIF: unreasonable dimensions")
+    gct, _ = _gif_color_table(data, 13, data[10])
+    frame, lct = next(_gif_frames(data), (None, None))
+    if frame is None:
+        raise ValueError("GIF with no image data")
+    gct, lct = (
+        None if t is None else np.frombuffer(t, dtype=np.uint8).reshape(-1, 3)
+        for t in (gct, lct)
+    )
+    table = gct if lct is None else lct
+    if table is None:
+        raise ValueError("GIF image with no color table")
+    rows = frame["indices"]
+    if rows.max(initial=0) >= len(table):
+        raise ValueError("GIF pixel index beyond color table")
+    screen = np.zeros((h, w, 3), dtype=np.uint8)
+    if gct is not None and data[11] < len(gct):
+        screen[:, :] = gct[data[11]]  # background color
+    top, left, ih, iw = frame["top"], frame["left"], frame["height"], frame["width"]
+    pixels = table[rows]  # (ih, iw, 3)
+    if frame["transparent"] is not None:
+        opaque = rows != frame["transparent"]
+        region = screen[top : top + ih, left : left + iw]
+        region[opaque] = pixels[opaque]
+    else:
+        screen[top : top + ih, left : left + iw] = pixels
+    return screen
+
+
+def _gif_header(sw: int, sh: int, palette, background: int):
+    """(GIF89a header + logical screen descriptor + power-of-two global
+    color table, color-table bits) for an (n, 3) palette."""
+    import numpy as np
+
+    pal = np.asarray(palette, dtype=np.uint8).reshape(-1, 3)
+    bits = max(1, (len(pal) - 1).bit_length())
+    gct = np.zeros((1 << bits, 3), dtype=np.uint8)
+    gct[: len(pal)] = pal
+    out = bytearray(b"GIF89a")
+    out += sw.to_bytes(2, "little") + sh.to_bytes(2, "little")
+    out += bytes([0x80 | (bits - 1), background, 0])
+    out += gct.tobytes()
+    return out, bits
+
+
+def _gif_frame_bytes(idx, bits: int, interlace: bool, left: int = 0, top: int = 0,
+                     delay_cs: int | None = None, transparent: int | None = None) -> bytes:
+    """One frame: a graphic-control extension when a delay or a
+    transparent index is given, the image descriptor at (left, top)
+    with optional interlaced row order, then the LZW data in <=255-byte
+    sub-blocks and the block terminator."""
+    ih, iw = idx.shape
+    out = bytearray()
+    if delay_cs is not None or transparent is not None:
+        out += bytes([0x21, 0xF9, 4, 0x01 if transparent is not None else 0x00])
+        out += int(delay_cs or 0).to_bytes(2, "little")
+        out += bytes([transparent or 0, 0])
+    rows = idx
+    if interlace:
+        rows = idx[[y for start, step in _GIF_INTERLACE for y in range(start, ih, step)]]
+    out += bytes([0x2C])
+    out += left.to_bytes(2, "little") + top.to_bytes(2, "little")
+    out += iw.to_bytes(2, "little") + ih.to_bytes(2, "little")
+    out += bytes([0x40 if interlace else 0])
+    min_code = max(2, bits)  # spec: minimum LZW code size >= 2
+    out += bytes([min_code])
+    comp = _gif_lzw_encode(rows.tobytes(), min_code)
+    for i in range(0, len(comp), 255):
+        chunk = comp[i : i + 255]
+        out += bytes([len(chunk)]) + chunk
+    out += bytes([0])
+    return bytes(out)
 
 
 def encode_gif(indices, palette, interlace: bool = False,
@@ -2897,35 +2659,11 @@ def encode_gif(indices, palette, interlace: bool = False,
     import numpy as np
 
     idx = np.asarray(indices, dtype=np.uint8)
-    pal = np.asarray(palette, dtype=np.uint8).reshape(-1, 3)
     ih, iw = idx.shape
     sw, sh = screen if screen is not None else (left + iw, top + ih)
-    bits = max(1, (len(pal) - 1).bit_length())
-    full = 1 << bits
-    gct = np.zeros((full, 3), dtype=np.uint8)
-    gct[: len(pal)] = pal
-    out = bytearray(b"GIF89a")
-    out += sw.to_bytes(2, "little") + sh.to_bytes(2, "little")
-    out += bytes([0x80 | (bits - 1), background, 0])
-    out += gct.tobytes()
-    if transparent is not None:
-        out += bytes([0x21, 0xF9, 4, 0x01, 0, 0, transparent, 0])
-    rows = idx
-    if interlace:
-        order = [y for start, step in _GIF_INTERLACE for y in range(start, ih, step)]
-        rows = idx[order]
-    out += bytes([0x2C])
-    out += left.to_bytes(2, "little") + top.to_bytes(2, "little")
-    out += iw.to_bytes(2, "little") + ih.to_bytes(2, "little")
-    out += bytes([0x40 if interlace else 0])
-    min_code = max(2, bits)  # spec: minimum LZW code size >= 2
-    out += bytes([min_code])
-    comp = _gif_lzw_encode(rows.tobytes(), min_code)
-    for i in range(0, len(comp), 255):
-        chunk = comp[i : i + 255]
-        out += bytes([len(chunk)]) + chunk
-    out += bytes([0, 0x3B])
-    return bytes(out)
+    out, bits = _gif_header(sw, sh, palette, background)
+    out += _gif_frame_bytes(idx, bits, interlace, left, top, transparent=transparent)
+    return bytes(out + b"\x3b")
 
 
 def encode_gif_anim(frames, palette, delays_cs, loop: int = 0) -> bytes:
@@ -2937,44 +2675,16 @@ def encode_gif_anim(frames, palette, delays_cs, loop: int = 0) -> bytes:
     of (h, w) uint8 index grids sharing one global color table."""
     import numpy as np
 
-    pal = np.asarray(palette, dtype=np.uint8).reshape(-1, 3)
-    bits = max(1, (len(pal) - 1).bit_length())
-    full = 1 << bits
-    gct = np.zeros((full, 3), dtype=np.uint8)
-    gct[: len(pal)] = pal
-    sh = max(np.asarray(f).shape[0] for f in frames)
-    sw = max(np.asarray(f).shape[1] for f in frames)
-    out = bytearray(b"GIF89a")
-    out += sw.to_bytes(2, "little") + sh.to_bytes(2, "little")
-    out += bytes([0x80 | (bits - 1), 0, 0])
-    out += gct.tobytes()
+    frames = [np.asarray(f, dtype=np.uint8) for f in frames]
+    sh = max(f.shape[0] for f in frames)
+    sw = max(f.shape[1] for f in frames)
+    out, bits = _gif_header(sw, sh, palette, 0)
     # NETSCAPE looping extension (application ext 0xFF, sub-block 3)
     out += bytes([0x21, 0xFF, 11]) + b"NETSCAPE2.0"
     out += bytes([3, 1]) + loop.to_bytes(2, "little") + bytes([0])
     for f, (idx, delay) in enumerate(zip(frames, delays_cs)):
-        idx = np.asarray(idx, dtype=np.uint8)
-        ih, iw = idx.shape
-        out += bytes([0x21, 0xF9, 4, 0x00]) + int(delay).to_bytes(2, "little")
-        out += bytes([0, 0])  # no transparency
-        interlace = bool(f & 1)
-        rows = idx
-        if interlace:
-            order = [y for start, step in _GIF_INTERLACE
-                     for y in range(start, ih, step)]
-            rows = idx[order]
-        out += bytes([0x2C])
-        out += (0).to_bytes(2, "little") + (0).to_bytes(2, "little")
-        out += iw.to_bytes(2, "little") + ih.to_bytes(2, "little")
-        out += bytes([0x40 if interlace else 0])
-        min_code = max(2, bits)
-        out += bytes([min_code])
-        comp = _gif_lzw_encode(rows.tobytes(), min_code)
-        for i in range(0, len(comp), 255):
-            chunk = comp[i : i + 255]
-            out += bytes([len(chunk)]) + chunk
-        out += bytes([0])
-    out += bytes([0x3B])
-    return bytes(out)
+        out += _gif_frame_bytes(idx, bits, bool(f & 1), delay_cs=delay)
+    return bytes(out + b"\x3b")
 
 
 def iter_gif_frames(data: bytes):
@@ -2986,75 +2696,8 @@ def iter_gif_frames(data: bytes):
     payload, and disposal-method compositing is the renderer's job,
     same boundary as the Y4M walker returning planes). The walk is the
     video tier's GIF twin of iter_y4m_frames."""
-    import numpy as np
-
-    if data[:6] not in (b"GIF87a", b"GIF89a"):
-        raise ValueError("not a GIF")
-    flags = data[10]
-    pos = 13
-    if flags & 0x80:
-        pos += 3 * (2 << (flags & 7))
-    delay_cs = 0
-    transparent = None
-    while pos < len(data):
-        b0 = data[pos]
-        if b0 == 0x3B:
-            break
-        if b0 == 0x21:
-            label = data[pos + 1]
-            pos += 2
-            subs = []
-            while data[pos] != 0:
-                sz = data[pos]
-                subs.append(data[pos + 1 : pos + 1 + sz])
-                pos += 1 + sz
-            pos += 1
-            if label == 0xF9 and subs:
-                delay_cs = int.from_bytes(subs[0][1:3], "little")
-                transparent = subs[0][3] if subs[0][0] & 1 else None
-        elif b0 == 0x2C:
-            left = int.from_bytes(data[pos + 1 : pos + 3], "little")
-            top = int.from_bytes(data[pos + 3 : pos + 5], "little")
-            iw = int.from_bytes(data[pos + 5 : pos + 7], "little")
-            ih = int.from_bytes(data[pos + 7 : pos + 9], "little")
-            if iw == 0 or ih == 0 or iw * ih > (1 << 26):
-                # same bound as _decode_gif: the per-frame LZW decode
-                # below expands toward iw*ih bytes (r13 fuzz find)
-                raise ValueError("GIF: unreasonable dimensions")
-            iflags = data[pos + 9]
-            pos += 10
-            if iflags & 0x80:
-                pos += 3 * (2 << (iflags & 7))
-            min_code = data[pos]
-            pos += 1
-            comp = bytearray()
-            while data[pos] != 0:
-                sz = data[pos]
-                comp += data[pos + 1 : pos + 1 + sz]
-                pos += 1 + sz
-            pos += 1
-            idx = np.frombuffer(
-                _gif_lzw_decode(bytes(comp), min_code, iw * ih), dtype=np.uint8
-            )
-            if len(idx) < iw * ih:
-                idx = np.pad(idx, (0, iw * ih - len(idx)))
-            rows = idx.reshape(ih, iw)
-            if iflags & 0x40:
-                orig = np.empty_like(rows)
-                src = 0
-                for start, step in _GIF_INTERLACE:
-                    for y in range(start, ih, step):
-                        orig[y] = rows[src]
-                        src += 1
-                rows = orig
-            yield {
-                "left": left, "top": top, "width": iw, "height": ih,
-                "interlaced": bool(iflags & 0x40), "delay_cs": delay_cs,
-                "transparent": transparent, "indices": rows,
-            }
-            delay_cs, transparent = 0, None
-        else:
-            raise ValueError(f"GIF: unknown block 0x{b0:02x}")
+    for frame, _lct in _gif_frames(data):
+        yield frame
 
 
 def _tile_grid(data):

@@ -4791,8 +4791,8 @@ def multimodal_decode_jpeg_progressive(spark: SparkSession, sf_dir: str) -> Data
     bit 0 of every block — negative and odd DCs make both scans
     load-bearing — and an AC scan of per-block EOB runs), decoded
     through the full multi-scan coefficient-accumulation path
-    (_decode_jpeg_progressive: G.1.2.1 DC accumulation, G.1.2.2 EOBRUN
-    spectral-selection decode). The two DC scans reconstruct every
+    (_decode_jpeg's progressive scans: G.1.2.1 DC accumulation, G.1.2.2
+    EOBRUN spectral-selection decode). The two DC scans reconstruct every
     coefficient exactly, so the SAME analytic oracle applies:
     64*(v + 64) per block per channel — a wrong point transform, a
     skipped refinement bit, or a broken EOB run shifts a sum and

@@ -2627,3 +2627,27 @@ def test_decode_image_plain_ascii_netpbm():
                 b"P1 3 3\n0101"):           # truncated bitmap
         with pytest.raises(ValueError):
             mm.decode_image(bad)
+
+
+def test_jpeg_single_component_scan_walks_block_raster():
+    """T.81 A.2.2: a one-component scan is non-interleaved, so its
+    blocks arrive in the component's own raster order whatever sampling
+    factors the frame declares. Declaring 2x2 sampling on the only
+    component of a baseline (SOF0) and a progressive (SOF2) frame must
+    decode to the same image as the 1x1 stream."""
+    import numpy as np
+
+    c = np.zeros((2, 3, 8, 8), dtype=np.int64)
+    c[:, :, 0, 0] = [[5, -7, 12], [0, 33, -20]]
+    c[0, 1, 1, 2] = 6
+    c[1, 2, 0, 1] = -3
+    for encode, sof in (
+        (mm.encode_jpeg_gray_coeffs, b"\xff\xc0"),
+        (mm.encode_jpeg_gray_coeffs_progressive, b"\xff\xc2"),
+    ):
+        data = encode(c)
+        patched = bytearray(data)
+        hv = patched.index(sof) + 11  # marker, length, P, Y, X, Nf, C1, then H1V1
+        assert patched[hv] == 0x11
+        patched[hv] = 0x22
+        assert (mm.decode_image(bytes(patched)) == mm.decode_image(data)).all()
